@@ -26,7 +26,6 @@ projection work isn't pruned away by count()).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -111,19 +110,10 @@ if _subset:
 
 
 def _load_previous() -> tuple[str | None, dict[str, float]]:
-    """Latest BENCH_r{N}.json's per-query mins (fall back to medians
-    for rounds that predate queries_min)."""
+    """Per-query mins of the latest comparable BENCH_HISTORY.jsonl
+    record — the authoritative history (a BENCH_r{N}.json keeps only
+    a truncated stdout tail)."""
     here = os.path.dirname(os.path.abspath(__file__))
-    best, best_n = None, -1
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m and int(m.group(1)) > best_n:
-            best, best_n = path, int(m.group(1))
-    if best is None:
-        return None, {}
-    # Prefer our own full history: the driver's BENCH_r{N}.json keeps
-    # only the last ~2000 chars of stdout, which usually truncates the
-    # JSON line mid-dict.
     hist = os.path.join(here, "BENCH_HISTORY.jsonl")
     if os.path.exists(hist):
         try:
@@ -165,38 +155,7 @@ def _load_previous() -> tuple[str | None, dict[str, float]]:
         except Exception as exc:
             print(f"# WARNING: could not parse {hist}: {exc}",
                   file=sys.stderr)
-    try:
-        rec = json.load(open(best))
-        # driver records {"tail": "...json line..."} or the line itself
-        if isinstance(rec, dict) and "tail" in rec and isinstance(
-                rec["tail"], str):
-            tail = rec["tail"]
-            m = re.search(r"\{.*\}", tail, re.S)
-            try:
-                rec = json.loads(m.group(0)) if m else {}
-            except Exception:
-                rec = {}
-            if not rec.get("queries_min"):
-                # truncated tail: recover per-query pass arrays
-                # ("name": [floats]) and take their mins
-                mins = {}
-                for pm in re.finditer(
-                        r'"([a-z_0-9]+)": \[([0-9., ]+)\]', tail):
-                    vals = [float(x) for x in pm.group(2).split(",")]
-                    mins[pm.group(1)] = min(vals)
-                rec = {"queries_min": mins} if mins else {}
-        m = re.search(r"sf([0-9.]+)", SF_DIR)
-        if rec.get("sf") is not None and m and float(m.group(1)) != float(
-                rec["sf"]):
-            print(f"# NOTE: {os.path.basename(best)} recorded at "
-                  f"sf{rec['sf']}, this run is {SF_DIR} — skipping "
-                  "min-vs-min comparison", file=sys.stderr)
-            return os.path.basename(best), {}
-        prev = rec.get("queries_min") or rec.get("queries") or {}
-        return os.path.basename(best), {k: float(v) for k, v in prev.items()}
-    except Exception as exc:  # unreadable prior round: compare nothing
-        print(f"# WARNING: could not parse {best}: {exc}", file=sys.stderr)
-        return os.path.basename(best), {}
+    return None, {}
 
 
 def _load_previous_canary() -> float | None:

@@ -55,7 +55,7 @@ from .scope import (
 # plan (and at scale, the shuffle volume) grows with k. Above this
 # bound the compiler refuses with a clear error instead of silently
 # building a runaway plan; callers with a genuinely deep walk raise it
-# via GraphSession(max_var_hops=...) / QueryCompiler(max_var_hops=...).
+# via GraphSession(max_var_hops=...).
 MAX_VAR_HOPS = 6
 
 
@@ -136,6 +136,9 @@ class QueryCompiler:
         table_stats: Optional[Callable[[str], Optional[int]]] = None,
         column_stats: Optional[Callable[[str], Optional[dict]]] = None,
     ):
+        # every constructor argument, replayed by _fresh() (taken before
+        # any other local exists, so it holds exactly the parameters)
+        self._config = {k: v for k, v in locals().items() if k != "self"}
         self.catalog = catalog
         self.load_table = load_table
         self.broadcast_labels = broadcast_labels or set()
@@ -694,18 +697,18 @@ class QueryCompiler:
         compiling an independent sub-statement (CALL { } blocks) —
         per-query state (_bare_refs, anon counters) must not leak
         between the outer query and the block."""
-        return QueryCompiler(
-            self.catalog, self.load_table,
-            broadcast_labels=self.broadcast_labels, params=self.params,
-            load_adjacency=self.load_adjacency,
-            max_var_hops=self.max_var_hops,
-            assume_referential_integrity=self.integrity,
-            degree_stats=self.degree_stats,
-            skew_degree_threshold=self.skew_degree_threshold,
-            skew_salt_factor=self.skew_salt_factor,
-            prune_hops=self.prune_hops,
-            prune_bloom_bits=self.prune_bloom_bits,
-        )
+        return QueryCompiler(**self._config)
+
+    def compile_write_match(
+        self, df: Optional[DataFrame], scope: Scope, part: ast.QueryPart,
+    ) -> tuple[DataFrame, Scope]:
+        """The MATCH/WHERE of a write statement. The write clauses may
+        read any bound alias, so every alias counts as referenced:
+        no FK-join elision, adjacency-index hop or FK-edge fusion
+        leaves a binding without the columns a SET/DELETE needs."""
+        self._bare_refs, self._prop_refs = {"*"}, {}
+        self._referenced = {"*"}
+        return self._compile_part(df, scope, part)
 
     def _apply_call_subquery(
         self, df: Optional[DataFrame], scope: Scope,

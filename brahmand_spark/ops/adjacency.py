@@ -10,10 +10,9 @@ AggregatingMergeTree tables ``{rel}_outgoing`` / ``{rel}_incoming`` of
 In Spark the same physical idea is a pre-grouped table
 ``(src, neighbors, counts)`` — distinct targets plus per-target
 multiplicity, so multigraph cardinality survives where the
-reference's bitmap silently collapses it — written once (or refreshed
-incrementally via Structured Streaming); traversal re-expands
-neighbors by multiplicity, a narrow operation replacing the per-hop
-edge-shuffle with a co-partitioned scan. Worth materializing when a
+reference's bitmap silently collapses it — written once; traversal
+re-expands neighbors by multiplicity, a narrow operation replacing the
+per-hop edge-shuffle with a co-partitioned scan. Worth materializing when a
 relationship is traversed many times per analysis session; the plain
 edge-list join (the compiler default) is otherwise better because AQE
 can still broadcast/skew-split it.
@@ -133,196 +132,6 @@ def expand(adj: DataFrame, direction_ids: DataFrame,
     ``(src, dst)`` pairs (one row per original parallel edge)."""
     frontier = direction_ids.select(F.col(id_col).alias("src")).distinct()
     return expand_pairs(adj.join(frontier, on="src", how="leftsemi"))
-
-
-def write_adjacency_bucketed(
-    adj: DataFrame, path: str, num_buckets: int = 64,
-) -> None:
-    """Write a grouped-adjacency table partitioned by a hash bucket of
-    src — the layout incremental maintenance needs (only touched buckets
-    are rewritten)."""
-    (
-        adj.withColumn(
-            "bucket", F.pmod(F.col("src"), F.lit(num_buckets)).cast("int")
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-
-
-def _pairs_sidecar(path: str) -> str:
-    """Per-batch pair-count provenance table backing the streamed
-    adjacency — ``(src, dst, cnt)`` partitioned by ``(bucket, batch)``."""
-    return path.rstrip("/") + "__pairs"
-
-
-def maintain_adjacency_stream(
-    edges_stream: DataFrame, path: str, src_col: str, dst_col: str,
-    checkpoint_dir: str, num_buckets: int = 64,
-):
-    """Keep a grouped-adjacency table fresh from an edge stream — the
-    Spark analogue of the reference's materialized views
-    (mv_{rel}_outgoing -> AggregatingMergeTree, ddl_query.rs:304-310).
-
-    Cross-batch multiplicity-EXACT (r10, closes the r9 ``weak``): each
-    microbatch's per-(src, dst) counts land in a provenance sidecar
-    ``{path}__pairs`` under ``(bucket=b, batch=<id>)`` partitions via
-    dynamic partition overwrite — a replayed batch (same id, same
-    deterministic content) rewrites its own partitions instead of
-    double-counting. The served grouped table is then rebuilt for the
-    touched buckets ONLY, by summing the sidecar across batches, so
-    parallel edges split across micro-batches sum exactly like the
-    batch builder (``build_adjacency``). Readers are unchanged — the
-    main table stays the single read surface.
-
-    Each microbatch: (1) count the batch's (src, dst) pairs, (2)
-    dynamic-overwrite those counts into the sidecar under this batch's
-    partitions, (3) re-sum the sidecar for the touched buckets, (4)
-    dynamic-overwrite just those buckets of the grouped table. Work per
-    batch is proportional to the touched buckets' sidecar rows, not
-    table size. (With Delta/Iceberg steps 2-4 collapse into a MERGE.)
-
-    A pre-existing grouped table at ``path`` (built by
-    ``build_adjacency``/``write_adjacency_bucketed``) is seeded into the
-    sidecar once, as ``batch=base``, before the first micro-batch
-    merges. The sidecar gains one partition per touched bucket per
-    batch; fold them with ``compact_adjacency_pairs`` while the stream
-    is stopped.
-
-    Returns the StreamingQuery (caller awaits/stops it).
-    """
-    def upsert(batch_df, batch_id: int) -> None:
-        _adjacency_upsert(batch_df, batch_id, path=path, src_col=src_col,
-                          dst_col=dst_col, num_buckets=num_buckets)
-
-    return (
-        edges_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _seed_pairs_sidecar_if_needed(spark, path: str, pairs_path: str,
-                                  num_buckets: int) -> None:
-    """One-time migration: existing grouped table, no sidecar yet.
-    Full-table re-count (bounded, once) written as batch=base for ALL
-    buckets so later batches can rebuild any bucket from the sidecar
-    alone. mode=overwrite on the whole sidecar path makes a crashed/
-    replayed seed idempotent."""
-    try:
-        spark.read.parquet(pairs_path)
-        return  # sidecar already exists
-    except Exception:
-        pass
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
-        return  # fresh start: no table, no sidecar
-    (
-        expand_pairs(existing.select("src", "neighbors", "counts"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn(
-            "bucket",
-            F.pmod(F.col("src"), F.lit(num_buckets)).cast("int"),
-        )
-        .withColumn("batch", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("bucket", "batch")
-        .parquet(pairs_path)
-    )
-
-
-def _adjacency_upsert(batch_df, batch_id: int, *, path: str, src_col: str,
-                      dst_col: str, num_buckets: int) -> None:
-    """One micro-batch of the maintenance stream (module-level so tests
-    can replay a (batch_df, batch_id) pair directly, like
-    dedup_stream._process_batch)."""
-    spark = batch_df.sparkSession
-    pairs_path = _pairs_sidecar(path)
-    new_pairs = batch_df.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    if new_pairs.isEmpty():
-        return
-    _seed_pairs_sidecar_if_needed(spark, path, pairs_path, num_buckets)
-    batch_counts = (
-        new_pairs.withColumn(
-            "bucket",
-            F.pmod(F.col("src"), F.lit(num_buckets)).cast("int"),
-        )
-        .groupBy("src", "dst", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    buckets = [r.bucket for r in
-               batch_counts.select("bucket").distinct().collect()]
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # (2) provenance write — replay rewrites batch=<id> in place
-        (
-            batch_counts.withColumn("batch", F.lit(f"b{batch_id}"))
-            .write.mode("overwrite")
-            .partitionBy("bucket", "batch")
-            .parquet(pairs_path)
-        )
-        # (3) exact cross-batch sum for the touched buckets only
-        # (partition-pruned sidecar scan)
-        all_counts = (
-            spark.read.parquet(pairs_path)
-            .filter(F.col("bucket").isin(buckets))
-            .groupBy("src", "dst", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        merged = (
-            all_counts.groupBy("src", "bucket")
-            .agg(F.collect_list(F.struct("dst", "cnt")).alias("nc"))
-            .select(
-                "src", "bucket",
-                F.col("nc.dst").alias("neighbors"),
-                F.col("nc.cnt").alias("counts"),
-            )
-            .withColumn(
-                "degree",
-                F.aggregate(
-                    "counts", F.lit(0).cast("bigint"),
-                    lambda a, x: a + x,
-                ),
-            )
-        )
-        # (4) serve: rebuild just the touched buckets
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def compact_adjacency_pairs(spark, path: str) -> None:
-    """Fold the streamed-adjacency provenance sidecar's per-batch
-    partitions into a single ``batch=base`` per bucket (sum of counts).
-    Run while the maintenance stream is STOPPED: a replay of the last
-    un-committed micro-batch after compaction would double-count its
-    edges (its ``batch=<id>`` partition was folded into base and the
-    replay re-adds it). Write-new-then-swap via the Hadoop-FS
-    rename-aside (ops.fs.replace_dir), the same crash-safe pattern as
-    the dedup/ANN index compactors — os.rename would silently fail on
-    HDFS/object-store paths while every other maintenance writer here
-    supports them (r10 advice)."""
-    from .fs import replace_dir
-
-    pairs_path = _pairs_sidecar(path)
-    folded = (
-        spark.read.parquet(pairs_path)
-        .groupBy("src", "dst", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-        .withColumn("batch", F.lit("base"))
-    )
-    tmp = pairs_path + ".compact_tmp"
-    folded.write.mode("overwrite").partitionBy("bucket", "batch") \
-        .parquet(tmp)
-    replace_dir(spark, tmp, pairs_path)
 
 
 def degree_stats(adj: DataFrame) -> DataFrame:

@@ -39,6 +39,7 @@ graph algorithms at all — SURVEY.md §2.8).
 from __future__ import annotations
 
 import threading
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -64,13 +65,22 @@ def _reset_stats(df: DataFrame) -> DataFrame:
     caught burning minutes per checkpoint once estimates grew large.
     Purely a metadata reset: same rows, same truncated lineage (the
     new plan's RDD is derived from the checkpointed blocks); the new
-    frame's estimate falls back to spark.sql.defaultSizeInBytes."""
+    frame's estimate falls back to spark.sql.defaultSizeInBytes.
+
+    When the JVM rebuild fails the frame comes back unchanged — the
+    overflow guard is then off for this loop, so that is warned
+    about (once per call site, by the default warnings filter)."""
     try:
         spark = df.sparkSession
         jdf = spark._jsparkSession.createDataFrame(
             df._jdf.javaRDD(), df._jdf.schema())
         return type(df)(jdf, spark)
-    except Exception:
+    except Exception as exc:
+        warnings.warn(
+            f"could not strip checkpoint statistics ({exc!r}); the "
+            "size estimates of this self-joining loop now compound "
+            "every round and may overflow the planner",
+            RuntimeWarning, stacklevel=2)
         return df
 
 
@@ -1181,7 +1191,6 @@ def betweenness_centrality(
     warning is emitted so exact-mode callers notice the truncation.
     """
     checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
-    import warnings
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not directed:
         e = _symmetrize(e, "src", "dst").select(

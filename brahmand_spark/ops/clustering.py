@@ -92,10 +92,3 @@ def kmeans(
     with kmeans_assign — assignment never reshuffles the corpus."""
     return kmeans_assign(df, kmeans_fit(df, k, iters, id_col, vec_col),
                          id_col, vec_col)
-
-
-def cluster_sizes(assigned: DataFrame) -> DataFrame:
-    """Cluster histogram — one map-side-combined aggregation."""
-    return assigned.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n")
-    )

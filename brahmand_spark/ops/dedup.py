@@ -51,21 +51,6 @@ def _spread(df: DataFrame) -> DataFrame:
 # exact dedup
 # --------------------------------------------------------------------------
 
-def exact_duplicates(df: DataFrame, key_cols: list[str],
-                     id_col: str = "doc_id") -> DataFrame:
-    """Groups of rows identical on ``key_cols``: one row per duplicate
-    group with the canonical (min) id and copy count. Single shuffle on
-    the group key; partial aggregation happens map-side."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(
-            F.min(id_col).alias("canonical_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .filter(F.col("n_copies") > 1)
-        .select("canonical_id", "n_copies", *key_cols)
-    )
-
 
 def dedup_exact(df: DataFrame, key_cols: list[str],
                 id_col: str = "doc_id") -> DataFrame:

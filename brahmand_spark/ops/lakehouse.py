@@ -2,7 +2,7 @@
 upsert operators — the table-format half of the 100 TB story.
 
 Everything in this repo proves its layout benefits on plain parquet
-(`ops/layout.zorder_layout`, `ops/buckets`); production corpora land
+(`ops/layout.zorder_layout`); production corpora land
 in a transactional table format instead, where the SAME DataFrames
 feed ``df.write.format('delta'|'iceberg')`` and the Cypher MERGE
 upsert maps onto ``MERGE INTO``. Those runtimes are optional
@@ -190,28 +190,3 @@ def merge_commit(
         replacements.write.format(format.lower()).mode(
             "append").save(path)
     return stmt
-
-
-def merge_into(
-    spark: SparkSession, target_table: str, source: DataFrame,
-    key_cols: list[str], update_cols: list[str] | None = None,
-    format: str = "delta",
-) -> None:
-    """Execute the rendered MERGE INTO against a lakehouse table.
-    Availability-gated: raises UnsupportedError when no MERGE-capable
-    runtime is on the session."""
-    if not format_available(spark, format):
-        raise UnsupportedError(
-            f"MERGE INTO needs a '{format}' runtime on this session; "
-            "the portable upsert path (writes.py anti-join append) "
-            "keeps working without it")
-    # per-call unique view name: two concurrent merges on the same
-    # SparkSession must not race on a shared source view (ADVICE r5)
-    view = f"__merge_src_{uuid.uuid4().hex}"
-    source.createOrReplaceTempView(view)
-    try:
-        spark.sql(merge_into_statement(
-            target_table, source.columns, key_cols,
-            update_cols=update_cols, source_view=view))
-    finally:
-        spark.catalog.dropTempView(view)

@@ -57,130 +57,6 @@ def attach_image_metadata(df: DataFrame, binary_col: str = "content") -> DataFra
     return df.withColumn("format", fmt).withColumn("n_bytes", F.length(b))
 
 
-MEDIA_METADATA_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType()),
-    T.StructField("format", T.StringType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("sample_rate", T.IntegerType()),
-    T.StructField("channels", T.IntegerType()),
-    T.StructField("bits_per_sample", T.IntegerType()),
-    T.StructField("duration_s", T.DoubleType()),
-])
-
-
-def _png_dims(raw: bytes) -> tuple[int, int]:
-    """(width, height) from the IHDR chunk — fixed offsets after the
-    8-byte signature + 8-byte chunk header."""
-    if raw[:8] != b"\x89PNG\r\n\x1a\n" or raw[12:16] != b"IHDR":
-        raise ValueError("not a PNG payload")
-    return (int.from_bytes(raw[16:20], "big"),
-            int.from_bytes(raw[20:24], "big"))
-
-
-def _jpeg_dims(raw: bytes) -> tuple[int, int]:
-    """(width, height) from the first SOFn marker — a segment walk
-    over the JPEG marker stream; no entropy decode. SOF markers are
-    0xC0-0xCF excluding 0xC4 (DHT), 0xC8 (JPG), 0xCC (DAC)."""
-    if raw[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    while pos + 4 <= len(raw):
-        if raw[pos] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        marker = raw[pos + 1]
-        pos += 2
-        if marker == 0xFF:  # fill byte
-            pos -= 1
-            continue
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD9:
-            continue  # standalone markers, no length field
-        if pos + 2 > len(raw):
-            break
-        seglen = int.from_bytes(raw[pos:pos + 2], "big")
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            if pos + 7 > len(raw):
-                break
-            return (int.from_bytes(raw[pos + 5:pos + 7], "big"),
-                    int.from_bytes(raw[pos + 3:pos + 5], "big"))
-        pos += seglen
-    raise ValueError("no SOF marker found")
-
-
-def _wav_meta(raw: bytes) -> tuple[int, int, int, float]:
-    """(sample_rate, channels, bits_per_sample, duration_s) from the
-    RIFF/fmt/data chunk walk (chunks are word-aligned)."""
-    if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos, fmt, data_size = 12, None, None
-    while pos + 8 <= len(raw):
-        cid = raw[pos:pos + 4]
-        size = int.from_bytes(raw[pos + 4:pos + 8], "little")
-        if cid == b"fmt ":
-            body = raw[pos + 8:pos + 8 + size]
-            fmt = (int.from_bytes(body[2:4], "little"),
-                   int.from_bytes(body[4:8], "little"),
-                   int.from_bytes(body[8:12], "little"),
-                   int.from_bytes(body[14:16], "little"))
-        elif cid == b"data":
-            data_size = size
-        pos += 8 + size + (size % 2)
-    if fmt is None or data_size is None:
-        raise ValueError("truncated WAV (missing fmt/data chunk)")
-    channels, sample_rate, byte_rate, bits = fmt
-    if byte_rate <= 0:
-        raise ValueError("invalid WAV byte rate")
-    return sample_rate, channels, bits, data_size / byte_rate
-
-
-def extract_media_metadata(
-    df: DataFrame, id_col: str = "id", binary_col: str = "content",
-) -> DataFrame:
-    """Typed header metadata across modalities WITHOUT codecs — pure
-    stdlib byte-slicing (PNG IHDR, JPEG SOF marker walk, WAV
-    RIFF/fmt/data chunk walk) inside Arrow-batched ``mapInPandas``.
-    Image rows fill (width, height); audio rows fill (sample_rate,
-    channels, bits_per_sample, duration_s); the other columns stay
-    NULL, as do all of them for corrupt/unknown payloads (the format
-    column still reports the sniffed magic). Headers only — payload
-    bytes beyond the header region are never touched, so a metadata
-    pushdown (filter on dims/duration) runs before any real decode."""
-
-    def parse(batches: Iterator["pandas.DataFrame"]):  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[binary_col]):
-                raw = bytes(payload) if payload is not None else b""
-                fmt, w, h, sr, ch, bits, dur = (
-                    "unknown", None, None, None, None, None, None)
-                try:
-                    if raw[:8] == b"\x89PNG\r\n\x1a\n":
-                        fmt = "png"
-                        w, h = _png_dims(raw)
-                    elif raw[:3] == b"\xff\xd8\xff":
-                        fmt = "jpeg"
-                        w, h = _jpeg_dims(raw)
-                    elif raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
-                        fmt = "wav"
-                        sr, ch, bits, dur = _wav_meta(raw)
-                    elif raw[:4] == b"GIF8":
-                        fmt = "gif"
-                        w = int.from_bytes(raw[6:8], "little")
-                        h = int.from_bytes(raw[8:10], "little")
-                except Exception:
-                    w = h = sr = ch = bits = dur = None
-                rows.append((int(rid), fmt, w, h, sr, ch, bits, dur))
-            yield pd.DataFrame(rows, columns=[
-                "id", "format", "width", "height", "sample_rate",
-                "channels", "bits_per_sample", "duration_s"])
-
-    return df.select(id_col, binary_col).mapInPandas(
-        parse, schema=MEDIA_METADATA_SCHEMA
-    )
-
-
 def _pil_available() -> bool:
     import importlib.util
 
@@ -557,26 +433,4 @@ def image_near_dup_pairs(
                 F.col("b.id").alias("id_b"), ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def frame_sample_plan(
-    df: DataFrame, id_col: str = "id", duration_col: str = "duration_s",
-    fps: float = 0.5,
-) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (video, timestamp) to
-    decode, derived entirely JVM-side with sequence/explode. The actual
-    frame extraction consumes this plan via decode_image_features-style
-    mapInPandas downstream."""
-    n_frames = F.greatest(
-        (F.col(duration_col) * F.lit(fps)).cast("int"), F.lit(1)
-    )
-    return df.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), n_frames - 1),
-                lambda i: F.round(i / F.lit(fps), 3),
-            )
-        ).alias("sample_ts"),
     )

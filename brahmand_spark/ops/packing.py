@@ -77,23 +77,3 @@ def pack_sequences(
         pdf["seq_offset"] = pd.Series(offsets, dtype="int64")
         return pdf
     return base.groupBy("bucket").applyInPandas(pack, _OUT_SCHEMA)
-
-
-def packing_efficiency(
-    packed: DataFrame, budget: int,
-) -> DataFrame:
-    """Aggregate packing quality: sequences produced, mean fill
-    fraction, padding waste. One narrow two-level aggregation."""
-    seqs = packed.groupBy("bucket", "seq_id").agg(
-        F.sum("n_tokens").alias("fill"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    return seqs.agg(
-        F.count(F.lit(1)).alias("n_sequences"),
-        F.sum("n_docs").alias("n_docs"),
-        F.round(F.avg(F.least(F.col("fill"), F.lit(budget)) / F.lit(budget)), 6)
-        .alias("mean_fill_frac"),
-        F.sum(
-            F.greatest(F.lit(budget) - F.col("fill"), F.lit(0))
-        ).alias("padding_tokens"),
-    )

@@ -120,74 +120,3 @@ def numeric_histogram(
             "n",
         )
     )
-
-
-def correlation_matrix(
-    df: DataFrame, columns: list[str],
-) -> DataFrame:
-    """Pairwise Pearson correlations as a tidy (col_a, col_b, corr)
-    DataFrame — col_a < col_b lexicographically, NULLs excluded
-    pairwise by Spark's corr aggregate. Like profile_corpus, the whole
-    matrix is ONE aggregate job (n*(n-1)/2 algebraic aggregates, all
-    map-side combinable), so corpus size only affects the scan."""
-    pairs = [
-        (a, b)
-        for i, a in enumerate(sorted(columns))
-        for b in sorted(columns)[i + 1:]
-    ]
-    row = df.agg(*[
-        F.corr(F.col(a).cast("double"), F.col(b).cast("double"))
-        .alias(f"__c_{i}")
-        for i, (a, b) in enumerate(pairs)
-    ])
-    tidy = F.array(*[
-        F.struct(
-            F.lit(a).alias("col_a"), F.lit(b).alias("col_b"),
-            F.round(F.col(f"__c_{i}"), 6).alias("corr"),
-        )
-        for i, (a, b) in enumerate(pairs)
-    ])
-    return row.select(F.explode(tidy).alias("p")).select("p.*")
-
-
-def data_card(
-    df: DataFrame, title: str = "Dataset",
-    columns: list[str] | None = None, exact_distinct: bool = False,
-) -> str:
-    """Render a markdown data card from ``profile_corpus`` — the
-    human-readable artifact a curation run publishes next to the
-    dataset (datasheet-style summary table). One aggregate job; the
-    returned string is driver-side but |columns|-sized, never
-    corpus-sized."""
-    rows = profile_corpus(df, columns, exact_distinct).collect()
-    n = rows[0]["n"] if rows else 0
-    lines = [
-        f"# {title}",
-        "",
-        f"- rows: {n}",
-        f"- columns: {len(rows)}",
-        f"- distinct counts: "
-        f"{'exact' if exact_distinct else 'HLL++ sketch'}",
-        "",
-        "| column | dtype | nulls | distinct | min | max | mean "
-        "| stddev | avg_len |",
-        "|---|---|---|---|---|---|---|---|---|",
-    ]
-
-    def fmt(v):
-        if v is None:
-            return ""
-        if isinstance(v, float):
-            return f"{v:.4g}"
-        s = str(v)
-        return s if len(s) <= 24 else s[:21] + "..."
-
-    for r in rows:
-        null_pct = (f"{100.0 * r['n_null'] / n:.1f}%"
-                    if n else "0.0%")
-        lines.append(
-            f"| {r['column']} | {r['dtype']} | {null_pct} "
-            f"| {r['n_distinct']} | {fmt(r['min'])} | {fmt(r['max'])} "
-            f"| {fmt(r['mean'])} | {fmt(r['stddev'])} "
-            f"| {fmt(r['avg_len'])} |")
-    return "\n".join(lines) + "\n"

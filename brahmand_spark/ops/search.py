@@ -34,24 +34,6 @@ from pyspark.sql import functions as F
 from .text import tokens
 
 
-def term_stats(df: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
-    """Inverted-index statistics: one row per (term, doc) with the
-    term frequency and document length — the postings a search layer
-    builds once and reuses across queries. Lowercased whitespace
-    tokenization (matches the oracle's ``string_split_regex``)."""
-    toks = tokens(F.lower(F.col(text_col)))
-    base = df.select(F.col(id_col), toks.alias("toks"))
-    return (
-        base.select(
-            id_col, F.size("toks").alias("dl"),
-            F.explode("toks").alias("term"),
-        )
-        .groupBy(id_col, "term", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
 def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 20,
               k1: float = 1.2, b: float = 0.75,
               text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

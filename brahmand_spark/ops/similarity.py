@@ -390,43 +390,6 @@ def dequantize_embeddings(
     )
 
 
-def quantized_cosine_topk(
-    corpus_q: DataFrame, queries_q: DataFrame, k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Brute-force top-k over QUANTIZED vectors: cosine on int codes
-    (per-vector scales cancel in the cosine, so the score is exactly
-    the cosine of the dequantized vectors). Same broadcast-queries /
-    scan-once / per-query-window shape as cosine_topk; 4x less data
-    moves at 8 bits. Columns: (query_id, corpus_id, cosine, rank).
-
-    All-zero vectors (quantize_embeddings gives them scale=0 and an
-    all-zero code) have no defined cosine — they are EXCLUDED from
-    both sides before ranking rather than flowing through with NULL
-    scores (ADVICE r5)."""
-    qv = F.transform("qvec", lambda q: q.cast("double"))
-    c = corpus_q.select(
-        F.col(id_col).alias("corpus_id"), qv.alias("cv")
-    ).filter(norm(F.col("cv")) > 0)
-    q = queries_q.select(
-        F.col(id_col).alias("query_id"), qv.alias("qv2")
-    ).filter(norm(F.col("qv2")) > 0)
-    cos = F.round(
-        dot(F.col("cv"), F.col("qv2"))
-        / (norm(F.col("cv")) * norm(F.col("qv2"))),
-        6,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id").asc())
-    return (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("corpus_id") != F.col("query_id"))
-        .select("query_id", "corpus_id", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ: product quantization (Jegou, Douze, Schmid 2011, "Product
 # quantization for nearest neighbor search", TPAMI) over the int8/IVF

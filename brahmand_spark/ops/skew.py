@@ -97,15 +97,3 @@ def two_phase_agg(
             raise ValueError(f"unknown agg spec {spec!r}")
     partial = salted.groupBy(*keys, SALT_COL).agg(*partial_exprs)
     return partial.groupBy(*keys).agg(*final_exprs)
-
-
-def hot_keys(df: DataFrame, key_cols: list[str],
-             min_count: int = 100_000) -> DataFrame:
-    """Diagnostic: keys whose row count exceeds ``min_count`` — the
-    candidates for salting / broadcast isolation."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_count)
-        .orderBy(F.col("n").desc())
-    )

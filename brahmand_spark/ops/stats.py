@@ -1,13 +1,13 @@
-"""Corpus statistics operators: grouped quantiles and random-projection
+"""Corpus statistics operators: random-projection and PCA
 dimensionality reduction.
 
-Extensions beyond the reference surface (SURVEY.md §2.8) — the
-profiling layer of a training-data pipeline: length/price/score
-distributions per slice drive filter thresholds, and projected
+Extensions beyond the reference surface (SURVEY.md §2.8) — projected
 embeddings make downstream similarity passes cheaper.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -15,49 +15,16 @@ from pyspark.sql import functions as F
 from .similarity import _as_double, _hyperplanes
 
 
-def group_quantiles(df: DataFrame, value_col: str,
-                    group_cols: list[str] | None = None,
-                    probs: list[float] = (0.25, 0.5, 0.75, 0.95),
-                    exact: bool = True,
-                    accuracy: int = 10_000) -> DataFrame:
-    """Per-group quantiles of a numeric column, one output row per
-    (group, prob): ``group_cols..., prob, quantile``.
-
-    ``exact=True`` uses Spark's exact ``percentile`` (linear
-    interpolation, the same definition as DuckDB ``quantile_cont`` —
-    the pytest oracle) — it buffers each group's values, fine for the
-    per-slice profiling this exists for. ``exact=False`` switches to
-    ``approx_percentile`` (KLL-style mergeable sketch, bounded memory)
-    — the 100 TB path when groups are corpus-sized; same output shape,
-    rank error <= 1/accuracy.
-
-    Values are rounded to 4 decimals: exact-percentile interpolation
-    is the one float step, and rounding absorbs last-ulp association
-    differences across engines.
-    """
-    group_cols = list(group_cols or [])
-    plist = list(probs)
-    if not plist or not all(0.0 <= p <= 1.0 for p in plist):
-        raise ValueError(f"probs must be within [0, 1], got {plist}")
-    arr = F.array(*[F.lit(float(p)) for p in plist])
-    fn = "percentile" if exact else "approx_percentile"
-    extra = "" if exact else f", {int(accuracy)}"
-    qs = F.expr(f"{fn}({value_col}, "
-                f"array({', '.join(repr(float(p)) for p in plist)})"
-                f"{extra})")
-    agg = df.groupBy(*group_cols).agg(qs.alias("qs"))
-    return (
-        agg.select(
-            *group_cols,
-            F.posexplode(F.arrays_zip(arr.alias("p"), F.col("qs")))
-            .alias("_i", "pq"),
-        )
-        .select(
-            *group_cols,
-            F.col("pq.p").alias("prob"),
-            F.round(F.col("pq.qs"), 4).alias("quantile"),
-        )
-    )
+def _sql_double(x) -> str:
+    """``x`` as an exact Spark SQL double literal. ``repr`` renders NaN
+    and Inf as ``nan``/``inf``, which the SQL parser rejects, so a
+    non-finite coefficient is refused here with the reason."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(
+            f"non-finite projection coefficient {x!r} (NaN or Inf in "
+            "the fitted mean/components or in their input vectors)")
+    return f"{x!r}D"
 
 
 def random_projection(df: DataFrame, out_dim: int,
@@ -91,10 +58,10 @@ def random_projection(df: DataFrame, out_dim: int,
     # chain matches dot(dim=...) term for term and repr round-trips
     # each double exactly, so projections are bit-identical.
     comp_sqls = [
-        "round((%s) * %rD, 6)" % (
-            " + ".join(f"{float(x)!r}D * element_at(_v, {i + 1})"
+        "round((%s) * %s, 6)" % (
+            " + ".join(f"{_sql_double(x)} * element_at(_v, {i + 1})"
                        for i, x in enumerate(plane)),
-            float(scale),
+            _sql_double(scale),
         )
         for plane in planes
     ]
@@ -279,9 +246,9 @@ def pca_transform(
             raise ValueError("component/mean dimensionality mismatch")
         offset = sum(float(ci) * float(mi) for ci, mi in zip(c, mean))
         body = " + ".join(
-            f"{float(ci)!r}D * element_at(_v, {i + 1})"
+            f"{_sql_double(ci)} * element_at(_v, {i + 1})"
             for i, ci in enumerate(c))
-        comp_sqls.append(f"round(({body}) - {float(offset)!r}D, 6)")
+        comp_sqls.append(f"round(({body}) - {_sql_double(offset)}, 6)")
     return df.select(
         F.col(id_col).alias("_id"),
         _as_double(F.col(vec_col)).alias("_v"),

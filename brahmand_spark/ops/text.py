@@ -345,62 +345,3 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
         F.round(dup_line_char_frac, 6).alias("dup_line_char_frac"),
         F.round(top_bigram_char_frac, 6).alias("top_bigram_char_frac"),
     )
-
-
-def strip_boilerplate(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    min_doc_frac: float = 0.05, min_docs: int = 10,
-) -> DataFrame:
-    """Remove corpus-frequent lines — the nav bars, cookie banners and
-    license footers that survive per-document quality filters because
-    every document has them (the CCNet/C4 boilerplate problem, attacked
-    corpus-wide instead of per-page): a non-empty line whose TRIMMED
-    form appears in at least ``max(min_docs, min_doc_frac * n_docs)``
-    distinct documents is dropped from every document.
-
-    Output: (id_col, text_clean, n_lines_removed); line order and
-    original (untrimmed) content of surviving lines are preserved, so
-    ``n_lines_removed = 0`` round-trips the text exactly.
-
-    Scale shape: posexplode to (doc, pos, line) once; line-frequency is
-    ONE map-side-combined count(DISTINCT doc) shuffle keyed by the
-    trimmed line (near-uniform key distribution — the hot boilerplate
-    lines are exactly the ones that matter, and a count aggregate
-    tolerates hot keys via partial aggregation); the boilerplate set is
-    corpus-frequency-bounded (tiny) so its join back broadcasts; one
-    (doc)-keyed shuffle reassembles. The document count is a single
-    metadata-sized driver scalar."""
-    lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
-    ).withColumn("key", F.trim(F.col("line")))
-    n_docs = df.select(id_col).distinct().count()
-    threshold = max(int(min_docs), int(min_doc_frac * n_docs))
-    hot = (
-        lines.filter(F.col("key") != "")
-        .groupBy("key")
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-        .filter(F.col("nd") >= threshold)
-        .select("key")
-    )
-    marked = lines.join(
-        hot.withColumn("_hot", F.lit(True)), "key", "left"
-    )
-    return (
-        marked.groupBy(id_col)
-        .agg(
-            F.array_sort(F.collect_list(F.struct(
-                "pos", "line", F.coalesce("_hot", F.lit(False)).alias("h")
-            ))).alias("ls"),
-        )
-        .select(
-            id_col,
-            F.array_join(
-                F.transform(F.filter(F.col("ls"), lambda s: ~s["h"]),
-                            lambda s: s["line"]),
-                "\n",
-            ).alias("text_clean"),
-            F.size(F.filter(F.col("ls"), lambda s: s["h"]))
-            .cast("bigint").alias("n_lines_removed"),
-        )
-    )

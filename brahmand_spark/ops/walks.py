@@ -252,19 +252,6 @@ def _uniform_step(live, adj, h, with_prev: bool):
     )
 
 
-def walks_as_documents(
-    walks: DataFrame, sep: str = " ",
-) -> DataFrame:
-    """Render walks as text documents (doc_id, text) — the handoff to
-    the pipeline half: token counting, chunking, dedup, packing, and
-    skip-gram windowing all operate on these like any corpus."""
-    return walks.select(
-        F.col("walk_id").alias("doc_id"),
-        F.array_join(F.transform(
-            "walk", lambda x: x.cast("string")), sep).alias("text"),
-    )
-
-
 def node_embeddings(
     edges: DataFrame, dim: int = 32, n_walks: int = 2,
     walk_length: int = 8, window: int = 2,

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import ddl
 from .catalog import GraphSchema
-from .compile.compiler import QueryCompiler
+from .compile.compiler import MAX_VAR_HOPS, QueryCompiler
 from .errors import CatalogError, UnsupportedError
 from .parser import ast
 from .parser.parser import parse
@@ -313,6 +313,29 @@ class GraphSession:
             return self.tables[label]
         return self._load_path_or_view(table_name)
 
+    def _compiler(self, params: Optional[dict]) -> QueryCompiler:
+        """The one compiler configuration of this session: reads, LOAD
+        CSV, the MATCH of every write and (via QueryCompiler._fresh)
+        CALL { } blocks all plan with the same settings and stats."""
+        return QueryCompiler(
+            self.schema, self._load_for_label,
+            broadcast_labels=self.broadcast_labels, params=params,
+            load_adjacency=self.tables.get,
+            max_var_hops=(MAX_VAR_HOPS if self.max_var_hops is None
+                          else self.max_var_hops),
+            assume_referential_integrity=(
+                self.assume_referential_integrity),
+            degree_stats=self.degree_stats.get,
+            table_stats=(self.table_stats.get
+                         if self.table_stats else None),
+            column_stats=(self.column_stats.get
+                          if self.column_stats else None),
+            skew_degree_threshold=self.skew_degree_threshold,
+            skew_salt_factor=self.skew_salt_factor,
+            prune_hops=self.prune_hops,
+            prune_bloom_bits=self.prune_bloom_bits,
+        )
+
     # -- execution ----------------------------------------------------------
     def execute(
         self, cypher: str, params: Optional[dict] = None
@@ -326,27 +349,7 @@ class GraphSession:
         if isinstance(stmt, ast.ExplainQuery):
             return self._explain_stmt(stmt, params)
         if isinstance(stmt, ast.ReadQuery):
-            kwargs = {}
-            if self.max_var_hops is not None:
-                kwargs["max_var_hops"] = self.max_var_hops
-            compiler = QueryCompiler(
-                self.schema, self._load_for_label,
-                broadcast_labels=self.broadcast_labels, params=params,
-                load_adjacency=self.tables.get,
-                assume_referential_integrity=(
-                    self.assume_referential_integrity),
-                degree_stats=self.degree_stats.get,
-                table_stats=(self.table_stats.get
-                             if self.table_stats else None),
-                column_stats=(self.column_stats.get
-                              if self.column_stats else None),
-                skew_degree_threshold=self.skew_degree_threshold,
-                skew_salt_factor=self.skew_salt_factor,
-                prune_hops=self.prune_hops,
-                prune_bloom_bits=self.prune_bloom_bits,
-                **kwargs,
-            )
-            return compiler.compile(stmt)
+            return self._compiler(params).compile(stmt)
         if isinstance(stmt, ast.CallProcedure):
             from .procedures import run_call
 
@@ -478,27 +481,8 @@ class GraphSession:
 
             return apply_write(self, stmt.statement, params,
                                initial=initial)
-        kwargs = {}
-        if self.max_var_hops is not None:
-            kwargs["max_var_hops"] = self.max_var_hops
-        compiler = QueryCompiler(
-            self.schema, self._load_for_label,
-            broadcast_labels=self.broadcast_labels, params=params,
-            load_adjacency=self.tables.get,
-            assume_referential_integrity=(
-                self.assume_referential_integrity),
-            degree_stats=self.degree_stats.get,
-            table_stats=(self.table_stats.get
-                         if self.table_stats else None),
-            column_stats=(self.column_stats.get
-                          if self.column_stats else None),
-            skew_degree_threshold=self.skew_degree_threshold,
-            skew_salt_factor=self.skew_salt_factor,
-            prune_hops=self.prune_hops,
-            prune_bloom_bits=self.prune_bloom_bits,
-            **kwargs,
-        )
-        return compiler.compile(stmt.statement, initial=initial)
+        return self._compiler(params).compile(
+            stmt.statement, initial=initial)
 
     def _explain_stmt(
         self, stmt: ast.ExplainQuery, params: Optional[dict]

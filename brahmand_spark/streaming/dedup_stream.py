@@ -13,7 +13,7 @@ and processes each micro-batch incrementally:
    band bucket with an accepted document are dropped as near-dups,
 3. within-batch collisions resolve to the lowest id,
 4. append the survivors' bands to the store (bucket-partitioned
-   parquet, like the adjacency maintenance layout).
+   parquet).
 
 Work per batch is proportional to batch size, not corpus size: the
 store join is an equi-join on the 8-byte band hash (shuffle keyed by a

@@ -36,7 +36,6 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .compile.compiler import QueryCompiler
 from .compile.expressions import ExprCompiler, collect_aliases
 from .compile.scope import (
     NodeBinding, RelBinding, ScalarBinding, Scope, pcol,
@@ -60,15 +59,12 @@ def apply_write(session, wq: ast.WriteQuery, params=None,
     broadcast semi-join before any mutation. ``initial`` (r12, the
     LOAD CSV hook): a pre-bound ``(frame, scope)`` the statement
     starts from — each csv row drives the writes once."""
-    compiler = QueryCompiler(
-        session.schema, session._load_for_label,
-        broadcast_labels=session.broadcast_labels, params=params,
-    )
+    compiler = session._compiler(params)
     df = initial[0] if initial else None
     scope = initial[1].copy() if initial else Scope()
     if wq.match_clauses:
         part = ast.QueryPart(matches=wq.match_clauses, where=wq.where)
-        df, scope = compiler._compile_part(df, scope, part)
+        df, scope = compiler.compile_write_match(df, scope, part)
         if anchor_ids is not None:
             alias, ids_df = anchor_ids
             b = scope.get(alias)
@@ -162,10 +158,7 @@ def apply_call_in_transactions(
         raise UnsupportedError(
             "CALL { } IN TRANSACTIONS is a write statement — pass "
             "GraphSession(allow_writes=True) to enable the write path")
-    compiler = QueryCompiler(
-        session.schema, session._load_for_label,
-        broadcast_labels=session.broadcast_labels, params=params,
-    )
+    compiler = session._compiler(params)
     if not cit.match_clauses:
         raise PlanError(
             "CALL { } IN TRANSACTIONS needs a preceding MATCH to "
@@ -182,7 +175,7 @@ def apply_call_in_transactions(
         where = (cit.body.where if where is None
                  else ast.Binary("AND", where, cit.body.where))
     part = ast.QueryPart(matches=all_matches, where=where)
-    df, scope = compiler._compile_part(None, Scope(), part)
+    df, scope = compiler.compile_write_match(None, Scope(), part)
     for a in cit.imports:
         if not isinstance(scope.get(a), (NodeBinding, RelBinding)):
             raise PlanError(
@@ -847,94 +840,6 @@ def _apply_create(session, df, scope, create, params, stats) -> None:
 
 
 # ----------------------------------------------------------------------
-def merge_into_sql(session, cypher: str, params=None,
-                   source_view: str = "__merge_src") -> str:
-    """Map a standalone node-form Cypher MERGE onto the lakehouse
-    ``MERGE INTO`` statement a Delta/Iceberg deployment runs instead
-    of the snapshot-union: the MERGE's property map becomes the
-    null-safe join keys + insert columns, ON MATCH SET the matched
-    UPDATE branch. Pure renderer — no lakehouse runtime needed (the
-    executable path is ``apply_merge_into``)."""
-    from .ops.lakehouse import merge_into_statement
-
-    np_, mc = _parse_standalone_node_merge(session, cypher)
-    sch = session.schema.node(np_.label)
-    columns = list(np_.properties)
-    update_cols = None
-    if mc.on_match:
-        update_cols = []
-        for target, _ in mc.on_match:
-            if not isinstance(target, ast.PropertyAccess):
-                raise UnsupportedError(
-                    "MERGE INTO mapping supports property SET targets")
-            update_cols.append(target.key)
-            if target.key not in columns:
-                columns.append(target.key)
-    return merge_into_statement(
-        sch.table_name, columns, list(np_.properties),
-        source_view=source_view, update_cols=update_cols)
-
-
-def _parse_standalone_node_merge(session, cypher: str):
-    from .parser.parser import parse
-
-    wq = parse(cypher)
-    if not isinstance(wq, ast.WriteQuery) or len(wq.merges) != 1 \
-            or wq.match_clauses or wq.create or wq.set_clause \
-            or wq.delete:
-        raise UnsupportedError(
-            "MERGE INTO mapping takes a single standalone MERGE")
-    mc = wq.merges[0]
-    path = mc.path
-    if path.rels or len(path.nodes) != 1:
-        raise UnsupportedError(
-            "MERGE INTO mapping supports the node form (relationship "
-            "MERGE needs MATCH-bound endpoints — run it through "
-            "apply_write)")
-    np_ = path.nodes[0]
-    if np_.label is None or not np_.properties:
-        raise PlanError("MERGE node needs a label and properties")
-    session.schema.node(np_.label)  # raises on unknown label
-    return np_, mc
-
-
-def apply_merge_into(session, cypher: str, params=None,
-                     format: str = "delta") -> None:
-    """Execute a standalone node-form Cypher MERGE as a lakehouse
-    ``MERGE INTO`` against the label's backing table (which must be a
-    catalog table of the given format). Availability-gated: raises
-    UnsupportedError when no MERGE-capable runtime is on the session —
-    the portable path (``GraphSession(allow_writes=True)`` +
-    ``apply_write``) keeps working everywhere."""
-    from .ops.lakehouse import format_available, merge_into
-
-    if not format_available(session.spark, format):
-        raise UnsupportedError(
-            f"MERGE INTO needs a '{format}' runtime; use "
-            "GraphSession(allow_writes=True) for the portable "
-            "anti-join upsert")
-    np_, mc = _parse_standalone_node_merge(session, cypher)
-    if mc.on_create:
-        raise UnsupportedError(
-            "ON CREATE SET in the MERGE INTO mapping: fold the values "
-            "into the property map (one source row feeds both branches)")
-    sch = session.schema.node(np_.label)
-    ec = ExprCompiler(Scope(), params)
-    exprs = {k: ec.compile(v) for k, v in np_.properties.items()}
-    update_cols = None
-    if mc.on_match:
-        update_cols = []
-        for t, val in mc.on_match:
-            if not isinstance(t, ast.PropertyAccess):
-                raise UnsupportedError(
-                    "MERGE INTO mapping supports property SET targets")
-            update_cols.append(t.key)
-            exprs[t.key] = ec.compile(val)
-    want = session.spark.range(1).select(*[
-        c.alias(k) for k, c in exprs.items()]).distinct()
-    merge_into(session.spark, sch.table_name, want,
-               list(np_.properties), update_cols=update_cols,
-               format=format)
 
 
 # ----------------------------------------------------------------------

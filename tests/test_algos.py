@@ -1233,6 +1233,28 @@ class TestAdaptiveParts:
         assert spark.conf.get("spark.sql.shuffle.partitions") == orig
 
 
+class TestResetStats:
+    def test_failed_rebuild_warns_and_keeps_frame(self, spark,
+                                                  monkeypatch):
+        """A failing JVM rebuild must not silently switch off the
+        overflow guard: the frame comes back unchanged, with a
+        warning."""
+        import pytest
+
+        from brahmand_spark.ops.algos import _reset_stats
+
+        class _Broken:
+            def __getattr__(self, name):
+                raise RuntimeError("rebuild unavailable")
+
+        df = spark.range(3)
+        monkeypatch.setattr(spark, "_jsparkSession", _Broken())
+        with pytest.warns(RuntimeWarning, match="statistics"):
+            out = _reset_stats(df)
+        monkeypatch.undo()
+        assert out is df
+
+
 class TestCkptObs:
     """`_ckpt_obs`: the convergence-probe metric must ride the
     checkpoint job (no separate action) and agree with a plain

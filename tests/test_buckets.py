@@ -9,7 +9,9 @@ import pytest
 def bucketed(spark):
     # saveAsTable writes to the session's default warehouse dir
     # (spark-warehouse/ under cwd — gitignored); tables dropped on teardown.
-    from brahmand_spark.ops.buckets import write_bucketed
+    def write_bucketed(df, name):
+        (df.write.mode("overwrite").bucketBy(8, "k").sortBy("k")
+         .saveAsTable(name))
 
     left = spark.range(10000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
@@ -17,8 +19,8 @@ def bucketed(spark):
     right = spark.range(5000).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("w")
     )
-    write_bucketed(left, "bkt_left", ["k"], num_buckets=8)
-    write_bucketed(right, "bkt_right", ["k"], num_buckets=8)
+    write_bucketed(left, "bkt_left")
+    write_bucketed(right, "bkt_right")
     yield spark
     spark.sql("DROP TABLE IF EXISTS bkt_left")
     spark.sql("DROP TABLE IF EXISTS bkt_right")

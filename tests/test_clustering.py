@@ -2,11 +2,8 @@
 empty-cell retention, determinism, and the no-shuffle assignment shape."""
 
 import numpy as np
-import pyspark.sql.functions as F
 
-from brahmand_spark.ops.clustering import (
-    cluster_sizes, kmeans, kmeans_assign, kmeans_fit,
-)
+from brahmand_spark.ops.clustering import kmeans, kmeans_assign, kmeans_fit
 
 
 def _vec_df(spark, X):
@@ -76,10 +73,3 @@ class TestKMeans:
         plan = kmeans_assign(df, C)._jdf.queryExecution() \
             .executedPlan().toString()
         assert "Exchange" not in plan
-
-    def test_cluster_sizes_total(self, spark):
-        rng = np.random.RandomState(5)
-        X = rng.randn(60, 8)
-        df = _vec_df(spark, X)
-        sizes = cluster_sizes(kmeans(df, k=4, iters=2))
-        assert sizes.agg(F.sum("n")).collect()[0][0] == 60

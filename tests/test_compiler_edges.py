@@ -450,7 +450,7 @@ class TestColumnStatSelectivity:
     (collect_table_stats(columns=True)) per-filter selectivity is
     estimated from ndv / min-max instead of the fixed 0.1 constant."""
 
-    def _anchor(self, tpch, cypher, stats, cstats):
+    def _anchor(self, tpch, cypher, stats, cstats, fresh=False):
         from brahmand_spark.compile.compiler import QueryCompiler
         from brahmand_spark.compile.scope import Scope
         from brahmand_spark.parser.parser import parse
@@ -461,6 +461,8 @@ class TestColumnStatSelectivity:
             tpch.schema, tpch._load_for_label,
             table_stats=stats.get if stats is not None else None,
             column_stats=cstats.get if cstats is not None else None)
+        if fresh:  # the sibling compiler a CALL { } block plans with
+            compiler = compiler._fresh()
         pattern = compiler._build_pattern(part.matches, Scope())
         compiler._infer(pattern)
         return compiler._select_anchor(pattern, part)
@@ -482,6 +484,14 @@ class TestColumnStatSelectivity:
         cstats2 = {"Customer": {"c_mktsegment": {"ndv": 1000}},
                    "Order": {"o_orderstatus": {"ndv": 2}}}
         assert self._anchor(tpch, self.Q_EQ_PAIR, self.ROWS, cstats2) == "a"
+
+    def test_call_block_compiler_keeps_stats(self, tpch):
+        # CALL { } blocks compile on _fresh(): same table and column
+        # stats, so the same ndv-driven anchor as the outer query
+        cstats = {"Customer": {"c_mktsegment": {"ndv": 2}},
+                  "Order": {"o_orderstatus": {"ndv": 1000}}}
+        assert self._anchor(tpch, self.Q_EQ_PAIR, self.ROWS, cstats,
+                            fresh=True) == "b"
 
     def test_without_column_stats_behavior_unchanged(self, tpch):
         # same query, no column stats: constant model ties -> pattern
@@ -712,6 +722,23 @@ class TestVarLengthCostGuard:
             "MATCH (a:Customer)-[:NEXT_CUST*7..8]->(b:Customer) "
             "WHERE a.c_custkey <= 3 RETURN count(*) AS n")
         assert df.collect()[0][0] > 0
+
+    def test_write_match_uses_session_guard(self, spark):
+        # a write's MATCH plans with the session's compiler settings:
+        # the lowered guard refuses it exactly as it refuses the read
+        from brahmand_spark.graphs.tpch import build_session
+
+        from .conftest import SF_SMOKE
+
+        s = build_session(spark, SF_SMOKE)
+        s.max_var_hops = 2
+        s.allow_writes = True
+        hop = "MATCH (a:Customer)-[:NEXT_CUST*1..4]->(b:Customer) "
+        with pytest.raises(PlanError, match="cost guard") as read:
+            s.execute(hop + "RETURN count(*) AS n")
+        with pytest.raises(PlanError, match="cost guard") as write:
+            s.execute(hop + "SET b.c_comment = 'x'")
+        assert str(write.value) == str(read.value)
 
     def test_unbounded_star_gets_guard_bound(self, tpch):
         # must compile (bounded to the guard), not error

@@ -994,25 +994,23 @@ def test_folded_dedup_exact_keep(spark, duck):
 
 def test_folded_dedup_exact_groups(spark, duck):
     """The former dedup_exact registry gate (folded r4 for
-    graph_cc_two_phase — it asserted 0 rows at sf0.01): same
-    duplicate-group query, same DuckDB oracle, plus a synthesized-
-    duplicates variant so the comparison is not vacuous."""
-    from brahmand_spark.ops.dedup import exact_duplicates
+    graph_cc_two_phase — it asserted 0 rows at sf0.01): the kept
+    canonical (min-id) row per text against the DuckDB oracle, plus a
+    synthesized-duplicates variant so the comparison is not vacuous."""
+    from brahmand_spark.ops.dedup import dedup_exact
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     assert_same(
-        exact_duplicates(docs, ["text"]).select("canonical_id", "n_copies"),
-        duck.sql("""SELECT min(doc_id) AS canonical_id,
-                           count(*) AS n_copies
-                    FROM documents GROUP BY text HAVING count(*) > 1"""),
+        dedup_exact(docs, ["text"]).select("doc_id"),
+        duck.sql("SELECT min(doc_id) AS doc_id FROM documents "
+                 "GROUP BY text"),
     )
     dup = spark.createDataFrame(
         [(1, "aa"), (2, "aa"), (3, "bb"), (4, "aa"), (5, "cc"), (6, "cc")],
         "doc_id long, text string",
     )
-    got = sorted(map(tuple, exact_duplicates(dup, ["text"])
-                 .select("canonical_id", "n_copies").collect()))
-    assert got == [(1, 3), (5, 2)]
+    got = sorted(r.doc_id for r in dedup_exact(dup, ["text"]).collect())
+    assert got == [1, 3, 5]
 
 
 def test_folded_events_top_users(spark, duck):

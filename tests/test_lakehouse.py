@@ -1,4 +1,4 @@
-"""Lakehouse hooks (ops/lakehouse.py + writes.py MERGE INTO mapping):
+"""Lakehouse hooks (ops/lakehouse.py + writes.py durable commits):
 plain-parquet behavior is unchanged and fully tested in the default
 environment; Delta/Iceberg paths are availability-gated INSIDE the
 test bodies (no skips) — when a runtime is present they execute for
@@ -82,50 +82,6 @@ class TestMergeIntoMapping:
             merge_into_statement("t", ["a"], [])
         with pytest.raises(ValueError, match="not in columns"):
             merge_into_statement("t", ["a"], ["z"])
-
-    def test_cypher_merge_maps_to_merge_into(self, tpch):
-        from brahmand_spark.writes import merge_into_sql
-
-        sql = merge_into_sql(
-            tpch, "MERGE (c:Customer {c_custkey: 99991, c_name: 'X'}) "
-                  "ON MATCH SET c.c_acctbal = 5.0")
-        assert sql.startswith("MERGE INTO Customer t USING __merge_src")
-        assert "t.c_custkey <=> s.c_custkey" in sql
-        assert "t.c_name <=> s.c_name" in sql
-        assert "UPDATE SET t.c_acctbal = s.c_acctbal" in sql
-        assert "INSERT (c_custkey, c_name, c_acctbal)" in sql
-
-    def test_relationship_merge_rejected(self, tpch):
-        from brahmand_spark.writes import merge_into_sql
-
-        with pytest.raises(UnsupportedError, match="node form"):
-            merge_into_sql(
-                tpch, "MERGE (a)-[:PLACED]->(b)")
-
-    def test_execute_gated_or_runs(self, spark, tpch):
-        """apply_merge_into executes for real on a MERGE-capable
-        session; in the default env the gate raises — and the SAME
-        Cypher MERGE must still work through the portable
-        allow_writes path (no-regression branch)."""
-        from brahmand_spark.graphs.tpch import build_session
-        from brahmand_spark.writes import apply_merge_into
-
-        cy = "MERGE (c:Customer {c_custkey: 999999, c_name: 'ZZZ'})"
-        if format_available(spark, "delta"):
-            apply_merge_into(tpch, cy)  # against a delta-backed table
-        else:
-            with pytest.raises(UnsupportedError, match="runtime"):
-                apply_merge_into(tpch, cy)
-            s = build_session(spark, SF_SMOKE)
-            s.allow_writes = True
-            before = s.tables["Customer"].count()
-            stats = s.execute(cy).collect()[0]
-            assert stats["nodes_created"] == 1
-            assert s.tables["Customer"].count() == before + 1
-            # idempotent: second MERGE creates nothing (the MERGE INTO
-            # insert-if-absent semantics the mapping renders)
-            stats2 = s.execute(cy).collect()[0]
-            assert stats2["nodes_created"] == 0
 
 
 class TestMergeCommit:

@@ -6,7 +6,7 @@ pure function of the data — stable under input repartitioning)."""
 
 import pyspark.sql.functions as F
 
-from brahmand_spark.ops.packing import pack_sequences, packing_efficiency
+from brahmand_spark.ops.packing import pack_sequences
 
 
 def _counts(spark, rows):
@@ -57,17 +57,6 @@ class TestPackSequences:
         b = pack_sequences(df.repartition(13), budget=64, n_buckets=8) \
             .orderBy("doc_id").collect()
         assert a == b
-
-    def test_efficiency_aggregate(self, spark):
-        rows = [(1, 4), (2, 3), (3, 5), (4, 2), (5, 9)]
-        packed = pack_sequences(_counts(spark, rows), budget=10,
-                                n_buckets=1)
-        eff = packing_efficiency(packed, budget=10).collect()[0]
-        assert eff["n_sequences"] == 3
-        assert eff["n_docs"] == 5
-        # fills: 7, 7, 9 -> waste 3 + 3 + 1
-        assert eff["padding_tokens"] == 7
-        assert abs(eff["mean_fill_frac"] - (0.7 + 0.7 + 0.9) / 3) < 1e-6
 
     def test_no_sequence_overflows_budget(self, spark):
         rows = [(i, (i * 13) % 40 + 1) for i in range(300)]

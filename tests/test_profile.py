@@ -96,38 +96,6 @@ class TestHistogram:
         assert h.count() <= 7
 
 
-class TestCorrelationMatrix:
-    def test_matches_duckdb(self, spark, duck):
-        from brahmand_spark.ops.profile import correlation_matrix
-
-        li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-        got = correlation_matrix(
-            li, ["l_quantity", "l_extendedprice", "l_discount"])
-        want = duck.sql("""
-            SELECT * FROM (
-                SELECT 'l_discount' AS col_a, 'l_extendedprice' AS col_b,
-                       round(corr(l_discount, l_extendedprice), 6) AS corr
-                FROM lineitem
-                UNION ALL
-                SELECT 'l_discount', 'l_quantity',
-                       round(corr(l_discount, l_quantity), 6)
-                FROM lineitem
-                UNION ALL
-                SELECT 'l_extendedprice', 'l_quantity',
-                       round(corr(l_extendedprice, l_quantity), 6)
-                FROM lineitem)""")
-        assert_same(got, want)
-
-    def test_single_job(self, spark):
-        from brahmand_spark.ops.profile import correlation_matrix
-
-        li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-        plan = correlation_matrix(
-            li, ["l_quantity", "l_extendedprice", "l_tax"]) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 1, plan
-
-
 class TestHistogramEdgeCases:
     def test_all_null_column_yields_empty(self, spark):
         df = spark.createDataFrame([(None,), (None,)], "x int")
@@ -145,23 +113,3 @@ class TestHistogramEdgeCases:
         assert sum(rows.values()) == 20
         assert rows[0] >= 5 + 2  # the 5 underflow values fold into bin 0
         assert rows[3] >= 6      # 9..14 fold into the last bin
-
-
-class TestDataCard:
-    def test_renders_markdown(self, spark):
-        from brahmand_spark.ops.profile import data_card
-
-        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-        card = data_card(docs, title="Docs sf0.001")
-        assert card.startswith("# Docs sf0.001")
-        assert "- rows: 500" in card
-        assert "| doc_id |" in card and "| text |" in card
-        # one table row per column + the header row
-        assert card.count("\n| ") == len(docs.columns) + 1
-
-    def test_empty_df(self, spark):
-        from brahmand_spark.ops.profile import data_card
-
-        df = spark.createDataFrame([], "a int, b string")
-        card = data_card(df)
-        assert "- rows: 0" in card

@@ -43,51 +43,6 @@ class TestDeterministicSplit:
         assert joined.filter(F.col("s1") != F.col("s2")).count() == 0
 
 
-class TestStratifiedSample:
-    def test_per_stratum_rates(self, spark):
-        from brahmand_spark.ops.sampling import stratified_sample
-
-        docs = _docs(spark).withColumn(
-            "bucket", (F.col("doc_id") % 2).cast("int"))
-        out = stratified_sample(
-            docs, "bucket", {0: 1.0, 1: 0.2})
-        kept = {r["bucket"]: r["count"]
-                for r in out.groupBy("bucket").count().collect()}
-        full = {r["bucket"]: r["count"]
-                for r in docs.groupBy("bucket").count().collect()}
-        assert kept[0] == full[0]  # fraction 1.0 keeps everything
-        assert 0.1 < kept[1] / full[1] < 0.3
-
-    def test_unlisted_stratum_dropped_by_default(self, spark):
-        from brahmand_spark.ops.sampling import stratified_sample
-
-        docs = _docs(spark).withColumn(
-            "bucket", (F.col("doc_id") % 3).cast("int"))
-        out = stratified_sample(docs, "bucket", {0: 1.0})
-        assert out.filter(F.col("bucket") != 0).count() == 0
-
-
-class TestMixtureWeights:
-    def test_downsamples_toward_target(self, spark):
-        from brahmand_spark.ops.sampling import mixture_weights
-
-        # 3 synthetic sources with skewed sizes 300/150/50
-        docs = _docs(spark).withColumn(
-            "source",
-            F.when(F.col("doc_id") < 300, "web")
-            .when(F.col("doc_id") < 450, "books")
-            .otherwise("code"),
-        )
-        out = mixture_weights(
-            docs, "source", {"web": 1.0, "books": 1.0, "code": 1.0})
-        kept = {r["source"]: r["count"]
-                for r in out.groupBy("source").count().collect()}
-        # equal target weights -> all sources near the smallest (50)
-        assert kept["code"] == 50  # bottleneck source fully kept
-        for s in ("web", "books"):
-            assert abs(kept[s] - 50) <= 15
-
-
 class TestCrossCorpusOverlap:
     def test_flags_contaminated_pairs_vs_oracle(self, spark, duck):
         from brahmand_spark.ops.dedup import cross_corpus_overlap
@@ -182,50 +137,3 @@ class TestDecontaminate:
             docs.filter(F.col("doc_id") >= 400),
             n=3, min_shared=2).collect()))
         assert got == want and len(got) > 0
-
-
-class TestTokenBudgetSample:
-    def test_budget_hit_and_deterministic(self, spark, duck):
-        from brahmand_spark.ops.sampling import token_budget_sample
-        from brahmand_spark.ops.text import token_count
-
-        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-        totals = {
-            r["source"]: r["t"]
-            for r in docs.join(
-                token_count(docs), "doc_id"
-            ).groupBy("source").agg(F.sum("n_tokens").alias("t")).collect()
-        }
-        srcs = sorted(totals)[:3]
-        budgets = {srcs[0]: totals[srcs[0]] // 2,   # halve
-                   srcs[1]: totals[srcs[1]] * 10,   # cap above mass
-                   srcs[2]: 0}                      # zero budget
-        out = token_budget_sample(docs, budgets)
-        kept = {
-            r["source"]: r["t"]
-            for r in out.join(token_count(out), "doc_id")
-            .groupBy("source").agg(F.sum("n_tokens").alias("t")).collect()
-        }
-        # unlisted sources dropped entirely
-        assert set(kept) <= {srcs[0], srcs[1]}
-        # capped-above-mass source keeps everything
-        assert kept[srcs[1]] == totals[srcs[1]]
-        # halved source lands near its budget (few-hundred-doc strata:
-        # generous concentration bound)
-        assert 0.25 * totals[srcs[0]] <= kept[srcs[0]] \
-            <= 0.8 * totals[srcs[0]]
-        # deterministic under repartition
-        a = sorted(r["doc_id"] for r in out.select("doc_id").collect())
-        b = sorted(r["doc_id"] for r in token_budget_sample(
-            docs.repartition(13), budgets).select("doc_id").collect())
-        assert a == b
-
-    def test_precomputed_token_column(self, spark):
-        from brahmand_spark.ops.sampling import token_budget_sample
-
-        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet") \
-            .withColumn("nt", F.col("n_chars"))
-        out = token_budget_sample(
-            docs, {"src0": 10**9}, token_col="nt")
-        assert out.count() == docs.filter("source = 'src0'").count()
-        assert "nt" in out.columns

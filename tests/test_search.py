@@ -1,12 +1,10 @@
-"""BM25 ranking (ops/search): DuckDB-oracle parity, ranking sanity,
-and inverted-index statistics."""
+"""BM25 ranking (ops/search): DuckDB-oracle parity and ranking sanity."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from brahmand_spark.ops.search import bm25_oracle_sql, bm25_topk, term_stats
+from brahmand_spark.ops.search import bm25_oracle_sql, bm25_topk
 
 from .conftest import SF_SMOKE
 from .helpers import assert_same
@@ -63,17 +61,6 @@ def test_bm25_rejects_empty_query(spark):
     docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     with pytest.raises(ValueError):
         bm25_topk(docs, [])
-
-
-def test_term_stats_postings(spark):
-    docs = spark.createDataFrame(
-        [(1, "a b a"), (2, "b")], "doc_id long, text string"
-    )
-    got = {
-        (r["doc_id"], r["term"]): (r["tf"], r["dl"])
-        for r in term_stats(docs).collect()
-    }
-    assert got == {(1, "a"): (2, 3), (1, "b"): (1, 3), (2, "b"): (1, 1)}
 
 
 def test_bm25_topk_plan_is_take_ordered(spark):

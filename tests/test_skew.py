@@ -59,9 +59,3 @@ class TestSkew:
         tp_map = {r.k: sorted(r.vals) for r in tp.collect()}
         plain_map = {r.k: sorted(r.vals) for r in plain.collect()}
         assert tp_map == plain_map
-
-    def test_hot_keys(self, spark):
-        from brahmand_spark.ops.skew import hot_keys
-
-        hot = hot_keys(_skewed_df(spark), ["k"], min_count=1000).collect()
-        assert [r.k for r in hot] == [0]

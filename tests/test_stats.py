@@ -1,5 +1,5 @@
-"""Grouped quantiles + random projection (ops/stats): DuckDB parity,
-approx-vs-exact error bound, JL distance preservation, plan shape."""
+"""Random projection and PCA (ops/stats): DuckDB parity, JL distance
+preservation, plan shape."""
 
 from __future__ import annotations
 
@@ -8,57 +8,10 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from brahmand_spark.ops.stats import group_quantiles, random_projection
+from brahmand_spark.ops.stats import random_projection
 
 from .conftest import SF_SMOKE
 from .helpers import assert_same
-
-
-class TestGroupQuantiles:
-    def test_duckdb_parity_grouped(self, spark, duck):
-        from brahmand_spark.io import read_parquet
-
-        li = read_parquet(spark, f"{SF_SMOKE}/lineitem.parquet")
-        got = group_quantiles(li, "l_extendedprice", ["l_returnflag"])
-        # quantile_cont only takes CONSTANT fractions in DuckDB ->
-        # one SELECT per prob
-        per_p = "\n            UNION ALL ".join(
-            f"SELECT l_returnflag, CAST({p} AS DOUBLE) AS prob, "
-            f"round(quantile_cont(l_extendedprice, {p}), 4) AS quantile "
-            f"FROM lineitem GROUP BY l_returnflag"
-            for p in (0.25, 0.5, 0.75, 0.95)
-        )
-        assert_same(got, duck.sql(per_p))
-
-    def test_duckdb_parity_global(self, spark, duck):
-        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-        lens = docs.select(F.length("text").alias("n"))
-        got = group_quantiles(lens, "n", probs=[0.0, 0.5, 1.0])
-        per_p = "\n            UNION ALL ".join(
-            f"SELECT CAST({p} AS DOUBLE) AS prob, "
-            f"round(quantile_cont(length(text), {p}), 4) AS quantile "
-            f"FROM documents"
-            for p in (0.0, 0.5, 1.0)
-        )
-        assert_same(got, duck.sql(per_p))
-
-    def test_approx_within_rank_error(self, spark):
-        """approx_percentile's rank error: the approximate median of
-        0..9999 lands within accuracy-driven distance of 5000."""
-        df = spark.range(10_000).select(F.col("id").cast("double")
-                                        .alias("v"))
-        exact = {r["prob"]: r["quantile"]
-                 for r in group_quantiles(df, "v").collect()}
-        approx = {r["prob"]: r["quantile"]
-                  for r in group_quantiles(
-                      df, "v", exact=False, accuracy=1000).collect()}
-        for p, e in exact.items():
-            assert abs(approx[p] - e) <= 10_000 / 1000 + 1
-
-    def test_rejects_bad_probs(self, spark):
-        df = spark.range(3).select(F.col("id").alias("v"))
-        with pytest.raises(ValueError):
-            group_quantiles(df, "v", probs=[1.5])
 
 
 class TestRandomProjection:
@@ -230,6 +183,18 @@ class TestPca:
             ._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
         assert "EvalPython" not in plan
+
+    def test_non_finite_model_refused(self, spark):
+        # a degenerate fit (NaN mean) must fail with the reason, not as
+        # a SQL parse error on the rendered "nanD" literal
+        from brahmand_spark.ops.stats import pca_transform
+
+        emb = spark.createDataFrame(
+            [(1, [1.0, 2.0])], "vec_id bigint, embedding array<double>")
+        for mean, comps in (([math.nan, 0.0], [[1.0, 0.0]]),
+                            ([0.0, 0.0], [[math.inf, 0.0]])):
+            with pytest.raises(ValueError, match="non-finite"):
+                pca_transform(emb, mean, comps)
 
 
 def test_pca_via_call(tpch):

@@ -11,7 +11,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from brahmand_spark.ops.walks import (
-    random_walks, ranked_adjacency, skipgram_pairs, walks_as_documents,
+    random_walks, ranked_adjacency, skipgram_pairs,
 )
 
 from .helpers import assert_same
@@ -148,14 +148,6 @@ class TestRandomWalks:
 
 
 class TestWalkCorpus:
-    def test_walks_as_documents(self, spark):
-        docs = walks_as_documents(random_walks(
-            _edges_df(spark), n_walks=1, walk_length=4)).collect()
-        by_id = {r["doc_id"]: r["text"] for r in docs}
-        want = _py_walks(EDGES, 1, 4)
-        assert by_id == {
-            wid: " ".join(map(str, walk))
-            for wid, (_, walk) in want.items()}
 
     def test_skipgram_pairs_match_python(self, spark):
         walks = random_walks(_edges_df(spark), n_walks=2, walk_length=6)

@@ -39,7 +39,7 @@ def main() -> None:
     real_ckpt = algos._ckpt
     captured: list[str] = []
 
-    def hooked(df, mode, *aggs):
+    def hooked(df, mode, *aggs, **kw):
         """Same semantics as algos._ckpt_obs, but captures the plan of
         the OBSERVED frame (CollectMetrics on top) the first time a
         coloring superstep goes through (recognizable by its 'chg'
@@ -50,7 +50,7 @@ def main() -> None:
             captured.append(observed._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution
                 .ExplainMode.fromString("formatted")))
-        out = real_ckpt(observed, mode)
+        out = real_ckpt(observed, mode, **kw)
         return out, obs.get
 
     algos._ckpt_obs = hooked
