@@ -48,7 +48,8 @@ from ..errors import PlanError, UnsupportedError
 from ..parser import ast
 from .expressions import ExprCompiler, collect_aliases, contains_aggregate
 from .scope import (
-    NodeBinding, PathBinding, RelBinding, ScalarBinding, Scope, pcol,
+    NodeBinding, PathBinding, RelBinding, ScalarBinding, Scope, as_sql, eq,
+    eq_sql, pcol, quote, ref,
 )
 
 # Cost guard: a -[:T*1..k]-> hop enumerates k-fold self-joins, so the
@@ -70,6 +71,15 @@ class NodeEntity:
     properties: dict[str, ast.Expr] = field(default_factory=dict)
     prebound: bool = False  # bound by an earlier WITH part
     in_path_var: bool = False  # member of a p = (...) pattern
+
+
+def _with_copies(df: DataFrame, cols: dict[str, str]) -> DataFrame:
+    """Add (or replace) columns that copy other columns, name ->
+    source. ``withColumn`` with a prebuilt Column is a single JVM call;
+    ``withColumns`` pays 11 more to ship its dict."""
+    for name, src in cols.items():
+        df = df.withColumn(name, ref(src))
+    return df
 
 
 def _is_var(rel) -> bool:
@@ -537,14 +547,10 @@ class QueryCompiler:
             ec = ExprCompiler(sub_scope, self.params, self._prop_dtype)
             sub_df = sub_df.filter(ec.compile(mc.where))
 
-        key_cols = []
-        conds = []
-        for a in anchors:
-            outer_b = scope.get(a)
-            inner_b = sub_scope.get(a)
-            key = f"__optk_{a}"
-            key_cols.append(F.col(inner_b.id_pcol).alias(key))
-            conds.append(F.col(outer_b.id_pcol) == F.col(key))
+        keys = [f"__optk_{a}" for a in anchors]
+        key_cols = [as_sql(sub_scope.get(a).id_pcol, k)
+                    for a, k in zip(anchors, keys)]
+        conds = [(scope.get(a).id_pcol, k) for a, k in zip(anchors, keys)]
         new_aliases = [a for a in pattern.nodes if a not in anchors]
         new_aliases += [r.alias for r in pattern.rels]
         carry = []
@@ -592,19 +598,15 @@ class QueryCompiler:
                 null_when = next(
                     (c for c in carry if c.endswith("__hops")), None)
             _bind_path_vars(pattern, scope, null_when=null_when)
-        sub_sel = sub_df.select(*key_cols, *carry)
-        cond = conds[0] if conds else F.lit(True)
-        for c in conds[1:]:
-            cond = cond & c
+        sub_sel = sub_df.selectExpr(*key_cols, *map(quote, carry))
+        cond = eq(*conds) if conds else F.lit(True)
         if df is None:
             # OPTIONAL MATCH as the first clause: single seed row so an
             # empty optional still yields one all-NULL row.
             from pyspark.sql import SparkSession
             df = SparkSession.getActiveSession().range(1).drop("id")
         out = df.join(sub_sel, cond, "left")
-        for a in anchors:
-            out = out.drop(f"__optk_{a}")
-        return out
+        return out.drop(*keys) if keys else out
 
     def _subquery_assembly(
         self, scope: Scope, path: ast.PathPattern,
@@ -676,19 +678,11 @@ class QueryCompiler:
         they never add columns or multiply rows."""
         sub_df, sub_scope, anchors = self._subquery_assembly(
             scope, pred.path, pred.where)
-        key_cols = []
-        conds = []
-        for a in anchors:
-            outer_b = scope.get(a)
-            inner_b = sub_scope.get(a)
-            key = f"__ppk_{a}"
-            key_cols.append(F.col(inner_b.id_pcol).alias(key))
-            conds.append(F.col(outer_b.id_pcol) == F.col(key))
-        cond = conds[0]
-        for c in conds[1:]:
-            cond = cond & c
+        keys = [f"__ppk_{a}" for a in anchors]
         return df.join(
-            sub_df.select(*key_cols), cond,
+            sub_df.selectExpr(*[as_sql(sub_scope.get(a).id_pcol, k)
+                                for a, k in zip(anchors, keys)]),
+            eq(*[(scope.get(a).id_pcol, k) for a, k in zip(anchors, keys)]),
             "left_anti" if negated else "left_semi",
         )
 
@@ -1879,9 +1873,7 @@ class QueryCompiler:
         sch = self.catalog.node(node.label)
         df = self.load_table(node.label)
         raw_cols = list(df.columns)
-        df = df.select(
-            *[F.col(c).alias(pcol(node.alias, c)) for c in raw_cols]
-        )
+        df = df.toDF(*[pcol(node.alias, c) for c in raw_cols])
         scope.bind(NodeBinding(
             alias=node.alias, label=node.label, id_column=sch.node_id,
             columns=sch.column_names or raw_cols,
@@ -1892,7 +1884,7 @@ class QueryCompiler:
                 # Inline {k: v} props are per-table equality filters
                 # (logical_plan/match_clause.rs:26-57).
                 df = df.filter(
-                    F.col(pcol(node.alias, key)) == ec.compile(expr)
+                    ref(pcol(node.alias, key)) == ec.compile(expr)
                 )
         if node.label in self.broadcast_labels:
             df = F.broadcast(df)
@@ -2050,8 +2042,8 @@ class QueryCompiler:
         df = self._scan_node(node, scope)
         a = rel.alias
         nb = scope.get(fused_alias)
-        fk = F.col(pcol(fused_alias, fk_col))
-        own_id = F.col(nb.id_pcol)
+        fk = pcol(fused_alias, fk_col)
+        own_id = nb.id_pcol
         # orientation decides which pattern side this endpoint is
         fused_is_dst = fused_alias == rel.dst
         src_col = own_id if not fused_is_dst else fk
@@ -2059,14 +2051,13 @@ class QueryCompiler:
         # fused src: its id is from_id and the FK is to_id (from-flavor
         # fwd) — and mirrored for every other combination; both reduce
         # to: the fused side exposes its own id, the other side the FK.
-        df = df.withColumn(pcol(a, "from_id"), src_col)
-        df = df.withColumn(pcol(a, "to_id"), dst_col)
         prop_cols = [
             c for c in rel.schema.column_names
             if c in self._prop_refs.get(a, set())
         ]
-        for c in prop_cols:
-            df = df.withColumn(pcol(a, c), F.col(pcol(fused_alias, c)))
+        df = _with_copies(df, {
+            pcol(a, "from_id"): src_col, pcol(a, "to_id"): dst_col,
+            **{pcol(a, c): pcol(fused_alias, c) for c in prop_cols}})
         # only the materialized (accessed) props are advertised — the
         # fused path never copies the rest (bare rel refs disable it)
         scope.bind(RelBinding(
@@ -2078,7 +2069,7 @@ class QueryCompiler:
             ec = ExprCompiler(scope, self.params, self._prop_dtype)
             for key, expr in rel.properties.items():
                 df = df.filter(
-                    F.col(pcol(fused_alias, key)) == ec.compile(expr)
+                    ref(pcol(fused_alias, key)) == ec.compile(expr)
                 )
         return df
 
@@ -2131,20 +2122,17 @@ class QueryCompiler:
         ci = find_component(backing_alias)
         df, bound = components[ci]
         bb = scope.get(backing_alias)
-        fk_col = F.col(pcol(backing_alias, fk))
-        own_id = F.col(bb.id_pcol)
+        fk_col = pcol(backing_alias, fk)
+        own_id = bb.id_pcol
         backing_is_src = backing_alias == rel.src
-        df = df.withColumn(
-            pcol(a, "from_id"), own_id if backing_is_src else fk_col
-        ).withColumn(
-            pcol(a, "to_id"), fk_col if backing_is_src else own_id
-        )
         v_prop_cols = [
             c for c in rel.schema.column_names
             if c in self._prop_refs.get(a, set())
         ]
-        for c in v_prop_cols:
-            df = df.withColumn(pcol(a, c), F.col(pcol(backing_alias, c)))
+        df = _with_copies(df, {
+            pcol(a, "from_id"): own_id if backing_is_src else fk_col,
+            pcol(a, "to_id"): fk_col if backing_is_src else own_id,
+            **{pcol(a, c): pcol(backing_alias, c) for c in v_prop_cols}})
         scope.bind(RelBinding(
             alias=a, type_name=rel.schema.type_name,
             columns=v_prop_cols,
@@ -2154,18 +2142,18 @@ class QueryCompiler:
             ec = ExprCompiler(scope, self.params, self._prop_dtype)
             for key, expr in rel.properties.items():
                 df = df.filter(
-                    F.col(pcol(backing_alias, key)) == ec.compile(expr)
+                    ref(pcol(backing_alias, key)) == ec.compile(expr)
                 )
         other_node = pattern.nodes[other_alias]
         oi = find_component(other_alias)
         if oi == ci:  # cycle: both endpoints already here -> filter
-            df = df.filter(fk_col == F.col(scope.get(other_alias).id_pcol))
+            df = df.filter(eq((fk_col, scope.get(other_alias).id_pcol)))
             bound.add(a)
             components[ci] = (df, bound)
         elif oi is not None:
             odf, obound = components[oi]
-            oid = F.col(scope.get(other_alias).id_pcol)
-            df = df.join(odf, fk_col == oid, "inner")
+            df = df.join(odf, eq((fk_col, scope.get(other_alias).id_pcol)),
+                         "inner")
             merged = bound | obound | {a}
             for idx in sorted((ci, oi), reverse=True):
                 components.pop(idx)
@@ -2176,8 +2164,9 @@ class QueryCompiler:
             components[ci] = (df, bound)
         else:
             other_df = self._scan_node(other_node, scope)
-            oid = F.col(scope.get(other_alias).id_pcol)
-            df = df.join(other_df, fk_col == oid, "inner")
+            df = df.join(other_df,
+                         eq((fk_col, scope.get(other_alias).id_pcol)),
+                         "inner")
             bound |= {a, other_alias}
             components[ci] = (df, bound)
 
@@ -2270,12 +2259,12 @@ class QueryCompiler:
             return df
 
         def oriented(src_col: str, dst_col: str) -> DataFrame:
-            sel = [F.col(src_col).alias(src_name), F.col(dst_col).alias(dst_name)]
-            sel += [F.col(c).alias(pcol(a, c)) for c in prop_cols]
-            return raw.select(*sel)
+            return raw.selectExpr(
+                as_sql(src_col, src_name), as_sql(dst_col, dst_name),
+                *[as_sql(c, pcol(a, c)) for c in prop_cols])
 
         if rel.orientation == "invalid":
-            df = oriented(sch.from_column, sch.to_column).filter(F.lit(False))
+            df = oriented(sch.from_column, sch.to_column).filter("false")
         elif rel.orientation == "fwd":
             df = oriented(sch.from_column, sch.to_column)
         elif rel.orientation == "rev":
@@ -2296,7 +2285,7 @@ class QueryCompiler:
         if rel.properties:
             ec = ExprCompiler(scope, self.params, self._prop_dtype)
             for key, expr in rel.properties.items():
-                df = df.filter(F.col(pcol(a, key)) == ec.compile(expr))
+                df = df.filter(ref(pcol(a, key)) == ec.compile(expr))
         return df
 
     def _adjacency_pairs(self, rel: RelEntity) -> Optional[DataFrame]:
@@ -2407,30 +2396,19 @@ class QueryCompiler:
                 # edge-list branch below, which is also prop-free here
                 return expand_pairs(outgoing).union(
                     expand_pairs(incoming)).distinct()
-        raw = self.load_table(sch.type_name)
-        raw = self._inline_prop_filter(rel, raw)
+        raw = self._inline_prop_filter(rel, self.load_table(sch.type_name))
+
+        def pairs(src_c: str, dst_c: str) -> DataFrame:
+            return raw.selectExpr(as_sql(src_c, "src"), as_sql(dst_c, "dst"))
+
         if rel.orientation == "invalid":
-            return raw.select(
-                F.col(sch.from_column).alias("src"),
-                F.col(sch.to_column).alias("dst"),
-            ).filter(F.lit(False))
+            return pairs(sch.from_column, sch.to_column).filter("false")
         if rel.orientation == "rev":
-            return raw.select(
-                F.col(sch.to_column).alias("src"),
-                F.col(sch.from_column).alias("dst"),
-            )
+            return pairs(sch.to_column, sch.from_column)
         if rel.orientation == "both":
-            return raw.select(
-                F.col(sch.from_column).alias("src"),
-                F.col(sch.to_column).alias("dst"),
-            ).union(raw.select(
-                F.col(sch.to_column).alias("src"),
-                F.col(sch.from_column).alias("dst"),
-            )).distinct()
-        return raw.select(
-            F.col(sch.from_column).alias("src"),
-            F.col(sch.to_column).alias("dst"),
-        )
+            return pairs(sch.from_column, sch.to_column).union(
+                pairs(sch.to_column, sch.from_column)).distinct()
+        return pairs(sch.from_column, sch.to_column)
 
     def _inline_prop_filter(self, rel: RelEntity,
                             raw: DataFrame) -> DataFrame:
@@ -2450,7 +2428,7 @@ class QueryCompiler:
                 raise PlanError(
                     f"unknown property '{key}' on relationship "
                     f"'{rel.schema.type_name}'")
-            raw = raw.filter(F.col(key) == ec.compile(expr))
+            raw = raw.filter(ref(key) == ec.compile(expr))
         return raw
 
     def _zero_hop_rows(self, rel: RelEntity) -> DataFrame:
@@ -2706,53 +2684,41 @@ class QueryCompiler:
         else:
             base = self._oriented_pairs(rel)
         tagged = "rt" in base.columns  # multi-type: per-edge type tag
+        step_cols = (["src", "dst"] + (["rs"] if carry else [])
+                     + (["rt"] if tagged else []))
+        # relationship-uniqueness compares TYPE and endpoints — an A
+        # edge and a B edge over the same pair are distinct
+        same_cols = ("src", "dst") + (("rt",) if tagged else ())
+        lo, hi = max(rel.min_hops, 1), max(rel.max_hops, 1)
         out: Optional[DataFrame] = None
-        # Degenerate `*0`: build the k=1 frame anyway (harvesting its
-        # exact schema, incl. the carry struct type) and constant-fold
-        # it away below — only the zero-hop identity rows survive.
-        for k in range(max(rel.min_hops, 1), max(rel.max_hops, 1) + 1):
-            step_cols = [
-                F.col("src").alias("e1_src"), F.col("dst").alias("e1_dst")]
+        # One chain of k-fold self-joins; each k in [lo, hi] projects
+        # its prefix. Degenerate `*0`: build the k=1 frame anyway
+        # (harvesting its exact schema, incl. the carry struct type)
+        # and constant-fold it away below — only the zero-hop identity
+        # rows survive.
+        chain = base.selectExpr(*[as_sql(c, f"e1_{c}") for c in step_cols])
+        for k in range(1, hi + 1):
+            if k > 1:
+                nxt = base.selectExpr(
+                    *[as_sql(c, f"e{k}_{c}") for c in step_cols])
+                chain = chain.join(
+                    nxt, eq((f"e{k - 1}_dst", f"e{k}_src")), "inner")
+                # relationship-uniqueness: no edge repeated in a path
+                for p in range(1, k):
+                    chain = chain.filter("NOT ({})".format(eq_sql(
+                        *[(f"e{p}_{c}", f"e{k}_{c}") for c in same_cols])))
+            if k < lo:
+                continue
+            out_cols = [as_sql("e1_src", "src"), as_sql(f"e{k}_dst", "dst"),
+                        f"{k} AS hops"]  # actual hop count for length(p)
             if carry:
-                step_cols.append(F.col("rs").alias("e1_rs"))
-            if tagged:
-                step_cols.append(F.col("rt").alias("e1_rt"))
-            df_k = base.select(*step_cols)
-            for s in range(2, k + 1):
-                nxt_cols = [
-                    F.col("src").alias(f"e{s}_src"),
-                    F.col("dst").alias(f"e{s}_dst")]
-                if carry:
-                    nxt_cols.append(F.col("rs").alias(f"e{s}_rs"))
-                if tagged:
-                    nxt_cols.append(F.col("rt").alias(f"e{s}_rt"))
-                nxt = base.select(*nxt_cols)
-                cond = F.col(f"e{s - 1}_dst") == F.col(f"e{s}_src")
-                df_k = df_k.join(nxt, cond, "inner")
-                # relationship-uniqueness: no edge repeated within a
-                # path (same TYPE and endpoints — an A edge and a B
-                # edge over the same pair are distinct relationships)
-                for p in range(1, s):
-                    same = ((F.col(f"e{p}_src") == F.col(f"e{s}_src"))
-                            & (F.col(f"e{p}_dst") == F.col(f"e{s}_dst")))
-                    if tagged:
-                        same = same & (F.col(f"e{p}_rt")
-                                       == F.col(f"e{s}_rt"))
-                    df_k = df_k.filter(~same)
-            out_cols = [
-                F.col("e1_src").alias("src"),
-                F.col(f"e{k}_dst").alias("dst"),
-                F.lit(k).alias("hops"),  # actual hop count for length(p)
-            ]
-            if carry:
-                out_cols.append(F.array(
-                    *[F.col(f"e{s}_rs") for s in range(1, k + 1)]
-                ).alias("rels"))
-            df_k = df_k.select(*out_cols)
+                out_cols.append("array({}) AS rels".format(", ".join(
+                    quote(f"e{s}_rs") for s in range(1, k + 1))))
+            df_k = chain.selectExpr(*out_cols)
             out = df_k if out is None else out.unionByName(df_k)
         assert out is not None
         if rel.max_hops == 0:
-            out = out.filter(F.lit(False))  # degenerate *0: schema only
+            out = out.filter("false")  # degenerate *0: schema only
         if rel.min_hops == 0:
             # zero-length arm (r13): (id, id, 0) for every node of the
             # shared endpoint label — traverses no edges, so inline
@@ -2763,14 +2729,11 @@ class QueryCompiler:
                 ident = ident.withColumn("rels", F.expr(
                     f"CAST(array() AS {dict(out.dtypes)['rels']})"))
             out = out.unionByName(ident.select(*out.columns))
-        final = [
-            F.col("src").alias(pcol(rel.alias, "from_id")),
-            F.col("dst").alias(pcol(rel.alias, "to_id")),
-            F.col("hops").alias(pcol(rel.alias, "hops")),
-        ]
+        final = {"src": "from_id", "dst": "to_id", "hops": "hops"}
         if carry:
-            final.append(F.col("rels").alias(pcol(rel.alias, "rels")))
-        return out.select(*final)
+            final["rels"] = "rels"
+        return out.selectExpr(*[as_sql(c, pcol(rel.alias, name))
+                                for c, name in final.items()])
 
     def _filter_score(
         self, pattern: Pattern, part: ast.QueryPart
@@ -3406,7 +3369,7 @@ class QueryCompiler:
         return not node.properties and accessed <= {node_id}
 
     def _bind_endpoint(
-        self, df: DataFrame, node: NodeEntity, endpoint_col: Column,
+        self, df: DataFrame, node: NodeEntity, endpoint_col: str,
         scope: Scope,
     ) -> DataFrame:
         """Bind an elided endpoint: its id column IS the edge endpoint
@@ -3417,7 +3380,8 @@ class QueryCompiler:
             alias=node.alias, label=node.label, id_column=sch.node_id,
             columns=[sch.node_id],  # the one column the edge provides
         ))
-        return df.withColumn(pcol(node.alias, sch.node_id), endpoint_col)
+        return df.withColumn(pcol(node.alias, sch.node_id),
+                             ref(endpoint_col))
 
     def _hop_is_skewed(self, rel, endpoint: str) -> bool:
         """True when degree stats (captured at adj-index build time)
@@ -3446,7 +3410,8 @@ class QueryCompiler:
         return worst >= self.skew_degree_threshold
 
     def _join_edge(self, comp_df: DataFrame, edge: DataFrame,
-                   comp_key, edge_key, rel, endpoint: str) -> DataFrame:
+                   comp_key: str, edge_key: str, rel,
+                   endpoint: str) -> DataFrame:
         """Frontier-component x edge join with skew-aware physical
         choice: when the adj-index degree stats flag a supernode-heavy
         key on the joined endpoint, salt the edge side (deterministic
@@ -3455,7 +3420,7 @@ class QueryCompiler:
         spread over skew_salt_factor tasks instead of one (the per-hop
         analogue of ops/skew.salted_join; plain join otherwise, where
         AQE broadcast/skew-split already does the right thing)."""
-        cond = edge_key == comp_key
+        cond = eq((edge_key, comp_key))
         if not self._hop_is_skewed(rel, endpoint):
             return comp_df.join(edge, cond, "inner")
         f = self.skew_salt_factor
@@ -3472,7 +3437,7 @@ class QueryCompiler:
         ).drop(salt)
 
     def _join_node(self, comp_df: DataFrame, node_df: DataFrame,
-                   edge_key, node_id, rel, endpoint: str,
+                   edge_key: str, node_id: str, rel, endpoint: str,
                    node_label: Optional[str]) -> DataFrame:
         """Component x endpoint-node-table join with the same skew
         guard as _join_edge, mirrored: after a hop lands on a
@@ -3481,7 +3446,7 @@ class QueryCompiler:
         table is replicated. Skipped when the node label is broadcast —
         a broadcast join never shuffles, so the hot key never
         concentrates."""
-        cond = edge_key == node_id
+        cond = eq((edge_key, node_id))
         if (node_label in self.broadcast_labels
                 or not self._hop_is_skewed(rel, endpoint)):
             return comp_df.join(node_df, cond, "inner")
@@ -3527,8 +3492,8 @@ class QueryCompiler:
                     comp_df = comp_df.filter(ec.compile(conj))
                 except Exception:
                     continue
-        keys = comp_df.select(
-            F.col(comp_key_name).alias(edge_key_name)).distinct()
+        keys = comp_df.selectExpr(
+            as_sql(comp_key_name, edge_key_name)).distinct()
         if self.prune_hops == "bloom":
             from ..ops.sketches import bloom_prefilter
 
@@ -3566,50 +3531,41 @@ class QueryCompiler:
                     )
                 else:
                     edge = self._edge_df(rel, scope)
-        src_key_name = pcol(rel.alias, "from_id")
-        dst_key_name = pcol(rel.alias, "to_id")
-        src_key = F.col(src_key_name)
-        dst_key = F.col(dst_key_name)
+        src_key = pcol(rel.alias, "from_id")
+        dst_key = pcol(rel.alias, "to_id")
 
         li = find_component(rel.src)
         ri = find_component(rel.dst)
         if li is not None and ri is not None:
+            lid = scope.get(rel.src).id_pcol
+            rid = scope.get(rel.dst).id_pcol
             if li == ri:
                 # cyclic pattern / re-used aliases: join the edge on both
                 # endpoint keys (graph_join_inference.rs:251-256,
                 # duplicate_scans_removing.rs:28-58).
                 df, bound = components[li]
-                lid = F.col(scope.get(rel.src).id_pcol)
-                rid = F.col(scope.get(rel.dst).id_pcol)
-                edge = self._prune_edge(
-                    edge, df, scope.get(rel.src).id_pcol, src_key_name,
-                    bound, scope)
-                df = df.join(edge, (src_key == lid) & (dst_key == rid), "inner")
+                edge = self._prune_edge(edge, df, lid, src_key, bound, scope)
+                df = df.join(edge, eq((src_key, lid), (dst_key, rid)),
+                             "inner")
                 bound.add(rel.alias)
                 components[li] = (df, bound)
             else:
                 ldf, lbound = components[li]
                 rdf, rbound = components[ri]
-                lid = F.col(scope.get(rel.src).id_pcol)
-                rid = F.col(scope.get(rel.dst).id_pcol)
                 edge = self._prune_edge(
-                    edge, ldf, scope.get(rel.src).id_pcol, src_key_name,
-                    lbound, scope)
+                    edge, ldf, lid, src_key, lbound, scope)
                 edge = self._prune_edge(
-                    edge, rdf, scope.get(rel.dst).id_pcol, dst_key_name,
-                    rbound, scope)
+                    edge, rdf, rid, dst_key, rbound, scope)
                 df = self._join_edge(ldf, edge, lid, src_key, rel, "src") \
-                    .join(rdf, dst_key == rid, "inner")
+                    .join(rdf, eq((dst_key, rid)), "inner")
                 merged = lbound | rbound | {rel.alias}
                 for idx in sorted((li, ri), reverse=True):
                     components.pop(idx)
                 components.append((df, merged))
         elif li is not None:
             df, bound = components[li]
-            lid = F.col(scope.get(rel.src).id_pcol)
-            edge = self._prune_edge(
-                edge, df, scope.get(rel.src).id_pcol, src_key_name,
-                bound, scope)
+            lid = scope.get(rel.src).id_pcol
+            edge = self._prune_edge(edge, df, lid, src_key, bound, scope)
             dst_node = pattern.nodes[rel.dst]
             if fused == rel.dst:  # dst rides inside the fused edge scan
                 df = self._join_edge(df, edge, lid, src_key, rel, "src")
@@ -3620,19 +3576,17 @@ class QueryCompiler:
                 )
             else:
                 right = self._scan_node(dst_node, scope)
-                rid = F.col(scope.get(rel.dst).id_pcol)
                 df = self._join_node(
                     self._join_edge(df, edge, lid, src_key, rel, "src"),
-                    right, dst_key, rid, rel, "dst", dst_node.label,
+                    right, dst_key, scope.get(rel.dst).id_pcol, rel, "dst",
+                    dst_node.label,
                 )
             bound |= {rel.alias, rel.dst}
             components[li] = (df, bound)
         elif ri is not None:
             df, bound = components[ri]
-            rid = F.col(scope.get(rel.dst).id_pcol)
-            edge = self._prune_edge(
-                edge, df, scope.get(rel.dst).id_pcol, dst_key_name,
-                bound, scope)
+            rid = scope.get(rel.dst).id_pcol
+            edge = self._prune_edge(edge, df, rid, dst_key, bound, scope)
             src_node = pattern.nodes[rel.src]
             if fused == rel.src:  # src rides inside the fused edge scan
                 df = self._join_edge(df, edge, rid, dst_key, rel, "dst")
@@ -3643,10 +3597,10 @@ class QueryCompiler:
                 )
             else:
                 left = self._scan_node(src_node, scope)
-                lid = F.col(scope.get(rel.src).id_pcol)
                 df = self._join_node(
                     self._join_edge(df, edge, rid, dst_key, rel, "dst"),
-                    left, src_key, lid, rel, "src", src_node.label,
+                    left, src_key, scope.get(rel.src).id_pcol, rel, "src",
+                    src_node.label,
                 )
             bound |= {rel.alias, rel.src}
             components[ri] = (df, bound)
@@ -3659,10 +3613,9 @@ class QueryCompiler:
                 df = self._bind_endpoint(edge, src_node, src_key, scope)
             else:
                 ldf = self._scan_node(src_node, scope)
-                lid = F.col(scope.get(rel.src).id_pcol)
+                lid = scope.get(rel.src).id_pcol
                 edge = self._prune_edge(
-                    edge, ldf, scope.get(rel.src).id_pcol,
-                    src_key_name, {rel.src}, scope)
+                    edge, ldf, lid, src_key, {rel.src}, scope)
                 df = self._join_edge(ldf, edge, lid, src_key, rel, "src")
             if fused == rel.dst:
                 pass  # dst already inside the fused edge scan
@@ -3670,9 +3623,9 @@ class QueryCompiler:
                 df = self._bind_endpoint(df, dst_node, dst_key, scope)
             else:
                 right = self._scan_node(dst_node, scope)
-                rid = F.col(scope.get(rel.dst).id_pcol)
                 df = self._join_node(
-                    df, right, dst_key, rid, rel, "dst", dst_node.label,
+                    df, right, dst_key, scope.get(rel.dst).id_pcol, rel,
+                    "dst", dst_node.label,
                 )
             components.append((df, {rel.src, rel.alias, rel.dst}))
 
@@ -3721,9 +3674,11 @@ class QueryCompiler:
 
         group_mode = any(contains_aggregate(it.expr) for it in expanded)
 
-        # Build (output_name, Column, is_agg, src_expr) tuples; bare
-        # node/rel variables expand to their property columns.
-        sel: list[tuple[str, Column, bool, object]] = []
+        # Build (output_name, Column | source column name, is_agg,
+        # src_expr) tuples; bare node/rel variables expand to their
+        # property columns. Items that only read a column keep its name,
+        # so the projection renders them as SQL in one call.
+        sel: list[tuple[str, "Column | str", bool, object]] = []
         new_scope = Scope()
         for item in expanded:
             e = item.expr
@@ -3747,15 +3702,13 @@ class QueryCompiler:
                 if final:
                     for c in b.columns:
                         sel.append((
-                            f"{out_alias}.{c}",
-                            F.col(pcol(e.name, c)), False, None,
+                            f"{out_alias}.{c}", pcol(e.name, c), False, None,
                         ))
                 else:
                     # WITH a [AS x]: carry the whole binding forward.
                     for c in list(b.columns):
                         sel.append((
-                            pcol(out_alias, c), F.col(pcol(e.name, c)),
-                            False, None,
+                            pcol(out_alias, c), pcol(e.name, c), False, None,
                         ))
                     if isinstance(b, NodeBinding):
                         new_scope.bind(NodeBinding(
@@ -3771,14 +3724,14 @@ class QueryCompiler:
                             type_pcol=b.type_pcol,
                         ))
                         # src/dst pcols must be carried too
-                        sel.append((b.src_pcol, F.col(b.src_pcol), False, None))
-                        sel.append((b.dst_pcol, F.col(b.dst_pcol), False, None))
+                        sel.append((b.src_pcol, b.src_pcol, False, None))
+                        sel.append((b.dst_pcol, b.dst_pcol, False, None))
                         if b.type_pcol:
                             # multi-type rels: the per-row type column
                             # rides the WITH re-carry (r12 — type(r)
                             # and rel-import correlation keys survive
                             # an intermediate WITH)
-                            sel.append((b.type_pcol, F.col(b.type_pcol),
+                            sel.append((b.type_pcol, b.type_pcol,
                                         False, None))
                 continue
             if not final and item.alias is None and not isinstance(
@@ -3789,23 +3742,32 @@ class QueryCompiler:
                     f"(add AS <name> to {expr_text(e)!r})"
                 )
             name = item.alias or self._output_name(e, final)
-            col = ec.compile(e)
+            col = ec.column_name(e) or ec.compile(e)
             is_agg = contains_aggregate(e)
             sel.append((name, col, is_agg, e))
             if not final:
                 new_scope.bind(ScalarBinding(name))
 
+        def named(name: str, col: "Column | str") -> Column:
+            if isinstance(col, str):
+                return F.expr(as_sql(col, name))
+            return col.alias(name)
+
         if group_mode:
-            keys = [col.alias(name) for name, col, is_agg, _ in sel if not is_agg]
-            aggs = [col.alias(name) for name, col, is_agg, _ in sel if is_agg]
+            keys = [named(name, col) for name, col, is_agg, _ in sel
+                    if not is_agg]
+            aggs = [named(name, col) for name, col, is_agg, _ in sel
+                    if is_agg]
             if keys:
                 out = df.groupBy(*keys).agg(*aggs)
             else:
                 out = df.agg(*aggs)  # global aggregate
                 # (group_by_building.rs:30-41: all-agg projection -> no keys)
-            out = out.select(*[name for name, *_ in sel])
+            out = out.selectExpr(*[quote(name) for name, *_ in sel])
+        elif all(isinstance(col, str) for _, col, _, _ in sel):
+            out = df.selectExpr(*[as_sql(col, name) for name, col, _, _ in sel])
         else:
-            out = df.select(*[col.alias(name) for name, col, _, _ in sel])
+            out = df.select(*[named(name, col) for name, col, _, _ in sel])
 
         if distinct:
             out = out.distinct()
@@ -3840,13 +3802,13 @@ class QueryCompiler:
             for ob in order_by:
                 e = ob.expr
                 if repr(e) in by_expr:
-                    c = F.col(f"`{by_expr[repr(e)]}`")
+                    c = ref(by_expr[repr(e)])
                 elif isinstance(e, ast.Variable) and e.name in out_names:
-                    c = F.col(e.name)
+                    c = ref(e.name)
                 elif isinstance(e, ast.PropertyAccess) and \
                         f"{e.alias}.{e.key}" in out_names:
-                    # backticks: the output name contains a literal dot
-                    c = F.col(f"`{e.alias}.{e.key}`")
+                    # the output name contains a literal dot
+                    c = ref(f"{e.alias}.{e.key}")
                 else:
                     if output_only:
                         raise PlanError(

@@ -19,7 +19,7 @@ from ..parser import ast
 from . import functions as fns
 from . import spatial, temporal
 from .scope import (
-    NodeBinding, PathBinding, RelBinding, ScalarBinding, Scope, pcol,
+    NodeBinding, PathBinding, RelBinding, ScalarBinding, Scope, pcol, ref,
 )
 
 
@@ -40,7 +40,33 @@ class ExprCompiler:
         self._lambda_vars: dict[str, Column] = {}
 
     # ------------------------------------------------------------------
+    def column_name(self, e: ast.Expr) -> Optional[str]:
+        """The physical column ``e`` reads as-is — a property of a
+        node/rel binding, a node or rel variable (its id column) or a
+        scalar variable — or None when ``e`` is any other expression.
+        Callers render such items as SQL name strings, which cost one
+        JVM call for a whole projection instead of several per item."""
+        if isinstance(e, ast.Variable) and e.name not in self._lambda_vars:
+            b = self.scope.get(e.name)
+            if isinstance(b, ScalarBinding):
+                return e.name
+            if isinstance(b, NodeBinding):
+                # Node used as a value: resolves to its id (Cypher node
+                # identity; also what count(a) should count).
+                return b.id_pcol
+            if isinstance(b, RelBinding):
+                return b.src_pcol
+        if (isinstance(e, ast.PropertyAccess)
+                and e.alias not in self._lambda_vars
+                and isinstance(self.scope.get(e.alias),
+                               (NodeBinding, RelBinding))):
+            return self.resolve_property(e.alias, e.key)
+        return None
+
     def compile(self, e: ast.Expr) -> Column:
+        name = self.column_name(e)
+        if name is not None:
+            return ref(name)
         if isinstance(e, ast.Literal):
             return F.lit(e.value)
         if isinstance(e, ast.Parameter):
@@ -80,7 +106,7 @@ class ExprCompiler:
                             f"crs)")
                     return F.col(e.alias)[k]
                 return F.col(e.alias)[e.key]
-            return F.col(self.resolve_property(e.alias, e.key))
+            return ref(self.resolve_property(e.alias, e.key))
         if isinstance(e, ast.ListLiteral):
             return F.array(*[self.compile(x) for x in e.items])
         if isinstance(e, ast.MapLiteral):
@@ -225,14 +251,6 @@ class ExprCompiler:
         b = self.scope.get(name)
         if b is None:
             raise PlanError(f"unknown variable '{name}'")
-        if isinstance(b, ScalarBinding):
-            return F.col(name)
-        if isinstance(b, NodeBinding):
-            # Node used as a value: resolves to its id (Cypher node
-            # identity; also what count(a) should count).
-            return F.col(b.id_pcol)
-        if isinstance(b, RelBinding):
-            return F.col(b.src_pcol)
         if isinstance(b, PathBinding):
             return self._opt_path_guard(b, self._path_nodes(b))
         raise PlanError(f"cannot use '{name}' as a value")
@@ -688,7 +706,7 @@ class ExprCompiler:
                 kind, e.args[0].value, self.compile(e.args[1]))
         # Graph-introspection functions need the scope, not just columns.
         if name == "id" and len(e.args) == 1 and isinstance(e.args[0], ast.Variable):
-            return self._variable(e.args[0].name)
+            return self.compile(e.args[0])
         if name == "labels" and len(e.args) == 1 and isinstance(e.args[0], ast.Variable):
             b = self.scope.get(e.args[0].name)
             if isinstance(b, NodeBinding):

@@ -13,12 +13,46 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional, Union
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 SEP = "__"  # alias/column separator in physical names
 
 
 def pcol(alias: str, column: str) -> str:
     """Physical (prefixed) column name for alias.column."""
     return f"{alias}{SEP}{column}"
+
+
+def quote(name: str) -> str:
+    """Backtick-quote a column name for a Spark SQL string. Every SQL
+    fragment built from a catalog or user name goes through here, so a
+    dot reads as part of the name and an embedded backtick is
+    escaped."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def ref(name: str) -> Column:
+    """Column reference by name. Same expression as ``F.col(name)``
+    for a dot-free name, but ``F.expr`` skips the per-call origin
+    capture of ``F.col`` — 3 JVM round trips instead of 13."""
+    return F.expr(quote(name))
+
+
+def eq_sql(*pairs: tuple[str, str]) -> str:
+    """``l1 = r1 AND l2 = r2 ...`` over column names."""
+    return " AND ".join(f"{quote(l)} = {quote(r)}" for l, r in pairs)
+
+
+def eq(*pairs: tuple[str, str]) -> Column:
+    """`eq_sql` as one Column (3 JVM round trips; the same condition
+    from ``F.col(l) == F.col(r)`` takes 37)."""
+    return F.expr(eq_sql(*pairs))
+
+
+def as_sql(src: str, name: str) -> str:
+    """``src AS name`` for ``selectExpr``, both column names."""
+    return f"{quote(src)} AS {quote(name)}"
 
 
 @dataclass

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .compile.scope import quote
+
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
@@ -94,7 +96,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         df = df.withColumn(
             c,
             F.expr(
-                f"timestampadd(MICROSECOND, `{c}` div 1000, "
+                f"timestampadd(MICROSECOND, {quote(c)} div 1000, "
                 f"TIMESTAMP_NTZ '1970-01-01 00:00:00')"
             ),
         )

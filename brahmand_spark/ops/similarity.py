@@ -168,19 +168,31 @@ def train_ivf_centroids(
     return _kmeans(X, n_cells, iters, seed)
 
 
+def _sql_double(x) -> str:
+    """``x`` as an exact Spark SQL double literal. ``repr`` renders NaN
+    and Inf as ``nan``/``inf``, which the SQL parser rejects, so a
+    non-finite model value is refused here with the reason."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(
+            f"non-finite model value {x!r} (NaN or Inf in the fitted "
+            "mean/components/centroids or in their input vectors)")
+    return f"{x!r}D"
+
+
 def _cents_lit(centroids: list[list[float]]) -> Column:
     """The centroid matrix as a literal array of (plane, half-norm)
     structs, built from ONE parsed SQL string instead of cells*dim
     nested ``F.lit``/``F.array`` calls — each of those is a py4j
     round-trip, and at k=8 x dim=64 the Column-based construction
     alone cost ~0.5 s per plan (measured r14; the k-means loop builds
-    this 1 + iters times per fit). ``repr`` doubles round-trip
-    exactly through Spark's SQL double literal, so the values are
-    bit-identical to the ``F.lit`` form."""
+    this 1 + iters times per fit). ``_sql_double`` round-trips
+    doubles exactly through Spark's SQL double literal, so the values
+    are bit-identical to the ``F.lit`` form, and refuses NaN/Inf."""
     rows = ", ".join(
         "named_struct('c', array(%s), 'h', %s)" % (
-            ", ".join(f"{float(x)!r}D" for x in c),
-            f"{sum(float(x) * float(x) for x in c) / 2.0!r}D",
+            ", ".join(_sql_double(x) for x in c),
+            _sql_double(sum(float(x) * float(x) for x in c) / 2.0),
         )
         for c in centroids
     )

@@ -7,24 +7,11 @@ embeddings make downstream similarity passes cheaper.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _as_double, _hyperplanes
-
-
-def _sql_double(x) -> str:
-    """``x`` as an exact Spark SQL double literal. ``repr`` renders NaN
-    and Inf as ``nan``/``inf``, which the SQL parser rejects, so a
-    non-finite coefficient is refused here with the reason."""
-    x = float(x)
-    if not math.isfinite(x):
-        raise ValueError(
-            f"non-finite projection coefficient {x!r} (NaN or Inf in "
-            "the fitted mean/components or in their input vectors)")
-    return f"{x!r}D"
+from ..compile.scope import quote
+from .similarity import _as_double, _hyperplanes, _sql_double
 
 
 def random_projection(df: DataFrame, out_dim: int,
@@ -69,7 +56,7 @@ def random_projection(df: DataFrame, out_dim: int,
         F.col(id_col).alias("_id"),
         _as_double(F.col(vec_col)).alias("_v"),
     ).selectExpr(
-        f"_id AS `{id_col}`",
+        f"_id AS {quote(id_col)}",
         f"array({', '.join(comp_sqls)}) AS projected",
     )
 
@@ -253,7 +240,7 @@ def pca_transform(
         F.col(id_col).alias("_id"),
         _as_double(F.col(vec_col)).alias("_v"),
     ).selectExpr(
-        f"_id AS `{id_col}`",
+        f"_id AS {quote(id_col)}",
         f"array({', '.join(comp_sqls)}) AS projected",
     )
 

@@ -8,9 +8,13 @@ CSVWithNames (server/models.rs:20-27), responses streamed line-by-line
 pretty/CSV formats (handlers.rs:182-185). The client is a line REPL
 (brahmand-client/src/main.rs:13-91).
 
-Implemented on the stdlib http.server (no web-framework dependency);
-DataFrame results are collected via toLocalIterator so large results
-stream without materializing on the driver.
+Implemented on the stdlib http.server (no web-framework dependency).
+A statement's rows are collected to the driver in one Spark action
+(``collect``: the job count does not grow with the number of result
+partitions) and the response is rendered in memory before it is sent,
+so a result is bounded by ``spark.driver.maxResultSize`` and driver
+memory.
+``Elapsed`` covers compilation, execution and the pull.
 """
 
 from __future__ import annotations
@@ -91,6 +95,15 @@ def format_rows(columns: list[str], rows: Iterator, fmt: str,
     yield f"Elapsed: {elapsed:.3f} sec\n"
 
 
+def run_query(session: GraphSession, query: str, params, fmt: str) -> str:
+    """Execute one statement, pull its rows and render them in ``fmt``."""
+    t0 = time.time()
+    df = session.execute(query, params=params)
+    columns = df.columns
+    rows = [[row[c] for c in columns] for row in df.collect()]
+    return "".join(format_rows(columns, rows, fmt, time.time() - t0))
+
+
 def make_handler(session: GraphSession):
     class QueryHandler(BaseHTTPRequestHandler):
         def log_message(self, *args):  # quiet
@@ -107,14 +120,8 @@ def make_handler(session: GraphSession):
                 fmt = body.get("format", "JSONEachRow")
                 if fmt not in FORMATS:
                     raise BrahmandError(f"unknown format '{fmt}'")
-                t0 = time.time()
-                df = session.execute(query, params=body.get("params"))
-                columns = df.columns
-                rows = ([row[c] for c in columns]
-                        for row in df.toLocalIterator())
-                payload = "".join(
-                    format_rows(columns, rows, fmt, time.time() - t0)
-                ).encode()
+                payload = run_query(session, query, body.get("params"),
+                                    fmt).encode()
                 self.send_response(200)
                 self.send_header("Content-Type", "text/plain; charset=utf-8")
                 self.send_header("Content-Length", str(len(payload)))
@@ -155,14 +162,7 @@ def repl(session: GraphSession) -> None:
             break
         if not line or line in {"exit", "quit", r"\q"}:
             break
-        t0 = time.time()
         try:
-            df = session.execute(line)
-            cols = df.columns
-            rows = ([row[c] for c in cols] for row in df.toLocalIterator())
-            for chunk in format_rows(
-                cols, rows, "PrettyCompact", time.time() - t0
-            ):
-                print(chunk, end="")
+            print(run_query(session, line, None, "PrettyCompact"), end="")
         except Exception as e:
             print(f"error: {e}")

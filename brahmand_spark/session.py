@@ -491,7 +491,9 @@ class GraphSession:
         plan string for the requested mode (``formatted`` default;
         ``cost`` = optimized logical plan with statistics). ``PROFILE
         <stmt>`` additionally RUNS the query and returns the
-        plan-summary counters + row count + wall time as one row.
+        plan-summary counters + row count + wall time as one row; the
+        counters are read from the final (as-run) adaptive plan, and
+        ``final_plan`` says that plan was final.
         Rides the normal execute() path, so the server's output
         formats and the REPL render it like any result."""
         inner = stmt.statement
@@ -504,18 +506,24 @@ class GraphSession:
         if stmt.profile:
             import time
 
+            qe = df._jdf.queryExecution()
             t0 = time.time()
-            n_rows = df.count()
+            # Run df's own physical plan (df.count() would plan and run
+            # a different query) and count its rows on the executors;
+            # its AdaptiveSparkPlan then holds the plan that ran.
+            n_rows = qe.toRdd().count()
             elapsed = round(time.time() - t0, 3)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            c = self._plan_counters(plan)
+            plan = qe.executedPlan().toString()
+            final = "isFinalPlan=true" in plan
+            c = self._plan_counters(plan.split("== Initial Plan ==")[0])
             return self.spark.createDataFrame(
                 [(c["scans"], c["joins"], c["shuffle_exchanges"],
                   c["broadcast_exchanges"], c["explodes"],
-                  c["python_stages"], n_rows, elapsed)],
+                  c["python_stages"], n_rows, elapsed, final)],
                 "scans int, joins int, shuffle_exchanges int, "
                 "broadcast_exchanges int, explodes int, "
-                "python_stages int, rows bigint, elapsed_s double",
+                "python_stages int, rows bigint, elapsed_s double, "
+                "final_plan boolean",
             )
         text = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), stmt.mode

@@ -2,8 +2,11 @@
 keep-first decision, pair/decision consistency, determinism under
 repartition, and the no-broadcast pair-join plan shape."""
 
+import math
+
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from brahmand_spark.ops.semdedup import semdedup, semdedup_pairs
 from brahmand_spark.ops.clustering import kmeans_fit
@@ -243,3 +246,13 @@ class TestArrowDropPath:
         if clusters[0] == clusters[1]:
             assert 1 in got
         assert 0 not in got
+
+
+def test_non_finite_centroid_refused(spark):
+    """A NaN/Inf centroid fails with the reason, not as a SQL parse
+    error on the rendered "nanD" literal."""
+    from brahmand_spark.ops.similarity import ivf_cell
+
+    for cents in ([[math.nan, 0.0]], [[0.0, 1.0], [math.inf, 0.0]]):
+        with pytest.raises(ValueError, match="non-finite"):
+            ivf_cell(F.col("v"), cents)

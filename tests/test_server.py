@@ -2,7 +2,9 @@
 formats (reference: server/handlers.rs + models.rs:20-27)."""
 
 import json
+import re
 import threading
+import time
 import urllib.request
 
 import pytest
@@ -103,6 +105,18 @@ class TestServer:
         assert row["rows"] == 1
         assert row["python_stages"] == 0
         assert row["elapsed_s"] >= 0
+        assert row["final_plan"] is True
+        # the counters come from the plan that ran (AQE's final plan),
+        # counted once: its "Initial Plan" section is not added in
+        status, body = post(server, {
+            "query": "PROFILE MATCH (c:Customer)-[:PLACED]->(o:Order) "
+                     "RETURN c.c_name AS n, count(*) AS cnt",
+        })
+        assert status == 200
+        row = json.loads(body.strip().splitlines()[0])
+        assert row["final_plan"] is True
+        assert row["rows"] > 1
+        assert row["shuffle_exchanges"] == 1
 
 
 def test_jsoneachrow_serializes_structs_as_objects(tpch):
@@ -120,3 +134,70 @@ def test_jsoneachrow_serializes_structs_as_objects(tpch):
     rec = _json.loads(out.strip())
     assert rec["m"] == {"n_name": "NATION_1", "n_regionkey": 1}
     assert rec["k"] == ["n_nationkey", "n_name", "n_regionkey"]
+
+
+def _serving(session):
+    from brahmand_spark.server import serve
+
+    httpd = serve(session, port=0)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    return httpd, f"http://127.0.0.1:{httpd.server_address[1]}"
+
+
+def test_elapsed_covers_the_pull():
+    """``Elapsed`` is taken after the rows are pulled, so a statement
+    whose execution takes 0.3 s reports at least that."""
+    from pyspark.sql import Row
+
+    class SlowFrame:
+        columns = ["x"]
+
+        def collect(self):
+            time.sleep(0.3)
+            return [Row(x=1)]
+
+        def toLocalIterator(self):
+            time.sleep(0.3)
+            yield Row(x=1)
+
+    class StubSession:
+        def execute(self, query, params=None):
+            return SlowFrame()
+
+    httpd, url = _serving(StubSession())
+    try:
+        status, body = post(url, {"query": "RETURN 1 AS x",
+                                  "format": "PrettyCompact"})
+    finally:
+        httpd.shutdown()
+    assert status == 200
+    elapsed = float(re.search(r"Elapsed: ([0-9.]+) sec", body).group(1))
+    assert elapsed >= 0.3
+
+
+def test_one_spark_job_per_statement(spark):
+    """The server pulls a result in one Spark action: a read over a
+    table registered with 8 partitions launches as many jobs as over
+    the same table in 1 partition."""
+    from brahmand_spark import GraphSession
+
+    s = GraphSession(spark)
+    s.execute("CREATE NODE TABLE P (p_id Int64, NODE ID (p_id))")
+    sc = spark.sparkContext
+    httpd, url = _serving(s)
+
+    def jobs(parts: int) -> int:
+        s.register_table("P", spark.range(0, 64, 1, parts).toDF("p_id"))
+        before = set(sc.statusTracker().getJobIdsForGroup())
+        status, body = post(url, {"query": "MATCH (p:P) RETURN p.p_id AS id"})
+        assert status == 200
+        assert len(body.splitlines()) == 64
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+
+    try:
+        one, eight = jobs(1), jobs(8)
+    finally:
+        httpd.shutdown()
+    assert one >= 1  # the jobs were seen at all
+    assert eight == one
