@@ -25,10 +25,12 @@ Catalyst supplies what the reference hand-rolls: predicate pushdown
 (optimizer/filter_push_down.rs), column pruning
 (optimizer/projection_push_down.rs), constant folding, join ordering via
 AQE, and whole-stage codegen. We deliberately do NOT emit per-hop
-left-semi pruning joins (the reference's IN-subquery device,
-graph_traversal_planning.rs:819-843): with inner equi-joins Catalyst
-already prunes each hop to reachable ids during the join itself, and an
-extra leftsemi would double the shuffles at scale.
+pruning prefilters (the reference's IN-subquery device,
+graph_traversal_planning.rs:819-843): inner equi-joins already drop
+unreachable ids, small frontiers are broadcast, and when a selective
+frontier meets a large edge scan through a shuffle join, Catalyst's
+runtime bloom filter (InjectRuntimeFilter) prunes that scan by the
+frontier's keys before the exchange, sized from observed scan sizes.
 
 Scale posture: all expressions stay JVM-side (no Python UDFs anywhere in
 this path); node tables flagged small in the session are broadcast; AQE
@@ -141,8 +143,6 @@ class QueryCompiler:
         degree_stats: Optional[Callable[[str], Optional[dict]]] = None,
         skew_degree_threshold: int = 50_000,
         skew_salt_factor: int = 8,
-        prune_hops: Optional[str] = None,
-        prune_bloom_bits: int = 1 << 20,
         table_stats: Optional[Callable[[str], Optional[int]]] = None,
         column_stats: Optional[Callable[[str], Optional[dict]]] = None,
     ):
@@ -183,30 +183,6 @@ class QueryCompiler:
         # the hot key from ever concentrating.
         self.skew_degree_threshold = skew_degree_threshold
         self.skew_salt_factor = skew_salt_factor
-        # Per-hop traversal pruning — the reference's IN-subquery
-        # optimization (every hop CTE gets ``WHERE from_id IN (SELECT
-        # id FROM prev_cte)``, analyzer/graph_traversal_planning.rs:
-        # 819-843) re-expressed Spark-side. When a hop extends a
-        # SELECTIVE component (any bound alias carries filters, per
-        # _filter_score), the edge input is prefiltered against the
-        # frontier's ids BEFORE its join:
-        #   'semi'  -> leftsemi join against the distinct frontier ids
-        #              (AQE broadcasts the small side, so the edge is
-        #              pruned in its scan stage);
-        #   'bloom' -> ops/sketches.bloom_prefilter — the frontier's
-        #              ids fold to <= prune_bloom_bits set-bit rows,
-        #              broadcast as ONE packed array, membership tested
-        #              inside the edge scan (zero edge-side shuffle,
-        #              false positives resolved by the join itself).
-        # Off by default: at small SF AQE already broadcasts the
-        # frontier, and the prefilter recomputes the frontier subtree;
-        # the crossover is a selective anchor against an edge table too
-        # big to broadcast-join — exactly the 100 TB shape.
-        if prune_hops not in (None, "semi", "bloom"):
-            raise ValueError(
-                f"prune_hops must be None|'semi'|'bloom', got {prune_hops!r}")
-        self.prune_hops = prune_hops
-        self.prune_bloom_bits = prune_bloom_bits
         # Optional label/type -> row count resolver (captured by
         # GraphSession.collect_table_stats). When present, anchor
         # selection turns cost-based: estimated post-filter
@@ -226,12 +202,6 @@ class QueryCompiler:
         # column stats the constant-based model is byte-identical to
         # r10.
         self.column_stats = column_stats
-        self._hop_scores: dict[str, int] = {}
-        # alias -> single-alias WHERE conjuncts (set per _assemble):
-        # re-applied inside the prefilter's frontier-keys subtree —
-        # the main plan applies WHERE above the joins, so the keys
-        # branch would otherwise scan unfiltered ids and prune nothing.
-        self._alias_conjuncts: dict[str, list] = {}
         # Aliases referenced anywhere in the current query (filled per
         # compile() call) — a rel alias in here forces the edge-list
         # path, mirroring the reference's projection/filter tagging
@@ -3260,24 +3230,6 @@ class QueryCompiler:
                     r.carry_prop_names = props
 
         score, has_or = self._filter_score(pattern, part)
-        self._hop_scores = score
-        self._alias_conjuncts = {}
-        if self.prune_hops is not None and part.where is not None:
-            residual, _ = _split_pattern_predicates(part.where)
-
-            def collect_conjuncts(e: ast.Expr):
-                if isinstance(e, ast.Binary) and e.op == "AND":
-                    collect_conjuncts(e.left)
-                    collect_conjuncts(e.right)
-                    return
-                aliases: set[str] = set()
-                collect_aliases(e, aliases)
-                if len(aliases) == 1:
-                    self._alias_conjuncts.setdefault(
-                        next(iter(aliases)), []).append(e)
-
-            if residual is not None:
-                collect_conjuncts(residual)
         anchor = self._select_anchor(pattern, part)
         pending = list(pattern.rels)
         # Anchor selection: hops touching the anchor alias run first
@@ -3417,9 +3369,9 @@ class QueryCompiler:
         key on the joined endpoint, salt the edge side (deterministic
         per-row hash -> one salt per edge row) and replicate the
         frontier across all salt values, so the hot key's edge rows
-        spread over skew_salt_factor tasks instead of one (the per-hop
-        analogue of ops/skew.salted_join; plain join otherwise, where
-        AQE broadcast/skew-split already does the right thing)."""
+        spread over skew_salt_factor tasks instead of one (plain join
+        otherwise, where AQE broadcast/skew-split already does the
+        right thing)."""
         cond = eq((edge_key, comp_key))
         if not self._hop_is_skewed(rel, endpoint):
             return comp_df.join(edge, cond, "inner")
@@ -3462,44 +3414,6 @@ class QueryCompiler:
         return salted.join(
             rep, cond & (salted[salt] == rep[salt]), "inner"
         ).drop(salt)
-
-    def _prune_edge(self, edge: DataFrame, comp_df: DataFrame,
-                    comp_key_name: str, edge_key_name: str,
-                    bound: set[str], scope: Scope) -> DataFrame:
-        """Per-hop traversal pruning (the reference's hop-CTE
-        ``WHERE from_id IN (SELECT id FROM prev_cte)``, ref
-        analyzer/graph_traversal_planning.rs:819-843): prefilter the
-        edge input against the frontier component's distinct ids so
-        pruned edge rows never enter the hop join's exchange. Applies
-        only when the frontier is SELECTIVE — some bound alias carries
-        filters (_filter_score) — since an unfiltered frontier's ids
-        cover the table and the prefilter would only add cost.
-
-        The main plan applies WHERE above the assembled joins, so the
-        frontier-keys branch re-applies the bound aliases' single-alias
-        conjuncts itself (sound: any row they drop here is dropped by
-        the query's own WHERE anyway); conjuncts that don't compile
-        against the component (e.g. not yet bound columns) are skipped
-        — pruning only ever weakens, never changes results."""
-        if self.prune_hops is None:
-            return edge
-        if not any(self._hop_scores.get(a, 0) > 0 for a in bound):
-            return edge
-        ec = ExprCompiler(scope, self.params, self._prop_dtype)
-        for a in bound:
-            for conj in self._alias_conjuncts.get(a, []):
-                try:
-                    comp_df = comp_df.filter(ec.compile(conj))
-                except Exception:
-                    continue
-        keys = comp_df.selectExpr(
-            as_sql(comp_key_name, edge_key_name)).distinct()
-        if self.prune_hops == "bloom":
-            from ..ops.sketches import bloom_prefilter
-
-            return bloom_prefilter(edge, keys, edge_key_name,
-                                   m_bits=self.prune_bloom_bits)
-        return edge.join(keys, edge_key_name, "leftsemi")
 
     def _apply_hop(self, rel, pattern: Pattern, components, scope, find_component):
         fused: Optional[str] = None
@@ -3544,7 +3458,6 @@ class QueryCompiler:
                 # endpoint keys (graph_join_inference.rs:251-256,
                 # duplicate_scans_removing.rs:28-58).
                 df, bound = components[li]
-                edge = self._prune_edge(edge, df, lid, src_key, bound, scope)
                 df = df.join(edge, eq((src_key, lid), (dst_key, rid)),
                              "inner")
                 bound.add(rel.alias)
@@ -3552,10 +3465,6 @@ class QueryCompiler:
             else:
                 ldf, lbound = components[li]
                 rdf, rbound = components[ri]
-                edge = self._prune_edge(
-                    edge, ldf, lid, src_key, lbound, scope)
-                edge = self._prune_edge(
-                    edge, rdf, rid, dst_key, rbound, scope)
                 df = self._join_edge(ldf, edge, lid, src_key, rel, "src") \
                     .join(rdf, eq((dst_key, rid)), "inner")
                 merged = lbound | rbound | {rel.alias}
@@ -3565,7 +3474,6 @@ class QueryCompiler:
         elif li is not None:
             df, bound = components[li]
             lid = scope.get(rel.src).id_pcol
-            edge = self._prune_edge(edge, df, lid, src_key, bound, scope)
             dst_node = pattern.nodes[rel.dst]
             if fused == rel.dst:  # dst rides inside the fused edge scan
                 df = self._join_edge(df, edge, lid, src_key, rel, "src")
@@ -3586,7 +3494,6 @@ class QueryCompiler:
         elif ri is not None:
             df, bound = components[ri]
             rid = scope.get(rel.dst).id_pcol
-            edge = self._prune_edge(edge, df, rid, dst_key, bound, scope)
             src_node = pattern.nodes[rel.src]
             if fused == rel.src:  # src rides inside the fused edge scan
                 df = self._join_edge(df, edge, rid, dst_key, rel, "dst")
@@ -3614,8 +3521,6 @@ class QueryCompiler:
             else:
                 ldf = self._scan_node(src_node, scope)
                 lid = scope.get(rel.src).id_pcol
-                edge = self._prune_edge(
-                    edge, ldf, lid, src_key, {rel.src}, scope)
                 df = self._join_edge(ldf, edge, lid, src_key, rel, "src")
             if fused == rel.dst:
                 pass  # dst already inside the fused edge scan

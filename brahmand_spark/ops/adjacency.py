@@ -122,18 +122,6 @@ def materialize_for_rel(
     return out
 
 
-def expand(adj: DataFrame, direction_ids: DataFrame,
-           id_col: str) -> DataFrame:
-    """Traverse one hop through a grouped-adjacency table:
-    semi-restrict to the frontier ids, then re-expand neighbors by
-    multiplicity — the analogue of ``arrayJoin(bitmapToArray(to_id))``
-    with the reference's ``IN (SELECT ...)`` pruning folded into a
-    leftsemi join, made cardinality-exact for multigraphs. Returns
-    ``(src, dst)`` pairs (one row per original parallel edge)."""
-    frontier = direction_ids.select(F.col(id_col).alias("src")).distinct()
-    return expand_pairs(adj.join(frontier, on="src", how="leftsemi"))
-
-
 def degree_stats(adj: DataFrame) -> DataFrame:
     """Degree distribution summary — the skew diagnostic that decides
     whether a traversal needs salting (heavy-hitter sources)."""

@@ -17,10 +17,6 @@ fully functional without them.
   all formats with an optional Z-order layout pass (the
   ``OPTIMIZE ZORDER BY`` effect applied at write time — works for
   parquet too, where it becomes file-level min/max skipping).
-- ``merge_into_statement(...)``: the ``MERGE INTO`` SQL equivalent of
-  writes.py's anti-join upsert (null-safe key equality, insert-if-
-  absent, optional matched-update) — a pure renderer, testable with
-  no lakehouse runtime.
 - ``merge_commit(...)`` (r13): the delta-proportional durable-commit
   primitive — given the table's NEW in-memory frame and the KEY ROWS
   a write touched, replace exactly those keys in the on-disk
@@ -92,33 +88,6 @@ def write_table(
     writer.save(path)
 
 
-def merge_into_statement(
-    target_table: str, columns: list[str], key_cols: list[str],
-    source_view: str = "__merge_src",
-    update_cols: list[str] | None = None,
-) -> str:
-    """Render the ``MERGE INTO`` equivalent of writes.py's anti-join
-    upsert: null-safe equality on the key columns, INSERT of all
-    columns when not matched, and (optionally) UPDATE of
-    ``update_cols`` when matched — the statement a Delta/Iceberg
-    deployment runs instead of the snapshot-union."""
-    if not key_cols:
-        raise ValueError("key_cols must be non-empty")
-    missing = [k for k in key_cols if k not in columns]
-    if missing:
-        raise ValueError(f"key columns {missing} not in columns")
-    on = " AND ".join(f"t.{k} <=> s.{k}" for k in key_cols)
-    cols = ", ".join(columns)
-    vals = ", ".join(f"s.{c}" for c in columns)
-    sql = (f"MERGE INTO {target_table} t USING {source_view} s"
-           f" ON {on}")
-    if update_cols:
-        sets = ", ".join(f"t.{c} = s.{c}" for c in update_cols)
-        sql += f" WHEN MATCHED THEN UPDATE SET {sets}"
-    sql += f" WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
-    return sql
-
-
 def path_table(path: str, format: str) -> str:
     """The SQL identifier of a path-based lakehouse table —
     ``delta.`/p/t``` / ``iceberg.`/p/t``` — usable as a MERGE INTO
@@ -134,8 +103,8 @@ def merge_delete_statement(
 ) -> str:
     """Render the key-targeted DELETE half of a delta-proportional
     commit: remove every target row whose key appears in the (small)
-    source view. Null-safe key equality, matching
-    ``merge_into_statement``. Pure renderer — no runtime needed."""
+    source view. Null-safe key equality. Pure renderer — no runtime
+    needed."""
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
     on = " AND ".join(f"t.{k} <=> s.{k}" for k in key_cols)

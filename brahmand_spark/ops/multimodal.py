@@ -1,14 +1,13 @@
 """Multimodal column handling: images/audio/video as opaque ``binary``
 columns with typed metadata.
 
-The decode step runs a REAL image decode: Pillow when importable on
-the executors (optional dependency, C-speed, every format), else a
-pure-stdlib PNG decoder (``_png_decode_gray``) so the real path —
-width/height/luminance/histogram features — stays exercised even in
-minimal containers. ``deterministic_fake=True`` additionally swaps in
-a seeded, content-derived fake so the *Spark-side plumbing* — schema,
-Arrow batch shape, ``mapInPandas`` partition flow — is testable with
-no decoding at all.
+The perceptual-hash step runs a REAL image decode: Pillow when
+importable on the executors (optional dependency, C-speed, every
+format), else a pure-stdlib PNG decoder (``_png_decode_gray``) so the
+real path stays exercised even in minimal containers.
+``deterministic_fake=True`` hashes the bytes instead, so the
+*Spark-side plumbing* — schema, Arrow batch shape, ``mapInPandas``
+partition flow — is testable with no decoding at all.
 
 Scale posture: Arrow-batched ``mapInPandas`` (one Python worker per
 partition, vectorized transfer), metadata pushdown happens before decode
@@ -23,21 +22,6 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-IMAGE_SCHEMA = T.StructType([
-    T.StructField("content", T.BinaryType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("format", T.StringType()),
-])
-
-IMAGE_FEATURES_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("mean_luma", T.DoubleType()),
-    T.StructField("feature", T.ArrayType(T.FloatType())),
-])
 
 
 def attach_image_metadata(df: DataFrame, binary_col: str = "content") -> DataFrame:
@@ -152,90 +136,6 @@ def _png_decode_gray(raw: bytes):
     return w, h, gray
 
 
-def decode_image_features(
-    df: DataFrame, id_col: str = "id", binary_col: str = "content",
-    feature_dim: int = 8, deterministic_fake: bool = False,
-) -> DataFrame:
-    """Decode + feature-extract via Arrow-batched ``mapInPandas``.
-
-    The real decode runs on each executor: width/height from the
-    decoded image, mean luminance, and a ``feature_dim``-bin grayscale
-    histogram as the feature vector (a stand-in for a model embedding;
-    swap the per-image function for a batched model call in
-    production). Backend: Pillow when importable (C-speed, every
-    format); otherwise a pure-stdlib PNG decoder (``_png_decode_gray``)
-    so the real path still runs in minimal containers — non-PNG
-    payloads then count as decode failures. ``deterministic_fake=True``
-    bypasses decoding entirely (features derived from a stable hash of
-    the bytes; same plumbing, fake math) for plumbing tests.
-
-    Decode failures (truncated/corrupt payloads, or non-PNG formats on
-    the no-Pillow backend) yield NULL metadata rather than failing the
-    partition — at 100 TB some corrupt blobs are a certainty."""
-
-    def decode(batches: Iterator["pandas.DataFrame"]):  # noqa: F821
-        import hashlib
-        import io
-
-        import numpy as np
-        import pandas as pd
-
-        use_pil = not deterministic_fake and _pil_available()
-        if use_pil:
-            from PIL import Image
-
-        def real_decode(raw: bytes):
-            """-> (width, height, float32 gray array); raises on
-            undecodable payloads."""
-            if use_pil:
-                img = Image.open(io.BytesIO(raw)).convert("L")
-                return img.width, img.height, np.asarray(
-                    img, dtype="float32")
-            return _png_decode_gray(raw)
-
-        for pdf in batches:
-            out = {
-                "id": pdf[id_col].astype("int64"),
-                "width": [], "height": [], "mean_luma": [], "feature": [],
-            }
-            for payload in pdf[binary_col]:
-                raw = bytes(payload) if payload is not None else b""
-                if not deterministic_fake:
-                    try:
-                        width, height, arr = real_decode(raw)
-                        hist, _ = np.histogram(
-                            arr, bins=feature_dim, range=(0.0, 255.0)
-                        )
-                        out["width"].append(width)
-                        out["height"].append(height)
-                        out["mean_luma"].append(float(arr.mean()) / 255.0)
-                        out["feature"].append(
-                            (hist / max(arr.size, 1)).astype("float32")
-                        )
-                    except Exception:
-                        out["width"].append(None)
-                        out["height"].append(None)
-                        out["mean_luma"].append(None)
-                        out["feature"].append(None)
-                else:
-                    digest = hashlib.sha256(raw).digest()
-                    out["width"].append(
-                        int.from_bytes(digest[0:2], "big") % 4096)
-                    out["height"].append(
-                        int.from_bytes(digest[2:4], "big") % 4096)
-                    out["mean_luma"].append(digest[4] / 255.0)
-                    out["feature"].append(
-                        np.frombuffer(digest[8:8 + 4 * feature_dim],
-                                      dtype=np.uint8)[:feature_dim]
-                        .astype("float32") / 255.0
-                    )
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, binary_col).mapInPandas(
-        decode, schema=IMAGE_FEATURES_SCHEMA
-    )
-
-
 PHASH_SCHEMA = T.StructType([
     T.StructField("id", T.LongType()),
     T.StructField("phash", T.LongType()),
@@ -289,10 +189,9 @@ def image_phash(
 ) -> DataFrame:
     """(id, phash bigint): 64-bit perceptual hash per image — aHash
     (block-mean) or dHash (gradient), the standard near-duplicate
-    fingerprints for image corpora. Decode backend as in
-    :func:`decode_image_features` (Pillow when importable, pure-stdlib
-    PNG otherwise; ``deterministic_fake`` hashes the bytes instead for
-    plumbing tests). Undecodable payloads yield NULL phash — filter or
+    fingerprints for image corpora. Decode backend: Pillow when
+    importable, pure-stdlib PNG otherwise; ``deterministic_fake``
+    hashes the bytes instead for plumbing tests. Undecodable payloads yield NULL phash — filter or
     quarantine them explicitly. Arrow-batched ``mapInPandas``; the
     hash is 8 bytes per image, so the downstream pair join never
     touches pixel data."""

@@ -347,65 +347,10 @@ def hyperplane_lsh_topk(
     )
 
 
-def quantize_embeddings(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    bits: int = 8,
-) -> DataFrame:
-    """Scalar (symmetric per-vector) quantization of an embedding
-    column: (id_col, qvec array<int>, scale double) with
-    ``x_i ≈ qvec_i * scale``, ``qvec_i`` in [-(2^(bits-1)-1),
-    2^(bits-1)-1]. At 8 bits this cuts the vector bytes 4x (the
-    memory/IO bound of every ANN scan at corpus scale) while cosine
-    survives within ~1/2^(bits-1) per-axis relative error — the
-    standard coarse-search trick: scan quantized, re-rank survivors on
-    the originals.
-
-    Pure narrow JVM arithmetic (max(|x|) per row via array HOF,
-    round-half-up to int), deterministic, engine-replayable. All-zero
-    vectors quantize to zeros with scale 0."""
-    if not 2 <= bits <= 16:
-        raise ValueError("bits must be in [2, 16]")
-    qmax = (1 << (bits - 1)) - 1
-    v = _as_double(F.col(vec_col))
-    amax = F.aggregate(
-        F.col("_v"), F.lit(0.0),
-        lambda acc, x: F.greatest(acc, F.abs(x)))
-    return (
-        df.select(F.col(id_col), v.alias("_v"))
-        .withColumn(
-            "_scale",
-            F.when(amax > 0, amax / qmax).otherwise(F.lit(0.0)))
-        .select(
-            id_col,
-            F.transform(
-                F.col("_v"),
-                lambda x: F.when(
-                    F.col("_scale") > 0,
-                    F.floor(x / F.col("_scale") + 0.5).cast("int"),
-                ).otherwise(F.lit(0)),
-            ).alias("qvec"),
-            F.col("_scale").alias("scale"),
-        )
-    )
-
-
-def dequantize_embeddings(
-    df: DataFrame, id_col: str = "vec_id",
-) -> DataFrame:
-    """Inverse of quantize_embeddings: (id_col, embedding) with
-    embedding_i = qvec_i * scale."""
-    return df.select(
-        F.col(id_col),
-        F.transform(
-            "qvec", lambda q: q.cast("double") * F.col("scale")
-        ).alias("embedding"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ: product quantization (Jegou, Douze, Schmid 2011, "Product
-# quantization for nearest neighbor search", TPAMI) over the int8/IVF
-# groundwork — the further scan-byte cut: a corpus vector is stored as
+# quantization for nearest neighbor search", TPAMI) over the IVF
+# groundwork — the scan-byte cut: a corpus vector is stored as
 # its coarse cell + m sub-codes (m bytes at production n_codes=256)
 # instead of dim * 8 bytes, and query scoring reads ONLY the codes via
 # per-query lookup tables (asymmetric distance computation, ADC).

@@ -7,10 +7,9 @@ without full-width shuffles. Spark ships ``approx_count_distinct``
 (HLL++) and ``count_min_sketch``, but their state is opaque JVM
 binary — useless for an engine-portability gate and impossible to
 merge with sketches produced outside Spark. This module implements a
-DETERMINISTIC, seeded HyperLogLog (Flajolet et al. 2007), a
-count-min sketch (Cormode & Muthukrishnan 2005, :func:`cms_table`),
-and a Bloom filter (:func:`bloom_table` — the shuffle-avoidance
-join prefilter) from first-class DataFrame ops. The HLL design:
+DETERMINISTIC, seeded HyperLogLog (Flajolet et al. 2007) and a
+count-min sketch (Cormode & Muthukrishnan 2005, :func:`cms_cell_rows`,
+:func:`cms_estimate`) from first-class DataFrame ops. The HLL design:
 
 - the value hash is the engine-portable ``md5_hash60`` (ops/text.py),
   so DuckDB replays the register contents bit-for-bit;
@@ -30,8 +29,6 @@ small rows — itself a DataFrame you can checkpoint and merge daily.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -142,35 +139,13 @@ def hll_distinct(df: DataFrame, value_col: str,
     )
 
 
-def cms_table(df: DataFrame, value_col: str, depth: int = 4,
-              width: int = 1024, seed: int = 42) -> DataFrame:
-    """Count-min sketch (Cormode & Muthukrishnan 2005) as a DataFrame:
-    ``depth`` seeded hash rows x ``width`` counters. One row per
-    non-empty ``(row, bucket)`` cell with its count — mergeable across
-    corpus increments (union + re-sum), point-queryable, and
-    deterministic: ``hash_i(v) = md5_hash60(i||':'||v) % width`` so any
-    engine replays the cell layout exactly.
-
-    Build shape: the ``depth``-way explode is a per-row literal-array
-    fan-out (narrow); the single shuffle is the (row, bucket) count
-    with map-side combine — at most ``depth * width`` rows survive,
-    regardless of corpus size."""
-    if depth < 1 or width < 2:
-        raise ValueError("depth must be >= 1 and width >= 2")
-    return (
-        df.select(cms_cell_rows(value_col, depth, width, seed))
-        .groupBy(F.col("rb.row").alias("row"),
-                 F.col("rb.bucket").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
 def cms_cell_rows(value_col: str, depth: int, width: int,
                   seed: int):
     """The per-row (row, bucket) cell fan-out shared by the batch
-    (cms_table) and streaming (streaming/windows.windowed_cms_table)
-    builders — ONE definition of the hash layout, so cell tables from
-    either path stay point-queryable by cms_estimate."""
+    (cms_heavy_hitters) and streaming
+    (streaming/windows.windowed_cms_table) builders — ONE definition
+    of the hash layout, so cell tables from either path stay
+    point-queryable by cms_estimate."""
     if depth < 1 or width < 2:
         raise ValueError("depth must be >= 1 and width >= 2")
     v = F.col(value_col).cast("string")
@@ -234,10 +209,10 @@ def cms_heavy_hitters(df: DataFrame, value_col: str, k: int = 20,
     # aggregate before you shuffle): a CMS cell's counter is the sum
     # of the exact counts of the values hashing to it, so folding the
     # already-aggregated (value, count) rows into cells is
-    # bit-identical to cms_table(df) while scanning the corpus ONCE
-    # (this function already pays the exact groupBy) and computing
-    # the depth md5 hashes per DISTINCT value instead of per row.
-    # Standalone sketch builds still use cms_table.
+    # bit-identical to counting one cell row per input row, while
+    # scanning the corpus ONCE (this function already pays the exact
+    # groupBy) and computing the depth md5 hashes per DISTINCT value
+    # instead of per row.
     sketch = (
         exact.select(cms_cell_rows(value_col, depth, width, seed),
                      F.col("exact_count"))
@@ -257,91 +232,6 @@ def cms_heavy_hitters(df: DataFrame, value_col: str, k: int = 20,
             F.row_number().over(w).alias("rank"),
         )
     )
-
-
-def bloom_table(df: DataFrame, value_col: str, m_bits: int = 8192,
-                k_hashes: int = 5, seed: int = 7) -> DataFrame:
-    """Bloom filter as a DataFrame: the distinct SET BIT positions of
-    the input's values (``k_hashes`` seeded md5-portable hashes each,
-    double-hashing ``h1 + i*h2 mod m`` — Kirsch-Mitzenmacher).
-    Mergeable across increments (union + distinct), engine-portable,
-    and at most ``m_bits`` rows regardless of corpus size. One
-    map-side-combinable distinct shuffle.
-
-    The classic use at 100 TB: build the filter over a join's small(er)
-    side's keys, broadcast it, and pre-filter the probe side BEFORE its
-    shuffle — rows whose keys certainly aren't present never enter the
-    exchange (what AQE's runtime bloom filters do, here as an explicit,
-    persistable artifact)."""
-    if m_bits < 8 or k_hashes < 1:
-        raise ValueError("m_bits must be >= 8 and k_hashes >= 1")
-    v = F.col(value_col).cast("string")
-    h1 = md5_hash60(F.concat(F.lit(f"b1:{seed}:"), v))
-    h2 = md5_hash60(F.concat(F.lit(f"b2:{seed}:"), v))
-    bits = F.explode(F.array(*[
-        ((h1 + F.lit(i) * h2) % F.lit(m_bits)).alias("b")
-        for i in range(k_hashes)
-    ]))
-    return df.select(bits.alias("bit")).distinct()
-
-
-def bloom_might_contain(filter_bits: DataFrame, items: DataFrame,
-                        value_col: str, m_bits: int = 8192,
-                        k_hashes: int = 5, seed: int = 7) -> DataFrame:
-    """Probe: ``(value_col, might_contain)`` — true iff ALL k bit
-    positions are set (no false negatives; false-positive rate
-    ~(1 - e^{-kn/m})^k). The filter side is <= ``m_bits`` rows —
-    broadcast, so the probe is a narrow fan-out + broadcast semi-join
-    + per-value count."""
-    v = F.col(value_col).cast("string")
-    h1 = md5_hash60(F.concat(F.lit(f"b1:{seed}:"), v))
-    h2 = md5_hash60(F.concat(F.lit(f"b2:{seed}:"), v))
-    probes = items.select(
-        value_col,
-        F.explode(F.array(*[
-            ((h1 + F.lit(i) * h2) % F.lit(m_bits)).alias("b")
-            for i in range(k_hashes)
-        ])).alias("bit"),
-    )
-    hits = (
-        probes.join(F.broadcast(filter_bits), "bit", "left_semi")
-        .groupBy(value_col)
-        .agg(F.count(F.lit(1)).alias("_n_set"))
-    )
-    return (
-        items.select(value_col).distinct()
-        .join(hits, value_col, "left")
-        .select(
-            value_col,
-            (F.coalesce(F.col("_n_set"), F.lit(0)) == F.lit(k_hashes))
-            .alias("might_contain"),
-        )
-    )
-
-
-def bloom_prefilter(large: DataFrame, keys: DataFrame, value_col: str,
-                    m_bits: int = 1 << 20, k_hashes: int = 5,
-                    seed: int = 7) -> DataFrame:
-    """Pre-filter ``large`` to rows whose ``value_col`` MIGHT be in
-    ``keys`` — the shuffle-avoidance pattern: false positives pass
-    through (the real join still decides), false negatives never
-    occur, and the rows dropped here never enter the join exchange."""
-    v = F.col(value_col).cast("string")
-    h1 = md5_hash60(F.concat(F.lit(f"b1:{seed}:"), v))
-    h2 = md5_hash60(F.concat(F.lit(f"b2:{seed}:"), v))
-    bits = bloom_table(keys, value_col, m_bits, k_hashes, seed) \
-        .withColumnRenamed("bit", "__set_bit")
-    # the set-bit list rides as ONE broadcast 1-row aggregate;
-    # membership is array_contains per probe hash — all inside the
-    # large side's scan stage, so pruned rows never reach any exchange
-    packed = bits.agg(F.sort_array(F.collect_set("__set_bit"))
-                      .alias("__bits"))
-    out = large.crossJoin(F.broadcast(packed))
-    cond = F.lit(True)
-    for i in range(k_hashes):
-        pb = (h1 + F.lit(i) * h2) % F.lit(m_bits)
-        cond = cond & F.array_contains(F.col("__bits"), pb)
-    return out.filter(cond).drop("__bits")
 
 
 def hll_distinct_with_exact(df: DataFrame, value_col: str,

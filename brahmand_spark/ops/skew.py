@@ -1,13 +1,10 @@
-"""Skew-handling utilities for joins and aggregations at scale.
+"""Skew handling for aggregations at scale.
 
-AQE's skew-join splitting (enabled in io.configure) handles most cases;
-these helpers cover the two patterns AQE can't fix:
+AQE's skew-join splitting (enabled in io.configure) handles skewed
+joins; skewed hops in the Cypher compiler are salted per hop
+(``QueryCompiler._join_edge``). This module covers the pattern AQE
+can't fix:
 
-- ``salted_join``: a broadcast-less join where one side has heavy-hitter
-  keys (a celebrity node in a graph, a header token in a posting list).
-  The skewed side gets a random salt in [0, factor); the other side is
-  replicated across all salt values; the join key becomes (key, salt),
-  splitting each hot key's row group across ``factor`` tasks.
 - ``two_phase_agg``: count/sum-style aggregation over skewed keys —
   partial agg on (key, salt) first, then final agg on key, so no single
   task accumulates a hot key alone. (Spark's hash aggregate already does
@@ -23,7 +20,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
@@ -38,27 +35,6 @@ def add_salt(df: DataFrame, factor: int,
         salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()),
                       F.lit(factor))
     return df.withColumn(SALT_COL, salt.cast("int"))
-
-
-def explode_salt(df: DataFrame, factor: int) -> DataFrame:
-    """Replicate every row across all salt values (the small/even side)."""
-    return df.withColumn(
-        SALT_COL,
-        F.explode(F.sequence(F.lit(0), F.lit(factor - 1))),
-    )
-
-
-def salted_join(
-    skewed: DataFrame, other: DataFrame, on: list[str],
-    factor: int = 8, how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``skewed`` has heavy-hitter values in ``on``.
-    Cost: ``other`` is replicated ``factor``× (keep factor modest or
-    pre-filter ``other`` to keys that are actually hot)."""
-    left = add_salt(skewed, factor, deterministic_cols=list(skewed.columns))
-    right = explode_salt(other, factor)
-    out = left.join(right, on=on + [SALT_COL], how=how)
-    return out.drop(SALT_COL)
 
 
 def two_phase_agg(

@@ -1,5 +1,4 @@
-"""Corpus statistics operators: random-projection and PCA
-dimensionality reduction.
+"""Corpus statistics operators: PCA dimensionality reduction.
 
 Extensions beyond the reference surface (SURVEY.md §2.8) — projected
 embeddings make downstream similarity passes cheaper.
@@ -7,58 +6,11 @@ embeddings make downstream similarity passes cheaper.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..compile.scope import quote
-from .similarity import _as_double, _hyperplanes, _sql_double
-
-
-def random_projection(df: DataFrame, out_dim: int,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
-                      dim: int | None = None,
-                      seed: int = 42) -> DataFrame:
-    """Johnson-Lindenstrauss random projection: embed vectors into
-    ``out_dim`` dimensions via a seeded Gaussian plane matrix (the
-    same generator as the LSH hyperplanes, scaled by
-    ``1/sqrt(out_dim)`` so expected norms are preserved). Pairwise
-    distances distort by at most ~sqrt(ln n / out_dim) w.h.p. — run
-    ANN / near-dup / clustering passes on the cheap vectors first,
-    re-rank survivors on the originals.
-
-    Deterministic (seeded planes are literals in the plan) and fully
-    JVM-side: a narrow per-row projection, zero shuffles. Output:
-    ``(id_col, projected array<double>)``.
-    """
-    if out_dim < 1:
-        raise ValueError("out_dim must be >= 1")
-    if dim is None:
-        probe = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        if probe is None:
-            raise ValueError("cannot infer dim from an empty DataFrame")
-        dim = probe["d"]
-    planes = _hyperplanes(dim, out_dim, seed)
-    scale = 1.0 / float(out_dim) ** 0.5
-    # One parsed SQL expression per output coordinate instead of
-    # out_dim x dim F.lit py4j round-trips (r15 — the same device as
-    # pca_transform/_cents_lit): the left-associated multiply-add
-    # chain matches dot(dim=...) term for term and repr round-trips
-    # each double exactly, so projections are bit-identical.
-    comp_sqls = [
-        "round((%s) * %s, 6)" % (
-            " + ".join(f"{_sql_double(x)} * element_at(_v, {i + 1})"
-                       for i, x in enumerate(plane)),
-            _sql_double(scale),
-        )
-        for plane in planes
-    ]
-    return df.select(
-        F.col(id_col).alias("_id"),
-        _as_double(F.col(vec_col)).alias("_v"),
-    ).selectExpr(
-        f"_id AS {quote(id_col)}",
-        f"array({', '.join(comp_sqls)}) AS projected",
-    )
+from .similarity import _as_double, _sql_double
 
 
 PCA_EXACT_MAX_DIM = 256
@@ -112,7 +64,7 @@ def pca_fit(
         raise ValueError(
             f"method='exact' builds dim*(dim+3)/2 aggregate "
             f"expressions — intractable at dim={dim}; use "
-            "method='gram' (or random_projection first)")
+            "method='gram'")
     if method == "gram":
         n, mean, cov = _gram_stats(df, vec_col, dim)
     else:
@@ -219,8 +171,7 @@ def pca_transform(
     """Project vectors onto fitted components: (id_col, projected)
     with projected[c] = components[c] . (x - mean). The mean shift
     folds into a per-component constant, so each output coordinate is
-    one literal-array dot — narrow, codegen'd, zero shuffles (the
-    same plan shape as random_projection)."""
+    one literal-array dot — narrow, codegen'd, zero shuffles."""
     dim = len(mean)
     # One parsed SQL expression per output instead of k x dim F.lit
     # py4j calls (r15, same device as pca_fit above): the unrolled

@@ -174,42 +174,15 @@ def redact_pii(df: DataFrame, text_col: str = "text",
     )
 
 
-FP_MOD = 1_000_000_007
-FP_BASE = 31
-
-
-def poly_hash(col: Column, base: int = FP_BASE, mod: int = FP_MOD) -> Column:
-    """Polynomial rolling hash over characters:
-    ``h = (h * base + ascii(c)) mod m``. Pure fold with JVM
-    ``aggregate`` — identical arithmetic is expressible in DuckDB via
-    ``list_reduce``, so values match across engines (unlike xxhash64).
-    Intermediate values stay < mod * base + 255 — keep ``mod`` below
-    ~2^57 for ANSI-overflow safety."""
-    return F.aggregate(
-        F.split(col, ""),
-        F.lit(0).cast("bigint"),
-        lambda acc, c: (acc * F.lit(base) + F.ascii(c)) % F.lit(mod),
-    )
-
-
 def md5_hash60(col: Column) -> Column:
     """Engine-portable 60-bit hash: the first 15 hex chars of md5 as a
     bigint. Fully codegen'd on Spark (one ``md5`` + ``conv`` per value);
     DuckDB replays it exactly via its own ``md5`` + a 15-step hex fold.
     This is the fast portable hash for the per-shingle/per-token hot
-    paths — ``poly_hash``'s per-character interpreted lambda costs
-    O(len) py-side-free but interpreted JVM steps per value, while md5
-    is a single native call (the minhash/simhash portable gates dropped
-    ~4x in wall time when they switched)."""
+    paths: one native call per value, where a per-character polynomial
+    fold runs O(len) interpreted JVM lambda steps (the minhash/simhash
+    portable gates dropped ~4x in wall time when they switched)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def fingerprint(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Engine-portable document fingerprint (see ``poly_hash``)."""
-    return df.select(
-        F.col(id_col), poly_hash(F.col(text_col)).alias("fingerprint")
-    )
 
 
 def chunk_documents(df: DataFrame, chunk_size: int = 64,

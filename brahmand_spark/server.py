@@ -30,6 +30,8 @@ from .errors import BrahmandError
 from .session import GraphSession
 
 FORMATS = {"JSONEachRow", "Pretty", "PrettyCompact", "CSV", "CSVWithNames"}
+# Request bodies above this many bytes get 413 without being read.
+MAX_BODY_BYTES = 1 << 20
 
 
 def _json_default(v):
@@ -104,43 +106,77 @@ def run_query(session: GraphSession, query: str, params, fmt: str) -> str:
     return "".join(format_rows(columns, rows, fmt, time.time() - t0))
 
 
+class _Rejected(Exception):
+    """A request refused before it is run, with its HTTP status."""
+
+    def __init__(self, status: int, message: str):
+        super().__init__(message)
+        self.status = status
+
+
+def _read_request(headers, rfile) -> tuple[str, object, str]:
+    """``(query, params, format)`` of a POST /query request, validated
+    before anything runs. The body is read only once its declared
+    length is known to be a non-negative integer within
+    ``MAX_BODY_BYTES``."""
+    try:
+        length = int(headers.get("Content-Length", "0"))
+    except ValueError:
+        raise _Rejected(400, "Content-Length must be an integer")
+    if length < 0:
+        raise _Rejected(400, "Content-Length must not be negative")
+    if length > MAX_BODY_BYTES:
+        raise _Rejected(413, f"request body over {MAX_BODY_BYTES} bytes")
+    try:
+        body = json.loads(rfile.read(length) or b"{}")
+    except ValueError:
+        raise _Rejected(400, "request body is not valid JSON")
+    if not isinstance(body, dict):
+        raise _Rejected(400, "request body must be a JSON object")
+    query = body.get("query", "")
+    params = body.get("params")
+    fmt = body.get("format", "JSONEachRow")
+    if not isinstance(query, str):
+        raise _Rejected(400, "'query' must be a string")
+    if params is not None and not isinstance(params, dict):
+        raise _Rejected(400, "'params' must be an object or null")
+    if not isinstance(fmt, str) or fmt not in FORMATS:
+        raise _Rejected(400, f"unknown format '{fmt}'")
+    return query, params, fmt
+
+
 def make_handler(session: GraphSession):
     class QueryHandler(BaseHTTPRequestHandler):
         def log_message(self, *args):  # quiet
             pass
+
+        def _reply(self, status: int, content_type: str, payload: bytes):
+            self.send_response(status)
+            self.send_header("Content-Type", content_type)
+            self.send_header("Content-Length", str(len(payload)))
+            self.end_headers()
+            self.wfile.write(payload)
+
+        def _reply_error(self, status: int, message: str):
+            self._reply(status, "application/json",
+                        json.dumps({"error": message}).encode())
 
         def do_POST(self):
             if self.path != "/query":
                 self.send_error(404)
                 return
             try:
-                length = int(self.headers.get("Content-Length", "0"))
-                body = json.loads(self.rfile.read(length) or b"{}")
-                query = body.get("query", "")
-                fmt = body.get("format", "JSONEachRow")
-                if fmt not in FORMATS:
-                    raise BrahmandError(f"unknown format '{fmt}'")
-                payload = run_query(session, query, body.get("params"),
-                                    fmt).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "text/plain; charset=utf-8")
-                self.send_header("Content-Length", str(len(payload)))
-                self.end_headers()
-                self.wfile.write(payload)
+                query, params, fmt = _read_request(self.headers, self.rfile)
+            except _Rejected as e:
+                self._reply_error(e.status, str(e))
+                return
+            try:
+                payload = run_query(session, query, params, fmt).encode()
+                self._reply(200, "text/plain; charset=utf-8", payload)
             except BrahmandError as e:
-                msg = json.dumps({"error": str(e)}).encode()
-                self.send_response(400)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(msg)))
-                self.end_headers()
-                self.wfile.write(msg)
+                self._reply_error(400, str(e))
             except Exception as e:  # planner/execution errors -> 500
-                msg = json.dumps({"error": str(e)[:2000]}).encode()
-                self.send_response(500)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(msg)))
-                self.end_headers()
-                self.wfile.write(msg)
+                self._reply_error(500, str(e)[:2000])
 
     return QueryHandler
 

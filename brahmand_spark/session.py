@@ -35,7 +35,6 @@ class GraphSession:
         allow_writes: bool = False,
         max_var_hops: Optional[int] = None,
         assume_referential_integrity: bool = False,
-        prune_hops: Optional[str] = None,
         models_path: Optional[str] = None,
         write_path: Optional[str] = None,
         write_format: str = "parquet",
@@ -88,16 +87,6 @@ class GraphSession:
         self.degree_stats: dict[str, dict] = {}
         self.skew_degree_threshold = 50_000
         self.skew_salt_factor = 8
-        # Per-hop traversal pruning: None (default — AQE broadcast of
-        # a small frontier already covers small/medium scale) | 'semi'
-        # (leftsemi prefilter of each hop's edge input against the
-        # frontier ids) | 'bloom' (broadcast bloom-bit prefilter inside
-        # the edge scan — zero edge-side shuffle). The reference's
-        # IN-subquery hop pruning (graph_traversal_planning.rs:819-843)
-        # as an opt-in physical strategy; the crossover is a selective
-        # anchor against an edge table too big to broadcast.
-        self.prune_hops = prune_hops
-        self.prune_bloom_bits = 1 << 20
         # label/type -> row count, captured by collect_table_stats()
         # (one metadata-cheap count per table, amortized across every
         # query of the session). Presence flips anchor selection to
@@ -332,8 +321,6 @@ class GraphSession:
                           if self.column_stats else None),
             skew_degree_threshold=self.skew_degree_threshold,
             skew_salt_factor=self.skew_salt_factor,
-            prune_hops=self.prune_hops,
-            prune_bloom_bits=self.prune_bloom_bits,
         )
 
     # -- execution ----------------------------------------------------------

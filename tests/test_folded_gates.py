@@ -1102,28 +1102,6 @@ def test_folded_text_lang_id(spark, duck):
     )
 
 
-def test_folded_text_fingerprint(spark, duck):
-    """The former text_fingerprint registry gate (folded r6 for
-    graph_walks — a single-hash projection whose polynomial-hash
-    machinery every dedup gate already exercises): same operator,
-    same DuckDB oracle."""
-    from brahmand_spark.ops.text import fingerprint
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    assert_same(
-        fingerprint(docs),
-        duck.sql("""
-            SELECT doc_id,
-                   list_reduce(
-                       list_prepend(0::BIGINT,
-                           list_transform(string_split(text, ''),
-                                          c -> ascii(c))),
-                       (acc, c) -> (acc * 31 + c) % 1000000007)
-                       AS fingerprint
-            FROM documents"""),
-    )
-
-
 def test_folded_graph_triangles(spark, duck):
     """The former graph_triangles registry gate (folded r5 for
     graph_scc — closed-form clique oracle over the same _nation_pairs

@@ -204,32 +204,6 @@ def test_fuzz_hop_parity_salted(spark, duck):
     assert not failures, "\n".join(failures[:3]) + f"\n({len(failures)} total)"
 
 
-def test_fuzz_hop_parity_pruned(spark, duck):
-    """Same random hop queries with per-hop traversal pruning on —
-    both prefilter strategies must be row-for-row equivalent to the
-    un-pruned plans (and to DuckDB): the prefilter may only drop edge
-    rows the join itself would drop."""
-    from brahmand_spark.graphs.tpch import build_session
-
-    from .conftest import SF_SMOKE
-
-    rnd = random.Random(477001)  # same seed as the plain hop fuzz
-    sessions = {}
-    for mode in ("semi", "bloom"):
-        sessions[mode] = build_session(spark, SF_SMOKE)
-        sessions[mode].prune_hops = mode
-        sessions[mode].prune_bloom_bits = 1 << 14
-    failures = []
-    for i in range(N_QUERIES):
-        cy, sq = _hop_query(rnd)
-        mode = ("semi", "bloom")[i % 2]
-        try:
-            assert_same(sessions[mode].execute(cy), duck.sql(sq))
-        except AssertionError as exc:
-            failures.append(f"[{i}/{mode}] {cy}\n  vs {sq}\n  {exc}")
-    assert not failures, "\n".join(failures[:3]) + f"\n({len(failures)} total)"
-
-
 def test_fuzz_hop_parity_stats(spark, duck):
     """Same random hop queries PLUS random 2-hop chains on a session
     with full table+column stats collected — the cost-based anchor

@@ -11,9 +11,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from brahmand_spark.errors import UnsupportedError
-from brahmand_spark.ops.lakehouse import (
-    format_available, merge_into_statement, write_table,
-)
+from brahmand_spark.ops.lakehouse import format_available, write_table
 
 from .conftest import SF_SMOKE
 
@@ -57,31 +55,6 @@ class TestWriteTable:
         with pytest.raises(UnsupportedError, match="not available"):
             write_table(spark.range(1), str(tmp_path / "x"),
                         format="carbondata")
-
-
-class TestMergeIntoMapping:
-    def test_statement_rendering(self):
-        sql = merge_into_statement(
-            "customer", ["c_custkey", "c_name", "c_acctbal"],
-            ["c_custkey"], update_cols=["c_acctbal"])
-        assert sql == (
-            "MERGE INTO customer t USING __merge_src s"
-            " ON t.c_custkey <=> s.c_custkey"
-            " WHEN MATCHED THEN UPDATE SET t.c_acctbal = s.c_acctbal"
-            " WHEN NOT MATCHED THEN INSERT"
-            " (c_custkey, c_name, c_acctbal)"
-            " VALUES (s.c_custkey, s.c_name, s.c_acctbal)")
-
-    def test_statement_insert_only(self):
-        sql = merge_into_statement("t1", ["a", "b"], ["a", "b"])
-        assert "WHEN MATCHED" not in sql
-        assert "ON t.a <=> s.a AND t.b <=> s.b" in sql
-
-    def test_statement_validates_keys(self):
-        with pytest.raises(ValueError, match="non-empty"):
-            merge_into_statement("t", ["a"], [])
-        with pytest.raises(ValueError, match="not in columns"):
-            merge_into_statement("t", ["a"], ["z"])
 
 
 class TestMergeCommit:

@@ -38,21 +38,6 @@ class TestText:
                 FROM documents"""),
         )
 
-    def test_fingerprint(self, docs, duck):
-        from brahmand_spark.ops.text import fingerprint
-
-        assert_same(
-            fingerprint(docs),
-            duck.sql("""
-                SELECT doc_id,
-                       list_reduce(list_prepend(0::BIGINT,
-                           list_transform(string_split(text, ''),
-                                          c -> ascii(c))),
-                           (acc, c) -> (acc * 31 + c) % 1000000007)
-                       AS fingerprint
-                FROM documents"""),
-        )
-
     def test_lang_id_deterministic(self, docs):
         from brahmand_spark.ops.text import lang_id
 
@@ -305,32 +290,6 @@ class TestMultimodal:
         out = {r.id: r.format for r in attach_image_metadata(df).collect()}
         assert out == {1: "png", 2: "jpeg", 3: "gif", 4: "unknown"}
 
-    def test_decode_undecodable_payload_yields_nulls(self, spark):
-        """Real-decode mode (no fake): a payload no backend can decode
-        (truncated PNG header) produces a NULL-metadata row, not a
-        partition failure — at 100 TB corrupt blobs are a certainty."""
-        from brahmand_spark.ops.multimodal import decode_image_features
-
-        df = spark.createDataFrame(
-            [(1, bytearray(b"\x89PNG"))], "id long, content binary"
-        )
-        rows = decode_image_features(df).collect()
-        assert len(rows) == 1
-        assert rows[0].width is None and rows[0].feature is None
-
-    def test_decode_fake_deterministic(self, spark):
-        from brahmand_spark.ops.multimodal import decode_image_features
-
-        df = spark.createDataFrame(
-            [(1, bytearray(b"\x89PNGxyz")), (2, bytearray(b"\xff\xd8\xe4\xba\x8c"))],
-            "id long, content binary",
-        )
-        a = decode_image_features(df, deterministic_fake=True).collect()
-        b = decode_image_features(df, deterministic_fake=True).collect()
-        assert sorted(map(str, a)) == sorted(map(str, b))
-        assert all(len(r.feature) == 8 for r in a)
-
-
 class TestJaccardPrefix:
     def test_prefix_matches_allpairs(self, docs):
         from brahmand_spark.ops.dedup import ngram_jaccard_pairs
@@ -407,29 +366,6 @@ def _encode_png(arr, color_type=0, row_filters=None):
 
 
 class TestMultimodalRealDecode:
-    def test_real_decode_through_pipeline(self, spark):
-        """Real decode path (Pillow when installed, pure-stdlib PNG
-        decoder otherwise): generate a tiny PNG in-process, decode it
-        through the mapInPandas pipeline, and check the
-        geometry/luma/histogram outputs."""
-        import numpy as np
-
-        from brahmand_spark.ops.multimodal import decode_image_features
-
-        arr = np.zeros((4, 6), dtype="uint8")
-        arr[:2, :] = 255  # top half white -> mean luma 0.5
-        good = _encode_png(arr)
-        df = spark.createDataFrame(
-            [(1, bytearray(good)), (2, bytearray(b"not an image"))],
-            "id long, content binary",
-        )
-        rows = {r.id: r for r in decode_image_features(
-            df, feature_dim=4).collect()}
-        assert (rows[1].width, rows[1].height) == (6, 4)
-        assert abs(rows[1].mean_luma - 0.5) < 1e-6
-        assert abs(sum(rows[1].feature) - 1.0) < 1e-6
-        assert rows[2].width is None  # corrupt payload -> NULLs
-
     def test_png_decoder_all_filters_and_color_types(self):
         """The stdlib PNG decoder round-trips every scanline filter
         type and the four supported color layouts."""

@@ -588,96 +588,39 @@ class TestDropAdjIndex:
         assert expected.exceptAll(got).count() == 0
 
 
-class TestHopPruning:
-    """Per-hop traversal pruning (prune_hops='semi'|'bloom'): the
-    reference's hop-CTE ``WHERE from_id IN (SELECT id FROM prev_cte)``
-    (ref analyzer/graph_traversal_planning.rs:819-843) as an opt-in
-    prefilter of each hop's edge input."""
+class TestRuntimeFilterPrunesHops:
+    """The compiler emits no per-hop prefilter of its own (the
+    reference's hop-CTE ``WHERE from_id IN (SELECT id FROM prev_cte)``,
+    graph_traversal_planning.rs:819-843): when a selective frontier
+    meets an edge scan through a shuffle join, Catalyst's
+    InjectRuntimeFilter puts a bloom-filter ``might_contain`` on that
+    scan, built from the filtered frontier."""
 
     Q = ("MATCH (c:Customer)-[:PLACED]->(o:Order)-[:HAS_LINE]->"
          "(l:Lineitem) WHERE c.c_mktsegment = 'BUILDING' "
          "AND c.c_acctbal > 9000 "
          "RETURN c.c_name AS n, count(*) AS cnt ORDER BY cnt DESC, n")
 
-    def _session(self, spark, mode):
-        from brahmand_spark.graphs.tpch import build_session
-
-        from .conftest import SF_SMOKE
-
-        s = build_session(spark, SF_SMOKE)
-        s.prune_hops = mode
-        return s
-
-    def test_parity_both_modes(self, spark, tpch):
-        want = sorted(map(tuple, tpch.execute(self.Q).collect()))
-        for mode in ("semi", "bloom"):
-            got = sorted(map(tuple, (
-                self._session(spark, mode).execute(self.Q).collect())))
-            assert got == want, mode
-
-    def test_semi_prefilter_in_plan(self, spark):
-        plan = physical_plan(self._session(spark, "semi").execute(self.Q))
-        assert "LeftSemi" in plan
-        # The frontier-keys branch re-applies the anchor's WHERE
-        # conjuncts, so the selective filter reaches (at least) two
-        # scans: the main plan's and the prefilter's.
-        assert plan.count("BUILDING") >= 2, plan
-
-    def test_bloom_prefilter_in_plan(self, spark):
-        plan = physical_plan(self._session(spark, "bloom").execute(self.Q))
-        # the packed bit array is broadcast and probed via
-        # array_contains inside the edge-side stage — no leftsemi, no
-        # extra edge exchange
-        assert "array_contains" in plan
-        assert "LeftSemi" not in plan
-        assert plan.count("BUILDING") >= 2, plan
-
-    def test_unfiltered_query_not_pruned(self, spark):
-        q = ("MATCH (c:Customer)-[:PLACED]->(o:Order) "
-             "RETURN count(*) AS n")
-        for mode in ("semi", "bloom"):
-            plan = physical_plan(self._session(spark, mode).execute(q))
-            assert "LeftSemi" not in plan
-            assert "array_contains" not in plan
-
-    def test_default_off(self, tpch):
-        plan = physical_plan(tpch.execute(self.Q))
-        assert "LeftSemi" not in plan
-        assert "array_contains" not in plan
-
-    def test_invalid_mode_raises(self, spark):
-        import pytest
-
-        from brahmand_spark.compile.compiler import QueryCompiler
-
-        with pytest.raises(ValueError, match="prune_hops"):
-            QueryCompiler(None, None, prune_hops="nope")
-
-    def test_pruning_interplay_parity(self, spark, tpch):
-        """Pruning composes with var-length, shortestPath, subquery
-        expressions, and OPTIONAL MATCH without changing results."""
-        queries = [
-            ("MATCH (a:Customer)-[:NEXT_CUST*1..3]->(b:Customer) "
-             "WHERE a.c_custkey <= 5 "
-             "RETURN a.c_custkey AS s, b.c_custkey AS d"),
-            ("MATCH p = shortestPath((a:Customer)-[:NEXT_CUST*1..4]->"
-             "(b:Customer)) WHERE a.c_custkey = 3 "
-             "RETURN b.c_custkey AS d, length(p) AS l"),
-            ("MATCH (c:Customer) WHERE c.c_acctbal > 9000 AND EXISTS { "
-             "(c)-[:PLACED]->(o:Order) WHERE o.o_totalprice > 100000 } "
-             "RETURN c.c_custkey AS ck, "
-             "COUNT { (c)-[:PLACED]->(x:Order) } AS n ORDER BY ck"),
-            ("MATCH (c:Customer) WHERE c.c_custkey <= 10 "
-             "OPTIONAL MATCH (c)-[:PLACED]->(o:Order) "
-             "RETURN c.c_custkey AS ck, count(o.o_orderkey) AS n"),
-        ]
-        want = [sorted(map(tuple, tpch.execute(q).collect()))
-                for q in queries]
-        for mode in ("semi", "bloom"):
-            s = self._session(spark, mode)
-            for q, w in zip(queries, want):
-                got = sorted(map(tuple, s.execute(q).collect()))
-                assert got == w, (mode, q[:60])
+    def test_selective_anchor_gets_bloom_filter(self, spark, tpch):
+        want = tpch.execute(self.Q).collect()
+        confs = {
+            # no broadcast joins, and a runtime filter for any scan size
+            # (the 10 GB default never fires on the fixture)
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.optimizer.runtime.bloomFilter."
+            "applicationSideScanSizeThreshold": "1",
+        }
+        saved = {k: spark.conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            df = tpch.execute(self.Q)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "might_contain(" in plan, plan
+            assert df.collect() == want
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
 
 
 class TestVarLengthCarryVsAdjacency:

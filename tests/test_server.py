@@ -201,3 +201,51 @@ def test_one_spark_job_per_statement(spark):
         httpd.shutdown()
     assert one >= 1  # the jobs were seen at all
     assert eight == one
+
+
+def test_malformed_requests_rejected_before_running():
+    """A request is validated before its body is read or its query
+    run: a bad Content-Length, a body over the size cap, non-JSON, a
+    non-object body and mistyped fields each get a 4xx reply, and the
+    session never executes."""
+    import socket
+
+    from brahmand_spark.server import MAX_BODY_BYTES
+
+    executed = []
+
+    class StubSession:
+        def execute(self, query, params=None):
+            executed.append(query)
+            raise AssertionError("a rejected request must not run")
+
+    def send(length, body=b""):
+        with socket.create_connection(
+                ("127.0.0.1", httpd.server_address[1]), timeout=5) as s:
+            s.sendall(b"POST /query HTTP/1.1\r\nHost: localhost\r\n"
+                      b"Content-Type: application/json\r\n"
+                      b"Content-Length: " + length.encode()
+                      + b"\r\n\r\n" + body)
+            status_line = s.makefile("rb").readline()
+        return int(status_line.split()[1])
+
+    query = json.dumps({"query": "RETURN 1 AS x"}).encode()
+    cases = [
+        (str(-1), query, 400),
+        ("abc", query, 400),
+        (str(MAX_BODY_BYTES + 1), b"", 413),
+        (None, b"[1, 2]", 400),
+        (None, b"{not json", 400),
+        (None, b'{"query": 5}', 400),
+        (None, b'{"query": "RETURN 1 AS x", "params": [1]}', 400),
+        (None, b'{"query": "RETURN 1 AS x", "format": ["CSV"]}', 400),
+    ]
+    httpd, _ = _serving(StubSession())
+    try:
+        got = [send(str(len(body)) if length is None else length, body)
+               for length, body, _ in cases]
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+    assert got == [want for _, _, want in cases]
+    assert executed == []

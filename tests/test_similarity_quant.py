@@ -1,83 +1,15 @@
-"""Embedding quantization (ops/similarity): round-trip error bound,
-determinism and DuckDB replay of the code assignment, plus IVF-PQ
-recall against the exact ranking."""
+"""Embedding product quantization (ops/similarity): IVF-PQ codes
+against a numpy replay and recall against the exact ranking."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from brahmand_spark.ops.similarity import (
-    dequantize_embeddings, quantize_embeddings,
-)
-
 from .conftest import SF_SMOKE
-from .helpers import assert_same
 
 
 def _emb(spark):
     return spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-
-
-class TestQuantization:
-    def test_roundtrip_error_bound(self, spark):
-        emb = _emb(spark)
-        q = quantize_embeddings(emb, bits=8)
-        back = dequantize_embeddings(q)
-        joined = emb.select(
-            "vec_id", F.col("embedding").alias("orig")
-        ).join(back, "vec_id")
-        # per-axis error <= scale/2 = max|x| / (2 * 127)
-        err = joined.select(
-            F.aggregate(
-                F.zip_with(
-                    F.transform("orig",
-                                lambda x: x.cast("double")),
-                    "embedding",
-                    lambda a, b: F.abs(a - b)),
-                F.lit(0.0),
-                lambda acc, x: F.greatest(acc, x)).alias("e"),
-            F.aggregate(
-                F.transform("orig", lambda x: F.abs(x.cast("double"))),
-                F.lit(0.0),
-                lambda acc, x: F.greatest(acc, x)).alias("m"),
-        )
-        bad = err.filter(F.col("e") > F.col("m") / 254.0 + 1e-12)
-        assert bad.count() == 0
-
-    def test_codes_bounded_and_deterministic(self, spark):
-        emb = _emb(spark)
-        a = quantize_embeddings(emb, bits=8)
-        assert a.select(F.explode("qvec").alias("q")).agg(
-            F.max(F.abs("q"))).first()[0] <= 127
-        b = quantize_embeddings(emb.repartition(9), bits=8)
-        assert sorted(map(str, a.collect())) == sorted(map(str, b.collect()))
-
-    def test_zero_vector(self, spark):
-        df = spark.createDataFrame(
-            [(1, [0.0, 0.0, 0.0])], "vec_id long, embedding array<double>")
-        r = quantize_embeddings(df).collect()[0]
-        assert list(r["qvec"]) == [0, 0, 0] and r["scale"] == 0.0
-
-    def test_duckdb_replay(self, spark, duck):
-        got = quantize_embeddings(_emb(spark), bits=8).select(
-            "vec_id", "qvec", F.round("scale", 9).alias("scale"))
-        want = duck.sql("""
-            WITH v AS (
-                SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings),
-            s AS (
-                SELECT vec_id, x,
-                       list_max(list_transform(x, a -> abs(a))) / 127.0
-                           AS sc
-                FROM v)
-            SELECT vec_id,
-                   list_transform(
-                       x, a -> CASE WHEN sc > 0
-                               THEN floor(a / sc + 0.5)::INT
-                               ELSE 0 END) AS qvec,
-                   round(CASE WHEN sc > 0 THEN sc ELSE 0.0 END, 9)
-                       AS scale
-            FROM s""")
-        assert_same(got, want)
 
 
 class TestIvfPq:

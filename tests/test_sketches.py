@@ -1,6 +1,7 @@
-"""HyperLogLog sketch (ops/sketches): DuckDB-oracle parity, accuracy
-bounds, branch coverage (linear-counting vs raw estimator), and the
-register-merge property an incremental corpus pipeline relies on."""
+"""HyperLogLog and count-min sketches (ops/sketches): DuckDB-oracle
+parity, accuracy bounds, branch coverage (linear-counting vs raw
+estimator), and the merge property an incremental corpus pipeline
+relies on."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from brahmand_spark.ops.sketches import (
+    cms_cell_rows,
+    cms_estimate,
     hll_distinct,
     hll_distinct_with_exact,
     hll_estimate,
@@ -119,6 +122,17 @@ def test_hll_rejects_bad_precision(spark):
         hll_registers(df, "v", p=2)
 
 
+def _cms_cells(df, value_col, depth=4, width=1024, seed=42):
+    """One count per non-empty (row, bucket) cell — the sketch table
+    cms_estimate point-queries."""
+    return (
+        df.select(cms_cell_rows(value_col, depth, width, seed))
+        .groupBy(F.col("rb.row").alias("row"),
+                 F.col("rb.bucket").alias("bucket"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+
+
 class TestCountMin:
     def test_gate_oracle_parity(self, spark, duck):
         import __spark_entry__ as entry
@@ -146,122 +160,31 @@ class TestCountMin:
         """union + re-sum of two increments' cells == whole-corpus
         sketch, so estimates agree — the incremental-pipeline
         contract."""
-        from pyspark.sql import functions as F
-
-        from brahmand_spark.ops.sketches import cms_estimate, cms_table
-
         rows = [(f"t{i % 13}",) for i in range(520)]
         df = spark.createDataFrame(rows, "v string")
         half_a = spark.createDataFrame(rows[:200], "v string")
         half_b = spark.createDataFrame(rows[200:], "v string")
         merged = (
-            cms_table(half_a, "v").unionByName(cms_table(half_b, "v"))
+            _cms_cells(half_a, "v").unionByName(_cms_cells(half_b, "v"))
             .groupBy("row", "bucket").agg(F.sum("c").alias("c"))
         )
         items = df.select("v").distinct()
         a = sorted(map(tuple, cms_estimate(merged, items, "v").collect()))
         b = sorted(map(tuple, cms_estimate(
-            cms_table(df, "v"), items, "v").collect()))
+            _cms_cells(df, "v"), items, "v").collect()))
         assert a == b
 
     def test_absent_value_estimates_zero_when_no_collision(self, spark):
-        from brahmand_spark.ops.sketches import cms_estimate, cms_table
-
         df = spark.createDataFrame([("a",), ("a",)], "v string")
         items = spark.createDataFrame([("zzz-absent",)], "v string")
-        got = cms_estimate(cms_table(df, "v", width=4096), items,
+        got = cms_estimate(_cms_cells(df, "v", width=4096), items,
                            "v", width=4096).collect()[0]
         assert got["cms_estimate"] == 0
 
-    def test_rejects_bad_params(self, spark):
-        from brahmand_spark.ops.sketches import cms_table
-
-        df = spark.createDataFrame([("a",)], "v string")
+    def test_rejects_bad_params(self):
         with pytest.raises(ValueError):
-            cms_table(df, "v", depth=0)
-
-
-class TestBloom:
-    def test_no_false_negatives_and_duckdb_replay(self, spark, duck):
-        """Every inserted value must probe true; the bit table replays
-        in DuckDB (same double-hashing arithmetic)."""
-        from brahmand_spark.ops.sketches import (
-            bloom_might_contain, bloom_table,
-        )
-
-        import __spark_entry__ as entry
-
-        vals = spark.range(500).select(
-            F.concat(F.lit("v"), F.col("id")).alias("v")
-        )
-        bits = bloom_table(vals, "v", m_bits=4096, k_hashes=5)
-        got = bloom_might_contain(bits, vals, "v",
-                                  m_bits=4096, k_hashes=5)
-        assert got.filter(~F.col("might_contain")).count() == 0
-
-        h1 = entry._md5h60_sql("'b1:7:' || v")
-        h2 = entry._md5h60_sql("'b2:7:' || v")
-        per_i = "\n            UNION ALL ".join(
-            f"SELECT (({h1}) + {i} * ({h2})) % 4096 AS bit FROM vals"
-            for i in range(5)
-        )
-        from .helpers import assert_same
-        assert_same(bits, duck.sql(f"""
-            WITH vals AS (
-                SELECT 'v' || CAST(unnest(range(500)) AS VARCHAR) AS v)
-            SELECT DISTINCT bit FROM ({per_i})"""))
-
-    def test_false_positive_rate_in_range(self, spark):
-        """~(1-e^{-kn/m})^k: n=500, m=8192, k=5 -> ~0.2%; check absent
-        probes stay under a loose 2% and at least SOME absent value is
-        rejected (the filter does something)."""
-        from brahmand_spark.ops.sketches import (
-            bloom_might_contain, bloom_table,
-        )
-
-        present = spark.range(500).select(
-            F.concat(F.lit("in"), F.col("id")).alias("v"))
-        absent = spark.range(2000).select(
-            F.concat(F.lit("out"), F.col("id")).alias("v"))
-        bits = bloom_table(present, "v")
-        got = bloom_might_contain(bits, absent, "v")
-        fp = got.filter(F.col("might_contain")).count()
-        assert fp <= 40, fp  # 2% of 2000
-
-    def test_prefilter_keeps_all_matches(self, spark):
-        """bloom_prefilter never drops a row whose key IS present —
-        the join result after prefiltering equals the plain join."""
-        from brahmand_spark.ops.sketches import bloom_prefilter
-
-        large = spark.range(5000).select(
-            (F.col("id") % 700).alias("k"), F.col("id").alias("payload"))
-        keys = spark.range(50).select((F.col("id") * 9).alias("k"))
-        pre = bloom_prefilter(large, keys, "k")
-        want = large.join(keys.distinct(), "k", "leftsemi")
-        got_join = pre.join(keys.distinct(), "k", "leftsemi")
-        a = sorted(map(tuple, want.collect()))
-        b = sorted(map(tuple, got_join.collect()))
-        assert a == b
-        # and the prefilter really pruned: strictly fewer rows than large
-        assert pre.count() < large.count()
-
-    def test_merge_across_increments(self, spark):
-        from brahmand_spark.ops.sketches import (
-            bloom_might_contain, bloom_table,
-        )
-
-        a = spark.range(100).select(F.concat(F.lit("a"), F.col("id"))
-                                    .alias("v"))
-        b = spark.range(100).select(F.concat(F.lit("b"), F.col("id"))
-                                    .alias("v"))
-        merged = bloom_table(a, "v").union(bloom_table(b, "v")).distinct()
-        both = a.union(b)
-        got = bloom_might_contain(merged, both, "v")
-        assert got.filter(~F.col("might_contain")).count() == 0
-
-    def test_rejects_bad_params(self, spark):
-        from brahmand_spark.ops.sketches import bloom_table
-
-        df = spark.createDataFrame([("a",)], "v string")
+            cms_cell_rows("v", depth=0, width=1024, seed=42)
         with pytest.raises(ValueError):
-            bloom_table(df, "v", m_bits=4)
+            cms_cell_rows("v", depth=4, width=1, seed=42)
+
+

@@ -1,5 +1,5 @@
-"""Salted-join / two-phase-agg equivalence tests (skew utilities must be
-result-identical to their plain counterparts)."""
+"""Two-phase-agg equivalence tests (the skew utility must be
+result-identical to its plain counterpart)."""
 
 import pyspark.sql.functions as F
 
@@ -16,22 +16,6 @@ def _skewed_df(spark):
 
 
 class TestSkew:
-    def test_salted_join_matches_plain(self, spark):
-        left = _skewed_df(spark)
-        right = spark.range(51).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("w")
-        )
-        plain = left.join(right, on=["k"]).groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("w").alias("sw")
-        )
-        from brahmand_spark.ops.skew import salted_join
-
-        salted = salted_join(left, right, on=["k"], factor=4).groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("w").alias("sw")
-        )
-        assert sorted(map(tuple, plain.collect())) == \
-            sorted(map(tuple, salted.collect()))
-
     def test_two_phase_agg_matches_plain(self, spark):
         df = _skewed_df(spark)
         plain = df.groupBy("k").agg(

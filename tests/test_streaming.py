@@ -180,26 +180,15 @@ class TestStatefulOperator:
 
 class TestAdjacency:
     def test_build_and_expand(self, spark, tpch):
-        from brahmand_spark.ops.adjacency import build_adjacency, expand
+        from brahmand_spark.ops.adjacency import build_adjacency, expand_pairs
 
         edges = tpch.tables["PLACED"]
         adj = build_adjacency(edges, "from_Customer", "to_Order")
-        customers = tpch.tables["Customer"].select("c_custkey")
-        pairs = expand(adj, customers, "c_custkey")
+        pairs = expand_pairs(adj)
         assert pairs.count() == edges.count()
         direct = {(r.from_Customer, r.to_Order) for r in edges.collect()}
         via_adj = {(r.src, r.dst) for r in pairs.collect()}
         assert direct == via_adj
-
-    def test_expand_prunes_frontier(self, spark, tpch):
-        from brahmand_spark.ops.adjacency import build_adjacency, expand
-
-        edges = tpch.tables["PLACED"]
-        adj = build_adjacency(edges, "from_Customer", "to_Order")
-        frontier = tpch.tables["Customer"].select("c_custkey").limit(10)
-        pairs = expand(adj, frontier, "c_custkey").collect()
-        frontier_ids = {r.c_custkey for r in frontier.collect()}
-        assert {r.src for r in pairs} <= frontier_ids
 
     def test_degree_stats(self, tpch):
         from brahmand_spark.ops.adjacency import build_adjacency, degree_stats

@@ -223,29 +223,6 @@ def main() -> None:
         "skew split.",
     )
 
-    # Session demonstrating opt-in per-hop traversal pruning (the
-    # reference's IN-subquery hop filter): a selective anchor's ids
-    # prefilter the edge input before the hop join.
-    prune_session = build_session(spark, SF_DIR)
-    prune_session.prune_hops = "semi"
-    prune_showcase = (
-        "Per-hop traversal pruning (prune_hops='semi')",
-        """MATCH (c:Customer)-[:PLACED]->(o:Order)-[:HAS_LINE]->(l:Lineitem)
-           WHERE c.c_mktsegment = 'BUILDING' AND c.c_acctbal > 9990
-           RETURN c.c_name AS name, count(*) AS n""",
-        "Each hop's edge input is leftsemi-prefiltered against the "
-        "selective frontier's DISTINCT ids before the hop join — the "
-        "reference's `WHERE from_id IN (SELECT id FROM prev_cte)` "
-        "(graph_traversal_planning.rs:819-843) as a physical strategy. "
-        "The frontier-keys branch re-applies the anchor's WHERE "
-        "conjuncts, so the prefilter scan carries the same "
-        "PushedFilters as the main branch; AQE broadcasts the tiny key "
-        "set. Off by default (at this SF the plain join wins — see "
-        "README for the measured crossover); the win case is an edge "
-        "table too large to broadcast against a still-selective "
-        "frontier, where pruned rows never enter the edge Exchange.",
-    )
-
     # Session with full table + column stats collected (r11): the
     # cost-based anchor AND greedy hop ordering drive the fold.
     stats_session = build_session(spark, SF_DIR)
@@ -378,7 +355,7 @@ def main() -> None:
             "shown — O(dim^2) driver values); the projection folds the "
             "mean shift into per-component constants and runs as "
             "codegen'd literal-array dots — a pure narrow map, no "
-            "Exchange, like random_projection.",
+            "Exchange.",
         ),
         (
             "Random-walk step (ranked adjacency join, live-walk bound)",
@@ -580,12 +557,11 @@ def main() -> None:
     ]
     specials = {len(SHOWCASES): adj_session,
                 len(SHOWCASES) + 1: skew_session,
-                len(SHOWCASES) + 2: prune_session,
-                len(SHOWCASES) + 3: stats_session,
-                len(SHOWCASES) + 4: skewcbo_session}
+                len(SHOWCASES) + 2: stats_session,
+                len(SHOWCASES) + 3: skewcbo_session}
     for i, (title, cypher, commentary) in enumerate(
-            SHOWCASES + [adj_showcase, skew_showcase, prune_showcase,
-                         stats_showcase, skewcbo_showcase]):
+            SHOWCASES + [adj_showcase, skew_showcase, stats_showcase,
+                         skewcbo_showcase]):
         sess = specials.get(i, session)
         df = sess.execute(cypher)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
