@@ -24,6 +24,7 @@ from .catalog import (
     CLICKHOUSE_TO_SPARK_TYPE, NODE_ID_DTYPES, NodeSchema, RelationshipSchema,
 )
 from .errors import CatalogError
+from .io import local_frame
 from .parser import ast
 
 _SPARK_TYPES = {
@@ -61,7 +62,7 @@ def _create_node(session, stmt: ast.CreateNodeTable) -> DataFrame:
             "(ddl_query.rs:90-92)"
         )
     fields = [T.StructField(c.name, spark_type(c.dtype)) for c in stmt.columns]
-    empty = session.spark.createDataFrame([], T.StructType(fields))
+    empty = local_frame(session.spark, [], T.StructType(fields))
     session.tables.setdefault(stmt.name, empty)
     session.schema.add_node(NodeSchema(
         label=stmt.name, table_name=stmt.name, node_id=stmt.node_id,
@@ -84,7 +85,7 @@ def _create_rel(session, stmt: ast.CreateRelTable) -> DataFrame:
         T.StructField(from_col, T.LongType()),
         T.StructField(to_col, T.LongType()),
     ] + [T.StructField(c.name, spark_type(c.dtype)) for c in stmt.columns]
-    empty = session.spark.createDataFrame([], T.StructType(fields))
+    empty = local_frame(session.spark, [], T.StructType(fields))
     session.tables.setdefault(stmt.name, empty)
     session.schema.add_relationship(RelationshipSchema(
         type_name=stmt.name, table_name=stmt.name,
@@ -98,6 +99,7 @@ def _create_rel(session, stmt: ast.CreateRelTable) -> DataFrame:
 
 
 def _ack(session, op: str, name: str) -> DataFrame:
-    return session.spark.createDataFrame(
+    return local_frame(
+        session.spark,
         [(op, name, "ok")], "operation string, table string, status string"
     )

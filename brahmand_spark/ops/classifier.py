@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import local_frame
 from .text import md5_hash60, tokens
 
 MICRO = 1_000_000
@@ -135,8 +136,8 @@ def train_text_classifier(
     scale = lr / n_docs  # one double literal, shared with replays
     w = [0] * (dim + 1)
     for _ in range(epochs):
-        wdf = spark.createDataFrame(
-            [(i, wi) for i, wi in enumerate(w) if wi != 0] or [(0, 0)],
+        wdf = local_frame(
+            spark, [(i, wi) for i, wi in enumerate(w) if wi != 0] or [(0, 0)],
             "idx int, w bigint",
         )
         margins = (
@@ -180,7 +181,8 @@ def classifier_score(
         feature_fn = hashed_token_features
     dim = len(weights_micro) - 1
     spark = df.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_frame(
+        spark,
         [(i, wi) for i, wi in enumerate(weights_micro) if wi != 0]
         or [(0, 0)],
         "idx int, w bigint",

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..io import local_frame
 from .fs import path_exists, replace_dir
 
 
@@ -19,8 +20,9 @@ def coerce_ids(spark, ids, key: str, like_path: str | None = None,
                ) -> DataFrame:
     """Normalize a removal batch to a one-column DataFrame named
     ``key``: accepts a DataFrame (FIRST column holds the ids — any
-    type) or a Python list (type inferred — string ids stay strings;
-    a long-coerced tombstone would silently type-mismatch a
+    type) or a Python list of all-int (bigint) or all-str (string)
+    ids; anything else raises (string ids stay strings: a
+    long-coerced tombstone would silently type-mismatch a
     string-keyed index's anti-join, r8 review). An EMPTY list has no
     type to infer: with ``like_path`` given, the key's type is taken
     from that live table's schema via a zero-row read (r9 review: a
@@ -32,9 +34,17 @@ def coerce_ids(spark, ids, key: str, like_path: str | None = None,
             if like_path is not None:
                 return spark.read.parquet(like_path) \
                     .select(key).limit(0)
-            return spark.createDataFrame([], f"{key} long")
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], [key])
+            return local_frame(spark, [], f"{key} bigint")
+        if all(isinstance(i, int) and not isinstance(i, bool)
+               for i in ids):
+            dtype = "bigint"
+        elif all(isinstance(i, str) for i in ids):
+            dtype = "string"
+        else:
+            raise TypeError(
+                f"removal ids must be all int or all str, got "
+                f"{sorted({type(i).__name__ for i in ids})}")
+        ids_df = local_frame(spark, [(i,) for i in ids], f"{key} {dtype}")
     else:
         ids_df = ids.select(F.col(ids.columns[0]).alias(key))
     return ids_df.dropDuplicates([key])

@@ -46,6 +46,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..io import local_frame
+
 # Query parameters that exist for click attribution, not content
 # identity — the standard strip set (C4/CCNet drop them the same way).
 # Deliberately EXCLUDES generic names ('ref', 'source', ...) that
@@ -175,7 +177,7 @@ def public_suffix_table(spark, suffixes: list[str] | None = None):
     left broadcast joins in with_url_parts (ADVICE r6)."""
     sfx = suffixes if suffixes is not None else COMMON_SUFFIXES
     rows = [(s, s.count(".") + 1) for s in dict.fromkeys(sfx)]
-    return spark.createDataFrame(rows, "suffix string, n_labels int")
+    return local_frame(spark, rows, "suffix string, n_labels int")
 
 
 def _suffix_map_expr(suffixes: list[str]) -> Column:
@@ -321,11 +323,13 @@ def filter_domains(
     spark = df.sparkSession
     out = df
     if blocklist is not None:
-        bl = F.broadcast(spark.createDataFrame(
+        bl = F.broadcast(local_frame(
+            spark,
             [(d,) for d in blocklist], f"{domain_col} string"))
         out = out.join(bl, domain_col, "left_anti")
     if allowlist is not None:
-        al = F.broadcast(spark.createDataFrame(
+        al = F.broadcast(local_frame(
+            spark,
             [(d,) for d in allowlist], f"{domain_col} string"))
         out = out.join(al, domain_col, "leftsemi")
     return out

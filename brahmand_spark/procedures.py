@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from .compile.expressions import ExprCompiler
 from .compile.scope import ScalarBinding, Scope
 from .errors import PlanError
+from .io import local_frame
 from .parser import ast
 
 
@@ -44,8 +45,8 @@ def _edges(session, rel_type: str) -> DataFrame:
 
 def _sources(session, ids) -> DataFrame:
     vals = ids if isinstance(ids, (list, tuple)) else [ids]
-    return session.spark.createDataFrame(
-        [(int(v),) for v in vals], "id bigint")
+    return local_frame(
+        session.spark, [(int(v),) for v in vals], "id bigint")
 
 
 def _p_pagerank(session, rel, iterations=10, damping=0.85,
@@ -526,7 +527,8 @@ def _p_corpus_build_dedup_index(session, label, name, n=3,
         session._load_for_label(label), name, session.model_store,
         id_col=id_col, text_col=text_col, n=int(n),
         num_hashes=int(num_hashes), bands=int(bands))
-    return session.spark.createDataFrame(
+    return local_frame(
+        session.spark,
         [(name, label, int(params["n_docs"]),
           int(params["num_hashes"]), int(params["bands"]),
           params["sigs_path"])],
@@ -545,8 +547,8 @@ def _p_corpus_dedup_add(session, name, label, on_conflict="error"):
     params = dedup_index_add(
         session.spark, name, session._load_for_label(label),
         session.model_store, on_conflict=on_conflict)
-    return session.spark.createDataFrame(
-        [(name, label, int(params["n_docs"]))],
+    return local_frame(
+        session.spark, [(name, label, int(params["n_docs"]))],
         "name string, label string, n_docs long")
 
 
@@ -559,7 +561,8 @@ def _p_corpus_dedup_remove(session, name, label, id_col="doc_id"):
         session.spark, name,
         session._load_for_label(label).select(id_col),
         session.model_store)
-    return session.spark.createDataFrame(
+    return local_frame(
+        session.spark,
         [(name, int(params["n_docs"]))], "name string, n_docs long")
 
 
@@ -570,7 +573,8 @@ def _p_corpus_dedup_compact(session, name):
 
     params = dedup_index_compact(session.spark, name,
                                  session.model_store)
-    return session.spark.createDataFrame(
+    return local_frame(
+        session.spark,
         [(name, int(params["n_docs"]))], "name string, n_docs long")
 
 
@@ -583,8 +587,8 @@ def _p_vector_remove(session, name, label, id_col="vec_id"):
         session.spark, name,
         session._load_for_label(label).select(id_col),
         session.model_store)
-    return session.spark.createDataFrame(
-        [(name, int(params["n_vectors"]))],
+    return local_frame(
+        session.spark, [(name, int(params["n_vectors"]))],
         "name string, n_vectors long")
 
 
@@ -593,8 +597,8 @@ def _p_vector_compact(session, name):
     from .ops.similarity import ann_compact
 
     params = ann_compact(session.spark, name, session.model_store)
-    return session.spark.createDataFrame(
-        [(name, int(params["n_vectors"]))],
+    return local_frame(
+        session.spark, [(name, int(params["n_vectors"]))],
         "name string, n_vectors long")
 
 
@@ -632,7 +636,8 @@ def _p_vector_build_index(session, label, name, n_cells=16, m=4,
     doc["params"]["source_label"] = label
     session.model_store.save(name, "ann_index", doc["payload"],
                              doc["params"])
-    return session.spark.createDataFrame(
+    return local_frame(
+        session.spark,
         [(name, label, int(params["n_vectors"]),
           int(params["n_cells"]), int(params["m"]),
           int(params["n_codes"]), params["codes_path"])],
@@ -689,7 +694,8 @@ def _p_vector_add(session, name, label, id_col=None, vec_col=None,
             params = ann_reindex(session.spark, name, store,
                                  corpus=corpus)
             reindexed = True
-    return session.spark.createDataFrame(
+    return local_frame(
+        session.spark,
         [(name, label, int(params["n_vectors"]), skew, reindexed)],
         "name string, label string, n_vectors long, "
         "last_skew double, reindexed boolean")
@@ -764,7 +770,8 @@ def _p_vector_reindex(session, name, n_cells=None, m=None,
         n_cells=None if n_cells is None else int(n_cells),
         m=None if m is None else int(m),
         n_codes=None if n_codes is None else int(n_codes))
-    return session.spark.createDataFrame(
+    return local_frame(
+        session.spark,
         [(name, int(params["n_vectors"]), int(params["n_cells"]),
           int(params["m"]), int(params["n_codes"]))],
         "name string, n_vectors long, n_cells int, m int, "
@@ -776,8 +783,8 @@ def _p_db_models(session):
     one metadata row per saved model."""
     rows = [(m["name"], m["kind"], _json.dumps(m["params"], sort_keys=True))
             for m in session.model_store.list_models()]
-    return session.spark.createDataFrame(
-        rows, "name string, kind string, params string")
+    return local_frame(
+        session.spark, rows, "name string, kind string, params string")
 
 
 def _p_db_indexes(session):
@@ -825,10 +832,10 @@ def _p_db_indexes(session):
                 tomb_count(_ann_deletes_path(p)),
                 ann_skew(spark, m["name"], store),
                 _json.dumps(cfg, sort_keys=True)))
-    return spark.createDataFrame(
-        rows, "name string, kind string, n_live bigint, "
-              "add_batches int, stats_delta_depth int, "
-              "tombstones bigint, cell_skew double, config string")
+    return local_frame(
+        spark, rows, "name string, kind string, n_live bigint, "
+                     "add_batches int, stats_delta_depth int, "
+                     "tombstones bigint, cell_skew double, config string")
 
 
 def _p_db_labels(session):
@@ -838,9 +845,9 @@ def _p_db_labels(session):
         (n.label, n.table_name, n.node_id, len(n.column_names))
         for n in session.schema.nodes.values()
     ]
-    return session.spark.createDataFrame(
-        rows, "label string, table string, id_column string, "
-              "n_properties int")
+    return local_frame(
+        session.spark, rows,
+        "label string, table string, id_column string, n_properties int")
 
 
 def _p_db_relationships(session):
@@ -849,10 +856,10 @@ def _p_db_relationships(session):
          r.from_column, r.to_column, bool(r.adj_index))
         for r in session.schema.relationships.values()
     ]
-    return session.spark.createDataFrame(
-        rows, "type string, table string, from_node string, "
-              "to_node string, from_column string, to_column string, "
-              "adj_index boolean")
+    return local_frame(
+        session.spark, rows,
+        "type string, table string, from_node string, to_node string, "
+        "from_column string, to_column string, adj_index boolean")
 
 
 PROCEDURES: dict[str, Callable] = {

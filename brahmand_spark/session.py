@@ -21,6 +21,7 @@ from . import ddl
 from .catalog import GraphSchema
 from .compile.compiler import MAX_VAR_HOPS, QueryCompiler
 from .errors import CatalogError, UnsupportedError
+from .io import local_frame
 from .parser import ast
 from .parser.parser import parse
 
@@ -503,7 +504,8 @@ class GraphSession:
             plan = qe.executedPlan().toString()
             final = "isFinalPlan=true" in plan
             c = self._plan_counters(plan.split("== Initial Plan ==")[0])
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(c["scans"], c["joins"], c["shuffle_exchanges"],
                   c["broadcast_exchanges"], c["explodes"],
                   c["python_stages"], n_rows, elapsed, final)],
@@ -515,7 +517,7 @@ class GraphSession:
         text = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), stmt.mode
         )
-        return self.spark.createDataFrame([(text,)], "plan string")
+        return local_frame(self.spark, [(text,)], "plan string")
 
     @staticmethod
     def _plan_counters(plan: str) -> dict:

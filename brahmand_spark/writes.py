@@ -17,6 +17,12 @@ repeated writes don't stack lineage. At cluster scale the same shape
 writes to a table format (parquet/Delta overwrite or MERGE) instead of
 executor memory — the join/anti-join plans are identical.
 
+A write costs its table rewrites and nothing else. A SET's counter
+rides its checkpoint job as an observed metric (the rows it rewrote),
+a CREATE without a MATCH counts its one row per pattern statically, and
+the statement's stats row is a driver-local relation (``io.local_frame``:
+no Spark job and no Python worker to collect it).
+
 Divergences from Neo4j, documented: plain DELETE does not verify the
 node has no incident relationships (use DETACH DELETE); RETURN after a
 write is not supported; a SET value referencing OTHER bound variables
@@ -33,7 +39,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .compile.expressions import ExprCompiler, collect_aliases
@@ -41,6 +47,7 @@ from .compile.scope import (
     NodeBinding, RelBinding, ScalarBinding, Scope, pcol,
 )
 from .errors import PlanError, UnsupportedError
+from .io import local_frame
 from .parser import ast
 
 #: write counters, in output order — one source of truth for
@@ -107,10 +114,9 @@ def apply_write(session, wq: ast.WriteQuery, params=None,
     for fc in wq.foreachs:
         _apply_foreach(session, df, scope, fc, params, stats)
 
-    return session.spark.createDataFrame(
-        [tuple(stats.values())],
-        ", ".join(f"{k} bigint" for k in stats),
-    )
+    return local_frame(
+        session.spark, [tuple(stats.values())],
+        ", ".join(f"{k} bigint" for k in stats))
 
 
 # ----------------------------------------------------------------------
@@ -286,7 +292,7 @@ def apply_call_in_transactions(
             out_rows.append((bi, True, None) + tuple(stats))
     cols = (["batch bigint", "committed boolean", "error string"]
             + [f"{c} bigint" for c in WRITE_STAT_KEYS])
-    out = session.spark.createDataFrame(out_rows, ", ".join(cols))
+    out = local_frame(session.spark, out_rows, ", ".join(cols))
     if cit.report_var is None:
         return out
     # REPORT STATUS AS <var> (r10): one struct column per batch;
@@ -754,6 +760,8 @@ def _align_append(table: DataFrame, rows: DataFrame) -> DataFrame:
 # ----------------------------------------------------------------------
 def _apply_create(session, df, scope, create, params, stats) -> None:
     spark = session.spark
+    # without a MATCH, base is one row: each pattern creates exactly one
+    # node or relationship, so only a MATCH-driven CREATE runs a count
     base = df if df is not None else spark.range(1).drop("id")
     for path in create.paths:
         if path.var is not None or path.shortest is not None:
@@ -795,7 +803,7 @@ def _apply_create(session, df, scope, create, params, stats) -> None:
             if new_cols:
                 sch.column_names = list(sch.column_names) + new_cols
                 session._persist_catalog()
-            stats["nodes_created"] += rows.count()
+            stats["nodes_created"] += 1 if df is None else rows.count()
             # Later rels in this path address the new node by its id
             # expression (per match row).
             id_exprs.append(ec.compile(np.properties[sch.node_id]))
@@ -836,7 +844,8 @@ def _apply_create(session, df, scope, create, params, stats) -> None:
             table = session._load_for_label(rp.type_name)
             _store(session, rsch.table_name, _align_append(table, rows),
                    touched=rows.select(rsch.from_column, rsch.to_column))
-            stats["relationships_created"] += rows.count()
+            stats["relationships_created"] += (
+                1 if df is None else rows.count())
 
 
 # ----------------------------------------------------------------------
@@ -1020,7 +1029,6 @@ def _apply_set_group(session, df, scope, triples, params,
                 "the old one instead")
     table = session._load_for_label(b.label)
     matched = df.select(F.col(b.id_pcol).alias("__wid")).distinct()
-    n_matched = matched.count()
     prefixed = table.select(
         *[F.col(c).alias(pcol(a, c)) for c in table.columns]
     )
@@ -1048,6 +1056,11 @@ def _apply_set_group(session, df, scope, triples, params,
             matched, F.col(pcol(a, sch.node_id)) == F.col("__wid"),
             "left",
         )
+    # the rewritten-row count rides _store's checkpoint job as a metric
+    # observed on the join output; observed on `matched`, the broadcast
+    # side, it is lost when AQE drops that stage for a zero-row match
+    obs = Observation()
+    joined = joined.observe(obs, F.count("__wid").alias("n"))
     sub = Scope()
     sub.bind(NodeBinding(
         alias=a, label=b.label, id_column=sch.node_id,
@@ -1080,7 +1093,7 @@ def _apply_set_group(session, df, scope, triples, params,
            touched=matched.select(F.col("__wid").alias(sch.node_id)))
     if new_keys:
         session._persist_catalog()
-    stats["properties_set"] += n_matched * len(triples)
+    stats["properties_set"] += obs.get["n"] * len(triples)
 
 
 def _rel_pair_cond(b, rsch, wsrc, wdst):

@@ -1479,3 +1479,88 @@ class TestScopeClauseAndRetry:
         with pytest.raises(ParseError, match="RETRY"):
             s.execute("MATCH (p:Person) CALL (p) { SET p.age = 1 } "
                       "IN TRANSACTIONS ON ERROR RETRY 0")
+
+
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs it launched)``, counted through
+    a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestWriteCountersAndJobBudget:
+    """A write runs its table rewrites and nothing else: the counters
+    ride the checkpoint job as observed metrics and the stats row is
+    a driver-local relation (no Python worker, no job to collect)."""
+
+    @pytest.fixture(autouse=True)
+    def seed(self, wsession):
+        for i in range(4):
+            wsession.execute(
+                f"CREATE (p:Person {{id: {i}, name: 'P{i}', age: {20 + i}}})")
+
+    def test_one_row_set_runs_only_its_checkpoint_jobs(self, wsession,
+                                                       spark):
+        """At most the checkpoint's jobs (broadcast build + rewrite).
+        A separate count of the matched ids plus a Python-RDD stats
+        row made it 8 jobs on this fixture (7 on the perfbench
+        data)."""
+        stats_df, n = _jobs(spark, lambda: wsession.execute(
+            "MATCH (p:Person {id: 1}) SET p.age = 99"))
+        assert n <= 3
+        assert stats_df._jdf.queryExecution().analyzed().getClass() \
+            .getSimpleName() == "LocalRelation"
+        out, n_collect = _jobs(spark, lambda: stats_df.collect()[0])
+        assert n_collect == 0
+        assert out["properties_set"] == 1
+        assert rows(wsession, "MATCH (p:Person) RETURN p.id AS i, "
+                              "p.age AS a") \
+            == {(0, 20), (1, 99), (2, 22), (3, 23)}
+
+    def test_zero_match_set_reports_zero(self, wsession):
+        """The metric rides the table side of the join: AQE drops an
+        empty broadcast side's stage, and a metric observed there
+        never arrives."""
+        before = rows(wsession, "MATCH (p:Person) RETURN p.id, p.age")
+        out = wsession.execute(
+            "MATCH (p:Person {id: 77}) SET p.age = 5").collect()[0]
+        assert out["properties_set"] == 0
+        assert rows(wsession, "MATCH (p:Person) RETURN p.id, p.age") \
+            == before
+
+    def test_four_rows_two_keys_report_eight(self, wsession):
+        out = wsession.execute(
+            "MATCH (p:Person) SET p.age = 1, p.name = 'x'").collect()[0]
+        assert out["properties_set"] == 8
+        assert rows(wsession, "MATCH (p:Person) RETURN p.name, p.age") \
+            == {("x", 1)}
+
+    def test_duplicate_id_counts_rewritten_rows(self, wsession, spark):
+        """properties_set counts the rows the SET rewrote: both rows
+        holding id 1 (a distinct-id count reported 1)."""
+        wsession.register_table("Person", spark.createDataFrame(
+            [(1, "a", 1), (1, "b", 2), (2, "c", 3)],
+            "id bigint, name string, age bigint"))
+        out = wsession.execute(
+            "MATCH (p:Person {id: 1}) SET p.age = 7").collect()[0]
+        assert out["properties_set"] == 2
+        assert sorted(tuple(r) for r in wsession.execute(
+            "MATCH (p:Person) RETURN p.id, p.age").collect()) \
+            == [(1, 7), (1, 7), (2, 3)]
+
+    def test_matchless_create_runs_one_job(self, wsession, spark):
+        """Only the table's checkpoint: a MATCH-less CREATE is one row
+        per pattern, so nothing counts it."""
+        out, n = _jobs(spark, lambda: wsession.execute(
+            "CREATE (p:Person {id: 9, name: 'Z', age: 50})").collect()[0])
+        assert n == 1
+        assert out["nodes_created"] == 1
