@@ -34,7 +34,8 @@ frontier's keys before the exchange, sized from observed scan sizes.
 
 Scale posture: all expressions stay JVM-side (no Python UDFs anywhere in
 this path); node tables flagged small in the session are broadcast; AQE
-handles skew/join re-planning.
+re-plans joins and splits a hop join's hot-key partitions at runtime
+(skewJoin, io.configure), so the compiler plans no salting of its own.
 """
 
 from __future__ import annotations
@@ -140,9 +141,6 @@ class QueryCompiler:
         ] = None,
         max_var_hops: int = MAX_VAR_HOPS,
         assume_referential_integrity: bool = False,
-        degree_stats: Optional[Callable[[str], Optional[dict]]] = None,
-        skew_degree_threshold: int = 50_000,
-        skew_salt_factor: int = 8,
         table_stats: Optional[Callable[[str], Optional[int]]] = None,
         column_stats: Optional[Callable[[str], Optional[dict]]] = None,
     ):
@@ -167,22 +165,6 @@ class QueryCompiler:
         # Resolver for materialized grouped-adjacency tables
         # ({REL}_outgoing / {REL}_incoming); None -> always edge-list.
         self.load_adjacency = load_adjacency
-        # Per-rel degree statistics captured at adj-index build time
-        # (rel type -> {"outgoing": {...}, "incoming": {...}} with
-        # max_degree/p99_degree/avg_degree) — the skew diagnostic the
-        # hop planner consults to decide per-hop salting, the analogue
-        # of the reference's per-hop bitmap-index physical decision
-        # (ref query_validation.rs:103-124).
-        self.degree_stats = degree_stats
-        # A hop whose join-side degree distribution has max_degree at
-        # or above this threshold gets a salted join: the hot key's
-        # edge rows split across skew_salt_factor tasks, the frontier
-        # side is replicated factor x. AQE's skew-split also mitigates
-        # sort-merge skew at runtime, but only after a stage has
-        # materialized the skewed map output; plan-time salting keeps
-        # the hot key from ever concentrating.
-        self.skew_degree_threshold = skew_degree_threshold
-        self.skew_salt_factor = skew_salt_factor
         # Optional label/type -> row count resolver (captured by
         # GraphSession.collect_table_stats). When present, anchor
         # selection turns cost-based: estimated post-filter
@@ -2772,11 +2754,6 @@ class QueryCompiler:
     # reference's tie-break encodes, anchor_node_selection.rs:60-70).
     _ANCHOR_SELECTIVITY = 0.1
     _ANCHOR_OR_PENALTY = 5.0
-    # Straggler weight for skew-aware hop ordering (r12): rows a
-    # supernode concentrates into ONE shuffle task cost ~this many
-    # uniformly-spread rows of wall-clock (the parallelism a default
-    # 32-partition shuffle loses when one task holds the hot key).
-    _SKEW_STRAGGLER_WEIGHT = 32.0
 
     def _cost_anchor(self, pattern, ordered, score, has_or, part):
         """Cost-based anchor (r10): smallest ESTIMATED post-filter
@@ -3004,15 +2981,6 @@ class QueryCompiler:
         independent (inner equi-join fold), so this is a pure
         physical choice; the fuzz parity suites pin that.
 
-        Skew-aware (r12, VERDICT r11 next #1): when adjacency-build
-        degree stats exist for a hop's edge type, its selection cost
-        carries a straggler penalty — P(hot key in frontier) x
-        heavy-hitter excess x _SKEW_STRAGGLER_WEIGHT — so a power-law
-        edge sorts late even when its AVERAGE fanout is small (the
-        r11 model assumed uniformity and ordered a max-degree-10M
-        hop early whenever its mean looked cheap). The penalty only
-        biases selection; carried cardinalities stay expectations.
-
         The reference has no counterpart (ClickHouse orders the SQL
         it emits, ref: README.md:20-21) — this is our Catalyst-side
         upgrade, mirroring what a CBO would do with the same stats."""
@@ -3067,45 +3035,9 @@ class QueryCompiler:
                 return None
             er[id(r)] = e
 
-        def hop_excess(r):
-            """Heavy-hitter EXCESS degree (max_degree - avg_degree,
-            worst across both directions and all arms) of the hop's
-            edge type, from the adjacency-build degree stats (r12,
-            VERDICT r11 next #1): the uniform fanout e/nr is an
-            EXPECTATION and says nothing about concentration — on a
-            power-law graph a hop whose average fanout is 3 but whose
-            hottest key holds 10M edges explodes one shuffle task if
-            it joins while the frontier is still wide. 0.0 when no
-            degree stats exist (ordering byte-identical to r11)."""
-            if self.degree_stats is None:
-                return 0.0
-            names = []
-            if r.schema is not None:
-                names.append(r.schema.type_name)
-            elif r.type_name:
-                names.append(r.type_name)
-            names += [sch.type_name
-                      for sch, _ in (r.alt_resolved or [])]
-            worst = 0.0
-            for t in names:
-                st = self.degree_stats(t) or {}
-                for d in ("outgoing", "incoming"):
-                    s = st.get(d) or {}
-                    mx, av = s.get("max_degree"), s.get("avg_degree")
-                    if mx is not None and av is not None:
-                        worst = max(worst, float(mx) - float(av))
-            return worst
-
-        ex = {id(r): hop_excess(r) for r in pending}
-
         def step_est(r, comps):
-            """(new component est, straggler penalty, indexes
-            consumed) after applying hop r against the simulated
-            components. ``est`` is the expected-cardinality carry;
-            ``penalty`` prices the hot key's concentrated mass —
-            P(hot key in frontier) x excess rows x the straggler
-            weight (those rows land in ONE task) — and counts toward
-            hop SELECTION only, never toward the carried size."""
+            """(new component est, indexes consumed) after applying
+            hop r against the simulated components."""
             ci = next((i for i, (b, _) in enumerate(comps)
                        if r.src in b), None)
             cj = next((i for i, (b, _) in enumerate(comps)
@@ -3113,31 +3045,23 @@ class QueryCompiler:
             e = er[id(r)]
             nr_s = max(node_rows(r.src), 1.0)
             nr_d = max(node_rows(r.dst), 1.0)
-
-            def straggle(frontier_est, nr, other_sel):
-                hit = min(frontier_est / nr, 1.0)
-                return (hit * ex[id(r)] * other_sel
-                        * self._SKEW_STRAGGLER_WEIGHT)
-
             if ci is not None and cj is not None:
                 if ci == cj:  # closure join on both endpoint keys
                     est = comps[ci][1] * e / (nr_s * nr_d)
-                    return max(est, 1e-9), 0.0, (ci,)
+                    return max(est, 1e-9), (ci,)
                 est = comps[ci][1] * comps[cj][1] * e / (nr_s * nr_d)
-                return max(est, 1e-9), 0.0, (ci, cj)
+                return max(est, 1e-9), (ci, cj)
             if ci is not None:  # extend from src: fanout x dst filter
                 d_sel = sel.get(r.dst, 1.0)
                 est = comps[ci][1] * (e / nr_s) * d_sel
-                pen = straggle(comps[ci][1], nr_s, d_sel)
-                return max(est, 1e-9), pen, (ci,)
+                return max(est, 1e-9), (ci,)
             if cj is not None:
                 s_sel = sel.get(r.src, 1.0)
                 est = comps[cj][1] * (e / nr_d) * s_sel
-                pen = straggle(comps[cj][1], nr_d, s_sel)
-                return max(est, 1e-9), pen, (cj,)
+                return max(est, 1e-9), (cj,)
             # detached start: the hop's own post-filter size
             est = e * sel.get(r.src, 1.0) * sel.get(r.dst, 1.0)
-            return max(est, 1e-9), 0.0, ()
+            return max(est, 1e-9), ()
 
         comps: list[tuple[set, float]] = []
         if initial_bound:
@@ -3149,8 +3073,8 @@ class QueryCompiler:
         while rem:
             best = None
             for r in rem:
-                est, pen, consumed = step_est(r, comps)
-                total = est + pen + sum(
+                est, consumed = step_est(r, comps)
+                total = est + sum(
                     c[1] for i, c in enumerate(comps)
                     if i not in consumed)
                 if best is None or total < best[0]:
@@ -3335,86 +3259,6 @@ class QueryCompiler:
         return df.withColumn(pcol(node.alias, sch.node_id),
                              ref(endpoint_col))
 
-    def _hop_is_skewed(self, rel, endpoint: str) -> bool:
-        """True when degree stats (captured at adj-index build time)
-        say the edge side of a frontier join on this endpoint has a
-        heavy-hitter key. ``endpoint`` is 'src' (join on the hop's
-        from_id) or 'dst' (join on to_id); the relevant physical
-        distribution follows the hop's orientation — a reversed hop's
-        from_id is the physical to-column, so its skew is the
-        IN-degree."""
-        if self.degree_stats is None:
-            return False
-        stats = self.degree_stats(rel.schema.type_name)
-        if not stats:
-            return False
-        if rel.orientation == "fwd":
-            direction = "outgoing" if endpoint == "src" else "incoming"
-            dirs = [direction]
-        elif rel.orientation == "rev":
-            direction = "incoming" if endpoint == "src" else "outgoing"
-            dirs = [direction]
-        else:  # either-direction hop unions both orientations
-            dirs = ["outgoing", "incoming"]
-        worst = max(
-            (stats.get(d, {}).get("max_degree") or 0) for d in dirs
-        )
-        return worst >= self.skew_degree_threshold
-
-    def _join_edge(self, comp_df: DataFrame, edge: DataFrame,
-                   comp_key: str, edge_key: str, rel,
-                   endpoint: str) -> DataFrame:
-        """Frontier-component x edge join with skew-aware physical
-        choice: when the adj-index degree stats flag a supernode-heavy
-        key on the joined endpoint, salt the edge side (deterministic
-        per-row hash -> one salt per edge row) and replicate the
-        frontier across all salt values, so the hot key's edge rows
-        spread over skew_salt_factor tasks instead of one (plain join
-        otherwise, where AQE broadcast/skew-split already does the
-        right thing)."""
-        cond = eq((edge_key, comp_key))
-        if not self._hop_is_skewed(rel, endpoint):
-            return comp_df.join(edge, cond, "inner")
-        f = self.skew_salt_factor
-        salt = "__hop_salt"
-        salted = edge.withColumn(
-            salt,
-            F.pmod(F.xxhash64(*edge.columns), F.lit(f)).cast("int"),
-        )
-        rep = comp_df.withColumn(
-            salt, F.explode(F.sequence(F.lit(0), F.lit(f - 1)))
-        )
-        return rep.join(
-            salted, cond & (rep[salt] == salted[salt]), "inner"
-        ).drop(salt)
-
-    def _join_node(self, comp_df: DataFrame, node_df: DataFrame,
-                   edge_key: str, node_id: str, rel, endpoint: str,
-                   node_label: Optional[str]) -> DataFrame:
-        """Component x endpoint-node-table join with the same skew
-        guard as _join_edge, mirrored: after a hop lands on a
-        supernode, the COMPONENT side carries max_degree rows with one
-        key, so it gets the deterministic salt and the (unique-id) node
-        table is replicated. Skipped when the node label is broadcast —
-        a broadcast join never shuffles, so the hot key never
-        concentrates."""
-        cond = eq((edge_key, node_id))
-        if (node_label in self.broadcast_labels
-                or not self._hop_is_skewed(rel, endpoint)):
-            return comp_df.join(node_df, cond, "inner")
-        f = self.skew_salt_factor
-        salt = "__hop_salt"
-        salted = comp_df.withColumn(
-            salt,
-            F.pmod(F.xxhash64(*comp_df.columns), F.lit(f)).cast("int"),
-        )
-        rep = node_df.withColumn(
-            salt, F.explode(F.sequence(F.lit(0), F.lit(f - 1)))
-        )
-        return salted.join(
-            rep, cond & (salted[salt] == rep[salt]), "inner"
-        ).drop(salt)
-
     def _apply_hop(self, rel, pattern: Pattern, components, scope, find_component):
         fused: Optional[str] = None
         if rel.shortest and _is_var(rel):
@@ -3465,7 +3309,7 @@ class QueryCompiler:
             else:
                 ldf, lbound = components[li]
                 rdf, rbound = components[ri]
-                df = self._join_edge(ldf, edge, lid, src_key, rel, "src") \
+                df = ldf.join(edge, eq((src_key, lid)), "inner") \
                     .join(rdf, eq((dst_key, rid)), "inner")
                 merged = lbound | rbound | {rel.alias}
                 for idx in sorted((li, ri), reverse=True):
@@ -3475,40 +3319,32 @@ class QueryCompiler:
             df, bound = components[li]
             lid = scope.get(rel.src).id_pcol
             dst_node = pattern.nodes[rel.dst]
+            df = df.join(edge, eq((src_key, lid)), "inner")
             if fused == rel.dst:  # dst rides inside the fused edge scan
-                df = self._join_edge(df, edge, lid, src_key, rel, "src")
+                pass
             elif self._elidable(dst_node):
-                df = self._bind_endpoint(
-                    self._join_edge(df, edge, lid, src_key, rel, "src"),
-                    dst_node, dst_key, scope,
-                )
+                df = self._bind_endpoint(df, dst_node, dst_key, scope)
             else:
                 right = self._scan_node(dst_node, scope)
-                df = self._join_node(
-                    self._join_edge(df, edge, lid, src_key, rel, "src"),
-                    right, dst_key, scope.get(rel.dst).id_pcol, rel, "dst",
-                    dst_node.label,
-                )
+                df = df.join(
+                    right, eq((dst_key, scope.get(rel.dst).id_pcol)),
+                    "inner")
             bound |= {rel.alias, rel.dst}
             components[li] = (df, bound)
         elif ri is not None:
             df, bound = components[ri]
             rid = scope.get(rel.dst).id_pcol
             src_node = pattern.nodes[rel.src]
+            df = df.join(edge, eq((dst_key, rid)), "inner")
             if fused == rel.src:  # src rides inside the fused edge scan
-                df = self._join_edge(df, edge, rid, dst_key, rel, "dst")
+                pass
             elif self._elidable(src_node):
-                df = self._bind_endpoint(
-                    self._join_edge(df, edge, rid, dst_key, rel, "dst"),
-                    src_node, src_key, scope,
-                )
+                df = self._bind_endpoint(df, src_node, src_key, scope)
             else:
                 left = self._scan_node(src_node, scope)
-                df = self._join_node(
-                    self._join_edge(df, edge, rid, dst_key, rel, "dst"),
-                    left, src_key, scope.get(rel.src).id_pcol, rel, "src",
-                    src_node.label,
-                )
+                df = df.join(
+                    left, eq((src_key, scope.get(rel.src).id_pcol)),
+                    "inner")
             bound |= {rel.alias, rel.src}
             components[ri] = (df, bound)
         else:
@@ -3521,17 +3357,16 @@ class QueryCompiler:
             else:
                 ldf = self._scan_node(src_node, scope)
                 lid = scope.get(rel.src).id_pcol
-                df = self._join_edge(ldf, edge, lid, src_key, rel, "src")
+                df = ldf.join(edge, eq((src_key, lid)), "inner")
             if fused == rel.dst:
                 pass  # dst already inside the fused edge scan
             elif self._elidable(dst_node):
                 df = self._bind_endpoint(df, dst_node, dst_key, scope)
             else:
                 right = self._scan_node(dst_node, scope)
-                df = self._join_node(
-                    df, right, dst_key, scope.get(rel.dst).id_pcol, rel,
-                    "dst", dst_node.label,
-                )
+                df = df.join(
+                    right, eq((dst_key, scope.get(rel.dst).id_pcol)),
+                    "inner")
             components.append((df, {rel.src, rel.alias, rel.dst}))
 
     # ------------------------------------------------------------------

@@ -123,12 +123,6 @@ def materialize_for_rel(
 
 
 def degree_stats(adj: DataFrame) -> DataFrame:
-    """Degree distribution summary — the skew diagnostic that decides
-    whether a traversal needs salting (heavy-hitter sources)."""
-    return adj.agg(
-        F.count(F.lit(1)).alias("n_sources"),
-        F.sum("degree").alias("n_edges"),
-        F.max("degree").alias("max_degree"),
-        F.round(F.avg("degree"), 2).alias("avg_degree"),
-        F.percentile_approx("degree", 0.99).alias("p99_degree"),
-    )
+    """One-row summary of a grouped-adjacency table: ``n_edges``, the
+    sum of its degrees (NULL when the table is empty)."""
+    return adj.agg(F.sum("degree").alias("n_edges"))

@@ -1,9 +1,8 @@
 """Skew handling for aggregations at scale.
 
 AQE's skew-join splitting (enabled in io.configure) handles skewed
-joins; skewed hops in the Cypher compiler are salted per hop
-(``QueryCompiler._join_edge``). This module covers the pattern AQE
-can't fix:
+joins, the Cypher compiler's hop joins on a hot key included. This
+module covers the pattern AQE can't fix:
 
 - ``two_phase_agg``: count/sum-style aggregation over skewed keys —
   partial agg on (key, salt) first, then final agg on key, so no single

@@ -80,14 +80,6 @@ class GraphSession:
         self.tables: dict[str, DataFrame] = {}
         # Labels whose tables are known-small -> broadcast-join hint.
         self.broadcast_labels = set(broadcast_labels or ())
-        # rel type -> {"outgoing": {...}, "incoming": {...}} degree
-        # summaries captured at build_adj_index time; consulted by the
-        # hop planner to salt supernode-heavy joins. Tune the two knobs
-        # below per deployment (threshold = max_degree at which a hop
-        # join gets salted; factor = salt fan-out).
-        self.degree_stats: dict[str, dict] = {}
-        self.skew_degree_threshold = 50_000
-        self.skew_salt_factor = 8
         # label/type -> row count, captured by collect_table_stats()
         # (one metadata-cheap count per table, amortized across every
         # query of the session). Presence flips anchor selection to
@@ -190,24 +182,15 @@ class GraphSession:
                     adj = adj.persist()
                 self.register_table(f"{type_name}_{direction}", adj)
         rel.adj_index = True
-        # Capture degree statistics while the adjacency tables are hot:
-        # one 5-column row per direction (driver-side, metadata-sized).
-        # The hop planner consults these to salt supernode-heavy joins
-        # (the analogue of the reference's per-hop bitmap decision,
-        # ref query_validation.rs:103-124).
-        from .ops.adjacency import degree_stats as _dstats
+        # One action per direction materializes its (persisted) table;
+        # the edge count it returns, equal in both directions, seeds
+        # the cost-based anchor. An EMPTY edge table sums to NULL (no
+        # rows), not 0 — skip it rather than crash the index build.
+        from .ops.adjacency import degree_stats
 
-        self.degree_stats[type_name] = {
-            direction: _dstats(
-                self.tables[f"{type_name}_{direction}"]
-            ).first().asDict()
-            for direction in ("outgoing", "incoming")
-        }
-        # Edge-count capture rides along for free (n_edges is already
-        # in the degree summary) — seeds the cost-based anchor. An
-        # EMPTY edge table has n_edges NULL (sum over no rows), not 0
-        # — skip it rather than crash the index build (review r10).
-        n_edges = self.degree_stats[type_name]["outgoing"]["n_edges"]
+        n_edges, _ = (
+            degree_stats(self.tables[f"{type_name}_{d}"]).first().n_edges
+            for d in ("outgoing", "incoming"))
         if n_edges is not None:
             self.table_stats[type_name] = int(n_edges)
 
@@ -273,11 +256,10 @@ class GraphSession:
 
     def drop_adj_index(self, type_name: str) -> None:
         """Release a relationship's adjacency index: unpersist the
-        in-memory direction tables, drop their registrations and the
-        captured degree stats, and flip ``adj_index`` off so the
-        planner returns to edge-list hops. (The persisted tables are
-        otherwise session-lifetime by design — this is the caller-
-        managed release.)"""
+        in-memory direction tables, drop their registrations and flip
+        ``adj_index`` off so the planner returns to edge-list hops.
+        (The persisted tables are otherwise session-lifetime by
+        design — this is the caller-managed release.)"""
         rel = self.schema.relationship(type_name)
         for direction in ("outgoing", "incoming"):
             df = self.tables.pop(f"{type_name}_{direction}", None)
@@ -286,7 +268,6 @@ class GraphSession:
                     df.unpersist()
                 except Exception:
                     pass  # parquet-backed tables have nothing cached
-        self.degree_stats.pop(type_name, None)
         rel.adj_index = False
 
     def _load_for_label(self, label: str) -> DataFrame:
@@ -315,13 +296,10 @@ class GraphSession:
                           else self.max_var_hops),
             assume_referential_integrity=(
                 self.assume_referential_integrity),
-            degree_stats=self.degree_stats.get,
             table_stats=(self.table_stats.get
                          if self.table_stats else None),
             column_stats=(self.column_stats.get
                           if self.column_stats else None),
-            skew_degree_threshold=self.skew_degree_threshold,
-            skew_salt_factor=self.skew_salt_factor,
         )
 
     # -- execution ----------------------------------------------------------

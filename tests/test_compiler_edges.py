@@ -583,7 +583,7 @@ class TestCostBasedHopOrder:
         WHERE a.c_acctbal > 0
         RETURN a.c_name AS n"""
 
-    def _order(self, tpch, cypher, stats, cstats=None, dstats=None):
+    def _order(self, tpch, cypher, stats, cstats=None):
         from brahmand_spark.compile.compiler import QueryCompiler
         from brahmand_spark.compile.scope import Scope
         from brahmand_spark.parser.parser import parse
@@ -593,8 +593,7 @@ class TestCostBasedHopOrder:
         compiler = QueryCompiler(
             tpch.schema, tpch._load_for_label,
             table_stats=stats.get if stats is not None else None,
-            column_stats=cstats.get if cstats is not None else None,
-            degree_stats=dstats.get if dstats is not None else None)
+            column_stats=cstats.get if cstats is not None else None)
         pattern = compiler._build_pattern(part.matches, Scope())
         compiler._infer(pattern)
         score, has_or = compiler._filter_score(pattern, part)
@@ -623,40 +622,9 @@ class TestCostBasedHopOrder:
         assert self._order(tpch, self.Q_CHAIN, stats) == [
             "PLACED", "HAS_LINE", "OF_PART"]
 
-    def test_skewed_hop_sorts_last_under_degree_stats(self, tpch):
-        """r12 (VERDICT r11 next #1): a power-law edge — one key
-        holding 50% of HAS_LINE's edges — flips from second to LAST
-        when degree stats expose the hot key, and keeps the uniform
-        order without them (the r11 model saw only the cheap average
-        fanout and ordered the supernode hop early)."""
-        stats = {"Customer": 1000, "Order": 1000, "Lineitem": 1000,
-                 "Part": 1000, "PLACED": 1000, "HAS_LINE": 1000,
-                 "OF_PART": 1000}
-        dstats = {"HAS_LINE": {"outgoing": {
-            "max_degree": 500, "avg_degree": 1.0}}}
-        assert self._order(tpch, self.Q_CHAIN, stats) == [
-            "PLACED", "HAS_LINE", "OF_PART"]
-        assert self._order(tpch, self.Q_CHAIN, stats,
-                           dstats=dstats) == [
-            "PLACED", "OF_PART", "HAS_LINE"]
-
-    def test_uniform_degrees_leave_order_unchanged(self, tpch):
-        """Degree stats WITHOUT a heavy hitter (max ~ avg) add ~zero
-        penalty: ordering byte-identical to the stats-only model."""
-        stats = {"Customer": 1000, "Order": 1000, "Lineitem": 1000,
-                 "Part": 1000, "PLACED": 1000, "HAS_LINE": 1000,
-                 "OF_PART": 1000}
-        dstats = {t: {"outgoing": {"max_degree": 1,
-                                   "avg_degree": 1.0},
-                      "incoming": {"max_degree": 2,
-                                   "avg_degree": 1.0}}
-                  for t in ("PLACED", "HAS_LINE", "OF_PART")}
-        assert self._order(tpch, self.Q_CHAIN, stats, dstats=dstats) \
-            == self._order(tpch, self.Q_CHAIN, stats)
-
     def test_skew_order_results_identical(self, spark):
-        """The skew-aware flip is purely physical: same rows with
-        adjacency-built degree stats + table stats as without."""
+        """Hop order is purely physical: same rows with an adjacency
+        index + table and column stats as without."""
         from brahmand_spark.graphs.tpch import build_session
 
         from .conftest import SF_SMOKE
@@ -670,7 +638,6 @@ class TestCostBasedHopOrder:
         s2 = build_session(spark, SF_SMOKE)
         s2.build_adj_index("HAS_LINE")
         s2.collect_table_stats(columns=True)
-        assert "HAS_LINE" in s2.degree_stats
         after = sorted(map(tuple, s2.execute(q).collect()))
         assert before == after and len(before) > 0
 

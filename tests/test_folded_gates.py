@@ -1048,8 +1048,8 @@ def test_queries_fresh_rebuilds_memoized_caches(spark):
 def test_folded_skew_two_phase_agg(spark, duck):
     """The former skew_two_phase_agg registry gate (folded r5 for
     bpe_segment — 3-row GROUP BY parity; the skew surface stays pinned
-    by tests/test_skew.py result-equivalence and the 40-hop salted
-    fuzz): same operator, same DuckDB oracle."""
+    by tests/test_skew.py result-equivalence): same operator, same
+    DuckDB oracle."""
     import __spark_entry__ as entry
 
     assert_same(

@@ -180,30 +180,6 @@ def test_fuzz_hop_parity(tpch, duck):
     assert not failures, "\n".join(failures[:3]) + f"\n({len(failures)} total)"
 
 
-def test_fuzz_hop_parity_salted(spark, duck):
-    """Same random hop queries, but on a session whose PLACED rel has
-    an adjacency index built and a skew threshold low enough that
-    EVERY hop compiles as a salted join — the salted physical path
-    must be row-for-row equivalent to the plain plans (and to DuckDB)."""
-    from brahmand_spark.graphs.tpch import build_session
-
-    from .conftest import SF_SMOKE
-
-    s = build_session(spark, SF_SMOKE)
-    s.build_adj_index("PLACED")
-    s.skew_degree_threshold = 1  # every key counts as "hot"
-    s.skew_salt_factor = 4
-    rnd = random.Random(477001)  # same seed as the plain hop fuzz
-    failures = []
-    for i in range(N_QUERIES):
-        cy, sq = _hop_query(rnd)
-        try:
-            assert_same(s.execute(cy), duck.sql(sq))
-        except AssertionError as exc:
-            failures.append(f"[{i}] {cy}\n  vs {sq}\n  {exc}")
-    assert not failures, "\n".join(failures[:3]) + f"\n({len(failures)} total)"
-
-
 def test_fuzz_hop_parity_stats(spark, duck):
     """Same random hop queries PLUS random 2-hop chains on a session
     with full table+column stats collected — the cost-based anchor

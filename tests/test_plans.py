@@ -441,73 +441,68 @@ class TestAdjacencyMultigraph:
         assert sorted(row.counts) == [1, 2]
 
 
-class TestSkewAwareHopPlanning:
-    """Round-4: the hop planner consults degree stats captured at
-    build_adj_index time and salts the frontier-edge join for
-    supernode-heavy relationships (the analogue of the reference's
-    per-hop bitmap-index physical decision,
-    ref query_validation.rs:103-124): the hot key's edge rows split
-    across skew_salt_factor tasks, the frontier replicates factor x."""
+class TestAqeSplitsSkewedHop:
+    """The compiler plans no salting of its own: a hop join on a hot key
+    is a plain equi-join, and AQE's skew-join optimization
+    (``skewJoin.enabled`` in io.configure) splits the hot partition at
+    runtime. Celebrity-vertex fixture: vertex 0 is followed by every
+    other vertex, plus a short chain. The hop runs from the celebrity,
+    so its first join is on the hot key. Broadcast is off, and the skew
+    threshold and advisory size are lowered to the fixture's scale (the
+    64 MB advisory default is larger than the whole hot partition, which
+    leaves nothing to split)."""
 
-    def _session(self, spark, n_fans=400):
+    N_FANS = 5000
+    CHAIN = 500
+    Q = ("MATCH (b:User)<-[:FOLLOWS]-(a:User) "
+         "RETURN a.id AS src, b.id AS dst")
+
+    def _session(self, spark):
         from brahmand_spark.catalog import (
             GraphSchema, NodeSchema, RelationshipSchema,
         )
         from brahmand_spark.session import GraphSession
 
         g = GraphSchema()
-        g.add_node(NodeSchema("User", "user_tbl", "id", ["id", "name"]))
+        g.add_node(NodeSchema("User", "user_tbl", "id", ["id"]))
         g.add_relationship(RelationshipSchema(
             "FOLLOWS", "follows_tbl", "User", "User", "src", "dst",
             ["src", "dst"],
         ))
         s = GraphSession(spark, schema=g)
-        s.register_table("user_tbl", spark.createDataFrame(
-            [(i, f"u{i}") for i in range(n_fans + 2)],
-            "id long, name string"))
-        # power-law-ish: node 0 is a celebrity followed by everyone;
-        # the rest form a sparse chain
-        edges = [(i, 0) for i in range(1, n_fans + 1)]
-        edges += [(i, i + 1) for i in range(1, n_fans)]
-        s.register_table("follows_tbl", spark.createDataFrame(
-            edges, "src long, dst long"))
+        s.register_table("user_tbl", spark.range(self.N_FANS + 1))
+        # 8 map partitions, so AQE can split the hot reducer partition
+        # at map-output boundaries
+        fans = spark.range(1, self.N_FANS + 1, numPartitions=8) \
+            .selectExpr("id AS src", "0L AS dst")
+        chain = spark.range(1, self.CHAIN, numPartitions=8) \
+            .selectExpr("id AS src", "id + 1 AS dst")
+        s.register_table("follows_tbl", fans.unionAll(chain))
         return s
 
-    QUERY = ("MATCH (a:User)-[:FOLLOWS]->(b:User) "
-             "WHERE b.name = 'u0' RETURN a.id AS follower")
-
-    def test_salted_hop_on_power_law_graph(self, spark):
+    def test_hot_key_hop_gets_runtime_skew_split(self, spark):
         s = self._session(spark)
-        baseline = sorted(r.follower for r in s.execute(self.QUERY).collect())
-        s.build_adj_index("FOLLOWS")
-        assert s.degree_stats["FOLLOWS"]["incoming"]["max_degree"] == 400
-        s.skew_degree_threshold = 100  # flag the celebrity node
-        df = s.execute(self.QUERY)
-        plan = physical_plan(df)
-        assert "__hop_salt" in plan  # salted join in the physical plan
-        assert sorted(r.follower for r in df.collect()) == baseline
-
-    def test_no_salt_below_threshold(self, spark):
-        s = self._session(spark)
-        s.build_adj_index("FOLLOWS")  # default threshold 50k >> 400
-        assert "__hop_salt" not in physical_plan(s.execute(self.QUERY))
-
-    def test_no_salt_without_index_stats(self, spark):
-        s = self._session(spark)
-        s.skew_degree_threshold = 100
-        assert "__hop_salt" not in physical_plan(s.execute(self.QUERY))
-
-    def test_salted_outgoing_direction(self, spark):
-        """Reverse pattern: frontier joins on the hop's to_id; for a
-        forward-oriented rel that is the physical IN-degree."""
-        s = self._session(spark)
-        q = ("MATCH (b:User)<-[:FOLLOWS]-(a:User) "
-             "WHERE a.id <= 5 RETURN a.id AS src, b.id AS dst")
-        baseline = sorted(map(tuple, s.execute(q).collect()))
-        s.build_adj_index("FOLLOWS")
-        s.skew_degree_threshold = 100
-        df = s.execute(q)
-        assert sorted(map(tuple, df.collect())) == baseline
+        want = sorted([(i, 0) for i in range(1, self.N_FANS + 1)]
+                      + [(i, i + 1) for i in range(1, self.CHAIN)])
+        confs = {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin."
+            "skewedPartitionThresholdInBytes": "1KB",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
+        }
+        saved = {k: spark.conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            df = s.execute(self.Q)
+            got = sorted(map(tuple, df.collect()))
+            plan = physical_plan(df)
+            assert "isFinalPlan=true" in plan, plan
+            assert "skew=true" in plan, plan
+            assert got == want
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
 
 
 class TestVarLengthOverAdjacency:
@@ -571,15 +566,16 @@ class TestDropAdjIndex:
         s.build_adj_index("PLACED")
         after_build = spark.sparkContext._jsc.getPersistentRDDs().size()
         assert "Generate explode" in physical_plan(s.execute(q))
-        assert "PLACED" in s.degree_stats
+        assert s.schema.relationship("PLACED").adj_index
         s.drop_adj_index("PLACED")
         # the two direction tables' cached blocks are released (other
         # tests' RDDs may be context-cleaned concurrently, so compare
         # against the post-build count, not an absolute baseline)
         after_drop = spark.sparkContext._jsc.getPersistentRDDs().size()
         assert after_drop <= after_build - 2
-        assert "PLACED" not in s.degree_stats
+        assert not s.schema.relationship("PLACED").adj_index
         assert "PLACED_outgoing" not in s.tables
+        assert "PLACED_incoming" not in s.tables
         plan = physical_plan(s.execute(q))
         assert "Generate explode" not in plan  # back to edge-list hop
         expected = tpch.execute(q)

@@ -201,28 +201,6 @@ def main() -> None:
         "to the edge list automatically.",
     )
 
-    # Session demonstrating skew-aware hop planning: degree stats from
-    # build_adj_index + a threshold below HAS_LINE's max out-degree, so
-    # the hop compiles as a salted join (the threshold is artificially
-    # low here — TPC-H has no supernodes; on a power-law graph the
-    # default 50k threshold fires on real celebrity nodes).
-    skew_session = build_session(spark, SF_DIR)
-    skew_session.build_adj_index("HAS_LINE")
-    skew_session.skew_degree_threshold = 5
-    skew_showcase = (
-        "Skew-salted hop (degree stats flag a supernode-heavy rel)",
-        """MATCH (o:Order)-[h:HAS_LINE]->(l:Lineitem)
-           WHERE h.l_linenumber >= 1 AND l.l_quantity > 49
-           RETURN o.o_orderkey AS ord, count(*) AS n""",
-        "Degree stats captured at build_adj_index time exceed the "
-        "session's skew threshold, so the frontier-edge and endpoint-"
-        "node joins carry a deterministic __hop_salt: the hot key's "
-        "edge rows split across skew_salt_factor tasks and the other "
-        "side replicates via explode(sequence(...)) — the hot key "
-        "never concentrates in one task, independent of AQE's runtime "
-        "skew split.",
-    )
-
     # Session with full table + column stats collected (r11): the
     # cost-based anchor AND greedy hop ordering drive the fold.
     stats_session = build_session(spark, SF_DIR)
@@ -243,39 +221,6 @@ def main() -> None:
         "is the whole traversal cost; results are join-order "
         "independent (inner equi-join fold), pinned by the stats-on "
         "fuzz suite.",
-    )
-
-    skewcbo_session = build_session(spark, SF_DIR)
-    skewcbo_session.collect_table_stats(columns=True)
-    # Inject the degree summary a power-law deployment's
-    # build_adj_index captures (TPC-H's HAS_LINE is uniform at bench
-    # SF — max degree 7 — so the hot key is synthetic here; the
-    # MECHANISM under showcase is the planner's response to the
-    # numbers, which arrive from real adjacency builds in production).
-    skewcbo_session.degree_stats["HAS_LINE"] = {
-        "outgoing": {"n_sources": 150_000, "n_edges": 600_000,
-                     "max_degree": 300_000, "avg_degree": 4.0,
-                     "p99_degree": 7},
-    }
-    skewcbo_showcase = (
-        "Skew-aware hop ordering (degree stats demote the hot-key "
-        "edge, r12)",
-        """MATCH (c:Customer)-[:PLACED]->(o:Order)-[:HAS_LINE]->
-                 (l:Lineitem)-[:OF_PART]->(p:Part)
-           WHERE c.c_mktsegment = 'BUILDING' AND p.p_size > 40
-           RETURN c.c_name AS name, p.p_partkey AS pk""",
-        "Same stats-driven greedy fold as above, PLUS a straggler "
-        "penalty: HAS_LINE's degree summary says one order id holds "
-        "half its edges (max_degree 300k vs avg 4), so its selection "
-        "cost carries P(hot key in frontier) x excess x 32 (the "
-        "parallelism one hot shuffle task forfeits) and the hop sorts "
-        "LAST — the OF_PART side folds first even though HAS_LINE's "
-        "AVERAGE fanout looks equally cheap. The r11 model assumed "
-        "uniformity and ordered the supernode edge early, exploding "
-        "one task's intermediate at power-law scale; carried "
-        "cardinalities stay expectations, so uniform graphs plan "
-        "byte-identically to r11. Results are join-order independent; "
-        "tests/test_compiler_edges.py pins the flip both ways.",
     )
 
     # Extension-operator showcases (DataFrame API, not Cypher).
@@ -556,12 +501,9 @@ def main() -> None:
         "",
     ]
     specials = {len(SHOWCASES): adj_session,
-                len(SHOWCASES) + 1: skew_session,
-                len(SHOWCASES) + 2: stats_session,
-                len(SHOWCASES) + 3: skewcbo_session}
+                len(SHOWCASES) + 1: stats_session}
     for i, (title, cypher, commentary) in enumerate(
-            SHOWCASES + [adj_showcase, skew_showcase, stats_showcase,
-                         skewcbo_showcase]):
+            SHOWCASES + [adj_showcase, stats_showcase]):
         sess = specials.get(i, session)
         df = sess.execute(cypher)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
