@@ -30,6 +30,9 @@ Scale notes common to all loops:
   probe action; fixed-iteration loops skip them entirely.
 - Edge DataFrames are reused across supersteps — persist() them before
   calling if they are derived (not a raw parquet scan).
+- Reduce-partition counts are left to AQE coalescing, which reaches
+  the per-round checkpoint jobs: a loop's shuffles shrink with its
+  live state and no loop touches ``spark.sql.shuffle.partitions``.
 
 All file:line references are to /root/reference for the query-surface
 parity modules; this module is a pure extension (the reference has no
@@ -38,7 +41,6 @@ graph algorithms at all — SURVEY.md §2.8).
 
 from __future__ import annotations
 
-import threading
 import warnings
 
 from pyspark.sql import DataFrame
@@ -145,12 +147,6 @@ def _ckpt_obs(df: DataFrame, mode, *aggs, reset_stats: bool = False):
     return out, obs.get
 
 
-# Target shuffle-input rows per reduce partition for superstep loops.
-# ~250k narrow rows is a few MB — small enough that one task stays
-# cache-friendly, large enough that a loop over millions of rows keeps
-# full parallelism (9M-edge LPA at sf0.1 still computes >= 32).
-_PART_TARGET_ROWS = 250_000
-
 # Self-joining superstep loops strip the checkpoint's inherited size
 # estimate every N-th round (_ckpt(..., reset_stats=True)) — their
 # estimates double in bit length per round (see _reset_stats), so a
@@ -160,93 +156,6 @@ _PART_TARGET_ROWS = 250_000
 # the same cadence for uniformity — the cost is one narrow
 # vertex-sized conversion.
 _RESET_STATS_EVERY = 6
-
-# Sessions with a live _adaptive_parts loop (keyed by the underlying
-# JVM session object id) + the lock that serializes enter/exit — see
-# _adaptive_parts: only the outermost loop per session may own the
-# shuffle.partitions override.
-_AP_LOCK = threading.Lock()
-_AP_ACTIVE: set[int] = set()
-
-
-
-class _adaptive_parts:
-    """Scale the loop's ``spark.sql.shuffle.partitions`` to its data:
-    ``min(session setting, ceil(rows / _PART_TARGET_ROWS))`` for the
-    duration of a superstep loop, restored on exit.
-
-    Why (guide §2.2): every superstep materializes through a
-    checkpoint, whose RDD-path execution AQE coalescing does NOT
-    reach — so per-round reduce-task count rides the static session
-    setting no matter how small the live state is, and measured
-    ~0.85 s/barrier at 32 partitions vs ~0.37 s at 8 on a
-    fixture-sized coloring superstep. The count only ever SHRINKS
-    below the session value (at real scale rows/target exceeds any
-    configured setting, making this a no-op), and it derives from
-    observed loop-state sizes, not from the local core count.
-    ``update(rows)`` re-derives mid-loop as the live state shrinks or
-    a better size signal (e.g. touched-edge counts) arrives. Results
-    are partition-count-independent — every loop here is built from
-    deterministic joins/aggregates (pinned by the repartition-
-    invariance tests). Note the setting is session-global while the
-    loop runs, like ``setJobDescription``.
-
-    Only the OUTERMOST instance per session is live (r15, ADVICE): a
-    nested or concurrent loop on the same SparkSession becomes a
-    no-op instead of capturing the outer loop's shrunken value as its
-    'orig' — two overlapping loops could otherwise race and leave the
-    session pinned at 1 partition after both exit. Guarded by a
-    module lock; the holder key is the session object."""
-
-    def __init__(self, spark, rows):
-        self._conf = spark.conf
-        self._key = id(spark._jsparkSession) \
-            if hasattr(spark, "_jsparkSession") else id(spark)
-        with _AP_LOCK:
-            if self._key in _AP_ACTIVE:
-                # another loop already owns this session's setting
-                self._orig = None
-                self._key = None
-            else:
-                _AP_ACTIVE.add(self._key)
-                try:
-                    self._orig = int(
-                        self._conf.get("spark.sql.shuffle.partitions"))
-                except (TypeError, ValueError):
-                    self._orig = None
-        self._rows = max(int(rows), 1)
-
-    def _want(self) -> int:
-        import math
-
-        return min(self._orig,
-                   max(1, math.ceil(self._rows / _PART_TARGET_ROWS)))
-
-    def __enter__(self):
-        if self._orig is not None and self._want() < self._orig:
-            self._conf.set("spark.sql.shuffle.partitions",
-                           str(self._want()))
-        return self
-
-    def update(self, rows) -> None:
-        """Feed a fresher size signal (max of whatever is known)."""
-        if self._orig is None:
-            return
-        rows = max(int(rows), 1)
-        if rows == self._rows:
-            return
-        self._rows = rows
-        self._conf.set("spark.sql.shuffle.partitions",
-                       str(self._want()))
-
-    def __exit__(self, *exc):
-        if self._orig is not None:
-            self._conf.set("spark.sql.shuffle.partitions",
-                           str(self._orig))
-        if self._key is not None:
-            with _AP_LOCK:
-                _AP_ACTIVE.discard(self._key)
-        return False
 
 
 def _prepare_ckpt(df: DataFrame, checkpoint, checkpoint_dir):
@@ -346,48 +255,43 @@ def pagerank(
     # collect_list prep aggregate isn't paid back when ranks is tiny
     # enough to broadcast into the contrib join; see OPTIMIZATION_r14.)
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    e2, _m = _ckpt_obs(e.join(out_deg, "src"), checkpoint,
-                       F.count(F.lit(1)).alias("n"))
-    n_edges = _m["n"]
+    e2 = _ckpt(e.join(out_deg, "src"), checkpoint)
     dang_v = _ckpt(
         vertices.join(out_deg.withColumnRenamed("src", "id"), "id",
                       "left_anti").select("id"),
         checkpoint)
     ranks = vertices.select("id", "_pref", F.lit(1.0).alias("rank"))
-    # every iteration shuffles at most max(|E|, |V|) rows (contrib
-    # aggregate / vertex update); scale the reduce-partition count
-    with _adaptive_parts(edges.sparkSession, max(n, n_edges)):
-        for _ in range(iterations):
-            contribs = (
-                ranks.join(e2, ranks["id"] == e2["src"], "inner")
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("rank") / F.col("out_deg")).alias("contrib"),
-                )
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("recv"))
+    for _ in range(iterations):
+        contribs = (
+            ranks.join(e2, ranks["id"] == e2["src"], "inner")
+            .select(
+                F.col("dst").alias("id"),
+                (F.col("rank") / F.col("out_deg")).alias("contrib"),
             )
-            # mass of dangling vertices, redistributed over the teleport
-            # distribution — kept as a 1-row aggregate and broadcast into
-            # the update (no driver fetch)
-            dangling = (
-                ranks.join(dang_v, "id", "leftsemi")
-                .agg(F.coalesce(F.sum("rank"),
-                                F.lit(0.0)).alias("_dangling"))
+            .groupBy("id")
+            .agg(F.sum("contrib").alias("recv"))
+        )
+        # mass of dangling vertices, redistributed over the teleport
+        # distribution — kept as a 1-row aggregate and broadcast into
+        # the update (no driver fetch)
+        dangling = (
+            ranks.join(dang_v, "id", "leftsemi")
+            .agg(F.coalesce(F.sum("rank"),
+                            F.lit(0.0)).alias("_dangling"))
+        )
+        ranks = (
+            vertices.join(contribs, "id", "left")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                "id", "_pref",
+                (F.lit(1.0 - damping) * pref
+                 + F.lit(damping)
+                 * (F.coalesce(F.col("recv"), F.lit(0.0))
+                    + F.col("_dangling") * pref / F.lit(float(n)))
+                 ).alias("rank"),
             )
-            ranks = (
-                vertices.join(contribs, "id", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "id", "_pref",
-                    (F.lit(1.0 - damping) * pref
-                     + F.lit(damping)
-                     * (F.coalesce(F.col("recv"), F.lit(0.0))
-                        + F.col("_dangling") * pref / F.lit(float(n)))
-                     ).alias("rank"),
-                )
-            )
-            ranks = _ckpt(ranks, checkpoint)
+        )
+        ranks = _ckpt(ranks, checkpoint)
     return ranks.select("id", "rank")
 
 
@@ -425,52 +329,47 @@ def connected_components(
     # One prep shuffle, not two: repartition("a") then dropDuplicates —
     # hashpartitioning(a) already clusters (a, b), so the dedup
     # aggregate runs in place with no second exchange.
-    und, _m = _ckpt_obs(
+    und = _ckpt(
         _symmetrize(edges, src, dst)
-        .repartition(F.col("a")).dropDuplicates(["a", "b"]), checkpoint,
-        F.count(F.lit(1)).alias("n"),
-    )
+        .repartition(F.col("a")).dropDuplicates(["a", "b"]), checkpoint)
     labels = und.select(F.col("a").alias("id")).distinct().select(
         "id", F.col("id").alias("component")
     )
     labels = _ckpt(labels, checkpoint)
-    # every superstep shuffles at most |E_sym| rows (the vote
-    # aggregate); scale the reduce-partition count to that
-    with _adaptive_parts(edges.sparkSession, _m["n"]):
-        for _round in range(max_iterations):
-            # shuffle_hash on the label side: build the per-task hash
-            # map on labels (vertex-sized) instead of sorting the edge
-            # side; scale-safe — no broadcast assumption.
-            neighbor_min = (
-                labels.hint("shuffle_hash")
-                .join(und, labels["id"] == und["a"], "inner")
-                .select(F.col("b").alias("id"), "component")
-                .groupBy("id")
-                .agg(F.min("component").alias("nbr_min"))
+    for _round in range(max_iterations):
+        # shuffle_hash on the label side: build the per-task hash
+        # map on labels (vertex-sized) instead of sorting the edge
+        # side; scale-safe — no broadcast assumption.
+        neighbor_min = (
+            labels.hint("shuffle_hash")
+            .join(und, labels["id"] == und["a"], "inner")
+            .select(F.col("b").alias("id"), "component")
+            .groupBy("id")
+            .agg(F.min("component").alias("nbr_min"))
+        )
+        # changed-flag rides the row (nbr_min < component iff the
+        # label moves), and the changed COUNT rides the checkpoint
+        # job itself — no per-round compare-join + probe job
+        # (guide §2.4)
+        new_labels = (
+            labels.join(neighbor_min, "id", "left")
+            .select(
+                "id",
+                F.least(
+                    F.col("component"),
+                    F.coalesce(F.col("nbr_min"), F.col("component")),
+                ).alias("component"),
+                (F.col("nbr_min") < F.col("component")).alias("chg"),
             )
-            # changed-flag rides the row (nbr_min < component iff the
-            # label moves), and the changed COUNT rides the checkpoint
-            # job itself — no per-round compare-join + probe job
-            # (guide §2.4)
-            new_labels = (
-                labels.join(neighbor_min, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("nbr_min"), F.col("component")),
-                    ).alias("component"),
-                    (F.col("nbr_min") < F.col("component")).alias("chg"),
-                )
-            )
-            new_labels, m = _ckpt_obs(
-                new_labels, checkpoint,
-                F.count(F.when(F.col("chg"), True)).alias("chg"),
-                reset_stats=(_round % _RESET_STATS_EVERY
-                             == _RESET_STATS_EVERY - 1))
-            labels = new_labels.drop("chg")
-            if m["chg"] == 0:
-                break
+        )
+        new_labels, m = _ckpt_obs(
+            new_labels, checkpoint,
+            F.count(F.when(F.col("chg"), True)).alias("chg"),
+            reset_stats=(_round % _RESET_STATS_EVERY
+                         == _RESET_STATS_EVERY - 1))
+        labels = new_labels.drop("chg")
+        if m["chg"] == 0:
+            break
     return labels
 
 
@@ -509,58 +408,53 @@ def _cc_two_phase(
     vertices = _ckpt(vertices, checkpoint)
     # child > parent orientation; self-loops drop (they never affect
     # membership; singleton vertices rejoin via the anti-join below)
-    pairs, _m = _ckpt_obs(
+    pairs = _ckpt(
         e.filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
-        .distinct(), checkpoint, F.count(F.lit(1)).alias("n"),
-    )
+        .distinct(), checkpoint)
     prev_sig = None
     rounds = 0
-    # every round shuffles at most 2x the (shrinking) pair count (the
-    # symmetric large-star aggregate); scale reduce partitions to it
-    with _adaptive_parts(edges.sparkSession, 2 * _m["n"]) as ap:
-        for _ in range(max_iterations):
-            rounds += 1
-            # -- large-star over the symmetric neighborhood
-            sym = pairs.union(
-                pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = (
-                sym.groupBy("u").agg(F.min("v").alias("m"))
-                .select("u", F.least("u", "m").alias("m"))
-            )
-            large = (
-                sym.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .distinct()
-            )
-            # -- small-star (input already child > parent)
-            mins2 = (
-                large.groupBy("u").agg(F.min("v").alias("m"))
-            )
-            small = (
-                large.join(mins2, "u")
-                .filter(F.col("v") != F.col("m"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .union(mins2.select("u", F.col("m").alias("v")))
-                .distinct()
-            )
-            # the 1-row signature rides the checkpoint job (guide §2.4:
-            # one job per round, not two)
-            pairs, m = _ckpt_obs(
-                small, checkpoint,
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64("u", "v")).alias("x"),
-                reset_stats=(rounds % _RESET_STATS_EVERY == 0),
-            )
-            sig = (m["n"], m["x"])
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-            ap.update(2 * m["n"])
+    for _ in range(max_iterations):
+        rounds += 1
+        # -- large-star over the symmetric neighborhood
+        sym = pairs.union(
+            pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        mins = (
+            sym.groupBy("u").agg(F.min("v").alias("m"))
+            .select("u", F.least("u", "m").alias("m"))
+        )
+        large = (
+            sym.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .distinct()
+        )
+        # -- small-star (input already child > parent)
+        mins2 = (
+            large.groupBy("u").agg(F.min("v").alias("m"))
+        )
+        small = (
+            large.join(mins2, "u")
+            .filter(F.col("v") != F.col("m"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .union(mins2.select("u", F.col("m").alias("v")))
+            .distinct()
+        )
+        # the 1-row signature rides the checkpoint job (guide §2.4:
+        # one job per round, not two)
+        pairs, m = _ckpt_obs(
+            small, checkpoint,
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64("u", "v")).alias("x"),
+            reset_stats=(rounds % _RESET_STATS_EVERY == 0),
+        )
+        sig = (m["n"], m["x"])
+        if sig == prev_sig:
+            break
+        prev_sig = sig
     labels = pairs.select(
         F.col("u").alias("id"), F.col("v").alias("component")
     )
@@ -589,35 +483,23 @@ def bfs_distances(
     ).distinct()
     visited = _ckpt(visited, checkpoint)
     frontier = visited
-    # hop 1 runs at the session setting (no size signal yet); each hop
-    # then observes its own touched-edge rows (the expansion join
-    # output) and visited rows, and scales reduce partitions to the
-    # larger — a supernode frontier can never under-partition
-    from pyspark.sql import Observation
-
-    with _adaptive_parts(edges.sparkSession, 10 ** 12) as ap:
-        for hop in range(1, max_hops + 1):
-            touched = Observation()
-            neighbors = (
-                frontier.join(e, frontier["id"] == e["src"], "inner")
-                .observe(touched, F.count(F.lit(1)).alias("n"))
-                .select(F.col("dst").alias("id"))
-                .distinct()
-            )
-            new_frontier = (
-                neighbors.join(visited, "id", "left_anti")
-                .select("id", F.lit(hop).alias("distance"))
-            )
-            # frontier size rides the checkpoint job — no separate probe
-            new_frontier, m = _ckpt_obs(
-                new_frontier, checkpoint, F.count(F.lit(1)).alias("n"))
-            if m["n"] == 0:
-                break
-            visited, mv = _ckpt_obs(
-                visited.unionByName(new_frontier), checkpoint,
-                F.count(F.lit(1)).alias("n"))
-            frontier = new_frontier
-            ap.update(max(mv["n"], touched.get["n"]))
+    for hop in range(1, max_hops + 1):
+        neighbors = (
+            frontier.join(e, frontier["id"] == e["src"], "inner")
+            .select(F.col("dst").alias("id"))
+            .distinct()
+        )
+        new_frontier = (
+            neighbors.join(visited, "id", "left_anti")
+            .select("id", F.lit(hop).alias("distance"))
+        )
+        # frontier size rides the checkpoint job — no separate probe
+        new_frontier, m = _ckpt_obs(
+            new_frontier, checkpoint, F.count(F.lit(1)).alias("n"))
+        if m["n"] == 0:
+            break
+        visited = _ckpt(visited.unionByName(new_frontier), checkpoint)
+        frontier = new_frontier
     return visited
 
 
@@ -657,51 +539,39 @@ def sssp_weighted(
     ).distinct()
     dist = _ckpt(dist, checkpoint)
     frontier = dist
-    # round 1 runs at the session's shuffle-partition setting (no size
-    # signal yet); each round then observes its own shuffle inputs —
-    # reached-vertex rows AND touched-edge rows (the relaxation join
-    # output, so a supernode frontier can never under-partition the
-    # next round) — and scales the partition count to the max of both
-    from pyspark.sql import Observation
-
-    with _adaptive_parts(edges.sparkSession, 10 ** 12) as ap:
-        for _round in range(max_iterations):
-            touched = Observation()
-            cand = (
-                frontier.join(e, frontier["id"] == e["src"], "inner")
-                .observe(touched, F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("dist") + F.col("w")).alias("cand"),
-                )
-                .groupBy("id")
-                .agg(F.min("cand").alias("cand"))
+    for _round in range(max_iterations):
+        cand = (
+            frontier.join(e, frontier["id"] == e["src"], "inner")
+            .select(
+                F.col("dst").alias("id"),
+                (F.col("dist") + F.col("w")).alias("cand"),
             )
-            better = F.coalesce(
-                F.col("old").isNull() | (F.col("cand") < F.col("old")),
-                F.lit(False),
-            )
-            # improved-count rides the checkpoint job — no separate probe
-            merged, m = _ckpt_obs(
-                dist.withColumnRenamed("dist", "old")
-                .join(cand, "id", "full_outer")
-                .select(
-                    "id",
-                    F.when(better, F.col("cand")).otherwise(F.col("old"))
-                    .alias("dist"),
-                    better.alias("imp"),
-                ),
-                checkpoint,
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.when(F.col("imp"), True)).alias("imp"),
-                reset_stats=(_round % _RESET_STATS_EVERY
-                             == _RESET_STATS_EVERY - 1),
-            )
-            dist = merged.drop("imp")
-            frontier = merged.filter("imp").drop("imp")
-            if m["imp"] == 0:
-                break
-            ap.update(max(m["n"], touched.get["n"]))
+            .groupBy("id")
+            .agg(F.min("cand").alias("cand"))
+        )
+        better = F.coalesce(
+            F.col("old").isNull() | (F.col("cand") < F.col("old")),
+            F.lit(False),
+        )
+        # improved-count rides the checkpoint job — no separate probe
+        merged, m = _ckpt_obs(
+            dist.withColumnRenamed("dist", "old")
+            .join(cand, "id", "full_outer")
+            .select(
+                "id",
+                F.when(better, F.col("cand")).otherwise(F.col("old"))
+                .alias("dist"),
+                better.alias("imp"),
+            ),
+            checkpoint,
+            F.count(F.when(F.col("imp"), True)).alias("imp"),
+            reset_stats=(_round % _RESET_STATS_EVERY
+                         == _RESET_STATS_EVERY - 1),
+        )
+        dist = merged.drop("imp")
+        frontier = merged.filter("imp").drop("imp")
+        if m["imp"] == 0:
+            break
     return dist
 
 
@@ -1042,24 +912,20 @@ def k_core(
         F.count(F.lit(1)).alias("n"),
     )
     und_count = m["n"]
-    # each peel round shuffles at most |E_live| rows; scale the
-    # reduce-partition count to the observed (shrinking) edge count
-    with _adaptive_parts(edges.sparkSession, und_count) as ap:
-        for _ in range(max_iterations):
-            deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-            keep = deg.filter(F.col("d") >= k).select("a")
-            pruned = (
-                und.join(keep, "a", "leftsemi")
-                .join(keep.withColumnRenamed("a", "b"), "b", "leftsemi")
-            )
-            pruned, m = _ckpt_obs(
-                pruned.select("a", "b"), checkpoint,
-                F.count(F.lit(1)).alias("n"))
-            pruned_count = m["n"]
-            if pruned_count == und_count:
-                break
-            und, und_count = pruned, pruned_count
-            ap.update(und_count)
+    for _ in range(max_iterations):
+        deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
+        keep = deg.filter(F.col("d") >= k).select("a")
+        pruned = (
+            und.join(keep, "a", "leftsemi")
+            .join(keep.withColumnRenamed("a", "b"), "b", "leftsemi")
+        )
+        pruned, m = _ckpt_obs(
+            pruned.select("a", "b"), checkpoint,
+            F.count(F.lit(1)).alias("n"))
+        pruned_count = m["n"]
+        if pruned_count == und_count:
+            break
+        und, und_count = pruned, pruned_count
     return (
         und.groupBy(F.col("a").alias("id"))
         .agg(F.count(F.lit(1)).alias("degree"))
@@ -1414,259 +1280,249 @@ def strongly_connected_components(
         .union(pairs.select(F.col("v").alias("id"))).distinct(),
         checkpoint, F.count(F.lit(1)).alias("n"))
     n_live = m["n"]
-    e_live, m = _ckpt_obs(
-        pairs.filter(F.col("u") != F.col("v")).distinct(), checkpoint,
-        F.count(F.lit(1)).alias("n"))
-    n_edges = m["n"]
+    e_live = _ckpt(
+        pairs.filter(F.col("u") != F.col("v")).distinct(), checkpoint)
     done_parts: list[DataFrame] = []
-    # every superstep below shuffles at most max(|E_live|, |V_live|)
-    # rows; scale the loop's reduce-partition count to that (the edge
-    # counts keep riding the e_live checkpoints)
-    with _adaptive_parts(edges.sparkSession, max(n_live, n_edges)) as ap:
-        for _ in range(max_rounds):
-            if n_live == 0:
+    for _ in range(max_rounds):
+        if n_live == 0:
+            break
+        # 0) trim trivial SCCs in bulk until stable: the keep set
+        # (vertices with BOTH a live in- and out-edge) from ONE
+        # doubled-edge aggregate (guide §2.4)
+        while True:
+            keep = (
+                e_live.select(F.col("u").alias("id"),
+                              F.lit(1).alias("o"), F.lit(0).alias("i"))
+                .union(e_live.select(F.col("v").alias("id"),
+                                     F.lit(0).alias("o"),
+                                     F.lit(1).alias("i")))
+                .groupBy("id")
+                .agg(F.max("o").alias("has_o"), F.max("i").alias("has_i"))
+                .filter((F.col("has_o") == 1) & (F.col("has_i") == 1))
+                .select("id")
+            )
+            keep, m = _ckpt_obs(keep, checkpoint,
+                                F.count(F.lit(1)).alias("n"))
+            # keep ⊆ live_v, so the trim fixpoint test is a count
+            # compare riding keep's checkpoint job — the per-peel
+            # anti-join probe job is gone entirely (r14, guide §2.4);
+            # trimmed itself stays lazy (re-derived from two
+            # checkpointed frames only when a peel really happened)
+            if m["n"] == n_live:
                 break
-            # 0) trim trivial SCCs in bulk until stable: the keep set
-            # (vertices with BOTH a live in- and out-edge) from ONE
-            # doubled-edge aggregate (guide §2.4)
-            while True:
-                keep = (
-                    e_live.select(F.col("u").alias("id"),
-                                  F.lit(1).alias("o"), F.lit(0).alias("i"))
-                    .union(e_live.select(F.col("v").alias("id"),
-                                         F.lit(0).alias("o"),
-                                         F.lit(1).alias("i")))
-                    .groupBy("id")
-                    .agg(F.max("o").alias("has_o"), F.max("i").alias("has_i"))
-                    .filter((F.col("has_o") == 1) & (F.col("has_i") == 1))
-                    .select("id")
-                )
-                keep, m = _ckpt_obs(keep, checkpoint,
-                                    F.count(F.lit(1)).alias("n"))
-                # keep ⊆ live_v, so the trim fixpoint test is a count
-                # compare riding keep's checkpoint job — the per-peel
-                # anti-join probe job is gone entirely (r14, guide §2.4);
-                # trimmed itself stays lazy (re-derived from two
-                # checkpointed frames only when a peel really happened)
-                if m["n"] == n_live:
-                    break
-                trimmed = live_v.join(keep, "id", "left_anti")
-                done_parts.append(trimmed.select("id", F.col("id").alias("scc")))
-                live_v = keep
-                n_live = m["n"]
-                e_live, m = _ckpt_obs(
-                    e_live.join(keep.withColumnRenamed("id", "u"), "u",
-                                "leftsemi")
-                    .join(keep.withColumnRenamed("id", "v"), "v", "leftsemi")
-                    .select("u", "v"),
-                    checkpoint, F.count(F.lit(1)).alias("n"))
-                n_edges = m["n"]
-                ap.update(max(n_live, n_edges))
-            if n_live == 0:
-                break
-            # 1) forward min-coloring to fixpoint: per superstep, the new
-            # color is min over {own color} ∪ {in-neighbor colors},
-            # computed as a UNION of self rows and edge-propagated rows
-            # into one min aggregate — a single exchange, no join-back
-            # (the old color rides the self row for the chg flag; exactly
-            # one self row per live vertex, so max(own) is it). From
-            # superstep _JUMP_AFTER on, a POINTER-JUMP branch
-            # (color(color(v)) via one vertex-sized self-join) joins the
-            # union: it doubles the covered ancestor distance per round,
-            # capping a diameter-bounded loop at O(log) barriers while
-            # costing shallow graphs nothing (see docstring).
-            colors = live_v.select("id", F.col("id").alias("color"))
-            colors = _ckpt(colors, checkpoint)
-            superstep = 0
-            # the union's null 'old' must carry the id column's ACTUAL
-            # dtype — hardcoding long breaks direct callers with string
-            # ids (analysis error under ANSI, silent widening otherwise)
-            id_type = colors.schema["color"].dataType
-            while True:
-                superstep += 1
-                own = colors.select(
-                    "id", F.col("color"), F.col("color").alias("old"))
-                prop = (
-                    colors.join(e_live, colors["id"] == e_live["u"])
-                    .select(F.col("v").alias("id"), "color",
+            trimmed = live_v.join(keep, "id", "left_anti")
+            done_parts.append(trimmed.select("id", F.col("id").alias("scc")))
+            live_v = keep
+            n_live = m["n"]
+            e_live = _ckpt(
+                e_live.join(keep.withColumnRenamed("id", "u"), "u",
+                            "leftsemi")
+                .join(keep.withColumnRenamed("id", "v"), "v", "leftsemi")
+                .select("u", "v"),
+                checkpoint)
+        if n_live == 0:
+            break
+        # 1) forward min-coloring to fixpoint: per superstep, the new
+        # color is min over {own color} ∪ {in-neighbor colors},
+        # computed as a UNION of self rows and edge-propagated rows
+        # into one min aggregate — a single exchange, no join-back
+        # (the old color rides the self row for the chg flag; exactly
+        # one self row per live vertex, so max(own) is it). From
+        # superstep _JUMP_AFTER on, a POINTER-JUMP branch
+        # (color(color(v)) via one vertex-sized self-join) joins the
+        # union: it doubles the covered ancestor distance per round,
+        # capping a diameter-bounded loop at O(log) barriers while
+        # costing shallow graphs nothing (see docstring).
+        colors = live_v.select("id", F.col("id").alias("color"))
+        colors = _ckpt(colors, checkpoint)
+        superstep = 0
+        # the union's null 'old' must carry the id column's ACTUAL
+        # dtype — hardcoding long breaks direct callers with string
+        # ids (analysis error under ANSI, silent widening otherwise)
+        id_type = colors.schema["color"].dataType
+        while True:
+            superstep += 1
+            own = colors.select(
+                "id", F.col("color"), F.col("color").alias("old"))
+            prop = (
+                colors.join(e_live, colors["id"] == e_live["u"])
+                .select(F.col("v").alias("id"), "color",
+                        F.lit(None).cast(id_type).alias("old"))
+            )
+            cand = own.union(prop)
+            if superstep >= _JUMP_AFTER:
+                c2 = colors.select(F.col("id").alias("_jid"),
+                                   F.col("color").alias("_jc"))
+                jump = (
+                    colors.join(c2, colors["color"] == c2["_jid"])
+                    .select("id", F.col("_jc").alias("color"),
                             F.lit(None).cast(id_type).alias("old"))
                 )
-                cand = own.union(prop)
-                if superstep >= _JUMP_AFTER:
-                    c2 = colors.select(F.col("id").alias("_jid"),
-                                       F.col("color").alias("_jc"))
-                    jump = (
-                        colors.join(c2, colors["color"] == c2["_jid"])
-                        .select("id", F.col("_jc").alias("color"),
-                                F.lit(None).cast(id_type).alias("old"))
-                    )
-                    cand = cand.union(jump)
-                new_colors = (
-                    cand
-                    .groupBy("id")
-                    .agg(F.min("color").alias("color"),
-                         F.max("old").alias("old"))
-                    .select("id", "color",
-                            (F.col("color") < F.col("old")).alias("chg"))
+                cand = cand.union(jump)
+            new_colors = (
+                cand
+                .groupBy("id")
+                .agg(F.min("color").alias("color"),
+                     F.max("old").alias("old"))
+                .select("id", "color",
+                        (F.col("color") < F.col("old")).alias("chg"))
+            )
+            new_colors, m = _ckpt_obs(
+                new_colors, checkpoint,
+                F.count(F.when(F.col("chg"), True)).alias("chg"),
+                reset_stats=(
+                    superstep % _RESET_STATS_EVERY == 0))
+            colors = new_colors.drop("chg")
+            if m["chg"] == 0:
+                break
+        # 2) backward sweep from the roots within each color class:
+        # frontier BFS while shallow — its per-round work shrinks
+        # with the frontier and each edge is touched at most once
+        # across the whole sweep. From _SWEEP_JUMP_AFTER rounds on
+        # (r15, VERDICT r14 #6 — same device as the coloring
+        # fixpoint), switch to a MIN-REACHABILITY pointer-jump
+        # fixpoint so a deep component costs O(log d) further
+        # barriers instead of O(d): within a color class the root
+        # c is the minimum id, so v is in c's SCC iff the smallest
+        # id reachable from v inside the class is c itself, and
+        # that min-over-descendants fixpoint admits the doubling
+        # step p(v) <- min(p(v), p(p(v))) (p(v) is always
+        # reachable-from-v within the class, and descendants of a
+        # descendant are descendants). Shallow sweeps — the common
+        # case — never pay the V-sized jump rounds.
+        marked = colors.filter(F.col("id") == F.col("color"))
+        marked = _ckpt(marked, checkpoint)
+        frontier = marked
+        sweep_converged = False
+        for _sweep in range(_SWEEP_JUMP_AFTER):
+            preds = (
+                frontier.join(e_live, frontier["id"] == e_live["v"])
+                .select(F.col("u").alias("id"), "color")
+                .distinct()
+            )
+            grow = (
+                preds.join(colors.withColumnRenamed("color", "c2"), "id")
+                .filter(F.col("color") == F.col("c2"))
+                .select("id", "color")
+                .join(marked, "id", "left_anti")
+            )
+            grow, m = _ckpt_obs(grow, checkpoint,
+                                F.count(F.lit(1)).alias("n"))
+            if m["n"] == 0:
+                sweep_converged = True
+                break
+            # marked stays a lazy union of CHECKPOINTED grows — the
+            # per-round anti-join reads cached blocks either way, so
+            # materializing the union bought nothing (r14: one fewer
+            # job per sweep round)
+            marked = marked.unionByName(grow)
+            frontier = grow
+        if not sweep_converged:
+            # Pointer-jump tail on HASH-PRIORITY pointers (r15).
+            # p(v) is a vertex known reachable from v within v's
+            # color class, chosen to minimize the key
+            # (is-marked-flag, xxhash64(p), p): with hash
+            # priorities roughly half of each path's pointers
+            # leave self in round 1, after which the p(p(v))
+            # branch doubles covered distance per round —
+            # randomized pointer jumping, expected O(log d)
+            # rounds INDEPENDENT of the id labeling. (Propagating
+            # the min reachable ID instead was built first and
+            # measured O(depth) on ascending-id paths: every
+            # pointer stays self until the wave arrives, and the
+            # self-join stats compound meanwhile — see
+            # _STATS_BITS_CAP.) At the fixpoint p(v) is the
+            # key-minimal reachable vertex, whose flag is 0 iff v
+            # reaches the BFS-marked set — i.e. iff v ~> root —
+            # so the RESULT is a graph property, independent of
+            # the hash. The class constraint folds into the edge
+            # set ONCE (colors is fixed for the whole sweep);
+            # each round keeps the coloring loop's union -> one
+            # aggregate shape, with a struct-min in place of min.
+            e_same = (
+                e_live.join(colors.select(F.col("id").alias("u"),
+                                          F.col("color").alias("_cu")),
+                            "u")
+                .join(colors.select(F.col("id").alias("v"),
+                                    F.col("color").alias("_cv")), "v")
+                .filter(F.col("_cu") == F.col("_cv"))
+                .select("u", "v")
+            )
+            e_same = _ckpt(e_same, checkpoint)
+            mk = marked.select("id", F.lit(0).alias("_mk"))
+            reach = _ckpt(
+                colors.join(mk, "id", "left")
+                .select("id", F.col("id").alias("p"),
+                        F.coalesce("_mk", F.lit(1)).alias("pf")),
+                checkpoint)
+
+            def _key(p="p", pf="pf"):
+                return F.struct(
+                    F.col(pf).alias("pf"),
+                    F.xxhash64(F.col(p)).alias("h"),
+                    F.col(p).alias("p"))
+
+            _null_key = F.lit(None).cast(
+                f"struct<pf:int,h:bigint,p:{id_type.simpleString()}>")
+            jump_round = 0
+            while True:
+                jump_round += 1
+                own = reach.select(
+                    "id", _key().alias("k"), _key().alias("old"))
+                prop = (
+                    reach.join(e_same, reach["id"] == e_same["v"])
+                    .select(F.col("u").alias("id"),
+                            _key().alias("k"),
+                            _null_key.alias("old"))
                 )
-                new_colors, m = _ckpt_obs(
-                    new_colors, checkpoint,
+                j2 = reach.select(F.col("id").alias("_jid"),
+                                  _key().alias("_jk"))
+                jump = (
+                    reach.join(j2, reach["p"] == j2["_jid"])
+                    .select("id", F.col("_jk").alias("k"),
+                            _null_key.alias("old"))
+                )
+                new_reach = (
+                    own.union(prop).union(jump)
+                    .groupBy("id")
+                    .agg(F.min("k").alias("k"),
+                         F.max("old").alias("old"))
+                    .select("id", F.col("k.p").alias("p"),
+                            F.col("k.pf").alias("pf"),
+                            (F.col("k") < F.col("old")).alias("chg"))
+                )
+                new_reach, m = _ckpt_obs(
+                    new_reach, checkpoint,
                     F.count(F.when(F.col("chg"), True)).alias("chg"),
                     reset_stats=(
-                        superstep % _RESET_STATS_EVERY == 0))
-                colors = new_colors.drop("chg")
+                        jump_round % _RESET_STATS_EVERY == 0))
+                reach = new_reach.drop("chg")
                 if m["chg"] == 0:
                     break
-            # 2) backward sweep from the roots within each color class:
-            # frontier BFS while shallow — its per-round work shrinks
-            # with the frontier and each edge is touched at most once
-            # across the whole sweep. From _SWEEP_JUMP_AFTER rounds on
-            # (r15, VERDICT r14 #6 — same device as the coloring
-            # fixpoint), switch to a MIN-REACHABILITY pointer-jump
-            # fixpoint so a deep component costs O(log d) further
-            # barriers instead of O(d): within a color class the root
-            # c is the minimum id, so v is in c's SCC iff the smallest
-            # id reachable from v inside the class is c itself, and
-            # that min-over-descendants fixpoint admits the doubling
-            # step p(v) <- min(p(v), p(p(v))) (p(v) is always
-            # reachable-from-v within the class, and descendants of a
-            # descendant are descendants). Shallow sweeps — the common
-            # case — never pay the V-sized jump rounds.
-            marked = colors.filter(F.col("id") == F.col("color"))
-            marked = _ckpt(marked, checkpoint)
-            frontier = marked
-            sweep_converged = False
-            for _sweep in range(_SWEEP_JUMP_AFTER):
-                preds = (
-                    frontier.join(e_live, frontier["id"] == e_live["v"])
-                    .select(F.col("u").alias("id"), "color")
-                    .distinct()
-                )
-                grow = (
-                    preds.join(colors.withColumnRenamed("color", "c2"), "id")
-                    .filter(F.col("color") == F.col("c2"))
-                    .select("id", "color")
-                    .join(marked, "id", "left_anti")
-                )
-                grow, m = _ckpt_obs(grow, checkpoint,
-                                    F.count(F.lit(1)).alias("n"))
-                if m["n"] == 0:
-                    sweep_converged = True
-                    break
-                # marked stays a lazy union of CHECKPOINTED grows — the
-                # per-round anti-join reads cached blocks either way, so
-                # materializing the union bought nothing (r14: one fewer
-                # job per sweep round)
-                marked = marked.unionByName(grow)
-                frontier = grow
-            if not sweep_converged:
-                # Pointer-jump tail on HASH-PRIORITY pointers (r15).
-                # p(v) is a vertex known reachable from v within v's
-                # color class, chosen to minimize the key
-                # (is-marked-flag, xxhash64(p), p): with hash
-                # priorities roughly half of each path's pointers
-                # leave self in round 1, after which the p(p(v))
-                # branch doubles covered distance per round —
-                # randomized pointer jumping, expected O(log d)
-                # rounds INDEPENDENT of the id labeling. (Propagating
-                # the min reachable ID instead was built first and
-                # measured O(depth) on ascending-id paths: every
-                # pointer stays self until the wave arrives, and the
-                # self-join stats compound meanwhile — see
-                # _STATS_BITS_CAP.) At the fixpoint p(v) is the
-                # key-minimal reachable vertex, whose flag is 0 iff v
-                # reaches the BFS-marked set — i.e. iff v ~> root —
-                # so the RESULT is a graph property, independent of
-                # the hash. The class constraint folds into the edge
-                # set ONCE (colors is fixed for the whole sweep);
-                # each round keeps the coloring loop's union -> one
-                # aggregate shape, with a struct-min in place of min.
-                e_same = (
-                    e_live.join(colors.select(F.col("id").alias("u"),
-                                              F.col("color").alias("_cu")),
-                                "u")
-                    .join(colors.select(F.col("id").alias("v"),
-                                        F.col("color").alias("_cv")), "v")
-                    .filter(F.col("_cu") == F.col("_cv"))
-                    .select("u", "v")
-                )
-                e_same = _ckpt(e_same, checkpoint)
-                mk = marked.select("id", F.lit(0).alias("_mk"))
-                reach = _ckpt(
-                    colors.join(mk, "id", "left")
-                    .select("id", F.col("id").alias("p"),
-                            F.coalesce("_mk", F.lit(1)).alias("pf")),
-                    checkpoint)
-
-                def _key(p="p", pf="pf"):
-                    return F.struct(
-                        F.col(pf).alias("pf"),
-                        F.xxhash64(F.col(p)).alias("h"),
-                        F.col(p).alias("p"))
-
-                _null_key = F.lit(None).cast(
-                    f"struct<pf:int,h:bigint,p:{id_type.simpleString()}>")
-                jump_round = 0
-                while True:
-                    jump_round += 1
-                    own = reach.select(
-                        "id", _key().alias("k"), _key().alias("old"))
-                    prop = (
-                        reach.join(e_same, reach["id"] == e_same["v"])
-                        .select(F.col("u").alias("id"),
-                                _key().alias("k"),
-                                _null_key.alias("old"))
-                    )
-                    j2 = reach.select(F.col("id").alias("_jid"),
-                                      _key().alias("_jk"))
-                    jump = (
-                        reach.join(j2, reach["p"] == j2["_jid"])
-                        .select("id", F.col("_jk").alias("k"),
-                                _null_key.alias("old"))
-                    )
-                    new_reach = (
-                        own.union(prop).union(jump)
-                        .groupBy("id")
-                        .agg(F.min("k").alias("k"),
-                             F.max("old").alias("old"))
-                        .select("id", F.col("k.p").alias("p"),
-                                F.col("k.pf").alias("pf"),
-                                (F.col("k") < F.col("old")).alias("chg"))
-                    )
-                    new_reach, m = _ckpt_obs(
-                        new_reach, checkpoint,
-                        F.count(F.when(F.col("chg"), True)).alias("chg"),
-                        reset_stats=(
-                            jump_round % _RESET_STATS_EVERY == 0))
-                    reach = new_reach.drop("chg")
-                    if m["chg"] == 0:
-                        break
-                # marked feeds done_parts + three live-set anti-joins;
-                # checkpoint the filtered result once instead of
-                # replaying it per consumer
-                marked = _ckpt(
-                    reach.filter(F.col("pf") == 0)
-                    .join(colors, "id")
-                    .select("id", "color"),
-                    checkpoint)
-            done_parts.append(marked.select("id", F.col("color").alias("scc")))
-            # 3) shrink the live subgraph
-            live_v, m = _ckpt_obs(live_v.join(marked, "id", "left_anti"),
-                                  checkpoint, F.count(F.lit(1)).alias("n"))
-            n_live = m["n"]
-            e_live, m = _ckpt_obs(
-                e_live.join(marked.select(F.col("id").alias("u")), "u",
-                            "left_anti")
-                .join(marked.select(F.col("id").alias("v")), "v", "left_anti")
-                .select("u", "v"),
-                checkpoint, F.count(F.lit(1)).alias("n"))
-            n_edges = m["n"]
-            ap.update(max(n_live, n_edges))
-        else:
-            if n_live > 0:
-                raise ValueError(
-                    f"SCC did not converge in {max_rounds} outer rounds; "
-                    "raise max_rounds")
+            # marked feeds done_parts + three live-set anti-joins;
+            # checkpoint the filtered result once instead of
+            # replaying it per consumer
+            marked = _ckpt(
+                reach.filter(F.col("pf") == 0)
+                .join(colors, "id")
+                .select("id", "color"),
+                checkpoint)
+        done_parts.append(marked.select("id", F.col("color").alias("scc")))
+        # 3) shrink the live subgraph
+        live_v, m = _ckpt_obs(live_v.join(marked, "id", "left_anti"),
+                              checkpoint, F.count(F.lit(1)).alias("n"))
+        n_live = m["n"]
+        e_live = _ckpt(
+            e_live.join(marked.select(F.col("id").alias("u")), "u",
+                        "left_anti")
+            .join(marked.select(F.col("id").alias("v")), "v", "left_anti")
+            .select("u", "v"),
+            checkpoint)
+    else:
+        if n_live > 0:
+            raise ValueError(
+                f"SCC did not converge in {max_rounds} outer rounds; "
+                "raise max_rounds")
     if not done_parts:
         return live_v.select(
             "id", F.col("id").alias("scc")).filter(F.lit(False))

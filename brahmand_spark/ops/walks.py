@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .algos import _adaptive_parts, _ckpt, _ckpt_obs, _prepare_ckpt
+from .algos import _ckpt, _prepare_ckpt
 from .text import md5_hash60
 
 
@@ -164,10 +164,9 @@ def random_walks(
     # validate BEFORE the eager adjacency checkpoint: the loud type
     # failure must not cost a full ranked-adjacency job first
     starts = _walk_starts(edges, starts, src, dst, "random_walks")
-    adj, _ma = _ckpt_obs(
+    adj = _ckpt(
         ranked_adjacency(edges, src, dst, max_degree=max_degree,
-                         n_buckets=n_buckets), checkpoint,
-        F.count(F.lit(1)).alias("n"))
+                         n_buckets=n_buckets), checkpoint)
     state = starts.select(
         F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("_w"),
         F.col("id").alias("start"),
@@ -178,35 +177,31 @@ def random_walks(
         F.col("start").alias("cur"),
         F.lit(True).alias("live"),
     )
-    state, _ms = _ckpt_obs(state, checkpoint,
-                           F.count(F.lit(1)).alias("n"))
+    state = _ckpt(state, checkpoint)
     since = 0
-    # each step shuffles at most max(|adj|, |walks|) rows (both counts
-    # rode the prep checkpoints); scale reduce partitions to that
-    with _adaptive_parts(edges.sparkSession, max(_ma["n"], _ms["n"])):
-        for t in range(1, walk_length):
-            h = md5_hash60(F.concat(
-                F.lit(f"w:{seed}:"), F.col("walk_id").cast("string"),
-                F.lit(":"), F.lit(t).cast("string")))
-            state = (
-                state.join(adj,
-                           state["live"] & (state["cur"] == adj["u"]),
-                           "left")
-                .filter(F.col("u").isNull()
-                        | (F.col("rank") == F.pmod(h, F.col("degree"))))
-                .select(
-                    F.col("walk_id"), F.col("start"),
-                    F.when(F.col("v").isNull(), F.col("walk"))
-                    .otherwise(F.concat("walk", F.array("v")))
-                    .alias("walk"),
-                    F.coalesce("v", "cur").alias("cur"),
-                    F.col("v").isNotNull().alias("live"),
-                )
+    for t in range(1, walk_length):
+        h = md5_hash60(F.concat(
+            F.lit(f"w:{seed}:"), F.col("walk_id").cast("string"),
+            F.lit(":"), F.lit(t).cast("string")))
+        state = (
+            state.join(adj,
+                       state["live"] & (state["cur"] == adj["u"]),
+                       "left")
+            .filter(F.col("u").isNull()
+                    | (F.col("rank") == F.pmod(h, F.col("degree"))))
+            .select(
+                F.col("walk_id"), F.col("start"),
+                F.when(F.col("v").isNull(), F.col("walk"))
+                .otherwise(F.concat("walk", F.array("v")))
+                .alias("walk"),
+                F.coalesce("v", "cur").alias("cur"),
+                F.col("v").isNotNull().alias("live"),
             )
-            since += 1
-            if since >= ckpt_interval and t < walk_length - 1:
-                state = _ckpt(state, checkpoint)
-                since = 0
+        )
+        since += 1
+        if since >= ckpt_interval and t < walk_length - 1:
+            state = _ckpt(state, checkpoint)
+            since = 0
     return state.select("walk_id", "start", "walk")
 
 

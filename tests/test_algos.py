@@ -753,8 +753,8 @@ class TestStronglyConnectedComponents:
         sweep alone would need ~48 frontier rounds; the pointer-jump
         tail must cap the WHOLE run (trim + coloring + sweep + live
         shrink) well below one barrier per cycle vertex, with labels
-        still exact. The barrier probe counts _ckpt_obs calls — every
-        superstep of every inner loop takes exactly one. (A 200-cycle
+        still exact. The barrier probe counts _ckpt calls — every
+        checkpoint barrier goes through it, observed or not. (A 200-cycle
         verified the same way while building the tail finished in 45
         barriers vs ~210 for pure BFS — see OPTIMIZATION_r15.md.)"""
         import brahmand_spark.ops.algos as algos
@@ -762,13 +762,13 @@ class TestStronglyConnectedComponents:
         n = 48
         pairs = [(i, (i + 1) % n) for i in range(n)]
         calls = {"n": 0}
-        real = algos._ckpt_obs
+        real = algos._ckpt
 
         def counting(*a, **k):
             calls["n"] += 1
             return real(*a, **k)
 
-        monkeypatch.setattr(algos, "_ckpt_obs", counting)
+        monkeypatch.setattr(algos, "_ckpt", counting)
         self._check(spark, pairs)
         assert calls["n"] < n, (
             f"hybrid sweep took {calls['n']} barriers on a {n}-cycle")
@@ -1142,95 +1142,83 @@ class TestCheckpointEnvPrecedence:
         assert _prepare_ckpt(df, True, None) is True
 
 
-class TestAdaptiveParts:
-    """`_adaptive_parts`: loop shuffle partitions scale to observed
-    state size, never above the session setting, always restored —
-    and the count is a perf knob only (identical results)."""
+class TestPartitionCountInvariance:
+    """Loop results are a pure function of the data: the session's
+    reduce-partition count is a performance setting only."""
 
-    def test_shrinks_and_restores(self, spark):
-        from brahmand_spark.ops.algos import _adaptive_parts
-
-        orig = spark.conf.get("spark.sql.shuffle.partitions")
-        with _adaptive_parts(spark, 10) as ap:
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-            ap.update(10 ** 12)  # huge state: clamped at the original
-            assert spark.conf.get("spark.sql.shuffle.partitions") == orig
-            ap.update(5)
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == orig
-
-    def test_noop_when_rows_large(self, spark):
-        from brahmand_spark.ops.algos import _adaptive_parts
-
-        orig = spark.conf.get("spark.sql.shuffle.partitions")
-        with _adaptive_parts(spark, 10 ** 12):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == orig
-
-    def test_nested_loop_is_noop_and_restore_is_outermost(self, spark):
-        """r15 (ADVICE): a nested/concurrent loop on the same session
-        must NOT capture the outer loop's shrunken value as its 'orig'
-        — the inner one is a no-op, the outer restore wins."""
-        from brahmand_spark.ops.algos import _adaptive_parts
-
-        orig = spark.conf.get("spark.sql.shuffle.partitions")
-        with _adaptive_parts(spark, 10):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-            with _adaptive_parts(spark, 10 ** 12) as inner:
-                # inner no-op: setting still the OUTER loop's choice
-                assert spark.conf.get(
-                    "spark.sql.shuffle.partitions") == "1"
-                inner.update(10 ** 12)  # must also be inert
-                assert spark.conf.get(
-                    "spark.sql.shuffle.partitions") == "1"
-            # inner exit must not restore anything
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == orig
-        # a fresh loop after both exited works again
-        with _adaptive_parts(spark, 10):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == orig
-
-    def test_results_identical_and_restored_after_loops(
-            self, spark, monkeypatch):
-        """Force every adaptive loop to 1 partition (huge target) and
-        compare SCC/SSSP/k-core outputs against the unshrunk runs;
-        the session setting must be restored either way."""
-        import brahmand_spark.ops.algos as algos
+    def test_loop_results_identical_at_1_and_8_partitions(self, spark):
+        from brahmand_spark.ops.algos import (
+            k_core, sssp_weighted, strongly_connected_components)
 
         pairs = [(0, 1), (1, 2), (2, 0), (2, 10), (10, 11), (11, 10),
                  (11, 20), (20, 21), (21, 22)]
         edges = edges_df(spark, pairs)
         srcs = spark.createDataFrame([(0,)], "id long")
         wedges = edges.withColumn("weight", F.lit(1))
-        orig = spark.conf.get("spark.sql.shuffle.partitions")
 
         def all_results():
             return (
-                sorted(map(tuple, algos.strongly_connected_components(
+                sorted(map(tuple, strongly_connected_components(
                     edges).collect())),
-                sorted(map(tuple, algos.sssp_weighted(
-                    wedges, srcs).collect())),
-                sorted(map(tuple, algos.k_core(edges, 2).collect())),
+                sorted(map(tuple, sssp_weighted(wedges, srcs).collect())),
+                sorted(map(tuple, k_core(edges, 2).collect())),
             )
 
-        base = all_results()
-        assert spark.conf.get("spark.sql.shuffle.partitions") == orig
-        monkeypatch.setattr(algos, "_PART_TARGET_ROWS", 10 ** 9)
-        assert all_results() == base
-        assert spark.conf.get("spark.sql.shuffle.partitions") == orig
+        key = "spark.sql.shuffle.partitions"
+        orig = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "1")
+            one = all_results()
+            spark.conf.set(key, "8")
+            assert all_results() == one
+        finally:
+            spark.conf.set(key, orig)
 
-    def test_restored_on_raise(self, spark):
-        """The non-convergence raise exits through the adaptive-parts
-        scope — the session setting must not leak shrunk."""
-        import pytest
 
-        from brahmand_spark.ops.algos import strongly_connected_components
+class TestAqeCoalescesLoopCheckpoints:
+    """The loops leave reduce-partition counts to AQE. That rests on
+    AQE coalescing reaching the shuffles that feed each round's
+    ``localCheckpoint(eager=True)`` job: at 32 shuffle partitions a
+    fixture-sized k-core must run no 32-task stage. The same run with
+    coalescing off shows the probe can see the difference."""
 
-        orig = spark.conf.get("spark.sql.shuffle.partitions")
-        edges = edges_df(spark, [(0, 1), (1, 0), (1, 2), (2, 1)])
-        with pytest.raises(ValueError, match="did not converge"):
-            strongly_connected_components(edges, max_rounds=0).collect()
-        assert spark.conf.get("spark.sql.shuffle.partitions") == orig
+    def _max_stage_tasks(self, spark, coalesce: bool) -> int:
+        import uuid
+
+        from brahmand_spark.ops.algos import k_core
+
+        sc = spark.sparkContext
+        keys = {"spark.sql.shuffle.partitions": "32",
+                "spark.sql.adaptive.coalescePartitions.enabled":
+                    str(coalesce).lower()}
+        orig = {k: spark.conf.get(k) for k in keys}
+        # a 2-partition input keeps every map stage over it below 32
+        edges = edges_df(spark, [(i, (i + 1) % 40) for i in range(40)]
+                         + [(i, i + 40) for i in range(20)]).coalesce(2)
+        group = f"aqe-coalesce-{uuid.uuid4().hex}"
+        try:
+            for k, v in keys.items():
+                spark.conf.set(k, v)
+            sc.setJobGroup(group, "k-core under AQE")
+            assert k_core(edges, 2).count() == 40
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            for k, v in orig.items():
+                spark.conf.set(k, v)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        tasks = [
+            info.numTasks
+            for job in tracker.getJobIdsForGroup(group)
+            for stage in tracker.getJobInfo(job).stageIds
+            if (info := tracker.getStageInfo(stage)) is not None
+        ]
+        assert tasks, "no stages recorded for the k-core job group"
+        return max(tasks)
+
+    def test_reduce_stages_coalesced_inside_checkpoints(self, spark):
+        assert self._max_stage_tasks(spark, coalesce=True) < 32
+        assert self._max_stage_tasks(spark, coalesce=False) == 32
 
 
 class TestResetStats:

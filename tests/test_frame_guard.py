@@ -1,16 +1,21 @@
-"""Regrowth guard: driver-built rows become DataFrames only through
-``io.local_frame``. ``spark.createDataFrame(rows, schema)`` over Python
-rows builds a Python-RDD scan, whose every read starts a Python worker
-(~300 ms for a one-row answer); the helper builds a JVM LocalRelation.
-A ``createDataFrame`` call anywhere else in brahmand_spark/ fails this
-test unless it is listed below with its reason."""
+"""Regrowth guards over brahmand_spark/, each failing on a call site
+that is not listed with its reason.
+
+- Driver-built rows become DataFrames only through ``io.local_frame``.
+  ``spark.createDataFrame(rows, schema)`` over Python rows builds a
+  Python-RDD scan, whose every read starts a Python worker (~300 ms for
+  a one-row answer); the helper builds a JVM LocalRelation.
+- Session conf is set only by ``io``. A ``conf.set`` anywhere else
+  changes the plan of every query running on the session meanwhile;
+  choices local to one plan belong in that plan (hints, repartition),
+  and physical sizing is AQE's."""
 
 import ast
 import pathlib
 
 LIB = pathlib.Path(__file__).resolve().parent.parent / "brahmand_spark"
 
-ALLOWED = {
+CREATE_ALLOWED = {
     "io.local_frame": "the helper itself, over an Arrow table",
     "writes.apply_call_in_transactions":
         "the batch ids are an RDD computed on the executors, not "
@@ -20,12 +25,23 @@ ALLOWED = {
 }
 
 
-class _Sites(ast.NodeVisitor):
-    """``module.function`` of every ``.createDataFrame`` reference
-    (``<module>`` outside any function)."""
+CONF_SET_ALLOWED = {
+    "io.configure": "session tuning for entry points",
+    "io.read_parquet":
+        "nanosecond parquet timestamps read as longs, set only when "
+        "the file has such a column",
+}
 
-    def __init__(self, mod):
+
+class _Sites(ast.NodeVisitor):
+    """``module.function`` of every reference to the dotted attribute
+    ``attr`` (``"createDataFrame"``, ``"conf.set"``; ``<module>``
+    outside any function). Receiver names match with leading
+    underscores dropped, so ``self._conf.set`` is a ``conf.set``."""
+
+    def __init__(self, mod, attr):
         self.mod, self.fn, self.sites = mod, "<module>", []
+        self.want = attr.split(".")
 
     def visit_FunctionDef(self, node):
         outer, self.fn = self.fn, node.name
@@ -33,19 +49,44 @@ class _Sites(ast.NodeVisitor):
         self.fn = outer
 
     def visit_Attribute(self, node):
-        if node.attr == "createDataFrame":
+        chain, inner = [node.attr], node.value
+        while len(chain) < len(self.want):
+            if isinstance(inner, ast.Attribute):
+                chain.insert(0, inner.attr.lstrip("_"))
+                inner = inner.value
+            elif isinstance(inner, ast.Name):
+                chain.insert(0, inner.id.lstrip("_"))
+                break
+            else:
+                break
+        if chain == self.want:
             self.sites.append(f"{self.mod}.{self.fn}")
         self.generic_visit(node)
 
 
-def test_driver_rows_go_through_local_frame():
+def _sites(attr):
     sites = []
     for path in sorted(LIB.rglob("*.py")):
-        v = _Sites(path.relative_to(LIB).with_suffix("").as_posix())
+        v = _Sites(path.relative_to(LIB).with_suffix("").as_posix(), attr)
         v.visit(ast.parse(path.read_text()))
         sites += v.sites
-    stray = sorted(set(sites) - set(ALLOWED))
+    return set(sites)
+
+
+def test_driver_rows_go_through_local_frame():
+    sites = _sites("createDataFrame")
+    stray = sorted(sites - set(CREATE_ALLOWED))
     assert not stray, (
         f"createDataFrame outside io.local_frame: {stray} — build "
         "driver rows with brahmand_spark.io.local_frame")
-    assert set(ALLOWED) <= set(sites), set(ALLOWED) - set(sites)
+    assert set(CREATE_ALLOWED) <= sites, set(CREATE_ALLOWED) - sites
+
+
+def test_session_conf_set_only_in_io():
+    sites = _sites("conf.set")
+    stray = sorted(sites - set(CONF_SET_ALLOWED))
+    assert not stray, (
+        f"conf.set outside io: {stray} — a session-global setting "
+        "changes every concurrent query's plan; keep the choice local "
+        "to the plan")
+    assert set(CONF_SET_ALLOWED) <= sites, set(CONF_SET_ALLOWED) - sites

@@ -450,12 +450,19 @@ class TestAqeSplitsSkewedHop:
     so its first join is on the hot key. Broadcast is off, and the skew
     threshold and advisory size are lowered to the fixture's scale (the
     64 MB advisory default is larger than the whole hot partition, which
-    leaves nothing to split)."""
+    leaves nothing to split).
+
+    The forward pattern puts the hot key in the fold's second join,
+    whose map side is the first join's output. AQE splits only at
+    map-output boundaries, and with coalescing on the first join runs
+    in too few tasks to leave any; with coalescing off it is split."""
 
     N_FANS = 5000
     CHAIN = 500
     Q = ("MATCH (b:User)<-[:FOLLOWS]-(a:User) "
          "RETURN a.id AS src, b.id AS dst")
+    Q_FORWARD = ("MATCH (a:User)-[:FOLLOWS]->(b:User) "
+                 "RETURN a.id AS src, b.id AS dst")
 
     def _session(self, spark):
         from brahmand_spark.catalog import (
@@ -480,7 +487,7 @@ class TestAqeSplitsSkewedHop:
         s.register_table("follows_tbl", fans.unionAll(chain))
         return s
 
-    def test_hot_key_hop_gets_runtime_skew_split(self, spark):
+    def _check_split(self, spark, query, **extra_confs):
         s = self._session(spark)
         want = sorted([(i, 0) for i in range(1, self.N_FANS + 1)]
                       + [(i, i + 1) for i in range(1, self.CHAIN)])
@@ -489,12 +496,13 @@ class TestAqeSplitsSkewedHop:
             "spark.sql.adaptive.skewJoin."
             "skewedPartitionThresholdInBytes": "1KB",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
+            **extra_confs,
         }
         saved = {k: spark.conf.get(k) for k in confs}
         try:
             for k, v in confs.items():
                 spark.conf.set(k, v)
-            df = s.execute(self.Q)
+            df = s.execute(query)
             got = sorted(map(tuple, df.collect()))
             plan = physical_plan(df)
             assert "isFinalPlan=true" in plan, plan
@@ -503,6 +511,13 @@ class TestAqeSplitsSkewedHop:
         finally:
             for k, v in saved.items():
                 spark.conf.set(k, v)
+
+    def test_hot_key_hop_gets_runtime_skew_split(self, spark):
+        self._check_split(spark, self.Q)
+
+    def test_forward_hot_key_split_without_coalescing(self, spark):
+        self._check_split(spark, self.Q_FORWARD, **{
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"})
 
 
 class TestVarLengthOverAdjacency:
