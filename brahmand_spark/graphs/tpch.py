@@ -32,11 +32,6 @@ NODE_TABLES = {
     "Embedding": ("embeddings", "vec_id"),
 }
 
-# Small dimension tables worth broadcasting in every join
-# (at sf1000 these are still tiny relative to facts).
-BROADCAST = {"Region", "Nation", "Supplier"}
-
-
 def lineitem_with_id(df: DataFrame) -> DataFrame:
     """Synthetic injective Lineitem node id.
 
@@ -203,8 +198,7 @@ def build_session(spark: SparkSession, sf_dir: str) -> GraphSession:
     # referential integrity holds by construction -> unreferenced hop
     # endpoints skip their node-table join (FK-join elimination).
     session = GraphSession(
-        spark, schema=schema, broadcast_labels=set(BROADCAST),
-        assume_referential_integrity=True,
+        spark, schema=schema, assume_referential_integrity=True,
     )
     for label, df in dfs.items():
         session.register_table(label, df)

@@ -6,10 +6,11 @@ reader, which hands Catalyst predicate pushdown + column pruning +
 partition pruning for free.
 
 One wrinkle: Spark refuses parquet TIMESTAMP(NANOS) columns by default
-(PARQUET_TYPE_ILLEGAL). We set ``spark.sql.legacy.parquet.nanosAsLong``
-and rebuild the value as TIMESTAMP_NTZ with pure epoch arithmetic —
-timezone-free, so results hash-match engines (DuckDB) that read nanos
-natively as naive timestamps.
+(PARQUET_TYPE_ILLEGAL). Such a file is read with an explicit schema that
+types those columns ``long``, and the value is rebuilt as TIMESTAMP_NTZ
+with pure epoch arithmetic — timezone-free, so results hash-match engines
+(DuckDB) that read nanos natively as naive timestamps. The schema is per
+read, so no session setting changes.
 
 Rows the driver computes itself (write counters, procedure acks,
 catalog listings, small join tables) become DataFrames through
@@ -23,13 +24,9 @@ from pyspark.sql import functions as F
 
 from .compile.scope import quote
 
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
-
-
 def configure(spark: SparkSession) -> None:
     """Session tuning; safe to call repeatedly (used by entry points that
     receive an externally-built SparkSession)."""
-    spark.conf.set(_NANOS_CONF, "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -57,13 +54,29 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
-def _nanos_columns(path: str) -> list[str]:
+def _nanos_schema(spark: SparkSession, path: str):
+    """``(nanosecond columns, read schema typing them long)`` of a
+    parquet file; ``([], None)`` when it has none (or is not a single
+    readable file). Other columns map from the Arrow schema the way
+    Spark infers them: naive timestamps become TIMESTAMP_NTZ while
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` holds."""
     try:
         import pyarrow.parquet as pq
-        schema = pq.read_schema(path)
-        return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
+        arrow = pq.read_schema(path)
     except Exception:
-        return []
+        return [], None
+    nanos = [f.name for f in arrow if str(f.type) == "timestamp[ns]"]
+    if not nanos:
+        return [], None
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    ntz = spark.conf.get(
+        "spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+    return nanos, StructType([
+        StructField(f.name, LongType() if f.name in nanos
+                    else from_arrow_type(f.type, ntz), f.nullable)
+        for f in arrow])
 
 
 _EXT_FORMATS = {
@@ -112,10 +125,9 @@ def read_source(
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    nanos = _nanos_columns(path)
-    if nanos and spark.conf.get(_NANOS_CONF, "false") != "true":
-        spark.conf.set(_NANOS_CONF, "true")
-    df = spark.read.parquet(path)
+    nanos, schema = _nanos_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     for c in nanos:
         # long nanos -> TIMESTAMP_NTZ via epoch arithmetic (no timezone
         # interpretation anywhere, unlike timestamp_micros which yields LTZ).

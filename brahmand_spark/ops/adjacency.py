@@ -121,8 +121,3 @@ def materialize_for_rel(
         out[name] = path
     return out
 
-
-def degree_stats(adj: DataFrame) -> DataFrame:
-    """One-row summary of a grouped-adjacency table: ``n_edges``, the
-    sum of its degrees (NULL when the table is empty)."""
-    return adj.agg(F.sum("degree").alias("n_edges"))

@@ -32,7 +32,6 @@ class GraphSession:
         spark: SparkSession,
         schema: Optional[GraphSchema] = None,
         catalog_path: Optional[str] = None,
-        broadcast_labels: Optional[set[str]] = None,
         allow_writes: bool = False,
         max_var_hops: Optional[int] = None,
         assume_referential_integrity: bool = False,
@@ -78,19 +77,6 @@ class GraphSession:
             self.schema = GraphSchema()
         # name -> DataFrame registered directly (e.g. derived FK edge views)
         self.tables: dict[str, DataFrame] = {}
-        # Labels whose tables are known-small -> broadcast-join hint.
-        self.broadcast_labels = set(broadcast_labels or ())
-        # label/type -> row count, captured by collect_table_stats()
-        # (one metadata-cheap count per table, amortized across every
-        # query of the session). Presence flips anchor selection to
-        # cost-based (compile/compiler.py _cost_anchor).
-        self.table_stats: dict[str, int] = {}
-        # label/type -> {column -> {"ndv", "min", "max"}}, captured by
-        # collect_table_stats(columns=True) — one aggregate pass per
-        # table. Presence upgrades the cost model's per-filter
-        # selectivity from the fixed 0.1 constant to rows/ndv for
-        # equalities and min-max interpolation for ranges (r11).
-        self.column_stats: dict[str, dict] = {}
         if write_path is not None and os.path.isdir(write_path):
             self._restore_durable()
 
@@ -180,79 +166,9 @@ class GraphSession:
                 adj = build_adjacency(edges, s, d)
                 if persist:
                     adj = adj.persist()
+                    adj.count()  # build the cache now, not on first read
                 self.register_table(f"{type_name}_{direction}", adj)
         rel.adj_index = True
-        # One action per direction materializes its (persisted) table;
-        # the edge count it returns, equal in both directions, seeds
-        # the cost-based anchor. An EMPTY edge table sums to NULL (no
-        # rows), not 0 — skip it rather than crash the index build.
-        from .ops.adjacency import degree_stats
-
-        n_edges, _ = (
-            degree_stats(self.tables[f"{type_name}_{d}"]).first().n_edges
-            for d in ("outgoing", "incoming"))
-        if n_edges is not None:
-            self.table_stats[type_name] = int(n_edges)
-
-    def collect_table_stats(
-        self, labels: Optional[list[str]] = None, refresh: bool = False,
-        columns: bool = False,
-    ) -> dict[str, int]:
-        """Capture row counts for the schema's node labels and
-        relationship types (or just ``labels``) into
-        ``self.table_stats`` — one ``count()`` per table, amortized
-        into the catalog like the reference's ClickHouse table stats.
-        Presence of complete stats flips anchor selection AND hop
-        join ordering to cost-based (estimated cardinalities instead
-        of the raw filter-count heuristic); stats-free sessions keep
-        reference behavior. Parquet counts are metadata-cheap
-        (row-group counts, no data pages).
-
-        ``columns=True`` (r11) additionally captures per-column
-        ndv (approx_count_distinct) + min/max into
-        ``self.column_stats`` — ONE extra aggregate pass per table,
-        map-side combinable. With column stats present the cost
-        model's per-filter selectivity upgrades from the fixed 0.1
-        constant to rows/ndv for equalities and min-max
-        interpolation for range predicates."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import (
-            AtomicType, DateType, NumericType, TimestampNTZType,
-            TimestampType,
-        )
-
-        names = labels if labels is not None else (
-            list(self.schema.nodes) + list(self.schema.relationships))
-        for name in names:
-            if refresh or name not in self.table_stats:
-                self.table_stats[name] = self._load_for_label(name).count()
-            if columns and (refresh or name not in self.column_stats):
-                df = self._load_for_label(name)
-                aggs, cols = [], []
-                for f in df.schema.fields:
-                    if not isinstance(f.dataType, AtomicType):
-                        continue  # arrays/structs/maps: no useful ndv
-                    cols.append((f.name, isinstance(
-                        f.dataType, (NumericType, DateType,
-                                     TimestampType, TimestampNTZType))))
-                    aggs.append(F.approx_count_distinct(f.name)
-                                .alias(f"__ndv_{f.name}"))
-                    aggs.append(F.min(f.name).alias(f"__min_{f.name}"))
-                    aggs.append(F.max(f.name).alias(f"__max_{f.name}"))
-                if not aggs:
-                    self.column_stats[name] = {}
-                    continue
-                row = df.agg(*aggs).first()
-                self.column_stats[name] = {
-                    c: {"ndv": int(row[f"__ndv_{c}"] or 0),
-                        # min/max retained only where range
-                        # interpolation is meaningful (orderable
-                        # numerics/temporals)
-                        "min": row[f"__min_{c}"] if ordered else None,
-                        "max": row[f"__max_{c}"] if ordered else None}
-                    for c, ordered in cols
-                }
-        return dict(self.table_stats)
 
     def drop_adj_index(self, type_name: str) -> None:
         """Release a relationship's adjacency index: unpersist the
@@ -287,19 +203,15 @@ class GraphSession:
     def _compiler(self, params: Optional[dict]) -> QueryCompiler:
         """The one compiler configuration of this session: reads, LOAD
         CSV, the MATCH of every write and (via QueryCompiler._fresh)
-        CALL { } blocks all plan with the same settings and stats."""
+        CALL { } blocks all plan with the same settings."""
         return QueryCompiler(
             self.schema, self._load_for_label,
-            broadcast_labels=self.broadcast_labels, params=params,
+            params=params,
             load_adjacency=self.tables.get,
             max_var_hops=(MAX_VAR_HOPS if self.max_var_hops is None
                           else self.max_var_hops),
             assume_referential_integrity=(
                 self.assume_referential_integrity),
-            table_stats=(self.table_stats.get
-                         if self.table_stats else None),
-            column_stats=(self.column_stats.get
-                          if self.column_stats else None),
         )
 
     # -- execution ----------------------------------------------------------

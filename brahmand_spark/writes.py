@@ -656,24 +656,6 @@ def _store(session, table_name: str, df: DataFrame,
         if table_name in (rel.type_name, rel.table_name):
             session.tables.pop(f"{rel.type_name}_outgoing", None)
             session.tables.pop(f"{rel.type_name}_incoming", None)
-    # Stats invalidation (r12): a mutated table's cached row count /
-    # column ndv/min-max no longer describe it — drop them so the
-    # cost model falls back to the reference heuristic for this table
-    # instead of planning on stale numbers (advisory-only either way:
-    # anchor/hop order are pure physical choices; re-run
-    # collect_table_stats after bulk writes to restore the CBO).
-    names = {table_name}
-    for n in session.schema.nodes.values():
-        if table_name in (n.label, n.table_name):
-            names.add(n.label)
-    for rel in session.schema.relationships.values():
-        if table_name in (rel.type_name, rel.table_name):
-            names.add(rel.type_name)
-    for attr in ("table_stats", "column_stats"):
-        stats = getattr(session, attr, None)
-        if stats:
-            for nm in names:
-                stats.pop(nm, None)
     return out
 
 

@@ -360,313 +360,6 @@ class TestAnchorSelection:
             RETURN a.c_name AS n""") is None
 
 
-class TestCostBasedAnchor:
-    """r10 (VERDICT r9 Missing #3): with catalog row counts the anchor
-    is the smallest ESTIMATED post-filter cardinality; without stats
-    (or with incomplete stats) the reference's filter-count heuristic
-    decides, unchanged."""
-
-    def _anchor(self, tpch, cypher, stats):
-        from brahmand_spark.compile.compiler import QueryCompiler
-        from brahmand_spark.compile.scope import Scope
-        from brahmand_spark.parser.parser import parse
-
-        query = parse(cypher)
-        part = query.parts[0]
-        compiler = QueryCompiler(
-            tpch.schema, tpch._load_for_label,
-            table_stats=stats.get if stats is not None else None)
-        pattern = compiler._build_pattern(part.matches, Scope())
-        compiler._infer(pattern)
-        return compiler._select_anchor(pattern, part)
-
-    Q_ONE_FILTER_EACH = """
-        MATCH (a:Customer)-[:PLACED]->(b:Order)
-        WHERE a.c_acctbal > 0 AND b.o_totalprice > 5
-        RETURN a.c_name AS n"""
-
-    def test_stats_flip_anchor_to_small_table(self, tpch):
-        # filter-count ties -> heuristic picks 'a'; stats say the
-        # filtered Order side is 50 rows vs a billion customers
-        stats = {"Customer": 1_000_000_000, "Order": 50, "PLACED": 10**9}
-        assert self._anchor(tpch, self.Q_ONE_FILTER_EACH, stats) == "b"
-
-    def test_small_dimension_beats_more_filters(self, tpch):
-        # two filters on the fact side still lose to a 10-row dim:
-        # 1e9 * 0.1^2 = 1e7 >> 10 * 0.1 = 1
-        q = """
-            MATCH (a:Customer)-[:PLACED]->(b:Order)
-            WHERE a.c_acctbal > 0
-              AND b.o_totalprice > 5 AND b.o_orderstatus = 'F'
-            RETURN a.c_name AS n"""
-        stats = {"Customer": 10, "Order": 1_000_000_000, "PLACED": 10**9}
-        assert self._anchor(tpch, q, stats) == "a"
-
-    def test_missing_stats_fall_back_to_heuristic(self, tpch):
-        # Order has no stats entry -> wholesale fallback (tie -> 'a')
-        stats = {"Customer": 1_000_000_000, "PLACED": 10**9}
-        assert self._anchor(tpch, self.Q_ONE_FILTER_EACH, stats) == "a"
-
-    def test_no_stats_keeps_reference_behavior(self, tpch):
-        assert self._anchor(tpch, self.Q_ONE_FILTER_EACH, None) == "a"
-
-    def test_unfiltered_pattern_still_none(self, tpch):
-        stats = {"Customer": 10, "Order": 10, "PLACED": 10}
-        assert self._anchor(tpch, """
-            MATCH (a:Customer)-[:PLACED]->(b:Order)
-            RETURN a.c_name AS n""", stats) is None
-
-    def test_or_penalty_breaks_even_estimates(self, tpch):
-        # same rows + same filter count, but 'b' carries an OR -> 'a'
-        q = """
-            MATCH (a:Customer)-[:PLACED]->(b:Order)
-            WHERE a.c_acctbal > 0
-              AND (b.o_totalprice > 5 OR b.o_orderstatus = 'F')
-            RETURN a.c_name AS n"""
-        stats = {"Customer": 1000, "Order": 1000, "PLACED": 10**6}
-        assert self._anchor(tpch, q, stats) == "a"
-
-    def test_session_stats_keep_results_identical(self, spark):
-        """Pure physical choice: the same query returns identical rows
-        with and without collect_table_stats()."""
-        from brahmand_spark.graphs.tpch import build_session
-
-        from .conftest import SF_SMOKE
-
-        q = ("MATCH (a:Customer)-[:PLACED]->(b:Order) "
-             "WHERE a.c_acctbal > 5000 AND b.o_orderstatus = 'F' "
-             "RETURN a.c_name AS n, b.o_orderkey AS k")
-        s1 = build_session(spark, SF_SMOKE)
-        before = sorted(map(tuple, s1.execute(q).collect()))
-        s2 = build_session(spark, SF_SMOKE)
-        stats = s2.collect_table_stats()
-        assert stats["Customer"] > 0 and stats["PLACED"] > 0
-        after = sorted(map(tuple, s2.execute(q).collect()))
-        assert before == after
-
-
-class TestColumnStatSelectivity:
-    """r11 (VERDICT r10 next #2): with column stats
-    (collect_table_stats(columns=True)) per-filter selectivity is
-    estimated from ndv / min-max instead of the fixed 0.1 constant."""
-
-    def _anchor(self, tpch, cypher, stats, cstats, fresh=False):
-        from brahmand_spark.compile.compiler import QueryCompiler
-        from brahmand_spark.compile.scope import Scope
-        from brahmand_spark.parser.parser import parse
-
-        query = parse(cypher)
-        part = query.parts[0]
-        compiler = QueryCompiler(
-            tpch.schema, tpch._load_for_label,
-            table_stats=stats.get if stats is not None else None,
-            column_stats=cstats.get if cstats is not None else None)
-        if fresh:  # the sibling compiler a CALL { } block plans with
-            compiler = compiler._fresh()
-        pattern = compiler._build_pattern(part.matches, Scope())
-        compiler._infer(pattern)
-        return compiler._select_anchor(pattern, part)
-
-    Q_EQ_PAIR = """
-        MATCH (a:Customer)-[:PLACED]->(b:Order)
-        WHERE a.c_mktsegment = 'BUILDING' AND b.o_orderstatus = 'F'
-        RETURN a.c_name AS n"""
-    ROWS = {"Customer": 1_000_000, "Order": 1_000_000, "PLACED": 10**6}
-
-    def test_anchor_flips_on_ndv(self, tpch):
-        # identical filter counts + identical row counts: the
-        # heuristic AND the constant cost model both tie -> 'a';
-        # ndv says the Order equality keeps 1/1000 vs 1/2 -> 'b'
-        cstats = {"Customer": {"c_mktsegment": {"ndv": 2}},
-                  "Order": {"o_orderstatus": {"ndv": 1000}}}
-        assert self._anchor(tpch, self.Q_EQ_PAIR, self.ROWS, cstats) == "b"
-        # flipped ndv flips the anchor back
-        cstats2 = {"Customer": {"c_mktsegment": {"ndv": 1000}},
-                   "Order": {"o_orderstatus": {"ndv": 2}}}
-        assert self._anchor(tpch, self.Q_EQ_PAIR, self.ROWS, cstats2) == "a"
-
-    def test_call_block_compiler_keeps_stats(self, tpch):
-        # CALL { } blocks compile on _fresh(): same table and column
-        # stats, so the same ndv-driven anchor as the outer query
-        cstats = {"Customer": {"c_mktsegment": {"ndv": 2}},
-                  "Order": {"o_orderstatus": {"ndv": 1000}}}
-        assert self._anchor(tpch, self.Q_EQ_PAIR, self.ROWS, cstats,
-                            fresh=True) == "b"
-
-    def test_without_column_stats_behavior_unchanged(self, tpch):
-        # same query, no column stats: constant model ties -> pattern
-        # order -> 'a' (byte-identical r10 behavior)
-        assert self._anchor(tpch, self.Q_EQ_PAIR, self.ROWS, None) == "a"
-
-    def test_range_interpolation(self, tpch):
-        # o_totalprice spans [0, 100]: "> 90" keeps ~10%, so the
-        # Order side (1/10) beats the Customer equality (1/2)...
-        q = """
-            MATCH (a:Customer)-[:PLACED]->(b:Order)
-            WHERE a.c_mktsegment = 'BUILDING' AND b.o_totalprice > 90
-            RETURN a.c_name AS n"""
-        cstats = {"Customer": {"c_mktsegment": {"ndv": 2}},
-                  "Order": {"o_totalprice":
-                            {"ndv": 50_000, "min": 0.0, "max": 100.0}}}
-        assert self._anchor(tpch, q, self.ROWS, cstats) == "b"
-        # ...while "> 10" keeps ~90% and loses to it
-        q2 = q.replace("> 90", "> 10")
-        assert self._anchor(tpch, q2, self.ROWS, cstats) == "a"
-
-    def test_pred_sel_units(self, tpch):
-        """Direct estimates: =, <>, IN, ranges, AND/OR, IS NULL."""
-        from brahmand_spark.compile.compiler import QueryCompiler
-        from brahmand_spark.parser.parser import parse
-
-        c = QueryCompiler(tpch.schema, tpch._load_for_label)
-        cst = {"x": {"ndv": 100, "min": 0.0, "max": 100.0}}
-
-        def sel(pred):
-            q = parse(f"MATCH (a:Customer) WHERE {pred} RETURN a.x AS x")
-            return c._pred_sel(cst, q.parts[0].where)
-
-        assert sel("a.x = 5") == pytest.approx(0.01)
-        assert sel("a.x <> 5") == pytest.approx(0.99)
-        assert sel("a.x IN [1, 2, 3]") == pytest.approx(0.03)
-        assert sel("a.x > 75") == pytest.approx(0.25)
-        assert sel("a.x <= 25") == pytest.approx(0.25)
-        assert sel("50 < a.x") == pytest.approx(0.5)  # flipped operand
-        assert sel("a.x = 1 AND a.x > 50") == pytest.approx(0.005)
-        assert sel("a.x = 1 OR a.x = 2") == pytest.approx(0.02)
-        assert sel("a.x IS NULL") == pytest.approx(0.1)
-        assert sel("a.x IS NOT NULL") == pytest.approx(0.9)
-        # unknown column/shape falls back to the constant
-        assert sel("a.y = 5") == pytest.approx(0.1)
-
-    def test_date_literal_interpolates(self, tpch):
-        """date('...') range predicates interpolate against date
-        column min-max (the TPC-H shape)."""
-        import datetime as dt
-
-        from brahmand_spark.compile.compiler import QueryCompiler
-        from brahmand_spark.parser.parser import parse
-
-        c = QueryCompiler(tpch.schema, tpch._load_for_label)
-        cst = {"d": {"ndv": 1000, "min": dt.date(1995, 1, 1),
-                     "max": dt.date(1996, 12, 31)}}
-        q = parse("MATCH (a:Order) WHERE a.d >= date('1996-08-19') "
-                  "RETURN a.d AS d")
-        s = c._pred_sel(cst, q.parts[0].where)
-        assert 0.15 < s < 0.25  # ~last 20% of the two-year span
-
-    def test_session_column_stats_results_identical(self, spark):
-        from brahmand_spark.graphs.tpch import build_session
-
-        from .conftest import SF_SMOKE
-
-        q = ("MATCH (a:Customer)-[:PLACED]->(b:Order)"
-             "-[:HAS_LINE]->(l:Lineitem) "
-             "WHERE a.c_mktsegment = 'BUILDING' AND b.o_totalprice > 0 "
-             "RETURN a.c_name AS n, count(*) AS cnt")
-        s1 = build_session(spark, SF_SMOKE)
-        before = sorted(map(tuple, s1.execute(q).collect()))
-        s2 = build_session(spark, SF_SMOKE)
-        s2.collect_table_stats(columns=True)
-        assert s2.column_stats["Customer"]["c_mktsegment"]["ndv"] > 0
-        after = sorted(map(tuple, s2.execute(q).collect()))
-        assert before == after
-
-
-class TestCostBasedHopOrder:
-    """r11 (VERDICT r10 next #1): with complete catalog stats the hop
-    JOIN ORDER after the anchor is greedy smallest-estimated-
-    intermediate first, not pattern order."""
-
-    Q_CHAIN = """
-        MATCH (a:Customer)-[:PLACED]->(b:Order)-[:HAS_LINE]->
-              (c:Lineitem)-[:OF_PART]->(d:Part)
-        WHERE a.c_acctbal > 0
-        RETURN a.c_name AS n"""
-
-    def _order(self, tpch, cypher, stats, cstats=None):
-        from brahmand_spark.compile.compiler import QueryCompiler
-        from brahmand_spark.compile.scope import Scope
-        from brahmand_spark.parser.parser import parse
-
-        query = parse(cypher)
-        part = query.parts[0]
-        compiler = QueryCompiler(
-            tpch.schema, tpch._load_for_label,
-            table_stats=stats.get if stats is not None else None,
-            column_stats=cstats.get if cstats is not None else None)
-        pattern = compiler._build_pattern(part.matches, Scope())
-        compiler._infer(pattern)
-        score, has_or = compiler._filter_score(pattern, part)
-        ordered = compiler._order_hops_by_cost(
-            pattern, list(pattern.rels), part, score, has_or, set())
-        return None if ordered is None else [r.type_name for r in ordered]
-
-    def test_selective_third_hop_joins_first(self, tpch):
-        # the third hop's edge table is 100 rows against billion-row
-        # earlier hops: start there, walk back, join the filtered
-        # anchor LAST — the r10 static order always started at the
-        # anchor and dragged the 1e9-row PLACED join first
-        stats = {"Customer": 1_000_000, "Order": 10**9,
-                 "Lineitem": 10**9, "Part": 100,
-                 "PLACED": 10**9, "HAS_LINE": 4 * 10**9, "OF_PART": 100}
-        assert self._order(tpch, self.Q_CHAIN, stats) == [
-            "OF_PART", "HAS_LINE", "PLACED"]
-
-    def test_uniform_stats_keep_anchor_first(self, tpch):
-        # nothing distinguishes the edges: the filtered anchor's hop
-        # is the cheapest start (its selectivity shrinks it) and the
-        # chain unwinds in pattern order
-        stats = {"Customer": 1000, "Order": 1000, "Lineitem": 1000,
-                 "Part": 1000, "PLACED": 1000, "HAS_LINE": 1000,
-                 "OF_PART": 1000}
-        assert self._order(tpch, self.Q_CHAIN, stats) == [
-            "PLACED", "HAS_LINE", "OF_PART"]
-
-    def test_skew_order_results_identical(self, spark):
-        """Hop order is purely physical: same rows with an adjacency
-        index + table and column stats as without."""
-        from brahmand_spark.graphs.tpch import build_session
-
-        from .conftest import SF_SMOKE
-
-        q = ("MATCH (a:Customer)-[:PLACED]->(b:Order)-[:HAS_LINE]->"
-             "(c:Lineitem)-[:OF_PART]->(d:Part) "
-             "WHERE a.c_acctbal > 5000 AND d.p_size > 40 "
-             "RETURN a.c_name AS n, d.p_partkey AS pk")
-        s1 = build_session(spark, SF_SMOKE)
-        before = sorted(map(tuple, s1.execute(q).collect()))
-        s2 = build_session(spark, SF_SMOKE)
-        s2.build_adj_index("HAS_LINE")
-        s2.collect_table_stats(columns=True)
-        after = sorted(map(tuple, s2.execute(q).collect()))
-        assert before == after and len(before) > 0
-
-    def test_without_stats_returns_none(self, tpch):
-        assert self._order(tpch, self.Q_CHAIN, None) is None
-
-    def test_incomplete_stats_return_none(self, tpch):
-        stats = {"Customer": 1000, "Order": 1000, "Lineitem": 1000,
-                 "Part": 1000, "PLACED": 1000, "HAS_LINE": 1000}
-        assert self._order(tpch, self.Q_CHAIN, stats) is None
-
-    def test_chain_results_identical_under_stats(self, spark):
-        """The flip is purely physical: same rows either way."""
-        from brahmand_spark.graphs.tpch import build_session
-
-        from .conftest import SF_SMOKE
-
-        q = ("MATCH (a:Customer)-[:PLACED]->(b:Order)-[:HAS_LINE]->"
-             "(c:Lineitem)-[:OF_PART]->(d:Part) "
-             "WHERE a.c_acctbal > 5000 AND d.p_size > 40 "
-             "RETURN a.c_name AS n, d.p_partkey AS pk")
-        s1 = build_session(spark, SF_SMOKE)
-        before = sorted(map(tuple, s1.execute(q).collect()))
-        s2 = build_session(spark, SF_SMOKE)
-        s2.collect_table_stats(columns=True)
-        after = sorted(map(tuple, s2.execute(q).collect()))
-        assert before == after and len(before) > 0
-
-
 class TestVarLengthCostGuard:
     def test_deep_walk_refused_with_clear_error(self, tpch):
         import pytest

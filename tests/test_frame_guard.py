@@ -27,9 +27,6 @@ CREATE_ALLOWED = {
 
 CONF_SET_ALLOWED = {
     "io.configure": "session tuning for entry points",
-    "io.read_parquet":
-        "nanosecond parquet timestamps read as longs, set only when "
-        "the file has such a column",
 }
 
 

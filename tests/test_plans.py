@@ -3,9 +3,41 @@ physical plans with filters and projections pushed to the parquet scans,
 broadcast joins for small dimensions, and no Python (BatchEvalPython)
 stages in the Cypher path."""
 
+import re
+
 
 def physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def initial_plan(df):
+    """The JVM physical plan before any AQE re-optimization."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return plan.initialPlan()
+    return plan
+
+
+def _plan_nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def broadcast_built_tables(plan) -> set[str]:
+    """Parquet file stems scanned under a BroadcastHashJoin build side."""
+    built = set()
+    for node in _plan_nodes(plan):
+        if node.nodeName() != "BroadcastHashJoin":
+            continue
+        side = (node.right() if node.buildSide().toString() == "BuildRight"
+                else node.left())
+        for leaf in _plan_nodes(side):
+            m = re.search(r"/(\w+)\.parquet\]", leaf.toString())
+            if m and leaf.children().size() == 0:
+                built.add(m.group(1))
+    return built
 
 
 def formatted(df) -> str:
@@ -33,12 +65,22 @@ class TestPlanQuality:
         assert "ReadSchema: struct<c_name:string>" in plan
 
     def test_broadcast_small_dimension(self, tpch):
-        df = tpch.execute("""
+        """Spark's static size estimate alone puts the small dimension
+        tables on a BroadcastHashJoin build side in the initial
+        (pre-AQE) plan — no hint, and no SortMergeJoin to undo."""
+        region = tpch.execute("""
             MATCH (c:Customer)-[:CUST_IN]->(n:Nation)-[:IN_REGION]->(r:Region)
             WHERE r.r_name = 'ASIA'
             RETURN count(*) AS n""")
-        plan = physical_plan(df)
-        assert "BroadcastHashJoin" in plan
+        supplier = tpch.execute("""
+            MATCH (l:Lineitem)-[:SUPPLIED_BY]->(s:Supplier)
+                  -[:SUPP_IN]->(n:Nation)
+            RETURN n.n_name AS nation, count(*) AS n""")
+        for df, tables in ((region, {"region"}),
+                           (supplier, {"supplier", "nation"})):
+            plan = initial_plan(df)
+            assert "SortMergeJoin" not in plan.toString(), plan.toString()
+            assert tables <= broadcast_built_tables(plan), plan.toString()
 
     def test_no_python_in_cypher_path(self, tpch):
         df = tpch.execute("""

@@ -190,15 +190,6 @@ class TestAdjacency:
         via_adj = {(r.src, r.dst) for r in pairs.collect()}
         assert direct == via_adj
 
-    def test_degree_stats(self, tpch):
-        from brahmand_spark.ops.adjacency import build_adjacency, degree_stats
-
-        adj = build_adjacency(
-            tpch.tables["PLACED"], "from_Customer", "to_Order"
-        )
-        stats = degree_stats(adj).first()
-        assert stats.n_edges == tpch.tables["PLACED"].count()
-
 
 class TestStreamingNearDup:
     def test_incremental_minhash_filter(self, spark, tmp_path):

@@ -1279,28 +1279,6 @@ class TestDurableWrites:
         assert not os.path.exists(str(tmp_path / "wal"))
 
 
-class TestStatsInvalidation:
-    """r12: a write drops the mutated table's cached row-count /
-    column stats — the cost model must not plan on stale numbers
-    (advisory-only; re-collect after bulk writes restores the CBO)."""
-
-    def test_write_drops_table_and_column_stats(self, spark):
-        s = GraphSession(spark, allow_writes=True)
-        s.execute("CREATE NODE TABLE Person (id Int64, age Int64, "
-                  "PRIMARY KEY(id), NODE ID(id))")
-        s.execute("CREATE NODE TABLE City (id Int64, "
-                  "PRIMARY KEY(id), NODE ID(id))")
-        s.execute("CREATE (p:Person {id: 1, age: 30})")
-        s.execute("CREATE (c:City {id: 9})")
-        s.collect_table_stats(columns=True)
-        assert s.table_stats.get("Person") == 1
-        assert "Person" in s.column_stats
-        s.execute("CREATE (p:Person {id: 2, age: 31})")
-        assert "Person" not in s.table_stats  # stale count dropped
-        assert "Person" not in s.column_stats
-        assert s.table_stats.get("City") == 1  # untouched table kept
-
-
 class TestCrossAliasSet:
     """r12 (rode the LOAD CSV work): SET values may reference OTHER
     bound variables — computed against the matched frame, one value

@@ -201,28 +201,6 @@ def main() -> None:
         "to the edge list automatically.",
     )
 
-    # Session with full table + column stats collected (r11): the
-    # cost-based anchor AND greedy hop ordering drive the fold.
-    stats_session = build_session(spark, SF_DIR)
-    stats_session.collect_table_stats(columns=True)
-    stats_showcase = (
-        "Cost-ordered hop fold (catalog row counts + column ndv/min-max)",
-        """MATCH (s:Supplier)-[:SUPP_IN]->(n:Nation)-[:IN_REGION]->(r:Region)
-           WHERE r.r_name = 'ASIA' AND s.s_acctbal > 0
-           RETURN s.s_name AS name, n.n_name AS nation""",
-        "With collect_table_stats(columns=True) the compiler estimates "
-        "every hop's output (edge fanout from row counts x per-filter "
-        "selectivity from ndv/min-max — 1/5 for the region equality, "
-        "min-max interpolation for the acctbal range) and greedily "
-        "folds smallest-intermediate-first: the 5-row filtered REGION "
-        "end starts the chain and the supplier join lands LAST, where "
-        "the r10 static order always started at the most-filtered "
-        "anchor and dragged the big side early. At 100x the difference "
-        "is the whole traversal cost; results are join-order "
-        "independent (inner equi-join fold), pinned by the stats-on "
-        "fuzz suite.",
-    )
-
     # Extension-operator showcases (DataFrame API, not Cypher).
     from pyspark.sql import functions as F
 
@@ -500,11 +478,9 @@ def main() -> None:
         "over 400 chars — literal matrices — are elided).",
         "",
     ]
-    specials = {len(SHOWCASES): adj_session,
-                len(SHOWCASES) + 1: stats_session}
     for i, (title, cypher, commentary) in enumerate(
-            SHOWCASES + [adj_showcase, stats_showcase]):
-        sess = specials.get(i, session)
+            SHOWCASES + [adj_showcase]):
+        sess = adj_session if i == len(SHOWCASES) else session
         df = sess.execute(cypher)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
