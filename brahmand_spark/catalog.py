@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
-from typing import Optional
 
 from .errors import CatalogError
 
@@ -187,22 +186,6 @@ class GraphSchema:
             return self.relationships[type_name]
         except KeyError:
             raise CatalogError(f"unknown relationship type '{type_name}'") from None
-
-    def rels_between(
-        self, from_label: Optional[str], to_label: Optional[str]
-    ) -> list[RelationshipSchema]:
-        """All rel schemas compatible with the given (possibly None) labels.
-
-        Used for label/type inference (analyzer/schema_inference.rs:240-339).
-        """
-        out = []
-        for rel in self.relationships.values():
-            if from_label is not None and rel.from_node != from_label:
-                continue
-            if to_label is not None and rel.to_node != to_label:
-                continue
-            out.append(rel)
-        return out
 
     # -- persistence -------------------------------------------------------
     def to_json(self) -> dict:

@@ -127,50 +127,13 @@ class ModelStore:
 
     # -- typed helpers (payload <-> operator argument shapes) ----------
 
-    def save_ivf_centroids(self, name: str,
-                           centroids: list[list[float]],
-                           **params) -> None:
-        self.save(name, "ivf_centroids", centroids, params)
-
-    def load_ivf_centroids(self, name: str) -> list[list[float]]:
-        return self.load(name, "ivf_centroids")["payload"]
-
-    def save_lsh_planes(self, name: str, planes: list[list[float]],
-                        **params) -> None:
-        self.save(name, "lsh_planes", planes, params)
-
-    def load_lsh_planes(self, name: str) -> list[list[float]]:
-        return self.load(name, "lsh_planes")["payload"]
-
-    def save_bpe_merges(self, name: str,
-                        merges: list[tuple[str, str]],
-                        **params) -> None:
-        self.save(name, "bpe_merges", [list(m) for m in merges], params)
-
-    def load_bpe_merges(self, name: str) -> list[tuple[str, str]]:
-        return [tuple(m) for m in self.load(name, "bpe_merges")["payload"]]
-
-    def save_pq_codebooks(self, name: str,
-                          codebooks: list[list[list[float]]],
-                          **params) -> None:
-        self.save(name, "pq_codebooks", codebooks, params)
-
-    def load_pq_codebooks(self, name: str) -> list[list[list[float]]]:
-        return self.load(name, "pq_codebooks")["payload"]
-
     def save_lr_weights(self, name: str, weights_micro: list[int],
                         **params) -> None:
         self.save(name, "lr_weights", weights_micro, params)
 
-    def load_lr_weights(self, name: str) -> list[int]:
-        return self.load(name, "lr_weights")["payload"]
-
     def save_lang_lr(self, name: str,
                      models: "dict[str, list[int]]", **params) -> None:
         self.save(name, "lang_lr", models, params)
-
-    def load_lang_lr(self, name: str) -> "dict[str, list[int]]":
-        return self.load(name, "lang_lr")["payload"]
 
     def save_pca(self, name: str, mean: list[float],
                  components: list[list[float]],
@@ -178,7 +141,3 @@ class ModelStore:
         self.save(name, "pca", {
             "mean": mean, "components": components,
             "explained_variance": explained_variance}, params)
-
-    def load_pca(self, name: str):
-        p = self.load(name, "pca")["payload"]
-        return p["mean"], p["components"], p["explained_variance"]

@@ -89,13 +89,10 @@ def _reset_stats(df: DataFrame) -> DataFrame:
 def _ckpt(df: DataFrame, mode, reset_stats: bool = False) -> DataFrame:
     """Per-round lineage truncation. ``mode``: False → none;
     True/'local' → localCheckpoint (executor blocks — fast, lost
-    with an executor); 'local_disk' → localCheckpoint with DISK_ONLY
-    storage (bounded heap — the right mode when the per-round frame
-    is a large fraction of executor memory, e.g. 10^8+ rows on a
-    single JVM); 'reliable' → DataFrame.checkpoint to the
+    with an executor); 'reliable' → DataFrame.checkpoint to the
     SparkContext checkpoint dir (survives executor loss; see module
     docstring). Results are mode-independent — only failure-recovery
-    and memory behavior differ. ``reset_stats=True`` additionally
+    behavior differs. ``reset_stats=True`` additionally
     strips the checkpoint's inherited size estimate (_reset_stats) —
     required by SELF-JOINING loops, whose estimates otherwise double
     per round until plan-stats arithmetic overflows."""
@@ -104,11 +101,6 @@ def _ckpt(df: DataFrame, mode, reset_stats: bool = False) -> DataFrame:
         return df
     if mode is True or mode == "local":
         return fix(df.localCheckpoint(eager=True))
-    if mode == "local_disk":
-        from pyspark import StorageLevel
-
-        return fix(df.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY))
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
@@ -118,8 +110,8 @@ def _ckpt(df: DataFrame, mode, reset_stats: bool = False) -> DataFrame:
                 "SparkContext.setCheckpointDir first)")
         return fix(df.checkpoint(eager=True))
     raise ValueError(
-        f"checkpoint must be False, True, 'local', 'local_disk' or "
-        f"'reliable' (got {mode!r})")
+        f"checkpoint must be False, True, 'local' or 'reliable' "
+        f"(got {mode!r})")
 
 
 def _ckpt_obs(df: DataFrame, mode, *aggs, reset_stats: bool = False):
@@ -128,7 +120,7 @@ def _ckpt_obs(df: DataFrame, mode, *aggs, reset_stats: bool = False):
     checkpoint action), so a superstep's convergence probe needs no
     second job — one barrier, one job (guide §2.4). Returns
     ``(ckpt_df, metrics_dict)``; ``aggs`` must be aliased aggregate
-    Columns. Verified on Spark 4.1 for local/local_disk/reliable
+    Columns. Verified on Spark 4.1 for local and reliable
     checkpoints, empty frames, and shuffled/AQE plans (the metric
     arrives in ~2 ms vs ~100 ms for a separate isEmpty job).
 
@@ -162,23 +154,11 @@ def _prepare_ckpt(df: DataFrame, checkpoint, checkpoint_dir):
     """Entry-point half of the checkpoint option: install
     ``checkpoint_dir`` on the SparkContext when given (and upgrade
     the default mode to 'reliable' — naming a durable dir means you
-    want it used). The BRAHMAND_CHECKPOINT env var overrides the
-    DEFAULT mode only (checkpoint=True) — how the scale soak flips
-    every iterative gate to 'local_disk' without touching call
-    sites; an explicit argument always wins, and so does an explicit
-    ``checkpoint_dir`` (naming a durable dir means you want reliable
-    checkpoints -- the env must not silently downgrade that; review
-    r10). Returns the effective mode for `_ckpt`."""
+    want it used). Returns the effective mode for `_ckpt`."""
     if checkpoint_dir is not None:
         df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
         if checkpoint is True:
             checkpoint = "reliable"
-    if checkpoint is True:
-        import os
-
-        env = os.environ.get("BRAHMAND_CHECKPOINT", "").strip()
-        if env:
-            checkpoint = env
     return checkpoint
 
 

@@ -273,8 +273,9 @@ def quality_filter_lr(
 ) -> DataFrame:
     """The CCNet-style learned quality stage in one call: train
     reference-vs-corpus, keep documents scoring >= min_score. Pass a
-    persisted ``weights`` vector (models.ModelStore.load_lr_weights)
-    to skip training — fit once, filter for weeks."""
+    persisted ``weights`` vector (the payload of a saved 'lr_weights'
+    model, models.ModelStore.load) to skip training — fit once,
+    filter for weeks."""
     if weights is None:
         if reference is None:
             raise ValueError(

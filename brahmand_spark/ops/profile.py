@@ -16,8 +16,7 @@ Scale shape:
   sketch.
 - ``numeric_histogram`` is one map-side-combined count shuffle with at
   most ``bins`` surviving rows: fixed-width buckets from caller-given
-  or probed (min, max) bounds — same fixed-point trick as
-  ops/layout's z-ranks.
+  or probed (min, max) bounds.
 """
 
 from __future__ import annotations

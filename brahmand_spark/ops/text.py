@@ -108,7 +108,8 @@ def lang_id(df: DataFrame, text_col: str = "text",
         if models is None:
             raise ValueError(
                 "lang_id(method='lr') needs models= from "
-                "train_lang_classifier (or ModelStore.load_lang_lr)")
+                "train_lang_classifier (or a saved 'lang_lr' model's "
+                "ModelStore.load payload)")
         return lang_scores_lr(df, models, text_col, id_col, n=n)
     if method != "markers":
         raise ValueError("method must be 'markers' or 'lr'")

@@ -37,26 +37,17 @@ class GraphSession:
         assume_referential_integrity: bool = False,
         models_path: Optional[str] = None,
         write_path: Optional[str] = None,
-        write_format: str = "parquet",
     ):
         self.spark = spark
         self.catalog_path = catalog_path
         # Durable write commits (r12, VERDICT r11 missing #6): when a
         # write_path is given, every committed table snapshot (plain
         # writes, each CALL { } IN TRANSACTIONS batch, concurrent
-        # merges) ALSO lands at <write_path>/<table_name> in
-        # write_format ('parquet' anywhere; 'delta'/'iceberg' when
-        # their runtimes are on the session — ops/lakehouse gates
-        # loudly), and a NEW session with the same write_path reloads
-        # them — a restart no longer loses committed batches. Pair
-        # with catalog_path so SET-created columns reload too.
+        # merges) ALSO lands at <write_path>/<table_name> as a
+        # parquet snapshot, and a NEW session with the same write_path
+        # reloads them — a restart no longer loses committed batches.
+        # Pair with catalog_path so SET-created columns reload too.
         self.write_path = write_path
-        self.write_format = write_format
-        # table -> column list of its durable copy; the gate for the
-        # delta-proportional commit path (writes._durable_persist):
-        # first commits and schema-widening commits snapshot (and
-        # re-baseline), same-schema keyed commits MERGE.
-        self._durable_cols: dict[str, list] = {}
         # Fit-artifact store (models.ModelStore): explicit path, or
         # derived `<catalog_path>.models` when a catalog is on disk.
         self._models_path = models_path
@@ -91,18 +82,11 @@ class GraphSession:
             if not os.path.isdir(p):
                 continue
             try:
-                self.tables[name] = (
-                    self.spark.read.format(self.write_format).load(p))
-                # column baseline for the delta-proportional commit
-                # path (r13, writes._durable_persist): a reloaded
-                # table's next keyed commit can MERGE, not snapshot
-                self._durable_cols[name] = list(
-                    self.tables[name].columns)
+                self.tables[name] = self.spark.read.parquet(p)
             except Exception as exc:
                 raise CatalogError(
                     f"could not reload durable table '{name}' from "
-                    f"{p} as {self.write_format!r} — was it written "
-                    f"with a different write_format?: {exc}") from exc
+                    f"{p}: {exc}") from exc
 
     @property
     def model_store(self):
@@ -424,24 +408,6 @@ class GraphSession:
             "explodes": plan.count("Generate explode"),
             "python_stages": plan.count("EvalPython"),
         }
-
-    def explain(self, cypher: str, mode: str = "formatted") -> None:
-        self.execute(cypher).explain(mode)
-
-    def profile(self, cypher: str, params: Optional[dict] = None) -> dict:
-        """Compile (not run) a query and summarize its physical plan —
-        the numbers a user tunes against: scans, joins, exchanges
-        (shuffles/broadcasts), explode-expansions, Python stages (should
-        be 0 on the Cypher path), plus the full plan text."""
-        df = self.execute(cypher, params)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return {**self._plan_counters(plan), "plan": plan}
-
-    def sql(self, query: str) -> DataFrame:
-        """Escape hatch: plain Spark SQL over registered tables."""
-        for name, df in self.tables.items():
-            df.createOrReplaceTempView(name)
-        return self.spark.sql(query)
 
     def _persist_catalog(self) -> None:
         if self.catalog_path:

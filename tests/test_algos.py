@@ -1125,23 +1125,6 @@ class TestReliableCheckpoint:
                      checkpoint="nope").collect()
 
 
-class TestCheckpointEnvPrecedence:
-    def test_env_does_not_downgrade_explicit_dir(
-            self, spark, tmp_path, monkeypatch):
-        """BRAHMAND_CHECKPOINT overrides the DEFAULT mode only — an
-        explicit checkpoint_dir still means reliable (review r10)."""
-        from brahmand_spark.ops.algos import _prepare_ckpt
-
-        df = spark.range(1)
-        monkeypatch.setenv("BRAHMAND_CHECKPOINT", "local_disk")
-        assert _prepare_ckpt(df, True, str(tmp_path / "ck")) \
-            == "reliable"
-        assert _prepare_ckpt(df, True, None) == "local_disk"
-        assert _prepare_ckpt(df, "local", None) == "local"
-        monkeypatch.delenv("BRAHMAND_CHECKPOINT")
-        assert _prepare_ckpt(df, True, None) is True
-
-
 class TestPartitionCountInvariance:
     """Loop results are a pure function of the data: the session's
     reduce-partition count is a performance setting only."""
@@ -1257,7 +1240,7 @@ class TestCkptObs:
               .withColumn("chg", F.col("k") % 3 == 0))
         want_chg = df.filter("chg").count()
         spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        for mode in (False, True, "local", "local_disk", "reliable"):
+        for mode in (False, True, "local", "reliable"):
             out, m = _ckpt_obs(
                 df, mode, F.count(F.when(F.col("chg"), True)).alias("c"),
                 F.count(F.lit(1)).alias("n"))

@@ -105,7 +105,7 @@ class TestBuildAndSearch:
 
     def test_wrong_kind_rejected(self, spark, tmp_path):
         st = ModelStore(str(tmp_path / "m"))
-        st.save_lsh_planes("idx", [[0.1, 0.2]])
+        st.save("idx", "lsh_planes", [[0.1, 0.2]])
         with pytest.raises(CatalogError, match="ann_index"):
             ann_search(spark, "idx", _emb(spark).limit(1), st,
                        corpus=_emb(spark))

@@ -50,12 +50,6 @@ class TestCatalog:
         with pytest.raises(CatalogError):
             g.add_node(NodeSchema("Person", "x", "id"))
 
-    def test_rels_between(self):
-        g = sample_schema()
-        assert [r.type_name for r in g.rels_between("Person", "Company")] == ["WORKS_AT"]
-        assert g.rels_between("Company", "Person") == []
-        assert [r.type_name for r in g.rels_between(None, "Company")] == ["WORKS_AT"]
-
 
 class TestDDLSession:
     def test_node_id_dtype_enforced(self, spark):

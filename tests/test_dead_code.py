@@ -1,5 +1,6 @@
-"""Regrowth guard: every public top-level def in brahmand_spark/ is
-referenced somewhere in the production code (the library itself, the
+"""Regrowth guard: every public top-level def in brahmand_spark/, and
+every public method of a top-level library class, is referenced
+somewhere in the production code (the library itself, the
 gate registry, bench.py, perfbench/ or tools/), not only in tests/. A
 name counts as reached when it occurs in code outside its own def: as a
 name, an attribute, an imported name, or a string constant that is a
@@ -17,6 +18,11 @@ ALLOWED = {
     "server.repl": "interactive client-parity entry point, run by hand",
     "ops/similarity.pq_encode":
         "reference encoder the tests check pq_fit/ivfpq_topk against",
+    "session.GraphSession.drop_adj_index":
+        "releases build_adj_index's session-lifetime persist",
+    "session.GraphSession.refresh_catalog":
+        "the reference's multi-instance catalog re-poll, run from a "
+        "caller's timer",
 }
 
 
@@ -54,6 +60,22 @@ def test_docstring_mentions_do_not_count():
     assert not {"h", "k", "not one", "o", "p", "f"} & set(names)
 
 
+def _public_defs(body, prefix):
+    """``(key, node)`` for each public def in ``body`` and, inside a
+    public class, each of its public methods."""
+    for node in body:
+        if (not isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                or node.name.startswith("_")):
+            continue
+        key = f"{prefix}.{node.name}"
+        yield key, node
+        if isinstance(node, ast.ClassDef):
+            for meth in node.body:
+                if (isinstance(meth, ast.FunctionDef)
+                        and not meth.name.startswith("_")):
+                    yield f"{key}.{meth.name}", meth
+
+
 def test_every_public_library_def_is_reached_outside_tests():
     names = Counter()
     for p in _production_files():
@@ -61,12 +83,9 @@ def test_every_public_library_def_is_reached_outside_tests():
     lib = ROOT / "brahmand_spark"
     seen, unreached = set(), []
     for path in sorted(lib.rglob("*.py")):
-        for node in ast.parse(path.read_text()).body:
-            if (not isinstance(node, (ast.FunctionDef, ast.ClassDef))
-                    or node.name.startswith("_")):
-                continue
-            key = (f"{path.relative_to(lib).with_suffix('').as_posix()}"
-                   f".{node.name}")
+        prefix = path.relative_to(lib).with_suffix("").as_posix()
+        for key, node in _public_defs(
+                ast.parse(path.read_text()).body, prefix):
             seen.add(key)
             if (names[node.name] == _code_names(node)[node.name]
                     and key not in ALLOWED):

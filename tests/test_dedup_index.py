@@ -149,7 +149,7 @@ class TestBuildAndProbe:
 
     def test_wrong_kind_rejected(self, spark, tmp_path):
         st = ModelStore(str(tmp_path / "m"))
-        st.save_lsh_planes("dix", [[0.1, 0.2]])
+        st.save("dix", "lsh_planes", [[0.1, 0.2]])
         with pytest.raises(CatalogError, match="dedup_index"):
             dedup_against(spark, "dix", _docs(spark).limit(1), st)
 

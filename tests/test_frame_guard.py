@@ -8,7 +8,10 @@ that is not listed with its reason.
 - Session conf is set only by ``io``. A ``conf.set`` anywhere else
   changes the plan of every query running on the session meanwhile;
   choices local to one plan belong in that plan (hints, repartition),
-  and physical sizing is AQE's."""
+  and physical sizing is AQE's.
+- No session temp views. A view name lives in the session catalog, so
+  one request's registration is visible to, and replaced by, every
+  other request on the session; frames are passed as frames."""
 
 import ast
 import pathlib
@@ -87,3 +90,14 @@ def test_session_conf_set_only_in_io():
         "changes every concurrent query's plan; keep the choice local "
         "to the plan")
     assert set(CONF_SET_ALLOWED) <= sites, set(CONF_SET_ALLOWED) - sites
+
+
+def test_no_session_temp_views():
+    sites = sorted(
+        site
+        for attr in ("createOrReplaceTempView", "createTempView",
+                     "createGlobalTempView")
+        for site in _sites(attr))
+    assert not sites, (
+        f"session temp views registered at {sites} — a view name is "
+        "session-global; pass the DataFrame instead")

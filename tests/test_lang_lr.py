@@ -164,7 +164,8 @@ class TestLangIdLr:
         models = train_lang_classifier(train, dim=128, epochs=2)
         st = ModelStore(str(tmp_path))
         st.save_lang_lr("langid", models, dim=128, epochs=2)
-        loaded = ModelStore(str(tmp_path)).load_lang_lr("langid")
+        loaded = ModelStore(str(tmp_path)).load(
+            "langid", "lang_lr")["payload"]
         assert loaded == models
         df = spark.createDataFrame(
             [(1, "the quick brown fox")], "doc_id long, text string")

@@ -73,8 +73,8 @@ class TestRoundTrips:
         cents = train_ivf_centroids(emb, 8, "vec_id", "embedding",
                                     1000, 5, 42)
         st = ModelStore(str(tmp_path))
-        st.save_ivf_centroids("ivf", cents, n_cells=8)
-        loaded = st.load_ivf_centroids("ivf")
+        st.save("ivf", "ivf_centroids", cents, {"n_cells": 8})
+        loaded = st.load("ivf", "ivf_centroids")["payload"]
         assert loaded == cents  # exact float equality
         q = emb.filter(F.col("vec_id") < 3)
         a = sorted(map(tuple, ivf_topk(
@@ -88,8 +88,9 @@ class TestRoundTrips:
 
         planes = _hyperplanes(16, 6, seed=7)
         st = ModelStore(str(tmp_path))
-        st.save_lsh_planes("planes", planes, dim=16, n_planes=6, seed=7)
-        assert st.load_lsh_planes("planes") == planes
+        st.save("planes", "lsh_planes", planes,
+                {"dim": 16, "n_planes": 6, "seed": 7})
+        assert st.load("planes", "lsh_planes")["payload"] == planes
 
     def test_bpe_merges(self, spark, tmp_path):
         from brahmand_spark.ops.bpe import bpe_segment, train_bpe
@@ -97,9 +98,11 @@ class TestRoundTrips:
         docs = _docs(spark).limit(40)
         merges = train_bpe(docs, n_merges=6, min_count=2)
         st = ModelStore(str(tmp_path))
-        st.save_bpe_merges("bpe", merges, n_merges=6)
-        loaded = st.load_bpe_merges("bpe")
-        assert loaded == merges  # tuples restored
+        st.save("bpe", "bpe_merges", [list(m) for m in merges],
+                {"n_merges": 6})
+        loaded = [tuple(m)
+                  for m in st.load("bpe", "bpe_merges")["payload"]]
+        assert loaded == merges
         a = sorted(map(str, bpe_segment(docs, merges).collect()))
         b = sorted(map(str, bpe_segment(docs, loaded).collect()))
         assert a == b
@@ -114,7 +117,7 @@ class TestRoundTrips:
         w = train_text_classifier(pos, neg, dim=256, epochs=2)
         st = ModelStore(str(tmp_path))
         st.save_lr_weights("lr", w, dim=256)
-        loaded = st.load_lr_weights("lr")
+        loaded = st.load("lr", "lr_weights")["payload"]
         assert loaded == w
         a = sorted(map(str, classifier_score(
             docs.limit(20), w).collect()))
@@ -153,7 +156,8 @@ class TestRoundTrips:
         mean, comps, var = pca_fit(emb, k=4)
         st = ModelStore(str(tmp_path))
         st.save_pca("pca", mean, comps, var, k=4)
-        lm, lc, lv = st.load_pca("pca")
+        p = st.load("pca", "pca")["payload"]
+        lm, lc, lv = p["mean"], p["components"], p["explained_variance"]
         assert (lm, lc, lv) == (mean, comps, var)
         a = sorted(map(str, pca_transform(emb, mean, comps).collect()))
         b = sorted(map(str, pca_transform(emb, lm, lc).collect()))
@@ -218,7 +222,7 @@ class TestSessionIntegration:
             "CALL corpus.quality_lr('Doc', 'Ref', 0.4, 256, 2, "
             "'doc_id', 'text', 'qlr')").collect())
         assert s.model_store.exists("qlr")
-        w = s.model_store.load_lr_weights("qlr")
+        w = s.model_store.load("qlr", "lr_weights")["payload"]
         assert len(w) == 257
         b = sorted(r["doc_id"] for r in s.execute(
             "CALL corpus.quality_lr('Doc', 'Ref', 0.4, 256, 2, "
@@ -274,8 +278,8 @@ def test_pq_codebooks_round_trip(spark, tmp_path):
     emb = _emb(spark)
     books = pq_fit(emb, m=4, n_codes=8, sample_size=200)
     st = ModelStore(str(tmp_path))
-    st.save_pq_codebooks("pq", books, m=4, n_codes=8)
-    loaded = st.load_pq_codebooks("pq")
+    st.save("pq", "pq_codebooks", books, {"m": 4, "n_codes": 8})
+    loaded = st.load("pq", "pq_codebooks")["payload"]
     assert loaded == books
     a = sorted(map(str, pq_encode(emb.limit(40), books).collect()))
     b = sorted(map(str, pq_encode(emb.limit(40), loaded).collect()))

@@ -411,14 +411,16 @@ class TestFkFusion:
 
 
 def test_profile_summarizes_plan(tpch):
-    p = tpch.profile(
-        "MATCH (c:Customer)-[:PLACED]->(o:Order) RETURN count(*) AS n")
+    p = tpch.execute(
+        "PROFILE MATCH (c:Customer)-[:PLACED]->(o:Order) "
+        "RETURN count(*) AS n").collect()[0]
     assert p["joins"] == 0 and p["scans"] == 1  # fused + elided
     assert p["python_stages"] == 0
-    assert "AdaptiveSparkPlan" in p["plan"]
-    p2 = tpch.profile("""
+    assert p["final_plan"]  # counted on the AQE plan that ran
+    p2 = tpch.execute("""PROFILE
         MATCH (c:Customer)-[:PLACED]->(o:Order)
-        RETURN c.c_name AS name, round(avg(o.o_totalprice), 2) AS avg""")
+        RETURN c.c_name AS name, round(avg(o.o_totalprice), 2) AS avg"""
+                      ).collect()[0]
     assert p2["joins"] == 1 and p2["scans"] == 2
 
 

@@ -1100,10 +1100,8 @@ class TestConcurrentMergeSemantics:
         k2 = spark.createDataFrame([(i,) for i in range(3, 6)], "id bigint")
         entries = [(t1, [k1]), (t2, [k2])]
         fields = _union_schema("City", [t0, t1, t2])
-        keyed = _merge_keyed(s, "City", t0, entries, fields, True)
-        assert keyed is not None
-        merged, touched = keyed
-        assert set(r["id"] for r in touched.collect()) == set(range(6))
+        merged = _merge_keyed(s, "City", t0, entries, fields, True)
+        assert merged is not None
         plan = merged._jdf.queryExecution().optimizedPlan().toString()
         assert "Except" not in plan
         assert plan.count("LeftAnti") == 1
@@ -1135,9 +1133,9 @@ class TestConcurrentMergeSemantics:
 
 class TestDurableWrites:
     """r12 (VERDICT r11 missing #6): GraphSession(write_path=...)
-    mirrors every committed table snapshot to disk via
-    ops/lakehouse.write_table, and a NEW session with the same
-    write_path reloads them — CALL { } IN TRANSACTIONS batches
+    mirrors every committed table snapshot to disk as a parquet
+    overwrite (writes._durable_persist), and a NEW session with the
+    same write_path reloads them — CALL { } IN TRANSACTIONS batches
     survive a restart; rolled-back batches leave no durable trace."""
 
     def _build(self, spark, tmp_path):
@@ -1161,6 +1159,9 @@ class TestDurableWrites:
         # restart: a brand-new session on the same paths
         s2 = GraphSession(spark, allow_writes=True,
                           write_path=wp, catalog_path=cat)
+        # the reloaded frame keeps its names and types, not just values
+        assert s2.tables["Person"].dtypes == [
+            ("id", "bigint"), ("age", "bigint")]
         assert rows(s2, "MATCH (p:Person) RETURN p.id AS i, p.age AS a") \
             == expect
 
@@ -1198,76 +1199,6 @@ class TestDurableWrites:
             == {(i, i) for i in range(4)}
         assert s2.execute("MATCH (l:Log) RETURN count(*) AS n"
                           ).collect()[0]["n"] == 0
-
-    def test_delta_commits_are_batch_proportional(
-            self, spark, tmp_path, monkeypatch):
-        """r13 (VERDICT r12 missing #1): with a MERGE-capable
-        write_format, a keyed commit routes through
-        ops/lakehouse.merge_commit — touched-key MERGE DELETE plus a
-        batch-sized append — instead of the full-snapshot overwrite;
-        first commits and schema-widening commits still snapshot (and
-        re-baseline). The Delta runtime is dependency-gated, so this
-        pins the ROUTING and the batch-proportional touched sets
-        against a parquet stand-in executor with real MERGE
-        semantics; TestMergeCommit (test_lakehouse.py) pins the
-        statement/source construction itself."""
-        from brahmand_spark.ops import lakehouse
-
-        real_write = lakehouse.write_table
-        log = []
-
-        def fake_write(df, path, format="parquet", **kw):
-            log.append(("snapshot", df.count()))
-            real_write(df, path, format="parquet", **kw)
-
-        def fake_merge(spark_, path, new_table, touched,
-                       format="delta", **kw):
-            keys = touched.dropDuplicates()
-            kc = list(keys.columns)
-            log.append(("merge", keys.count()))
-            kept = spark_.read.parquet(path).join(
-                keys, on=kc, how="left_anti")
-            repl = new_table.join(keys, on=kc, how="leftsemi")
-            out = kept.unionByName(repl).localCheckpoint(eager=True)
-            real_write(out, path, format="parquet")
-
-        monkeypatch.setattr(lakehouse, "format_available",
-                            lambda s, f: True)
-        monkeypatch.setattr(lakehouse, "write_table", fake_write)
-        monkeypatch.setattr(lakehouse, "merge_commit", fake_merge)
-        wp = str(tmp_path / "wal")
-        s = GraphSession(spark, allow_writes=True,
-                         write_path=wp, write_format="delta")
-        s.execute("CREATE NODE TABLE Person (id Int64, age Int64, "
-                  "PRIMARY KEY(id), NODE ID(id))")
-        for i in range(8):
-            s.execute(f"CREATE (p:Person {{id: {i}, age: {i}}})")
-        # first commit snapshots (no durable copy yet), the next 7
-        # single-row CREATEs each MERGE one key
-        assert log[0] == ("snapshot", 1)
-        assert log[1:8] == [("merge", 1)] * 7
-        s.execute("MATCH (p:Person) "
-                  "CALL { WITH p SET p.age = p.age + 100 } "
-                  "IN TRANSACTIONS OF 4 ROWS")
-        assert log[8:10] == [("merge", 4)] * 2  # ∝ batch, not table
-        # concurrent keyed merge: ONE commit whose touched set is the
-        # union of the batch keys — still ∝ Σ batch rows
-        s.execute("MATCH (p:Person) "
-                  "CALL { WITH p SET p.age = p.age + 1 } "
-                  "IN 2 CONCURRENT TRANSACTIONS OF 4 ROWS")
-        assert log[10] == ("merge", 8)
-        # schema widening falls back to a snapshot and re-baselines
-        s.execute("MATCH (p:Person) SET p.note = 'x'")
-        assert log[11] == ("snapshot", 8)
-        s.execute("MATCH (p:Person) SET p.age = p.age - 1")
-        assert log[12] == ("merge", 8)
-        # the emulated on-disk table tracked every commit exactly
-        disk = {(r["id"], r["age"], r["note"])
-                for r in spark.read.parquet(f"{wp}/Person").collect()}
-        assert disk == {(i, i + 100, "x") for i in range(8)}
-        assert rows(s, "MATCH (p:Person) "
-                       "RETURN p.id AS i, p.age AS a") == \
-            {(i, i + 100) for i in range(8)}
 
     def test_no_write_path_stays_in_memory(self, spark, tmp_path):
         import os
