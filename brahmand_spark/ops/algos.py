@@ -198,32 +198,34 @@ def pagerank(
     sources can't reach converge to 0. Same superstep shape: the
     preference column is a left-semi-derived 0/1 flag joined once onto
     the vertex set, so no per-iteration extra work.
+
+    Two halves: ``pagerank_prologue`` builds the inputs that depend on
+    the edge list alone, and ``pagerank_loop`` runs the supersteps over
+    them. The served ``CALL graph.pagerank`` keeps the prologue per
+    relationship version and runs only the loop (procedures.py).
     """
     checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
+    return pagerank_loop(
+        pagerank_prologue(edges, src, dst, checkpoint),
+        iterations=iterations, damping=damping, checkpoint=checkpoint,
+        sources=sources)
+
+
+def pagerank_prologue(edges: DataFrame, src: str = "src",
+                      dst: str = "dst", checkpoint: bool | str = True):
+    """The part of pagerank that depends on the edge list only:
+    ``(vertices, e2, dang_v, n)`` — the vertex set ``(id)``, the edges
+    joined to their source's out-degree ``(src, dst, out_deg)``, the
+    dangling vertices ``(id)`` and the vertex count, each frame
+    checkpointed (three jobs). No damping, iteration count or source
+    set enters it, so one build serves every call over the same
+    edges."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     vertices = e.select(F.col("src").alias("id")).union(
         e.select(F.col("dst").alias("id"))
     ).distinct()
-    if sources is not None:
-        # preference weight: n/|S| on sources, 0 elsewhere (sums to n,
-        # matching the uniform case where every vertex carries 1)
-        s = sources.select(F.col(sources.columns[0]).alias("id")) \
-            .distinct().withColumn("_is_src", F.lit(1.0))
-        n_src = s.count()
-        if n_src == 0:
-            raise ValueError("sources must contain at least one vertex")
-        vertices = vertices.join(s, "id", "left").select(
-            "id", F.coalesce("_is_src", F.lit(0.0)).alias("_pref")
-        )
-    else:
-        vertices = vertices.withColumn("_pref", F.lit(1.0))
     vertices, _m = _ckpt_obs(vertices, checkpoint,
                              F.count(F.lit(1)).alias("n"))
-    n = _m["n"]
-    # per-vertex teleport share: uniform -> 1/n * n = 1; personalized
-    # -> n/|S| on sources (both normalized so ranks sum to n)
-    pref_scale = 1.0 if sources is None else float(n) / n_src
-    pref = F.col("_pref") * F.lit(pref_scale)
     # r14 optimization (guide §2.4): the out-degree attaches to the
     # EDGE set once up front (e2 = e ⋈ out_deg, checkpointed) and the
     # dangling-vertex set is precomputed once, so each iteration is
@@ -238,8 +240,36 @@ def pagerank(
     e2 = _ckpt(e.join(out_deg, "src"), checkpoint)
     dang_v = _ckpt(
         vertices.join(out_deg.withColumnRenamed("src", "id"), "id",
-                      "left_anti").select("id"),
+                      "left_anti"),
         checkpoint)
+    return vertices, e2, dang_v, _m["n"]
+
+
+def pagerank_loop(
+    prologue, iterations: int = 10, damping: float = 0.85,
+    checkpoint: bool | str = True, sources: DataFrame | None = None,
+) -> DataFrame:
+    """The supersteps of pagerank over ``pagerank_prologue``'s
+    inputs. The source preference is applied here, per call, so the
+    prologue stays shared between uniform and personalized runs."""
+    vertices, e2, dang_v, n = prologue
+    if sources is not None:
+        # preference weight: n/|S| on sources, 0 elsewhere (sums to n,
+        # matching the uniform case where every vertex carries 1)
+        s = sources.select(F.col(sources.columns[0]).alias("id")) \
+            .distinct().withColumn("_is_src", F.lit(1.0))
+        n_src = s.count()
+        if n_src == 0:
+            raise ValueError("sources must contain at least one vertex")
+        vertices = _ckpt(vertices.join(s, "id", "left").select(
+            "id", F.coalesce("_is_src", F.lit(0.0)).alias("_pref")
+        ), checkpoint)
+    else:
+        vertices = vertices.withColumn("_pref", F.lit(1.0))
+    # per-vertex teleport share: uniform -> 1/n * n = 1; personalized
+    # -> n/|S| on sources (both normalized so ranks sum to n)
+    pref_scale = 1.0 if sources is None else float(n) / n_src
+    pref = F.col("_pref") * F.lit(pref_scale)
     ranks = vertices.select("id", "_pref", F.lit(1.0).alias("rank"))
     for _ in range(iterations):
         contribs = (

@@ -8,8 +8,22 @@ LIMIT 10`` — the procedure builds the edge list straight from the
 relationship's catalog entry (from/to id columns, the same physical
 columns the MATCH planner joins on) and returns the algorithm's
 DataFrame; YIELD projects/renames, WHERE/ORDER BY/SKIP/LIMIT compile
-through the same ExprCompiler as any query. Everything stays lazy —
-the iterative algorithms run their supersteps when the caller acts.
+through the same ExprCompiler as any query. The iterative algorithms
+are NOT lazy: each checkpoints its prologue and every superstep with
+``localCheckpoint(eager=True)``, so their Spark jobs run inside the
+call, and the returned frame reads the last checkpoint when the caller
+acts.
+
+Projection reuse (``graph.pagerank``): the pagerank prologue (vertex
+set, degree-joined edges, dangling set) is kept on the session, one
+entry per relationship, and reused while the relationship's frame in
+``session.tables`` is the same object and its from/to columns are
+unchanged. Every commit installs a new frame object (``writes._store``,
+a rolled-back batch's snapshot restore, ``register_table``), so object
+identity is the table version; ``_store`` and ``register_table`` also
+drop the entry, so Spark's cleaner can free its checkpoint blocks. A
+relationship read from a path or view on each call is never cached,
+and a call that raises drops its entry.
 
 Procedure args are positional literals (or ``$parameters``), mirroring
 each ops/algos signature's leading arguments.
@@ -30,17 +44,25 @@ from .io import local_frame
 from .parser import ast
 
 
-def _edges(session, rel_type: str) -> DataFrame:
+def _rel(session, rel_type: str):
     rel = session.schema.relationships.get(rel_type)
     if rel is None:
         raise PlanError(
             f"unknown relationship type '{rel_type}' "
             f"(known: {sorted(session.schema.relationships)})")
-    df = session._load_for_label(rel_type)
+    return rel
+
+
+def _src_dst(df: DataFrame, rel) -> DataFrame:
     return df.select(
         F.col(rel.from_column).alias("src"),
         F.col(rel.to_column).alias("dst"),
     )
+
+
+def _edges(session, rel_type: str) -> DataFrame:
+    rel = _rel(session, rel_type)
+    return _src_dst(session._load_for_label(rel_type), rel)
 
 
 def _sources(session, ids) -> DataFrame:
@@ -52,13 +74,29 @@ def _sources(session, ids) -> DataFrame:
 def _p_pagerank(session, rel, iterations=10, damping=0.85,
                 sources=None):
     """Optional 4th arg: a seed id or id list -> PERSONALIZED
-    PageRank (random walk with restart to the seeds)."""
-    from .ops.algos import pagerank
+    PageRank (random walk with restart to the seeds). The prologue is
+    reused across calls while the relationship's registered frame is
+    unchanged (module docstring)."""
+    from .ops.algos import pagerank_loop, pagerank_prologue
 
-    return pagerank(
-        _edges(session, rel), iterations=int(iterations),
-        damping=float(damping),
-        sources=None if sources is None else _sources(session, sources))
+    r = _rel(session, rel)
+    df = session._load_for_label(rel)
+    cols = (r.from_column, r.to_column)
+    hit = session._projections.get(rel)
+    if hit is not None and hit[0] is df and hit[1] == cols:
+        prologue = hit[2]
+    else:
+        prologue = pagerank_prologue(_src_dst(df, r))
+        if any(session.tables.get(k) is df for k in (r.table_name, rel)):
+            session._projections[rel] = (df, cols, prologue)
+    try:
+        return pagerank_loop(
+            prologue, iterations=int(iterations), damping=float(damping),
+            sources=None if sources is None else _sources(session, sources))
+    except Exception:
+        # lost checkpoint blocks cost one failed call, not a dead cache
+        session._projections.pop(rel, None)
+        raise
 
 
 def _p_wcc(session, rel, algorithm="hashmin"):
@@ -111,9 +149,7 @@ def _p_bfs(session, rel, source, max_hops=10):
 def _p_sssp(session, rel, weight_prop, source, max_iterations=20):
     from .ops.algos import sssp_weighted
 
-    r = session.schema.relationships.get(rel)
-    if r is None:
-        raise PlanError(f"unknown relationship type '{rel}'")
+    r = _rel(session, rel)
     if weight_prop not in r.column_names:
         raise PlanError(
             f"relationship '{rel}' has no property '{weight_prop}' "

@@ -68,6 +68,9 @@ class GraphSession:
             self.schema = GraphSchema()
         # name -> DataFrame registered directly (e.g. derived FK edge views)
         self.tables: dict[str, DataFrame] = {}
+        # rel type -> (frame, (from_column, to_column), pagerank
+        # prologue): served pagerank's reused inputs (procedures.py)
+        self._projections: dict[str, tuple] = {}
         if write_path is not None and os.path.isdir(write_path):
             self._restore_durable()
 
@@ -112,6 +115,9 @@ class GraphSession:
         if isinstance(table, str):
             table = self._load_path_or_view(table)
         self.tables[name] = table
+        for rel in self.schema.relationships.values():
+            if name in (rel.type_name, rel.table_name):
+                self._projections.pop(rel.type_name, None)
 
     def _load_path_or_view(self, name: str) -> DataFrame:
         from .io import read_source

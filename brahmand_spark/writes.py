@@ -616,7 +616,8 @@ def _store(session, table_name: str, df: DataFrame,
     relationship: the planner requires both direction tables to take
     the indexed path, so dropping them falls every hop back to the
     (fresh) edge list until the user re-runs ``build_adj_index`` (or
-    the streaming maintenance catches up)."""
+    the streaming maintenance catches up). Drops the relationship's
+    served pagerank projection too (procedures.py)."""
     tracker = getattr(session, "_write_touched", None)
     if tracker is not None:
         if touched is None:
@@ -636,6 +637,7 @@ def _store(session, table_name: str, df: DataFrame,
         if table_name in (rel.type_name, rel.table_name):
             session.tables.pop(f"{rel.type_name}_outgoing", None)
             session.tables.pop(f"{rel.type_name}_incoming", None)
+            session._projections.pop(rel.type_name, None)
     return out
 
 

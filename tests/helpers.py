@@ -45,3 +45,19 @@ def assert_same(spark_df, duck_rel, float_places: int = 6):
     )
     for i, (l, r) in enumerate(zip(left, right)):
         assert l == r, f"row {i} mismatch:\n  spark={l}\n  duck ={r}"
+
+
+def count_jobs(spark, fn):
+    """``(fn(), number of Spark jobs it launched)``, counted through
+    a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

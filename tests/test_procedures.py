@@ -6,7 +6,7 @@ import pytest
 
 from brahmand_spark.errors import PlanError
 
-from .helpers import assert_same
+from .helpers import assert_same, count_jobs
 
 
 class TestCallProcedures:
@@ -315,3 +315,220 @@ class TestDbIndexes:
             "WHERE kind = 'ann_index' ORDER BY name").collect()
         assert [r["name"] for r in out] == ["v1"]
         assert out[0]["cell_skew"] >= 1.0
+
+
+# -- graph.pagerank projection reuse ----------------------------------------
+
+KNOWS = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 3), (5, 0)]
+PR_CALL = "CALL graph.pagerank('KNOWS', 3) YIELD id, rank"
+
+
+def _knows_session(spark, edges=KNOWS):
+    """Writable session: Person 0..6 and KNOWS ``edges``, registered."""
+    from brahmand_spark import GraphSession
+    from brahmand_spark.io import local_frame
+
+    s = GraphSession(spark, allow_writes=True)
+    s.execute("CREATE NODE TABLE Person (id Int64, "
+              "PRIMARY KEY(id), NODE ID(id))")
+    s.execute("CREATE REL TABLE KNOWS FROM Person TO Person ()")
+    s.register_table("Person", local_frame(
+        spark, [(i,) for i in range(7)], "id bigint"))
+    s.register_table("KNOWS", local_frame(
+        spark, edges, "from_Person bigint, to_Person bigint"))
+    return s
+
+
+def _ranks(session, cypher=PR_CALL):
+    return sorted(map(tuple, session.execute(cypher).collect()))
+
+
+def _same_ranks(a, b):
+    return [i for i, _ in a] == [i for i, _ in b] and all(
+        abs(x - y) < 1e-12 for (_, x), (_, y) in zip(a, b))
+
+
+class TestPagerankProjection:
+    """Served pagerank keeps its prologue (vertex set, degree-joined
+    edges, dangling set) per relationship version: a second call
+    skips it, and every way a relationship's table changes makes the
+    next call rebuild from the new table."""
+
+    def test_second_call_reuses_prologue(self, spark):
+        s = _knows_session(spark)
+        first, n_cold = count_jobs(spark, lambda: _ranks(s))
+        assert "KNOWS" in s._projections
+        second, n_warm = count_jobs(spark, lambda: _ranks(s))
+        assert n_warm < n_cold
+        assert second == first
+
+    @pytest.mark.parametrize("write, edges", [
+        ("MATCH (a:Person {id: 4}) MATCH (b:Person {id: 6}) "
+         "CREATE (a)-[:KNOWS]->(b)", KNOWS + [(4, 6)]),
+        ("MATCH (a:Person {id: 5})-[r:KNOWS]->(b:Person) DELETE r",
+         KNOWS[:-1]),
+    ], ids=["create_edge", "delete_edge"])
+    def test_cypher_write_rebuilds(self, spark, write, edges):
+        s = _knows_session(spark)
+        cached = _ranks(s)
+        s.execute(write).collect()
+        assert "KNOWS" not in s._projections
+        got = _ranks(s)
+        assert _same_ranks(got, _ranks(_knows_session(spark, edges)))
+        assert not _same_ranks(got, cached)
+
+    def test_register_table_rebuilds(self, spark):
+        from brahmand_spark.io import local_frame
+
+        s = _knows_session(spark)
+        cached = _ranks(s)
+        edges = KNOWS + [(6, 5)]
+        s.register_table("KNOWS", local_frame(
+            spark, edges, "from_Person bigint, to_Person bigint"))
+        assert "KNOWS" not in s._projections
+        got = _ranks(s)
+        assert _same_ranks(got, _ranks(_knows_session(spark, edges)))
+        assert not _same_ranks(got, cached)
+
+    def test_new_frame_or_columns_rebuild(self, spark):
+        """The entry is checked against the frame object and the
+        from/to columns, whatever path replaced them."""
+        from brahmand_spark.io import local_frame
+
+        s = _knows_session(spark)
+        cached = _ranks(s)
+        edges = KNOWS + [(6, 5)]
+        s.tables["KNOWS"] = local_frame(
+            spark, edges, "from_Person bigint, to_Person bigint")
+        got = _ranks(s)
+        assert _same_ranks(got, _ranks(_knows_session(spark, edges)))
+        assert not _same_ranks(got, cached)
+        rel = s.schema.relationships["KNOWS"]
+        rel.from_column, rel.to_column = rel.to_column, rel.from_column
+        flipped = _ranks(_knows_session(spark, [(b, a) for a, b in edges]))
+        assert _same_ranks(_ranks(s), flipped)
+
+    def test_failed_transaction_batch_rebuilds(self, spark, monkeypatch):
+        """Batch 0 commits 4->6; batch 1 commits 5->6 and then fails,
+        so its snapshot restore puts batch 0's table back."""
+        from brahmand_spark import writes
+
+        s = _knows_session(spark)
+        cached = _ranks(s)
+        real, calls = writes.apply_write, []
+
+        def second_batch_fails(*a, **k):
+            out = real(*a, **k)
+            calls.append(1)
+            if len(calls) == 2:
+                raise RuntimeError("batch failed after its commit")
+            return out
+
+        monkeypatch.setattr(writes, "apply_write", second_batch_fails)
+        out = s.execute(
+            "MATCH (p:Person) MATCH (q:Person) "
+            "WHERE p.id IN [4, 5] AND q.id = 6 "
+            "CALL { WITH p, q CREATE (p)-[:KNOWS]->(q) } "
+            "IN TRANSACTIONS OF 1 ROWS ON ERROR CONTINUE").collect()
+        monkeypatch.undo()
+        assert [r["committed"] for r in out] == [True, False]
+        got = _ranks(s)
+        assert _same_ranks(
+            got, _ranks(_knows_session(spark, KNOWS + [(4, 6)])))
+        assert not _same_ranks(got, cached)
+
+    def test_personalized_on_cached_inputs(self, spark):
+        from pyspark.sql import functions as F
+
+        from brahmand_spark.io import local_frame
+        from brahmand_spark.ops.algos import pagerank
+
+        s = _knows_session(spark)
+        _ranks(s)  # builds the projection
+        got = _ranks(s, "CALL graph.pagerank('KNOWS', 5, 0.85, [0, 3]) "
+                        "YIELD id, rank")
+        edges = s.tables["KNOWS"].select(
+            F.col("from_Person").alias("src"),
+            F.col("to_Person").alias("dst"))
+        want = sorted(map(tuple, pagerank(
+            edges, iterations=5,
+            sources=local_frame(spark, [(0,), (3,)], "id bigint"),
+        ).collect()))
+        assert _same_ranks(got, want)
+        # the preference is per call: the uniform run is unchanged
+        assert _same_ranks(_ranks(s), _ranks(_knows_session(spark)))
+
+    def test_path_backed_relationship_never_cached(self, spark, tmp_path):
+        from brahmand_spark import GraphSession
+        from brahmand_spark.catalog import NodeSchema, RelationshipSchema
+
+        path = str(tmp_path / "knows.parquet")
+        cols = "from_Person bigint, to_Person bigint"
+        spark.createDataFrame(KNOWS, cols).write.parquet(path)
+        s = GraphSession(spark)
+        s.schema.add_node(NodeSchema(
+            label="Person", table_name="Person", node_id="id",
+            column_names=["id"], primary_keys=["id"]))
+        s.schema.add_relationship(RelationshipSchema(
+            type_name="KNOWS", table_name=path, from_node="Person",
+            to_node="Person", from_column="from_Person",
+            to_column="to_Person", column_names=[]))
+        first = _ranks(s)
+        assert s._projections == {}
+        assert _same_ranks(first, _ranks(_knows_session(spark)))
+        # the file changes under the session: the next call reads it
+        edges = KNOWS + [(6, 5)]
+        spark.createDataFrame(edges, cols).write.mode("overwrite") \
+            .parquet(path)
+        assert _same_ranks(_ranks(s), _ranks(_knows_session(spark, edges)))
+        assert s._projections == {}
+
+    def test_raising_call_leaves_no_entry(self, spark, monkeypatch):
+        from brahmand_spark.ops import algos
+
+        s = _knows_session(spark)
+        _ranks(s)
+        assert "KNOWS" in s._projections
+
+        def boom(*a, **k):
+            raise RuntimeError("lost checkpoint block")
+
+        monkeypatch.setattr(algos, "pagerank_loop", boom)
+        with pytest.raises(RuntimeError, match="lost checkpoint"):
+            s.execute(PR_CALL)
+        assert "KNOWS" not in s._projections
+        monkeypatch.undo()
+        assert _same_ranks(_ranks(s), _ranks(_knows_session(spark)))
+
+    def test_concurrent_calls_on_empty_cache(self, spark):
+        from concurrent.futures import ThreadPoolExecutor
+
+        s = _knows_session(spark)
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            results = list(pool.map(lambda _: _ranks(s), range(4)))
+        serial = _ranks(_knows_session(spark))
+        assert all(_same_ranks(r, serial) for r in results)
+        assert _same_ranks(_ranks(s), serial)
+
+
+# Jobs of a warm served call: the 3 prologue checkpoints are reused, so
+# each superstep's jobs plus the final collect remain. Tighten only;
+# before projection reuse pagerank(2) ran 23 jobs and pagerank(0) 9.
+JOB_BUDGETS = {0: 1, 2: 15}
+
+
+@pytest.mark.parametrize("iters", sorted(JOB_BUDGETS))
+def test_warm_pagerank_job_budget(spark, iters):
+    import numpy as np
+
+    rng = np.random.default_rng(1)
+    n = 300
+    src = np.concatenate([rng.integers(0, n, 1500), np.arange(n)])
+    dst = np.concatenate([(rng.zipf(1.5, 1500) - 1) % n,
+                          (np.arange(n) + 1) % n])
+    edges = [(int(a), int(b)) for a, b in zip(src, dst) if a != b]
+    s = _knows_session(spark, edges)
+    call = f"CALL graph.pagerank('KNOWS', {iters}) YIELD id, rank"
+    _ranks(s, call)  # warm: builds the projection
+    _, n_jobs = count_jobs(spark, lambda: _ranks(s, call))
+    assert 0 < n_jobs <= JOB_BUDGETS[iters]

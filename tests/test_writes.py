@@ -7,6 +7,8 @@ import pytest
 from brahmand_spark.errors import PlanError, UnsupportedError
 from brahmand_spark.session import GraphSession
 
+from .helpers import count_jobs
+
 
 @pytest.fixture()
 def wsession(spark):
@@ -1390,22 +1392,6 @@ class TestScopeClauseAndRetry:
                       "IN TRANSACTIONS ON ERROR RETRY 0")
 
 
-def _jobs(spark, fn):
-    """``(fn(), number of Spark jobs it launched)``, counted through
-    a job group of its own."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"job-budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job budget")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestWriteCountersAndJobBudget:
     """A write runs its table rewrites and nothing else: the counters
     ride the checkpoint job as observed metrics and the stats row is
@@ -1423,12 +1409,12 @@ class TestWriteCountersAndJobBudget:
         A separate count of the matched ids plus a Python-RDD stats
         row made it 8 jobs on this fixture (7 on the perfbench
         data)."""
-        stats_df, n = _jobs(spark, lambda: wsession.execute(
+        stats_df, n = count_jobs(spark, lambda: wsession.execute(
             "MATCH (p:Person {id: 1}) SET p.age = 99"))
         assert n <= 3
         assert stats_df._jdf.queryExecution().analyzed().getClass() \
             .getSimpleName() == "LocalRelation"
-        out, n_collect = _jobs(spark, lambda: stats_df.collect()[0])
+        out, n_collect = count_jobs(spark, lambda: stats_df.collect()[0])
         assert n_collect == 0
         assert out["properties_set"] == 1
         assert rows(wsession, "MATCH (p:Person) RETURN p.id AS i, "
@@ -1469,7 +1455,7 @@ class TestWriteCountersAndJobBudget:
     def test_matchless_create_runs_one_job(self, wsession, spark):
         """Only the table's checkpoint: a MATCH-less CREATE is one row
         per pattern, so nothing counts it."""
-        out, n = _jobs(spark, lambda: wsession.execute(
+        out, n = count_jobs(spark, lambda: wsession.execute(
             "CREATE (p:Person {id: 9, name: 'Z', age: 50})").collect()[0])
         assert n == 1
         assert out["nodes_created"] == 1
