@@ -459,12 +459,6 @@ class CallInTransactions:
     # None = the r9 flat status columns, unchanged.
     report_var: Optional[str] = None
     report_items: Optional[list] = None
-    # IN [<n>] CONCURRENT TRANSACTIONS (r11, openCypher 25): None =
-    # serial (the r9 path); 0 = concurrent with the runtime default
-    # worker count; n >= 1 = exactly n workers. Batch completion ORDER
-    # is not guaranteed (matching the spec); status rows come back
-    # sorted by batch index.
-    concurrency: Optional[int] = None
     # ON ERROR RETRY [<n>] [THEN CONTINUE|BREAK|FAIL] (r12, openCypher
     # 25): a failing batch rolls back and re-runs up to n more times
     # (default 3 when RETRY is given bare) before on_error applies.

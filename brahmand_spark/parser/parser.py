@@ -1351,22 +1351,21 @@ class Parser:
             self.error("nested CALL { } IN TRANSACTIONS")
         self.eat_op("}")
         self.eat_kw("IN")
-        # openCypher 25: IN [<n>] CONCURRENT TRANSACTIONS (r11) —
-        # batches dispatch over <n> workers (default picked at run
-        # time); CONCURRENT is a soft word
-        concurrency = None
+        # openCypher 25: IN [<n>] CONCURRENT TRANSACTIONS is accepted
+        # and runs as serial batches — batch order is one valid
+        # schedule, and <n> bounds concurrency without promising it;
+        # CONCURRENT is a soft word
+        workers = None
         tok = self.next()
         if tok.kind == "INT":
-            concurrency = int(tok.value)
-            if concurrency < 1:
+            workers = int(tok.value)
+            if workers < 1:
                 self.error("IN <n> CONCURRENT TRANSACTIONS needs n >= 1")
             tok = self.next()
         if (tok.kind in ("IDENT", "KEYWORD")
                 and tok.value.upper() == "CONCURRENT"):
-            if concurrency is None:
-                concurrency = 0  # 0 = runtime default worker count
             tok = self.next()
-        elif concurrency is not None:
+        elif workers is not None:
             self.error("expected CONCURRENT after IN <n>")
         if not (tok.kind in ("IDENT", "KEYWORD")
                 and tok.value.upper() == "TRANSACTIONS"):
@@ -1452,8 +1451,7 @@ class Parser:
             match_clauses=wq.match_clauses, where=wq.where,
             imports=imports, body=body, batch_rows=batch_rows,
             on_error=on_error, report_var=report_var,
-            report_items=report_items, concurrency=concurrency,
-            retries=retries)
+            report_items=report_items, retries=retries)
 
     def parse_write_query(self) -> ast.WriteQuery:
         wq = ast.WriteQuery()

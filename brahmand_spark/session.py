@@ -13,6 +13,7 @@ UnsupportedDDLQuery routing (ddl_query.rs:339-352, handlers.rs:65-76).
 from __future__ import annotations
 
 import os
+import threading
 from typing import Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,10 +43,10 @@ class GraphSession:
         self.catalog_path = catalog_path
         # Durable write commits (r12, VERDICT r11 missing #6): when a
         # write_path is given, every committed table snapshot (plain
-        # writes, each CALL { } IN TRANSACTIONS batch, concurrent
-        # merges) ALSO lands at <write_path>/<table_name> as a
-        # parquet snapshot, and a NEW session with the same write_path
-        # reloads them — a restart no longer loses committed batches.
+        # writes, each CALL { } IN TRANSACTIONS batch) ALSO lands at
+        # <write_path>/<table_name> as a parquet snapshot, and a NEW
+        # session with the same write_path reloads them — a restart no
+        # longer loses committed batches.
         # Pair with catalog_path so SET-created columns reload too.
         self.write_path = write_path
         # Fit-artifact store (models.ModelStore): explicit path, or
@@ -71,6 +72,12 @@ class GraphSession:
         # rel type -> (frame, (from_column, to_column), pagerank
         # prologue): served pagerank's reused inputs (procedures.py)
         self._projections: dict[str, tuple] = {}
+        # One writer at a time: every statement or method that changes
+        # `tables` or `schema` holds it, so two concurrent writes to one
+        # table cannot each rewrite the same old frame and lose one.
+        # Reentrant because build_adj_index calls register_table. Reads,
+        # EXPLAIN and CALL procedures take no lock.
+        self._write_lock = threading.RLock()
         if write_path is not None and os.path.isdir(write_path):
             self._restore_durable()
 
@@ -114,10 +121,11 @@ class GraphSession:
         parquet path, or an existing Spark view name."""
         if isinstance(table, str):
             table = self._load_path_or_view(table)
-        self.tables[name] = table
-        for rel in self.schema.relationships.values():
-            if name in (rel.type_name, rel.table_name):
-                self._projections.pop(rel.type_name, None)
+        with self._write_lock:
+            self.tables[name] = table
+            for rel in self.schema.relationships.values():
+                if name in (rel.type_name, rel.table_name):
+                    self._projections.pop(rel.type_name, None)
 
     def _load_path_or_view(self, name: str) -> DataFrame:
         from .io import read_source
@@ -140,25 +148,26 @@ class GraphSession:
         (``ops.adjacency.materialize_for_rel``); otherwise they are
         registered as in-memory grouped DataFrames (persisted so the
         groupBy runs once per session)."""
-        rel = self.schema.relationship(type_name)
-        if path_prefix is not None:
-            from .ops.adjacency import materialize_for_rel
+        with self._write_lock:
+            rel = self.schema.relationship(type_name)
+            if path_prefix is not None:
+                from .ops.adjacency import materialize_for_rel
 
-            materialize_for_rel(self, rel, path_prefix)
-        else:
-            from .ops.adjacency import build_adjacency
+                materialize_for_rel(self, rel, path_prefix)
+            else:
+                from .ops.adjacency import build_adjacency
 
-            edges = self._load_for_label(type_name)
-            for direction, (s, d) in {
-                "outgoing": (rel.from_column, rel.to_column),
-                "incoming": (rel.to_column, rel.from_column),
-            }.items():
-                adj = build_adjacency(edges, s, d)
-                if persist:
-                    adj = adj.persist()
-                    adj.count()  # build the cache now, not on first read
-                self.register_table(f"{type_name}_{direction}", adj)
-        rel.adj_index = True
+                edges = self._load_for_label(type_name)
+                for direction, (s, d) in {
+                    "outgoing": (rel.from_column, rel.to_column),
+                    "incoming": (rel.to_column, rel.from_column),
+                }.items():
+                    adj = build_adjacency(edges, s, d)
+                    if persist:
+                        adj = adj.persist()
+                        adj.count()  # build the cache now, not on first read
+                    self.register_table(f"{type_name}_{direction}", adj)
+            rel.adj_index = True
 
     def drop_adj_index(self, type_name: str) -> None:
         """Release a relationship's adjacency index: unpersist the
@@ -166,15 +175,16 @@ class GraphSession:
         ``adj_index`` off so the planner returns to edge-list hops.
         (The persisted tables are otherwise session-lifetime by
         design — this is the caller-managed release.)"""
-        rel = self.schema.relationship(type_name)
-        for direction in ("outgoing", "incoming"):
-            df = self.tables.pop(f"{type_name}_{direction}", None)
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # parquet-backed tables have nothing cached
-        rel.adj_index = False
+        with self._write_lock:
+            rel = self.schema.relationship(type_name)
+            for direction in ("outgoing", "incoming"):
+                df = self.tables.pop(f"{type_name}_{direction}", None)
+                if df is not None:
+                    try:
+                        df.unpersist()
+                    except Exception:
+                        pass  # parquet-backed tables have nothing cached
+            rel.adj_index = False
 
     def _load_for_label(self, label: str) -> DataFrame:
         """Table loader handed to the compiler: label or rel type -> DF."""
@@ -225,18 +235,21 @@ class GraphSession:
         if isinstance(stmt, ast.LoadCsv):
             return self._execute_load_csv(stmt, params)
         if isinstance(stmt, (ast.CreateNodeTable, ast.CreateRelTable)):
-            return ddl.apply(self, stmt)
+            with self._write_lock:
+                return ddl.apply(self, stmt)
         if isinstance(stmt, ast.CallInTransactions):
             from .writes import apply_call_in_transactions
 
             # allow_writes is checked inside (loud rejection with the
             # same parity message as plain writes)
-            return apply_call_in_transactions(self, stmt, params)
+            with self._write_lock:
+                return apply_call_in_transactions(self, stmt, params)
         if isinstance(stmt, ast.WriteQuery):
             if self.allow_writes:
                 from .writes import apply_write
 
-                return apply_write(self, stmt, params)
+                with self._write_lock:
+                    return apply_write(self, stmt, params)
             raise UnsupportedError(
                 "write queries (CREATE/SET/REMOVE/DELETE) are parsed but "
                 "not executable — reference parity with UnsupportedDDLQuery "
@@ -347,8 +360,9 @@ class GraphSession:
                     "GraphSession(allow_writes=True)")
             from .writes import apply_write
 
-            return apply_write(self, stmt.statement, params,
-                               initial=initial)
+            with self._write_lock:
+                return apply_write(self, stmt.statement, params,
+                                   initial=initial)
         return self._compiler(params).compile(
             stmt.statement, initial=initial)
 
@@ -428,8 +442,9 @@ class GraphSession:
         setups; single-process sessions never need it."""
         if not self.catalog_path or not os.path.exists(self.catalog_path):
             return False
-        fresh = GraphSchema.load(self.catalog_path)
-        if fresh.version > self.schema.version:
-            self.schema = fresh
-            return True
-        return False
+        with self._write_lock:
+            fresh = GraphSchema.load(self.catalog_path)
+            if fresh.version > self.schema.version:
+                self.schema = fresh
+                return True
+            return False

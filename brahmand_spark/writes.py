@@ -38,8 +38,6 @@ statements.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -160,7 +158,13 @@ def apply_call_in_transactions(
     beyond the per-batch snapshot (matching the module's
     snapshot-overwrite posture); a failure mid-sequence leaves
     earlier batches committed, exactly openCypher's documented
-    IN TRANSACTIONS behavior."""
+    IN TRANSACTIONS behavior.
+
+    ``IN [n] CONCURRENT TRANSACTIONS`` runs through this same serial
+    loop: batch order is one valid schedule of non-conflicting
+    batches, and ``n`` bounds concurrency without promising it.
+    Overlapping batches raise no conflict error; they apply in batch
+    order."""
     if not session.allow_writes:
         raise UnsupportedError(
             "CALL { } IN TRANSACTIONS is a write statement — pass "
@@ -257,40 +261,43 @@ def apply_call_in_transactions(
     # while its status row claimed nothing happened). Every row
     # reports (committed, error) alongside the write counters.
     out_rows = []
-    if cit.concurrency is not None:
-        out_rows = _run_concurrent_batches(
-            session, cit, wq, params, ids, batch_vals, anchor)
-    else:
-        for bi, bval in enumerate(batch_vals):
-            batch_ids = ids.filter(F.col("_b") == bval).select("id")
-            snapshot = dict(session.tables)
-            # ON ERROR RETRY <n> (r12, openCypher 25): each attempt
-            # rolls back fully before the next; attempt 1 + n retries
-            stats = exc = None
-            for _attempt in range(1 + max(cit.retries, 0)):
-                try:
-                    stats = apply_write(
-                        session, wq, params,
-                        anchor_ids=(anchor, batch_ids)).first()
-                    exc = None
-                    break
-                except Exception as e:  # noqa: BLE001 — per batch
-                    exc = e
-                    dirty = [n for n, ti in session.tables.items()
-                             if snapshot.get(n) is not ti]
-                    session.tables.clear()
-                    session.tables.update(snapshot)
-                    _durable_rollback(session, snapshot, dirty)
-            if exc is not None:
-                if cit.on_error == "fail":
-                    raise exc
-                out_rows.append(
-                    (bi, False, f"{type(exc).__name__}: {exc}"[:500])
-                    + (0,) * len(WRITE_STAT_KEYS))
-                if cit.on_error == "break":
-                    break
-                continue
-            out_rows.append((bi, True, None) + tuple(stats))
+    for bi, bval in enumerate(batch_vals):
+        batch_ids = ids.filter(F.col("_b") == bval).select("id")
+        snapshot = dict(session.tables)
+        # ON ERROR RETRY <n> (r12, openCypher 25): each attempt
+        # rolls back fully before the next; attempt 1 + n retries
+        stats = exc = None
+        for _attempt in range(1 + max(cit.retries, 0)):
+            try:
+                stats = apply_write(
+                    session, wq, params,
+                    anchor_ids=(anchor, batch_ids)).first()
+                exc = None
+                break
+            except Exception as e:  # noqa: BLE001 — per batch
+                exc = e
+                dirty = [n for n, ti in session.tables.items()
+                         if snapshot.get(n) is not ti]
+                # restore key by key, never clear(): a read compiled
+                # meanwhile finds every table at one version or the
+                # other, never missing
+                for n, t0 in snapshot.items():
+                    if session.tables.get(n) is not t0:
+                        session.tables[n] = t0
+                for n in dirty:
+                    if n not in snapshot:
+                        session.tables.pop(n, None)
+                _durable_rollback(session, snapshot, dirty)
+        if exc is not None:
+            if cit.on_error == "fail":
+                raise exc
+            out_rows.append(
+                (bi, False, f"{type(exc).__name__}: {exc}"[:500])
+                + (0,) * len(WRITE_STAT_KEYS))
+            if cit.on_error == "break":
+                break
+            continue
+        out_rows.append((bi, True, None) + tuple(stats))
     cols = (["batch bigint", "committed boolean", "error string"]
             + [f"{c} bigint" for c in WRITE_STAT_KEYS])
     out = local_frame(session.spark, out_rows, ", ".join(cols))
@@ -329,288 +336,8 @@ def apply_call_in_transactions(
     return out.select(*sel)
 
 
-def _run_concurrent_batches(session, cit, wq, params, ids, batch_vals,
-                            anchor) -> list:
-    """``IN [n] CONCURRENT TRANSACTIONS`` (r11, openCypher 25):
-    batches execute on a thread pool, each against an ISOLATED
-    shallow clone of the session whose table registry is a copy of
-    the statement-start snapshot — so concurrent batches never race
-    the shared registry (a direct thread-pool over the serial path
-    would lose updates: every write rewrites the WHOLE table frame,
-    and two interleaved read-modify-writes of the same table keep
-    only the later one). Completed batches then MERGE serially:
-
-      final(T) = T0 exceptAll (∪ per-batch removed rows)
-                    unionAll (∪ per-batch added rows)
-
-    where removed_i = T0 exceptAll T_i and added_i = T_i exceptAll T0
-    — multiset semantics, exact when concurrent batches write
-    DISJOINT rows (the spec's own contract: concurrent inner
-    transactions must not conflict). Node-table id conflicts (two
-    batches adding/updating the same id) are detected and raise;
-    parallelism comes from the per-batch Spark jobs (plan + eager
-    checkpoint) running concurrently in the shared JVM.
-
-    ON ERROR semantics: a failing batch's clone is discarded
-    (nothing to roll back); 'continue' keeps dispatching, 'break'
-    stops STARTING new batches after the first observed failure
-    (in-flight batches finish and commit; never-started ones emit no
-    status row, like the serial early-exit), 'fail' merges the
-    batches that completed (they stay committed — openCypher's
-    documented behavior) and then re-raises. Batch completion ORDER
-    is not guaranteed (matching the spec); status rows are returned
-    sorted by batch index."""
-    import copy
-    import os
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    workers = cit.concurrency or min(8, os.cpu_count() or 8)
-    workers = max(1, min(workers, max(len(batch_vals), 1)))
-    snapshot = dict(session.tables)
-    stop = threading.Event()
-
-    def run_batch(bi, bval):
-        if stop.is_set():
-            return (bi, "skipped", None, None)
-        batch_ids = ids.filter(F.col("_b") == bval).select("id")
-        # ON ERROR RETRY <n> (r12): a fresh snapshot-seeded clone per
-        # attempt — a failed attempt's clone is simply discarded
-        exc = None
-        for _attempt in range(1 + max(cit.retries, 0)):
-            clone = copy.copy(session)
-            clone.tables = dict(snapshot)
-            clone._n_commits = 0
-            clone._write_touched = {}  # table -> [key_df, ...]|"taint"
-            try:
-                stats = apply_write(
-                    clone, wq, params,
-                    anchor_ids=(anchor, batch_ids)).first()
-                return (bi, "ok", tuple(stats),
-                        (clone.tables, clone._write_touched))
-            except Exception as e:  # noqa: BLE001 — reported per batch
-                exc = e
-        if cit.on_error in ("fail", "break"):
-            stop.set()
-        return (bi, "failed", exc, None)
-
-    with ThreadPoolExecutor(max_workers=workers) as pool:
-        futures = [pool.submit(run_batch, bi, bval)
-                   for bi, bval in enumerate(batch_vals)]
-        results = [f.result() for f in futures]
-
-    ok = [(bi, stats, payload) for bi, st, stats, payload in results
-          if st == "ok"]
-    _merge_snapshot_isolated(session, snapshot,
-                             [payload for _, _, payload in ok])
-    first_err = next((err for _, st, err, _ in results
-                      if st == "failed"), None)
-    if cit.on_error == "fail" and first_err is not None:
-        raise first_err
-    out_rows = []
-    for bi, st, payload, _ in sorted(results, key=lambda t: t[0]):
-        if st == "ok":
-            out_rows.append((bi, True, None) + payload)
-        elif st == "failed":
-            out_rows.append(
-                (bi, False,
-                 f"{type(payload).__name__}: {payload}"[:500])
-                + (0,) * len(WRITE_STAT_KEYS))
-        # 'skipped' (never started after a break/fail): no status row,
-        # matching the serial path's early exit
-    return out_rows
-
-
-def _union_schema(name: str, frames: list) -> dict:
-    """Column name -> dtype across every frame, first-writer type
-    wins; a cross-batch TYPE disagreement on the same column raises a
-    clear PlanError instead of the opaque AnalysisException the raw
-    exceptAll used to throw after all batches had already run (r11
-    advice: a batch whose SET introduced a new column on a
-    multi-writer table died at merge time)."""
-    fields: dict = {}
-    for fr in frames:
-        for f in fr.schema.fields:
-            prev = fields.get(f.name)
-            if prev is None:
-                fields[f.name] = f.dataType
-            elif prev != f.dataType:
-                raise PlanError(
-                    f"concurrent batches wrote column '{f.name}' of "
-                    f"'{name}' with conflicting types "
-                    f"{prev.simpleString()} vs "
-                    f"{f.dataType.simpleString()}")
-    return fields
-
-
-def _align_schema(fr: DataFrame, fields: dict) -> DataFrame:
-    """Project ``fr`` onto the union schema, NULL-filling columns a
-    batch never saw. EXCEPT ALL / the keyed merge compare NULLs as
-    equal, so rows a schema-widening batch left untouched still
-    cancel out of its diff."""
-    if list(fr.columns) == list(fields):
-        return fr
-    return fr.select(*[
-        (F.col(n) if n in fr.columns
-         else F.lit(None).cast(t)).alias(n)
-        for n, t in fields.items()])
-
-
-def _merge_keyed(session, name: str, t0: DataFrame, entries: list,
-                 fields: dict, is_node: bool):
-    """Fast path of the concurrent merge (r12): every write to this
-    table recorded the KEY ROWS it touched (node id, or the edge
-    (from, to) pair), so the merged table is
-
-        t0 anti-join (∪ touched keys)  ∪  Σ_i (t_i semi-join keys_i)
-
-    — one keyed anti-join over the table plus per-batch batch-sized
-    semi-joins, instead of B whole-table multiset diffs (r11 verdict
-    missing #3: merge work is now ∝ batch rows, the right shape for
-    the 100 TB write story). Returns the merged frame, or None when
-    the keyed premise fails (cross-batch key overlap on a REL table —
-    legal parallel multiset writes) so the caller falls back to the
-    exceptAll path; raises on node-id overlap (the spec's
-    disjoint-rows contract, which also surfaces delete-vs-update races
-    the r11 added-only check missed — r11 advice #2)."""
-    key_cols = list(entries[0][1][0].columns)
-    tagged = None
-    per_batch_keys = []
-    for bi, (_ti, frames) in enumerate(entries):
-        k = frames[0]
-        for extra in frames[1:]:
-            k = k.unionByName(extra)
-        k = k.distinct()
-        per_batch_keys.append(k)
-        t = k.withColumn("_cb", F.lit(bi))
-        tagged = t if tagged is None else tagged.unionByName(t)
-    overlap = (tagged.groupBy(*key_cols)
-               .agg(F.count_distinct("_cb").alias("nb"))
-               .filter(F.col("nb") > 1).limit(1).count())
-    if overlap:
-        if is_node:
-            raise PlanError(
-                f"concurrent batches wrote the SAME '{name}' "
-                f"node id — concurrent inner transactions must "
-                f"touch disjoint rows (openCypher conflict)")
-        return None  # parallel edges may legally share a pair
-    all_keys = tagged.select(*key_cols).distinct()
-    merged = _align_schema(t0, fields).join(
-        all_keys, on=key_cols, how="left_anti")
-    for (ti, _frames), keys in zip(entries, per_batch_keys):
-        part = _align_schema(ti, fields).join(
-            keys, on=key_cols, how="left_semi")
-        merged = merged.unionByName(part)
-    return merged
-
-
-def _merge_snapshot_isolated(session, snapshot: dict,
-                             batch_results: list) -> None:
-    """Fold the per-batch isolated registries back into the session:
-    single-writer tables swap in directly; multi-writer tables merge
-    keyed when every write recorded its touched keys (see
-    :func:`_merge_keyed`), else by multiset difference against the
-    snapshot (see _run_concurrent_batches). Raises on node-table id
-    conflicts — the spec's must-not-conflict contract, surfaced
-    instead of silently duplicating a node.
-
-    ATOMIC against its own failures (r11 advice #1): every merged
-    frame is built and every conflict check runs BEFORE the first
-    table is stored, and the store loop restores the statement-start
-    snapshot on any exception — a conflict on table B can no longer
-    leave table A committed and B discarded.
-
-    ``batch_results``: one ``(tables, touched)`` pair per completed
-    batch — the clone's table registry and its per-table touched-key
-    record (``{table: [key_df, ...] | "taint"}``)."""
-    per_table: dict[str, list] = {}
-    for tabs, touched in batch_results:
-        for name, ti in tabs.items():
-            if snapshot.get(name) is not ti:
-                per_table.setdefault(name, []).append(
-                    (ti, touched.get(name, "taint")))
-    pending: dict[str, DataFrame] = {}
-    for name, entries in per_table.items():
-        t0 = snapshot.get(name)
-        tis = [ti for ti, _ in entries]
-        if t0 is None or len(entries) == 1:
-            if t0 is None and len(entries) > 1:
-                raise PlanError(
-                    f"concurrent batches each created table '{name}' "
-                    f"— conflicting writes")
-            pending[name] = tis[0]
-            continue
-        fields = _union_schema(name, [t0] + tis)
-        id_col = next(
-            (n.node_id for n in session.schema.nodes.values()
-             if name in (n.label, n.table_name)), None)
-        is_node = id_col is not None and id_col in fields
-        first_keys = (list(entries[0][1][0].columns)
-                      if entries[0][1] not in ("taint", [], None)
-                      else None)
-        keyable = first_keys is not None and all(
-            frames != "taint" and frames
-            and all(list(f.columns) == first_keys for f in frames)
-            for _, frames in entries)
-        merged = None
-        if keyable:
-            merged = _merge_keyed(
-                session, name, t0, entries, fields, is_node)
-        if merged is None:
-            # fallback: whole-table multiset diff (un-keyed writes,
-            # e.g. DETACH DELETE fan-out, or overlapping edge pairs)
-            t0a = _align_schema(t0, fields)
-            removed = added = tagged_ids = None
-            for bi, ti in enumerate(tis):
-                tia = _align_schema(ti, fields)
-                r, a = t0a.exceptAll(tia), tia.exceptAll(t0a)
-                removed = r if removed is None else removed.unionAll(r)
-                added = a if added is None else added.unionAll(a)
-                if is_node:
-                    t = (r.select(id_col).unionAll(a.select(id_col))
-                         .distinct().withColumn("_cb", F.lit(bi)))
-                    tagged_ids = (t if tagged_ids is None
-                                  else tagged_ids.unionAll(t))
-            if is_node:
-                # cross-batch touched-id overlap: catches add-vs-add,
-                # delete-vs-update AND delete-vs-delete of one node id
-                # (r11 advice #2 — the added-only check let a
-                # delete-vs-update merge silently, update winning)
-                clash = (tagged_ids.groupBy(id_col)
-                         .agg(F.count_distinct("_cb").alias("nb"))
-                         .filter(F.col("nb") > 1).limit(1).count())
-                if clash:
-                    raise PlanError(
-                        f"concurrent batches wrote the SAME '{name}' "
-                        f"node id — concurrent inner transactions "
-                        f"must touch disjoint rows (openCypher "
-                        f"conflict)")
-            merged = t0a.exceptAll(removed).unionAll(added)
-        pending[name] = merged
-    touched_names: list = []
-    try:
-        for name, dfm in pending.items():
-            touched_names.append(name)  # incl. a mid-store failure:
-            _store(session, name, dfm)  # its durable dir may be dirty
-    except Exception:
-        session.tables.clear()
-        session.tables.update(snapshot)
-        _durable_rollback(session, snapshot, touched_names)
-        raise
-
-
-def _store(session, table_name: str, df: DataFrame,
-           touched: Optional[DataFrame] = None) -> DataFrame:
+def _store(session, table_name: str, df: DataFrame) -> DataFrame:
     """Snapshot the mutated table (see module docstring) and register.
-
-    ``touched`` (r12, concurrent-merge hook): the KEY ROWS this write
-    touches — node id column, or the edge (from, to) pair in STORAGE
-    orientation — named exactly as the table columns. Recorded only
-    when the session is a tracking clone (``_write_touched`` present,
-    set by _run_concurrent_batches); ``None`` taints the table so the
-    merge falls back to the whole-table multiset diff. Callers that
-    cannot enumerate their keys cheaply (DETACH DELETE's incident-
-    edge fan-out) pass nothing.
 
     Invalidates any grouped-adjacency materialization of a mutated
     relationship: the planner requires both direction tables to take
@@ -618,20 +345,8 @@ def _store(session, table_name: str, df: DataFrame,
     (fresh) edge list until the user re-runs ``build_adj_index`` (or
     the streaming maintenance catches up). Drops the relationship's
     served pagerank projection too (procedures.py)."""
-    tracker = getattr(session, "_write_touched", None)
-    if tracker is not None:
-        if touched is None:
-            tracker[table_name] = "taint"
-        elif tracker.get(table_name) != "taint":
-            tracker.setdefault(table_name, []).append(
-                touched.localCheckpoint(eager=True))
     out = df.localCheckpoint(eager=True)
-    if tracker is None:  # clones never persist — only real commits
-        _durable_persist(session, table_name, out)
-    # commit sequence: one tick per materialized table snapshot —
-    # how tests (and users) count per-batch commits under
-    # CALL { } IN TRANSACTIONS
-    session._n_commits = getattr(session, "_n_commits", 0) + 1
+    _durable_persist(session, table_name, out)
     session.tables[table_name] = out
     for rel in session.schema.relationships.values():
         if table_name in (rel.type_name, rel.table_name):
@@ -725,9 +440,7 @@ def _apply_create(session, df, scope, create, params, stats) -> None:
             table = session._load_for_label(np.label)
             new_cols = [c for c in rows.columns if c not in table.columns]
             updated = _store(
-                session, sch.table_name, _align_append(table, rows),
-                touched=rows.select(sch.node_id),
-            )
+                session, sch.table_name, _align_append(table, rows))
             if new_cols:
                 sch.column_names = list(sch.column_names) + new_cols
                 session._persist_catalog()
@@ -770,8 +483,7 @@ def _apply_create(session, df, scope, create, params, stats) -> None:
                     for k, v in rp.properties.items()]
             rows = base.select(*sel)
             table = session._load_for_label(rp.type_name)
-            _store(session, rsch.table_name, _align_append(table, rows),
-                   touched=rows.select(rsch.from_column, rsch.to_column))
+            _store(session, rsch.table_name, _align_append(table, rows))
             stats["relationships_created"] += (
                 1 if df is None else rows.count())
 
@@ -791,8 +503,7 @@ def _apply_merge(session, df, scope, mc, params, stats) -> None:
       wanted (from, to[, props]) tuples anti-join the edge table;
       missing ones are appended.
 
-    The anti-join is the scale shape of upsert — at 100 TB the same plan
-    drives a Delta/Iceberg MERGE INTO instead of unionByName."""
+    The anti-join is the scale shape of upsert."""
     path = mc.path
     if path.var is not None or path.shortest is not None:
         raise UnsupportedError("path variables / shortestPath in MERGE")
@@ -828,8 +539,7 @@ def _apply_merge(session, df, scope, mc, params, stats) -> None:
         n_created = created.count()
         if n_created:
             _store(session, sch.table_name,
-                   _align_append(table, created),
-                   touched=created.select(sch.node_id))
+                   _align_append(table, created))
         stats["nodes_created"] += n_created
 
         def run_sets(assignments, ids_df):
@@ -903,8 +613,7 @@ def _apply_merge(session, df, scope, mc, params, stats) -> None:
     missing = want.join(edges, cond, "left_anti").localCheckpoint(eager=True)
     n_created = missing.count()
     if n_created:
-        _store(session, rsch.table_name, _align_append(edges, missing),
-               touched=missing.select(rsch.from_column, rsch.to_column))
+        _store(session, rsch.table_name, _align_append(edges, missing))
     stats["relationships_created"] += n_created
 
 
@@ -1017,8 +726,7 @@ def _apply_set_group(session, df, scope, triples, params,
         else F.col(pcol(a, c)).alias(c)
         for c in out_cols
     ])
-    _store(session, sch.table_name, back,
-           touched=matched.select(F.col("__wid").alias(sch.node_id)))
+    _store(session, sch.table_name, back)
     if new_keys:
         session._persist_catalog()
     stats["properties_set"] += obs.get["n"] * len(triples)
@@ -1043,22 +751,6 @@ def _rel_pair_cond(b, rsch, wsrc, wdst):
     if b.fwd_storage is False:
         return rev
     return fwd | rev
-
-
-def _rel_pair_keys(b, rsch, pairs, src="__wsrc", dst="__wdst"):
-    """Touched-key frame (r12 concurrent-merge hook) for a
-    pair-matched relationship write, in STORAGE column orientation;
-    unknown/mixed orientation records BOTH pairs — the superset of
-    what :func:`_rel_pair_cond`'s either-orientation join touches."""
-    fwd = pairs.select(F.col(src).alias(rsch.from_column),
-                       F.col(dst).alias(rsch.to_column))
-    rev = pairs.select(F.col(dst).alias(rsch.from_column),
-                       F.col(src).alias(rsch.to_column))
-    if b.fwd_storage is True:
-        return fwd
-    if b.fwd_storage is False:
-        return rev
-    return fwd.unionAll(rev)
 
 
 def _apply_set_rel_group(session, df, b, triples, params,
@@ -1139,8 +831,7 @@ def _apply_set_rel_group(session, df, b, triples, params,
         updates[c].alias(c) if c in updates
         else F.col(pcol(a, c)).alias(c)
         for c in out_cols])
-    _store(session, rsch.table_name, back,
-           touched=_rel_pair_keys(b, rsch, pairs))
+    _store(session, rsch.table_name, back)
     if new_keys:
         session._persist_catalog()
     stats["properties_set"] += n_matched * len(triples)
@@ -1263,8 +954,7 @@ def _apply_foreach(session, df, scope, fc, params, stats) -> None:
         out_cols = list(table.columns) + ([target.key] if is_new else [])
         back = updated.select(
             *[F.col(pcol(a, c)).alias(c) for c in out_cols])
-        _store(session, sch.table_name, back,
-               touched=last.select(F.col("__wid").alias(sch.node_id)))
+        _store(session, sch.table_name, back)
         if is_new:
             sch.column_names = list(sch.column_names) + [target.key]
             session._persist_catalog()
@@ -1309,8 +999,7 @@ def _delete_nodes(session, df, b: NodeBinding, detach: bool, stats) -> None:
     kept = table.join(
         ids, F.col(sch.node_id) == F.col("__wid"), "left_anti"
     )
-    _store(session, sch.table_name, kept,
-           touched=ids.select(F.col("__wid").alias(sch.node_id)))
+    _store(session, sch.table_name, kept)
     stats["nodes_deleted"] += n
     if not detach:
         # Divergence from Neo4j (which errors on attached nodes):
@@ -1351,6 +1040,5 @@ def _delete_rels(session, df, b: RelBinding, stats) -> None:
             F.col("__wsrc"), F.col("__wdst")),
         "left_anti",
     )
-    out = _store(session, rsch.table_name, kept,
-                 touched=_rel_pair_keys(b, rsch, pairs))
+    out = _store(session, rsch.table_name, kept)
     stats["relationships_deleted"] += before - out.count()

@@ -11,7 +11,10 @@ that is not listed with its reason.
   and physical sizing is AQE's.
 - No session temp views. A view name lives in the session catalog, so
   one request's registration is visible to, and replaced by, every
-  other request on the session; frames are passed as frames."""
+  other request on the session; frames are passed as frames.
+- No threads but the server's. Concurrency on a session comes from its
+  callers (the server's request threads), ordered by the session write
+  lock; the library starts no thread, pool or event of its own."""
 
 import ast
 import pathlib
@@ -30,6 +33,14 @@ CREATE_ALLOWED = {
 
 CONF_SET_ALLOWED = {
     "io.configure": "session tuning for entry points",
+}
+
+THREAD_NAMES = ("ThreadPoolExecutor", "Thread", "Event",
+                "ThreadingHTTPServer")
+
+THREAD_ALLOWED = {
+    "server.serve": "ThreadingHTTPServer: one thread per request, "
+                    "whose writes the session write lock orders",
 }
 
 
@@ -64,10 +75,10 @@ class _Sites(ast.NodeVisitor):
         self.generic_visit(node)
 
 
-def _sites(attr):
+def _sites(attr, visitor=_Sites):
     sites = []
     for path in sorted(LIB.rglob("*.py")):
-        v = _Sites(path.relative_to(LIB).with_suffix("").as_posix(), attr)
+        v = visitor(path.relative_to(LIB).with_suffix("").as_posix(), attr)
         v.visit(ast.parse(path.read_text()))
         sites += v.sites
     return set(sites)
@@ -101,3 +112,29 @@ def test_no_session_temp_views():
     assert not sites, (
         f"session temp views registered at {sites} — a view name is "
         "session-global; pass the DataFrame instead")
+
+
+class _NameSites(_Sites):
+    """``module.function`` of every use of one of ``names``, as a bare
+    name (``Thread``) or an attribute (``threading.Thread``)."""
+
+    def __init__(self, mod, names):
+        self.mod, self.fn, self.names, self.sites = mod, "<module>", names, []
+
+    def visit_Name(self, node):
+        if node.id in self.names:
+            self.sites.append(f"{self.mod}.{self.fn}")
+
+    def visit_Attribute(self, node):
+        if node.attr in self.names:
+            self.sites.append(f"{self.mod}.{self.fn}")
+        self.generic_visit(node)
+
+
+def test_no_threads_outside_the_server():
+    sites = _sites(THREAD_NAMES, _NameSites)
+    stray = sorted(sites - set(THREAD_ALLOWED))
+    assert not stray, (
+        f"threads started at {stray} — the library runs on its "
+        "caller's thread; serialize writes with the session write lock")
+    assert set(THREAD_ALLOWED) <= sites, set(THREAD_ALLOWED) - sites

@@ -249,3 +249,44 @@ def test_malformed_requests_rejected_before_running():
         httpd.server_close()
     assert got == [want for _, _, want in cases]
     assert executed == []
+
+
+def test_concurrent_writes_keep_every_update(spark):
+    """Every write on a served session runs under the session write
+    lock, so 8 clients each SETting a different customer at once keep
+    all 8 updates. Without it each write rewrites the whole table from
+    the frame it read, and the later commits drop the earlier ones."""
+    from brahmand_spark import GraphSession
+
+    s = GraphSession(spark, allow_writes=True)
+    s.execute("CREATE NODE TABLE Customer (c_custkey Int64, "
+              "c_acctbal Float64, NODE ID (c_custkey))")
+    s.register_table("Customer", spark.range(1, 65).selectExpr(
+        "id AS c_custkey", "CAST(id AS DOUBLE) AS c_acctbal"))
+    keys = list(range(1, 9))
+    start = threading.Barrier(len(keys))
+    statuses = {}
+
+    def set_one(k):
+        start.wait()
+        statuses[k] = post(url, {
+            "query": "MATCH (c:Customer) WHERE c.c_custkey = $k "
+                     "SET c.c_acctbal = -777.0",
+            "params": {"k": k}})[0]
+
+    httpd, url = _serving(s)
+    try:
+        clients = [threading.Thread(target=set_one, args=(k,))
+                   for k in keys]
+        for t in clients:
+            t.start()
+        for t in clients:
+            t.join()
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+    assert statuses == {k: 200 for k in keys}
+    got = {r["k"] for r in s.execute(
+        "MATCH (c:Customer) WHERE c.c_acctbal = -777.0 "
+        "RETURN c.c_custkey AS k").collect()}
+    assert got == set(keys)

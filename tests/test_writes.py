@@ -575,9 +575,25 @@ class TestCallInTransactions:
                 f"age: {20 + i}}})")
         return wsession
 
-    def test_batched_set_parity_and_commits(self, wsession):
+    @staticmethod
+    def _commits(monkeypatch):
+        """Counter of the table snapshots ``writes._store`` commits."""
+        import brahmand_spark.writes as W
+
+        n = [0]
+        store = W._store
+
+        def counting(*args, **kw):
+            n[0] += 1
+            return store(*args, **kw)
+
+        monkeypatch.setattr(W, "_store", counting)
+        return n
+
+    def test_batched_set_parity_and_commits(self, wsession, monkeypatch):
+        commits = self._commits(monkeypatch)
         s = self._people(wsession)
-        base = s._n_commits
+        base = commits[0]
         out = s.execute(
             "MATCH (p:Person) WHERE p.id < 20 "
             "CALL { WITH p SET p.age = p.age + 100 } "
@@ -586,7 +602,7 @@ class TestCallInTransactions:
         assert [(r["batch"], r["properties_set"]) for r in out] == \
             [(0, 6), (1, 6), (2, 6), (3, 2)]
         # one table snapshot (commit) per batch
-        assert s._n_commits == base + 4
+        assert commits[0] == base + 4
         got = rows(s, "MATCH (p:Person) RETURN p.id AS i, p.age AS a")
         assert got == {(i, 20 + i + (100 if i < 20 else 0))
                        for i in range(25)}
@@ -628,7 +644,7 @@ class TestCallInTransactions:
         assert rows(s, "MATCH (p:Person) RETURN DISTINCT p.age AS a") \
             == {(0,)}
 
-    def test_of_k_rows_counts_rows_not_ids(self, spark):
+    def test_of_k_rows_counts_rows_not_ids(self, spark, monkeypatch):
         """r10 (VERDICT r9 Missing #5): when one anchor id matches many
         outer rows, OF k ROWS batches by ROW count — person 0 alone
         carries 4 match rows, so 6 total rows with OF 4 split into
@@ -647,14 +663,15 @@ class TestCallInTransactions:
                   "AND b.id = 2 CREATE (a)-[:KNOWS]->(b)")
         s.execute("MATCH (a:Person) MATCH (b:Person) WHERE a.id = 2 "
                   "AND b.id = 3 CREATE (a)-[:KNOWS]->(b)")
-        base = s._n_commits
+        commits = self._commits(monkeypatch)
+        base = commits[0]
         out = s.execute(
             "MATCH (a:Person)-[:KNOWS]->(b:Person) "
             "CALL { WITH a SET a.age = a.age + 1 } "
             "IN TRANSACTIONS OF 4 ROWS").collect()
         assert [(r["batch"], r["committed"]) for r in out] == \
             [(0, True), (1, True)]
-        assert s._n_commits == base + 2  # one commit per ROW batch
+        assert commits[0] == base + 2  # one commit per ROW batch
         got = rows(s, "MATCH (p:Person) RETURN p.id AS i, p.age AS a")
         # parity with the one-shot write: SET applies once per
         # DISTINCT matched anchor (openCypher identity semantics)
@@ -824,13 +841,64 @@ class TestCallInTransactions:
         assert rows(s, "MATCH (p:Person) RETURN p.id AS i") == \
             {(i,) for i in range(4)}
 
+    def test_rollback_restores_key_by_key(self, spark):
+        """A failing batch puts back only the names it changed, one key
+        at a time. ``clear()`` then ``update()`` would leave a read
+        compiled in between with no table at all. The batch creates a
+        Log node and a KNOWS edge, which drops KNOWS's adjacency
+        tables, before its SET fails: no table the batch did not touch
+        ever leaves the registry, and the registry ends equal to the
+        pre-batch one."""
+
+        class Recording(dict):
+            def __init__(self, *args):
+                super().__init__(*args)
+                self.removed = []
+
+            def __delitem__(self, k):
+                self.removed.append(k)
+                super().__delitem__(k)
+
+            def pop(self, k, *default):
+                if k in self:
+                    self.removed.append(k)
+                return super().pop(k, *default)
+
+            def clear(self):
+                self.removed.extend(self)
+                super().clear()
+
+        s = GraphSession(spark, allow_writes=True)
+        s.execute("CREATE NODE TABLE Person (id Int64, age Int64, "
+                  "PRIMARY KEY(id), NODE ID(id))")
+        s.execute("CREATE NODE TABLE Log (id Int64, "
+                  "PRIMARY KEY(id), NODE ID(id))")
+        s.execute("CREATE REL TABLE KNOWS FROM Person TO Person ()")
+        for i in range(4):
+            s.execute(f"CREATE (p:Person {{id: {i}, age: {i}}})")
+        s.execute("MATCH (a:Person) MATCH (b:Person) WHERE a.id = 0 "
+                  "AND b.id = 1 CREATE (a)-[:KNOWS]->(b)")
+        s.build_adj_index("KNOWS", persist=False)
+        s.tables = Recording(s.tables)
+        snapshot = dict(s.tables)
+        out = s.execute(
+            "MATCH (p:Person) CALL { WITH p CREATE (l:Log {id: p.id}), "
+            "(p)-[:KNOWS]->(p) SET p.id = 0 } "
+            "IN TRANSACTIONS OF 2 ROWS ON ERROR CONTINUE").collect()
+        assert [r["committed"] for r in out] == [False, False]
+        assert {"KNOWS_outgoing", "KNOWS_incoming"} <= set(s.tables.removed)
+        assert set(s.tables.removed) <= {"KNOWS_outgoing",
+                                         "KNOWS_incoming"}
+        assert s.tables.keys() == snapshot.keys()
+        assert all(s.tables[k] is v for k, v in snapshot.items())
+
 
 class TestConcurrentTransactions:
-    """IN [n] CONCURRENT TRANSACTIONS (r11, openCypher 25): batches
-    run on a thread pool against snapshot-isolated session clones and
-    merge by multiset difference — exact for disjoint-row writes;
-    conflicts raise. Completion ORDER is not guaranteed (spec), but
-    status rows come back sorted by batch index."""
+    """IN [n] CONCURRENT TRANSACTIONS (openCypher 25) parses and runs
+    as serial batches: batch order is one valid schedule of
+    non-conflicting batches, and n bounds concurrency without
+    promising it. Status rows, table contents, ON ERROR and RETRY
+    match plain IN TRANSACTIONS."""
 
     def _people(self, wsession, n=30):
         for i in range(n):
@@ -903,31 +971,11 @@ class TestConcurrentTransactions:
                 "MATCH (p:Person) CALL { WITH p SET p.id = 0 } "
                 "IN 2 CONCURRENT TRANSACTIONS OF 2 ROWS").collect()
 
-    def test_concurrent_conflict_detected(self, spark):
-        """Two batches CREATE the same City id — the merge detects
-        the duplicate node id and raises instead of corrupting."""
-        from brahmand_spark.errors import PlanError
-
-        s = GraphSession(spark, allow_writes=True)
-        s.execute("CREATE NODE TABLE Person (id Int64, "
-                  "PRIMARY KEY(id), NODE ID(id))")
-        s.execute("CREATE NODE TABLE City (id Int64, "
-                  "PRIMARY KEY(id), NODE ID(id))")
-        for i in range(4):
-            s.execute(f"CREATE (p:Person {{id: {i}}})")
-        with pytest.raises(PlanError, match="disjoint"):
-            # every batch creates City id = p.id % 2 -> collisions
-            # across batches of 1 row each
-            s.execute(
-                "MATCH (p:Person) CALL { WITH p CREATE (c:City "
-                "{id: p.id % 2}) } "
-                "IN 4 CONCURRENT TRANSACTIONS OF 1 ROWS").collect()
-
     def test_parse_shapes(self, wsession):
         from brahmand_spark.errors import ParseError
 
         s = self._people(wsession, n=4)
-        # bare CONCURRENT (runtime default workers)
+        # bare CONCURRENT (no worker count)
         out = s.execute(
             "MATCH (p:Person) CALL { WITH p SET p.age = 1 } "
             "IN CONCURRENT TRANSACTIONS OF 2 ROWS").collect()
@@ -935,6 +983,40 @@ class TestConcurrentTransactions:
         with pytest.raises(ParseError, match="CONCURRENT"):
             s.execute("MATCH (p:Person) CALL { WITH p SET p.age = 1 } "
                       "IN 3 TRANSACTIONS")
+
+    def test_schema_drift_new_column_merges(self, spark):
+        """A SET that introduces a column the table lacks, run in
+        concurrent batches, fills it for every row as the serial
+        statement does."""
+        s = GraphSession(spark, allow_writes=True)
+        s.execute("CREATE NODE TABLE City (id Int64, pop Int64, "
+                  "PRIMARY KEY(id), NODE ID(id))")
+        for i in range(8):
+            s.execute(f"CREATE (c:City {{id: {i}, pop: {i * 10}}})")
+        s.execute(
+            "MATCH (c:City) CALL { WITH c SET c.flag = c.id + 1 } "
+            "IN 2 CONCURRENT TRANSACTIONS OF 4 ROWS")
+        assert rows(s, "MATCH (c:City) RETURN c.id AS i, c.flag AS f") \
+            == {(i, i + 1) for i in range(8)}
+
+    def test_detach_delete_taints_to_fallback(self, wsession):
+        """DETACH DELETE in concurrent batches removes each batch's
+        nodes and their incident edges, as the serial statement
+        does."""
+        for i in range(6):
+            wsession.execute(
+                f"CREATE (p:Person {{id: {i}, name: 'P{i}', age: 1}})"
+                f"-[:LIVES_IN {{since: {i}}}]->"
+                f"(c:City {{id: {100 + i}, name: 'C{i}'}})")
+        wsession.execute(
+            "MATCH (p:Person) WHERE p.id % 2 = 0 "
+            "CALL { WITH p DETACH DELETE p } "
+            "IN 3 CONCURRENT TRANSACTIONS OF 2 ROWS")
+        assert rows(wsession, "MATCH (p:Person) RETURN p.id AS i") == \
+            {(1,), (3,), (5,)}
+        assert rows(wsession,
+                    "MATCH (p:Person)-[r:LIVES_IN]->(c:City) "
+                    "RETURN r.since AS s") == {(1,), (3,), (5,)}
 
 
 class TestReportStatus:
@@ -989,148 +1071,6 @@ class TestReportStatus:
             s.execute(
                 "MATCH (p:Person) CALL { WITH p SET p.age = 1 } "
                 "IN TRANSACTIONS REPORT STATUS AS st RETURN *")
-
-
-class TestConcurrentMergeSemantics:
-    """r12: the concurrent merge is (a) ATOMIC against its own
-    conflict checks, (b) detects delete-vs-update of one node id
-    across batches (not just add-vs-add), (c) aligns schema drift a
-    batch's SET introduces, and (d) merges via touched-key anti/semi
-    joins — no whole-table multiset diff per batch (VERDICT r11
-    missing #3 + ADVICE r11 findings 1-3)."""
-
-    def _city_session(self, spark, n=4):
-        s = GraphSession(spark, allow_writes=True)
-        s.execute("CREATE NODE TABLE City (id Int64, pop Int64, "
-                  "PRIMARY KEY(id), NODE ID(id))")
-        for i in range(n):
-            s.execute(f"CREATE (c:City {{id: {i}, pop: {i * 10}}})")
-        return s
-
-    def test_delete_vs_update_conflict_keyed(self, spark):
-        """Batch 1 deletes City 0, batch 2 updates it: the r11
-        added-only check merged this silently (update won, delete
-        lost); the touched-key overlap check raises."""
-        from pyspark.sql import functions as F
-
-        from brahmand_spark.writes import _merge_snapshot_isolated
-
-        s = self._city_session(spark)
-        snap = dict(s.tables)
-        t0 = snap["City"]
-        k = spark.createDataFrame([(0,)], "id bigint")
-        b_del = ({**snap, "City": t0.filter("id <> 0")}, {"City": [k]})
-        b_upd = ({**snap, "City": t0.withColumn(
-            "pop", F.when(F.col("id") == 0, F.lit(999))
-            .otherwise(F.col("pop")))}, {"City": [k]})
-        with pytest.raises(PlanError, match="disjoint"):
-            _merge_snapshot_isolated(s, snap, [b_del, b_upd])
-        assert s.tables["City"] is t0  # nothing committed
-
-    def test_delete_vs_update_conflict_fallback(self, spark):
-        """Same race through the un-keyed (tainted) fallback path:
-        the tagged-batch touched-id check catches it there too."""
-        from pyspark.sql import functions as F
-
-        from brahmand_spark.writes import _merge_snapshot_isolated
-
-        s = self._city_session(spark)
-        snap = dict(s.tables)
-        t0 = snap["City"]
-        b_del = ({**snap, "City": t0.filter("id <> 0")},
-                 {"City": "taint"})
-        b_upd = ({**snap, "City": t0.withColumn(
-            "pop", F.when(F.col("id") == 0, F.lit(999))
-            .otherwise(F.col("pop")))}, {"City": "taint"})
-        with pytest.raises(PlanError, match="disjoint"):
-            _merge_snapshot_isolated(s, snap, [b_del, b_upd])
-        assert s.tables["City"] is t0
-
-    def test_conflict_commits_nothing(self, spark):
-        """A conflict on ONE table must not leave ANOTHER table's
-        clean merge committed (r11 advice #1: the per-table store
-        loop could half-apply a batch set)."""
-        from brahmand_spark.writes import _merge_snapshot_isolated
-
-        s = self._city_session(spark)
-        s.execute("CREATE NODE TABLE Town (id Int64, "
-                  "PRIMARY KEY(id), NODE ID(id))")
-        s.execute("CREATE (t:Town {id: 0})")
-        snap = dict(s.tables)
-        city0, town0 = snap["City"], snap["Town"]
-        k0 = spark.createDataFrame([(0,)], "id bigint")
-        k1 = spark.createDataFrame([(1,)], "id bigint")
-        # City writes are disjoint (clean); Town collides
-        b1 = ({**snap, "City": city0.filter("id <> 0"),
-               "Town": town0.filter("id <> 0")},
-              {"City": [k0], "Town": [k0]})
-        b2 = ({**snap, "City": city0.filter("id <> 1"),
-               "Town": town0.filter("id <> 0")},
-              {"City": [k1], "Town": [k0]})
-        with pytest.raises(PlanError, match="disjoint"):
-            _merge_snapshot_isolated(s, snap, [b1, b2])
-        assert s.tables["City"] is city0
-        assert s.tables["Town"] is town0
-
-    def test_schema_drift_new_column_merges(self, spark):
-        """A concurrent SET that introduces a previously-absent
-        column used to die in an opaque AnalysisException at merge
-        time (r11 advice #3); schemas now align NULL-filled."""
-        s = self._city_session(spark, n=8)
-        s.execute(
-            "MATCH (c:City) CALL { WITH c SET c.flag = c.id + 1 } "
-            "IN 2 CONCURRENT TRANSACTIONS OF 4 ROWS")
-        assert rows(s, "MATCH (c:City) RETURN c.id AS i, c.flag AS f") \
-            == {(i, i + 1) for i in range(8)}
-
-    def test_keyed_merge_plan_has_no_multiset_diff(self, spark):
-        """The merge plan for keyed writes is touched-key anti/semi
-        joins — NO Except (whole-table multiset diff) per batch
-        (VERDICT r11 missing #3's done criterion)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType
-
-        from brahmand_spark.writes import _merge_keyed, _union_schema
-
-        s = self._city_session(spark, n=6)
-        t0 = s.tables["City"]
-        t1 = t0.withColumn("pop", F.when(
-            F.col("id") < 3, F.col("pop") + 1).otherwise(F.col("pop")))
-        t2 = t0.withColumn("pop", F.when(
-            F.col("id") >= 3, F.col("pop") + 2).otherwise(F.col("pop")))
-        k1 = spark.createDataFrame([(i,) for i in range(3)], "id bigint")
-        k2 = spark.createDataFrame([(i,) for i in range(3, 6)], "id bigint")
-        entries = [(t1, [k1]), (t2, [k2])]
-        fields = _union_schema("City", [t0, t1, t2])
-        merged = _merge_keyed(s, "City", t0, entries, fields, True)
-        assert merged is not None
-        plan = merged._jdf.queryExecution().optimizedPlan().toString()
-        assert "Except" not in plan
-        assert plan.count("LeftAnti") == 1
-        assert plan.count("LeftSemi") == 2
-        got = {(r["id"], r["pop"]) for r in merged.collect()}
-        assert got == {(0, 1), (1, 11), (2, 21),
-                       (3, 32), (4, 42), (5, 52)}
-        assert isinstance(merged.schema["pop"].dataType, LongType)
-
-    def test_detach_delete_taints_to_fallback(self, wsession):
-        """DETACH DELETE's incident-edge fan-out cannot key its
-        touched pairs — the rel table falls back to the multiset
-        diff and the result still matches the serial outcome."""
-        for i in range(6):
-            wsession.execute(
-                f"CREATE (p:Person {{id: {i}, name: 'P{i}', age: 1}})"
-                f"-[:LIVES_IN {{since: {i}}}]->"
-                f"(c:City {{id: {100 + i}, name: 'C{i}'}})")
-        wsession.execute(
-            "MATCH (p:Person) WHERE p.id % 2 = 0 "
-            "CALL { WITH p DETACH DELETE p } "
-            "IN 3 CONCURRENT TRANSACTIONS OF 2 ROWS")
-        assert rows(wsession, "MATCH (p:Person) RETURN p.id AS i") == \
-            {(1,), (3,), (5,)}
-        assert rows(wsession,
-                    "MATCH (p:Person)-[r:LIVES_IN]->(c:City) "
-                    "RETURN r.since AS s") == {(1,), (3,), (5,)}
 
 
 class TestDurableWrites:
