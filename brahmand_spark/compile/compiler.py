@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import GraphSchema, RelationshipSchema
 from ..errors import PlanError, UnsupportedError
+from ..ops.adjacency import expand_pairs
 from ..parser import ast
 from .expressions import ExprCompiler, collect_aliases, contains_aggregate
 from .scope import (
@@ -1829,115 +1830,141 @@ class QueryCompiler:
         Eligibility mirrors the reference's gate
         (query_validation.rs:103-124 plus the edge-list tagging passes:
         match_clause.rs:52, filter_tagging.rs:153, 174,
-        projection_tagging.rs:198): the rel is declared ``ADJ
-        INDEX(true)``, both direction tables are materialized, and the
-        hop carries no inline properties, no filters or projections on
-        the rel alias, no multi-type arms, and is a plain single hop.
-        Returns None when ineligible -> caller falls back to the edge
-        list.
+        projection_tagging.rs:198): `_adjacency_rows` finds both
+        direction tables, and the hop is a plain single hop whose rel
+        alias is never filtered or projected. Returns None when
+        ineligible -> caller falls back to the edge list.
 
         Scale shape: the adjacency table has one row per source node
-        (pre-grouped at write time), so the hop is scan -> leftsemi/
-        equi-join on src -> ``explode(neighbors)`` — no edge-table
+        (pre-grouped at write time), so the hop is scan -> equi-join on
+        src -> multiplicity-exact neighbor explode — no edge-table
         shuffle; written bucketed by src it co-partitions with the
         frontier."""
-        sch = rel.schema
         if (
-            self.load_adjacency is None
-            or not sch.adj_index
-            or rel.orientation == "invalid"
-            or rel.properties
-            or rel.alt_resolved or rel.alt_types
-            or _is_var(rel) or rel.shortest or rel.in_path_var
+            _is_var(rel) or rel.shortest or rel.in_path_var
             or rel.alias in self._referenced
             or "*" in self._referenced
+            # The edge-list 'both' plan dedups over (src, dst, props);
+            # the prop-less adjacency tables dedup over bare pairs. The
+            # two cardinalities only agree when the rel carries no
+            # property columns (reciprocal edges with distinct props
+            # must NOT collapse).
+            or (rel.orientation == "both"
+                and self._rel_props(rel.schema))
         ):
             return None
-        if rel.orientation == "both":
-            # The edge-list 'both' plan dedups over (src, dst, props);
-            # the prop-less adjacency tables dedup over bare pairs.
-            # The two cardinalities only agree when the rel carries no
-            # property columns — otherwise fall back to the edge list
-            # (e.g. reciprocal edges with distinct props must NOT
-            # collapse).
-            cols = sch.column_names or self.load_table(sch.type_name).columns
-            if any(c not in (sch.from_column, sch.to_column)
-                   for c in cols):
-                return None
-        outgoing = self.load_adjacency(f"{sch.type_name}_outgoing")
-        incoming = self.load_adjacency(f"{sch.type_name}_incoming")
-        if outgoing is None or incoming is None:
-            return None  # index declared but not materialized
-
         a = rel.alias
         src_name, dst_name = pcol(a, "from_id"), pcol(a, "to_id")
-
-        def expanded(adj: DataFrame) -> DataFrame:
-            # Re-expand each neighbor by its stored multiplicity so an
-            # adj-indexed hop is cardinality-equivalent to the edge
-            # list on multigraphs (round-4 fix; all-ones fallback for
-            # tables written before the counts column existed).
-            counts = (
-                F.col("counts") if "counts" in adj.columns
-                else F.array_repeat(F.lit(1).cast("bigint"),
-                                    F.size("neighbors"))
-            )
-            return adj.select(
-                F.col("src").alias(src_name),
-                F.explode(
-                    F.flatten(F.zip_with(
-                        F.col("neighbors"), counts,
-                        lambda n, c: F.array_repeat(n, c.cast("int")),
-                    ))
-                ).alias(dst_name),
-            )
-
-        if rel.orientation == "fwd":
-            df = expanded(outgoing)
-        elif rel.orientation == "rev":
-            df = expanded(incoming)
-        else:  # 'both': UNION DISTINCT of the two direction tables
-            # (graph_traversal_planning.rs:695-721). The edge-list
-            # 'both' plan dedups over (src, dst, props) while the
-            # adjacency tables carry no props — the two only agree
-            # when the rel has no property columns, so _adjacency_
-            # eligibility already bailed for props-bearing rels.
-            df = expanded(outgoing).union(expanded(incoming)).distinct()
+        df = self._adjacency_rows(rel, src_name, dst_name)
+        if df is None:
+            return None
         scope.bind(RelBinding(
-            alias=a, type_name=sch.type_name, columns=[],
+            alias=a, type_name=rel.schema.type_name, columns=[],
             src_pcol=src_name, dst_pcol=dst_name,
             fwd_storage={"fwd": True, "rev": False}.get(rel.orientation),
         ))
         return df
 
-    def _fusion_endpoint(
-        self, rel: RelEntity, pattern: Pattern,
-        find_component,
-    ) -> Optional[tuple[str, str]]:
-        """FK-edge fusion eligibility: when the relationship's backing
-        table IS one endpoint's node table (derived-FK graphs — the
-        edge "table" is just (fk, id) projected from the node table),
-        the hop needs no separate edge scan: the endpoint's node scan
-        carries the FK column. Returns (fused pattern alias, fk column
-        in that node table) or None.
-
-        The fused endpoint must be a plain fresh binding: not already
-        in a component (a second scan would duplicate its prefixed
-        columns), not prebound; the rel must be a plain single-type,
-        single-hop, directed hop whose alias is never referenced as a
-        bare variable (bare rel refs expand all rel columns)."""
+    def _adjacency(self, rel: RelEntity) -> Optional[tuple]:
+        """``({REL}_outgoing, {REL}_incoming)`` grouped-adjacency tables
+        a traversal of ``rel`` can read, or None: the type is declared
+        ``ADJ INDEX(true)``, both tables are materialized (a write
+        drops them while ``adj_index`` stays True), and the hop is a
+        valid single-type one without inline properties (the grouped
+        tables carry none)."""
         sch = rel.schema
+        if (self.load_adjacency is None or not sch.adj_index
+                or rel.orientation == "invalid" or rel.properties
+                or rel.alt_resolved or rel.alt_types):
+            return None
+        outgoing = self.load_adjacency(f"{sch.type_name}_outgoing")
+        incoming = self.load_adjacency(f"{sch.type_name}_incoming")
+        if outgoing is None or incoming is None:
+            return None
+        return outgoing, incoming
+
+    def _adjacency_rows(
+        self, rel: RelEntity, src: str = "src", dst: str = "dst",
+    ) -> Optional[DataFrame]:
+        """Oriented ``(src, dst)`` pairs re-expanded from the
+        `_adjacency` tables, or None. Each neighbor repeats by its
+        stored multiplicity, so the pairs are row-for-row the edge
+        list's (parallel edges count as distinct relationships);
+        'both' is the UNION DISTINCT of the two direction tables
+        (graph_traversal_planning.rs:695-721)."""
+        tables = self._adjacency(rel)
+        if tables is None:
+            return None
+        outgoing, incoming = tables
+        if rel.orientation == "fwd":
+            return expand_pairs(outgoing, src, dst)
+        if rel.orientation == "rev":
+            return expand_pairs(incoming, src, dst)
+        return expand_pairs(outgoing, src, dst).union(
+            expand_pairs(incoming, src, dst)).distinct()
+
+    def _fk_endpoints(self, rel: RelEntity) -> Optional[tuple[str, str]]:
+        """FK-edge fusion eligibility, shared by both flavors: the rel
+        must be a plain single-type, single-hop, directed hop whose
+        alias is never referenced as a bare variable (bare rel refs
+        expand all rel columns). Returns the pattern aliases on its
+        (from, to) sides under the hop's orientation, or None."""
         if (rel.alt_resolved or rel.alt_types or _is_var(rel)
                 or rel.shortest
                 or rel.orientation not in ("fwd", "rev")
                 or rel.alias in self._bare_refs
                 or "*" in self._bare_refs):
             return None
+        if rel.orientation == "fwd":
+            return rel.src, rel.dst
+        return rel.dst, rel.src
+
+    def _fk_edge(
+        self, rel: RelEntity, df: DataFrame, scope: Scope, backing: str,
+        src_col: str, dst_col: str,
+    ) -> DataFrame:
+        """Derive a fused hop's edge inside ``backing``'s node scan:
+        from_id/to_id copy ``src_col``/``dst_col``, each accessed rel
+        property copies the node column it physically is (only those
+        are advertised — bare rel refs disable fusion), and inline
+        ``{k: v}`` maps filter the node's own columns."""
+        a = rel.alias
+        props = [c for c in self._rel_props(rel.schema)
+                 if c in self._prop_refs.get(a, set())]
+        df = _with_copies(df, {
+            pcol(a, "from_id"): src_col, pcol(a, "to_id"): dst_col,
+            **{pcol(a, c): pcol(backing, c) for c in props}})
+        scope.bind(RelBinding(
+            alias=a, type_name=rel.schema.type_name, columns=props,
+            src_pcol=pcol(a, "from_id"), dst_pcol=pcol(a, "to_id"),
+        ))
+        if rel.properties:
+            ec = ExprCompiler(scope, self.params, self._prop_dtype)
+            for key, expr in rel.properties.items():
+                df = df.filter(ref(pcol(backing, key)) == ec.compile(expr))
+        return df
+
+    def _fusion_endpoint(
+        self, rel: RelEntity, pattern: Pattern,
+        find_component,
+    ) -> Optional[tuple[str, str]]:
+        """FK-edge fusion: when the relationship's backing table IS one
+        endpoint's node table (derived-FK graphs — the edge "table" is
+        just (fk, id) projected from the node table), the hop needs no
+        separate edge scan: the endpoint's node scan carries the FK
+        column. Returns (fused pattern alias, fk column in that node
+        table) or None.
+
+        The fused endpoint must be a plain fresh binding: not already
+        in a component (a second scan would duplicate its prefixed
+        columns), not prebound."""
+        ends = self._fk_endpoints(rel)
+        if ends is None:
+            return None
+        from_alias, to_alias = ends
+        sch = rel.schema
         to_node = self.catalog.node(sch.to_node)
         from_node = self.catalog.node(sch.from_node)
-        # pattern-side aliases under this orientation
-        to_alias = rel.dst if rel.orientation == "fwd" else rel.src
-        from_alias = rel.src if rel.orientation == "fwd" else rel.dst
 
         def fresh(alias: str) -> bool:
             node = pattern.nodes[alias]
@@ -1961,44 +1988,16 @@ class QueryCompiler:
     ) -> DataFrame:
         """Build the hop's "edge" as the fused endpoint's node scan:
         the node columns come along (binding the endpoint), and the
-        oriented edge id columns are derived — from_id/to_id point at
-        the FK column and the node id according to which endpoint fused
-        and the hop orientation. Rel-property access resolves to the
-        node's own columns (they are the same physical columns)."""
-        node = pattern.nodes[fused_alias]
-        df = self._scan_node(node, scope)
-        a = rel.alias
-        nb = scope.get(fused_alias)
+        oriented edge id columns are derived — the fused side exposes
+        its own id, the other side the FK column. Rel-property access
+        resolves to the node's own columns (they are the same physical
+        columns)."""
+        df = self._scan_node(pattern.nodes[fused_alias], scope)
         fk = pcol(fused_alias, fk_col)
-        own_id = nb.id_pcol
-        # orientation decides which pattern side this endpoint is
-        fused_is_dst = fused_alias == rel.dst
-        src_col = own_id if not fused_is_dst else fk
-        dst_col = own_id if fused_is_dst else fk
-        # fused src: its id is from_id and the FK is to_id (from-flavor
-        # fwd) — and mirrored for every other combination; both reduce
-        # to: the fused side exposes its own id, the other side the FK.
-        prop_cols = [
-            c for c in rel.schema.column_names
-            if c in self._prop_refs.get(a, set())
-        ]
-        df = _with_copies(df, {
-            pcol(a, "from_id"): src_col, pcol(a, "to_id"): dst_col,
-            **{pcol(a, c): pcol(fused_alias, c) for c in prop_cols}})
-        # only the materialized (accessed) props are advertised — the
-        # fused path never copies the rest (bare rel refs disable it)
-        scope.bind(RelBinding(
-            alias=a, type_name=rel.schema.type_name,
-            columns=prop_cols,
-            src_pcol=pcol(a, "from_id"), dst_pcol=pcol(a, "to_id"),
-        ))
-        if rel.properties:
-            ec = ExprCompiler(scope, self.params, self._prop_dtype)
-            for key, expr in rel.properties.items():
-                df = df.filter(
-                    ref(pcol(fused_alias, key)) == ec.compile(expr)
-                )
-        return df
+        own_id = scope.get(fused_alias).id_pcol
+        if fused_alias == rel.dst:
+            return self._fk_edge(rel, df, scope, fused_alias, fk, own_id)
+        return self._fk_edge(rel, df, scope, fused_alias, own_id, fk)
 
     def _virtual_edge(
         self, rel: RelEntity, pattern: Pattern, find_component, scope: Scope,
@@ -2009,15 +2008,11 @@ class QueryCompiler:
         (or a filter, for cycles) against the other endpoint. Returns
         (bound backing alias, other endpoint alias, fk column) or
         None."""
-        sch = rel.schema
-        if (rel.alt_resolved or rel.alt_types or _is_var(rel)
-                or rel.shortest
-                or rel.orientation not in ("fwd", "rev")
-                or rel.alias in self._bare_refs
-                or "*" in self._bare_refs):
+        ends = self._fk_endpoints(rel)
+        if ends is None:
             return None
-        to_alias = rel.dst if rel.orientation == "fwd" else rel.src
-        from_alias = rel.src if rel.orientation == "fwd" else rel.dst
+        from_alias, to_alias = ends
+        sch = rel.schema
         to_node = self.catalog.node(sch.to_node)
         from_node = self.catalog.node(sch.from_node)
 
@@ -2048,29 +2043,12 @@ class QueryCompiler:
         a = rel.alias
         ci = find_component(backing_alias)
         df, bound = components[ci]
-        bb = scope.get(backing_alias)
         fk_col = pcol(backing_alias, fk)
-        own_id = bb.id_pcol
-        backing_is_src = backing_alias == rel.src
-        v_prop_cols = [
-            c for c in rel.schema.column_names
-            if c in self._prop_refs.get(a, set())
-        ]
-        df = _with_copies(df, {
-            pcol(a, "from_id"): own_id if backing_is_src else fk_col,
-            pcol(a, "to_id"): fk_col if backing_is_src else own_id,
-            **{pcol(a, c): pcol(backing_alias, c) for c in v_prop_cols}})
-        scope.bind(RelBinding(
-            alias=a, type_name=rel.schema.type_name,
-            columns=v_prop_cols,
-            src_pcol=pcol(a, "from_id"), dst_pcol=pcol(a, "to_id"),
-        ))
-        if rel.properties:
-            ec = ExprCompiler(scope, self.params, self._prop_dtype)
-            for key, expr in rel.properties.items():
-                df = df.filter(
-                    ref(pcol(backing_alias, key)) == ec.compile(expr)
-                )
+        own_id = scope.get(backing_alias).id_pcol
+        if backing_alias == rel.src:
+            df = self._fk_edge(rel, df, scope, backing_alias, own_id, fk_col)
+        else:
+            df = self._fk_edge(rel, df, scope, backing_alias, fk_col, own_id)
         other_node = pattern.nodes[other_alias]
         oi = find_component(other_alias)
         if oi == ci:  # cycle: both endpoints already here -> filter
@@ -2097,245 +2075,160 @@ class QueryCompiler:
             bound |= {a, other_alias}
             components[ci] = (df, bound)
 
+    def _arms(self, rel: RelEntity) -> list[tuple]:
+        """The ``(schema, orientation)`` arms a hop traverses: the
+        primary schema, plus each resolved ``-[:X|Y]->`` arm. A
+        multi-type hop drops a schema-invalid primary (it matches zero
+        relationships); a single-type hop keeps it, so its
+        constant-empty rows still carry the type's columns."""
+        if not rel.alt_resolved:
+            return [(rel.schema, rel.orientation)]
+        primary = ([] if rel.orientation == "invalid"
+                   else [(rel.schema, rel.orientation)])
+        return primary + list(rel.alt_resolved)
+
+    def _rel_props(self, sch: RelationshipSchema) -> list[str]:
+        """The declared property surface of a relationship type: its
+        ``column_names`` (every table column when none are declared)
+        minus the endpoint columns, restricted to columns its table
+        has — a node-table-backed relationship (FK fusion declaration)
+        must not leak every node column as a rel property."""
+        raw_cols = self.load_table(sch.type_name).columns
+        return [c for c in (sch.column_names or raw_cols)
+                if c not in (sch.from_column, sch.to_column)
+                and c in raw_cols]
+
+    def _arm_props(self, rel: RelEntity) -> list[str]:
+        """The union of the arms' property surfaces, first-appearance
+        order — a multi-type hop carries every arm's properties, NULL
+        where the matched type lacks one (openCypher)."""
+        props: list[str] = []
+        for sch, _ in self._arms(rel):
+            props += [c for c in self._rel_props(sch) if c not in props]
+        return props
+
+    def _oriented_rows(
+        self, rel: RelEntity, src: str, dst: str,
+        cols: Optional[dict] = None, walk: bool = False,
+    ) -> DataFrame:
+        """The rows a hop traverses, built in this one place: every arm
+        of `_arms` selects its edge table as ``src``/``dst`` in its
+        orientation — 'fwd' as stored, 'rev' mirrored, 'both' the
+        UNION DISTINCT of the two (graph_traversal_planning.rs:524-616;
+        this collapses reciprocal edge pairs like the reference — a
+        documented divergence from Neo4j bag semantics), 'invalid' a
+        constant-empty frame (query_planner/mod.rs:50-60) — and the
+        arms bag-union by name. ``cols`` maps each further output
+        column to the arm property it reads (NULL where the arm's
+        declared surface lacks it) or to None for the arm's type name.
+
+        ``walk`` applies the rel's inline ``{k: v}`` map to every arm's
+        edge scan (`_inline_prop_filter`): a multi-type walk skips arms
+        whose table lacks a key (NULL never equals), so when no arm
+        survives the result is the primary schema's constant-empty
+        frame. Single hops filter their bound columns instead."""
+        cols = cols or {}
+
+        def arm(sch: RelationshipSchema, orient: str,
+                raw: DataFrame) -> DataFrame:
+            have = (self._rel_props(sch)
+                    if any(c is not None for c in cols.values()) else ())
+            tag = "'{}'".format(
+                sch.type_name.replace("\\", "\\\\").replace("'", "\\'"))
+            extra = [
+                quote(c) if c == name and c in have
+                else as_sql(c, name) if c in have
+                else f"{tag if c is None else 'NULL'} AS {quote(name)}"
+                for name, c in cols.items()]
+
+            def select(s: str, d: str) -> DataFrame:
+                return raw.selectExpr(as_sql(s, src), as_sql(d, dst),
+                                      *extra)
+
+            if orient == "rev":
+                return select(sch.to_column, sch.from_column)
+            fwd = select(sch.from_column, sch.to_column)
+            if orient == "invalid":
+                return fwd.filter("false")
+            if orient == "fwd":
+                return fwd
+            return fwd.union(select(sch.to_column, sch.from_column)) \
+                .distinct()
+
+        arms: list[DataFrame] = []
+        for sch, orient in self._arms(rel):
+            raw = self.load_table(sch.type_name)
+            if walk and rel.properties:
+                if rel.alt_resolved and any(
+                        k not in raw.columns for k in rel.properties):
+                    continue
+                raw = self._inline_prop_filter(rel, raw)
+            arms.append(arm(sch, orient, raw))
+        if not arms:
+            return arm(rel.schema, "invalid",
+                       self.load_table(rel.schema.type_name))
+        df = arms[0]
+        for other in arms[1:]:
+            df = df.unionByName(other)
+        return df
+
     def _edge_df(self, rel: RelEntity, scope: Scope) -> DataFrame:
         """Oriented edge DataFrame with columns
         ``{alias}__from_id`` (matches rel.src), ``{alias}__to_id``
-        (matches rel.dst), plus renamed property columns."""
+        (matches rel.dst), plus renamed property columns. A multi-type
+        hop also carries a hidden ``{alias}____type`` column so type(r)
+        resolves per row; Catalyst prunes it and unused property
+        reads."""
         adj = self._adjacency_edge_df(rel, scope)
         if adj is not None:
             return adj
-        sch = rel.schema
-        raw = self.load_table(sch.type_name)
-        # honor the declared rel-property surface: a node-table-backed
-        # relationship (FK fusion declaration) must not leak every node
-        # column as a rel property on the non-fused path
-        prop_cols = [
-            c for c in (sch.column_names or raw.columns)
-            if c not in (sch.from_column, sch.to_column)
-            and c in raw.columns
-        ]
         a = rel.alias
         src_name, dst_name = pcol(a, "from_id"), pcol(a, "to_id")
-
-        if rel.alt_resolved:
-            # Multi-type hop: bag-union of each arm's oriented rows.
-            # Properties are per-arm (r9): the union carries the UNION
-            # of every arm's declared property columns, an arm filling
-            # the ones it lacks with NULL — openCypher's r.prop-is-
-            # NULL-when-the-matched-type-lacks-it. A hidden __type
-            # column rides along so type(r) resolves per row; Catalyst
-            # prunes both it and unused property reads.
-            arm_schemas = []
-            if rel.orientation != "invalid":
-                arm_schemas.append((sch, rel.orientation))
-            arm_schemas += list(rel.alt_resolved)
-            arm_tables: list[tuple] = []
-            all_props: list[str] = []
-            for sch_a, orient_a in arm_schemas:
-                raw_a = self.load_table(sch_a.type_name)
-                pcs = [
-                    c for c in (sch_a.column_names or raw_a.columns)
-                    if c not in (sch_a.from_column, sch_a.to_column)
-                    and c in raw_a.columns
-                ]
-                arm_tables.append((sch_a, orient_a, raw_a, pcs))
-                for c in pcs:
-                    if c not in all_props:
-                        all_props.append(c)
-            type_col = pcol(a, "__type")
-
-            def arm(sch_a, orient_a, raw_a, pcs) -> DataFrame:
-                def sel(src_c: str, dst_c: str) -> DataFrame:
-                    cols = [F.col(src_c).alias(src_name),
-                            F.col(dst_c).alias(dst_name)]
-                    cols += [
-                        (F.col(c) if c in pcs else F.lit(None))
-                        .alias(pcol(a, c)) for c in all_props]
-                    cols.append(F.lit(sch_a.type_name).alias(type_col))
-                    return raw_a.select(*cols)
-
-                fwd = sel(sch_a.from_column, sch_a.to_column)
-                if orient_a == "fwd":
-                    return fwd
-                rev = sel(sch_a.to_column, sch_a.from_column)
-                if orient_a == "rev":
-                    return rev
-                return fwd.union(rev).distinct()
-
-            arms = [arm(*t) for t in arm_tables]
-            df = arms[0]
-            for other in arms[1:]:
-                df = df.unionByName(other)
-            scope.bind(RelBinding(
-                alias=a, type_name=sch.type_name, columns=all_props,
-                src_pcol=src_name, dst_pcol=dst_name,
-                type_pcol=type_col,
-            ))
-            if rel.properties:
-                # inline {k: v} on a multi-type pattern: an arm whose
-                # type lacks the key contributes nothing (NULL never
-                # equals) — the openCypher reading
-                ec = ExprCompiler(scope, self.params, self._prop_dtype)
-                for key, expr in rel.properties.items():
-                    if key not in all_props:
-                        raise PlanError(
-                            f"unknown property '{key}' on any arm of "
-                            f"the multi-type pattern")
-                    df = df.filter(
-                        F.col(pcol(a, key)) == ec.compile(expr))
-            return df
-
-        def oriented(src_col: str, dst_col: str) -> DataFrame:
-            return raw.selectExpr(
-                as_sql(src_col, src_name), as_sql(dst_col, dst_name),
-                *[as_sql(c, pcol(a, c)) for c in prop_cols])
-
-        if rel.orientation == "invalid":
-            df = oriented(sch.from_column, sch.to_column).filter("false")
-        elif rel.orientation == "fwd":
-            df = oriented(sch.from_column, sch.to_column)
-        elif rel.orientation == "rev":
-            df = oriented(sch.to_column, sch.from_column)
-        else:  # 'both' -> UNION DISTINCT of the two orientations
-            # (graph_traversal_planning.rs:524-616; note this collapses
-            # reciprocal edge pairs like the reference — documented
-            # divergence from Neo4j bag semantics).
-            df = oriented(sch.from_column, sch.to_column).union(
-                oriented(sch.to_column, sch.from_column)
-            ).distinct()
+        props = self._arm_props(rel)
+        cols: dict = {pcol(a, c): c for c in props}
+        type_col = pcol(a, "__type") if rel.alt_resolved else None
+        if type_col:
+            cols[type_col] = None
+        df = self._oriented_rows(rel, src_name, dst_name, cols)
         scope.bind(RelBinding(
-            alias=a, type_name=sch.type_name, columns=prop_cols,
+            alias=a, type_name=rel.schema.type_name, columns=props,
             src_pcol=src_name, dst_pcol=dst_name,
-            fwd_storage={"fwd": True, "rev": False, "invalid": True}
-            .get(rel.orientation),
+            fwd_storage=None if rel.alt_resolved else {
+                "fwd": True, "rev": False, "invalid": True,
+            }.get(rel.orientation),
+            type_pcol=type_col,
         ))
         if rel.properties:
             ec = ExprCompiler(scope, self.params, self._prop_dtype)
             for key, expr in rel.properties.items():
+                # a multi-type arm whose type lacks the key contributes
+                # nothing (NULL never equals) — the openCypher reading
+                if rel.alt_resolved and key not in props:
+                    raise PlanError(
+                        f"unknown property '{key}' on any arm of "
+                        f"the multi-type pattern")
                 df = df.filter(ref(pcol(a, key)) == ec.compile(expr))
         return df
 
-    def _adjacency_pairs(self, rel: RelEntity) -> Optional[DataFrame]:
-        """Oriented DISTINCT (src, dst) pairs from the grouped-
-        adjacency tables, or None when unavailable. Multiplicity is
-        deliberately NOT re-expanded here: this feeds reachability-
-        style consumers only (shortest-path BFS dedups per level
-        anyway), where the distinct-neighbor explode is cheaper;
-        variable-length walks keep the edge list because Cypher counts
-        parallel edges as distinct relationships."""
-        sch = rel.schema
-        if (self.load_adjacency is None or not sch.adj_index
-                or rel.properties or rel.orientation == "invalid"
-                or rel.alt_resolved or rel.alt_types):
-            return None
-        outgoing = self.load_adjacency(f"{sch.type_name}_outgoing")
-        incoming = self.load_adjacency(f"{sch.type_name}_incoming")
-        if outgoing is None or incoming is None:
-            return None
-
-        def expanded(adj: DataFrame) -> DataFrame:
-            return adj.select(
-                "src", F.explode("neighbors").alias("dst")
-            )
-
-        if rel.orientation == "fwd":
-            return expanded(outgoing)
-        if rel.orientation == "rev":
-            return expanded(incoming)
-        return expanded(outgoing).union(expanded(incoming)).distinct()
-
     def _oriented_pairs(self, rel: RelEntity) -> DataFrame:
-        """Oriented (src, dst) id pairs for one relationship schema —
-        the traversal base for variable-length and shortest-path hops.
+        """Oriented (src, dst) id pairs — the traversal base for
+        variable-length and shortest-path hops. A multi-type walk
+        tags each pair with its arm's type (``rt``) so variable-length
+        relationship-uniqueness can tell an A edge from a B edge over
+        the same endpoint pair (Cypher: distinct relationships).
 
         When the rel carries an adjacency index, the pairs re-expand
         from the grouped tables instead of scanning the edge list: the
         adjacency scan is narrower (two packed arrays, no prop
-        columns), pre-grouped by src, and — since the tables store
-        per-neighbor multiplicity (round 4) — cardinality-exact, so
+        columns), pre-grouped by src, and cardinality-exact, so
         Cypher's parallel-edges-count-as-distinct-walks semantics
         survive."""
-        sch = rel.schema
-        if rel.alt_resolved:
-            # Multi-type traversal base (r9): bag-union of every arm's
-            # oriented pairs — previously the alt arms were silently
-            # DROPPED (only the primary schema walked). A type tag
-            # rides along so variable-length relationship-uniqueness
-            # can tell an A edge from a B edge over the same endpoint
-            # pair (Cypher: distinct relationships). Inline {k: v}
-            # maps apply per arm; an arm whose type lacks the key can
-            # never satisfy an equality on it and contributes nothing.
-            arms = []
-            arm_schemas = []
-            if rel.orientation != "invalid":
-                arm_schemas.append((sch, rel.orientation))
-            arm_schemas += list(rel.alt_resolved)
-            ec = ExprCompiler(Scope(), self.params, self._prop_dtype) if rel.properties \
-                else None
-            for sch_a, orient_a in arm_schemas:
-                raw_a = self.load_table(sch_a.type_name)
-                if rel.properties:
-                    if any(k not in raw_a.columns
-                           for k in rel.properties):
-                        continue
-                    for key, expr in rel.properties.items():
-                        raw_a = raw_a.filter(
-                            F.col(key) == ec.compile(expr))
-
-                def pair(src_c, dst_c, raw_x=raw_a, t=sch_a.type_name):
-                    return raw_x.select(
-                        F.col(src_c).alias("src"),
-                        F.col(dst_c).alias("dst"),
-                        F.lit(t).alias("rt"))
-
-                if orient_a == "fwd":
-                    arms.append(pair(sch_a.from_column, sch_a.to_column))
-                elif orient_a == "rev":
-                    arms.append(pair(sch_a.to_column, sch_a.from_column))
-                else:  # both
-                    arms.append(
-                        pair(sch_a.from_column, sch_a.to_column).union(
-                            pair(sch_a.to_column, sch_a.from_column)
-                        ).distinct())
-            if not arms:
-                return self.load_table(sch.type_name).select(
-                    F.col(sch.from_column).alias("src"),
-                    F.col(sch.to_column).alias("dst"),
-                    F.lit(sch.type_name).alias("rt"),
-                ).filter(F.lit(False))
-            out = arms[0]
-            for a in arms[1:]:
-                out = out.unionByName(a)
-            return out
-        if (self.load_adjacency is not None and sch.adj_index
-                and not rel.properties
-                and rel.orientation != "invalid"):
-            from ..ops.adjacency import expand_pairs
-
-            outgoing = self.load_adjacency(f"{sch.type_name}_outgoing")
-            incoming = self.load_adjacency(f"{sch.type_name}_incoming")
-            if outgoing is not None and incoming is not None:
-                if rel.orientation == "fwd":
-                    return expand_pairs(outgoing)
-                if rel.orientation == "rev":
-                    return expand_pairs(incoming)
-                # 'both': pair-level UNION DISTINCT — identical to the
-                # edge-list branch below, which is also prop-free here
-                return expand_pairs(outgoing).union(
-                    expand_pairs(incoming)).distinct()
-        raw = self._inline_prop_filter(rel, self.load_table(sch.type_name))
-
-        def pairs(src_c: str, dst_c: str) -> DataFrame:
-            return raw.selectExpr(as_sql(src_c, "src"), as_sql(dst_c, "dst"))
-
-        if rel.orientation == "invalid":
-            return pairs(sch.from_column, sch.to_column).filter("false")
-        if rel.orientation == "rev":
-            return pairs(sch.to_column, sch.from_column)
-        if rel.orientation == "both":
-            return pairs(sch.from_column, sch.to_column).union(
-                pairs(sch.to_column, sch.from_column)).distinct()
-        return pairs(sch.from_column, sch.to_column)
+        adj = self._adjacency_rows(rel)
+        if adj is not None:
+            return adj
+        return self._oriented_rows(
+            rel, "src", "dst", {"rt": None} if rel.alt_resolved else None,
+            walk=True)
 
     def _inline_prop_filter(self, rel: RelEntity,
                             raw: DataFrame) -> DataFrame:
@@ -2366,14 +2259,7 @@ class QueryCompiler:
         arm is a constant-empty frame (same rule as the reference's
         invalid-direction plans). Catalyst prunes the node scan to
         the id column; no shuffle."""
-        arms: list[tuple] = []
-        if rel.schema is not None:
-            arms.append((rel.schema, rel.orientation))
-        arms += list(rel.alt_resolved or [])
-        if not arms:
-            raise PlanError(
-                f"zero-length walk on unresolvable relationship "
-                f"'{rel.alias}'")
+        arms = self._arms(rel)
         # Zero-length paths traverse no edges, so EVERY arm whose
         # oriented endpoint labels coincide contributes that label's
         # identity rows — not just the first arm's (ADVICE r13: a
@@ -2381,8 +2267,12 @@ class QueryCompiler:
         # dropped the other arms' valid zero-hop matches). Each arm
         # uses its OWN orientation; duplicate labels collapse here, so
         # the common single-label case stays one pruned scan.
+        # A schema-invalid arm has no zero-length path either: one node
+        # cannot carry both pattern labels.
         labels: list[str] = []
         for sch, orient in arms:
+            if orient == "invalid":
+                continue
             lsrc, ldst = ((sch.to_node, sch.from_node)
                           if orient == "rev"
                           else (sch.from_node, sch.to_node))
@@ -2429,16 +2319,15 @@ class QueryCompiler:
 
         Inline ``{k: v}`` property maps restrict every traversed edge
         (r9 — applied to the edge scan by `_inline_prop_filter` via
-        `_oriented_pairs`; the adjacency shortcut is skipped because
-        the grouped tables carry no properties). Per-hop property
+        `_oriented_pairs`; the adjacency tables are skipped because
+        they carry no properties). Per-hop property
         ACCESS (relationships(p)) stays rejected for shortest
         segments: only the per-pair minimum distance is materialized,
         not the path's edges."""
-        # BFS is reachability: the deduped grouped-adjacency table is
-        # semantically identical and skips the per-level edge shuffle.
-        base = self._adjacency_pairs(rel)
-        base = (base if base is not None
-                else self._oriented_pairs(rel)).persist()
+        # the walk's own base: each level's dropDuplicates(["root",
+        # "node"]) collapses parallel edges, so the multiplicity-exact
+        # adjacency expansion serves BFS as it serves var-length walks
+        base = self._oriented_pairs(rel).persist()
         # each level's frontier size rides its localCheckpoint job as an
         # observed metric (r14, guide §2.4) — the per-level isEmpty
         # probe job is gone
@@ -2523,94 +2412,26 @@ class QueryCompiler:
         therefore surface reciprocal-edge paths the plain pattern
         folds together."""
         carry = bool(getattr(rel, "carry_props", False))
-        if carry and rel.alt_resolved:
-            # multi-type carry (r9): each arm contributes (src, dst,
-            # rt) pairs plus a per-hop struct holding the arm's TYPE
-            # and the UNION of arm property columns (NULL where the
-            # matched type lacks one — the _edge_df single-hop rule);
-            # the rt tag also keys relationship-uniqueness below
-            prop_cols = list(getattr(rel, "carry_prop_names", ()))
-            arm_schemas = []
-            if rel.orientation != "invalid":
-                arm_schemas.append((rel.schema, rel.orientation))
-            arm_schemas += list(rel.alt_resolved)
-            arms = []
-            for sch_a, orient_a in arm_schemas:
-                raw_a = self.load_table(sch_a.type_name)
-                if rel.properties:
-                    if any(k not in raw_a.columns
-                           for k in rel.properties):
-                        continue  # this arm can never satisfy the map
-                    raw_a = self._inline_prop_filter(rel, raw_a)
-                have = set(raw_a.columns)
-
-                def sel(src_c, dst_c, raw_x=raw_a,
-                        t=sch_a.type_name, have=have):
-                    cols = [F.col(src_c).alias("src"),
-                            F.col(dst_c).alias("dst"),
-                            F.lit(t).alias("rt")]
-                    cols += [(F.col(c) if c in have else F.lit(None))
-                             .alias(c) for c in prop_cols]
-                    return raw_x.select(*cols)
-
-                if orient_a == "fwd":
-                    arms.append(sel(sch_a.from_column, sch_a.to_column))
-                elif orient_a == "rev":
-                    arms.append(sel(sch_a.to_column, sch_a.from_column))
-                else:
-                    arms.append(
-                        sel(sch_a.from_column, sch_a.to_column).union(
-                            sel(sch_a.to_column, sch_a.from_column)
-                        ).distinct())
-            if arms:
-                base = arms[0]
-                for a2 in arms[1:]:
-                    base = base.unionByName(a2)
-            else:
-                base = self.load_table(rel.schema.type_name).select(
-                    F.col(rel.schema.from_column).alias("src"),
-                    F.col(rel.schema.to_column).alias("dst"),
-                    F.lit(rel.schema.type_name).alias("rt"),
-                    *[F.lit(None).alias(c) for c in prop_cols],
-                ).filter(F.lit(False))
-            base = base.select(
-                "src", "dst", "rt",
-                F.struct(
-                    F.col("src").alias("src"), F.col("dst").alias("dst"),
-                    F.col("rt").alias("type"),
-                    *[F.col(c).alias(c) for c in prop_cols],
-                ).alias("rs"))
-        elif carry:
-            sch = rel.schema
-            raw = self._inline_prop_filter(
-                rel, self.load_table(sch.type_name))
-            prop_cols = list(getattr(rel, "carry_prop_names", ()))
-
-            def orient(src_c: str, dst_c: str) -> DataFrame:
-                return raw.select(
-                    F.col(src_c).alias("src"),
-                    F.col(dst_c).alias("dst"),
-                    *[F.col(c) for c in prop_cols])
-
-            if rel.orientation == "invalid":
-                base = orient(sch.from_column, sch.to_column) \
-                    .filter(F.lit(False))
-            elif rel.orientation == "rev":
-                base = orient(sch.to_column, sch.from_column)
-            elif rel.orientation == "both":
-                base = orient(sch.from_column, sch.to_column).union(
-                    orient(sch.to_column, sch.from_column)).distinct()
-            else:
-                base = orient(sch.from_column, sch.to_column)
-            base = base.select(
-                "src", "dst",
-                F.struct(
-                    F.col("src").alias("src"), F.col("dst").alias("dst"),
-                    *[F.col(c).alias(c) for c in prop_cols],
-                ).alias("rs"))
+        if carry:
+            # per-hop struct of (src, dst[, type], properties...): the
+            # carried property names are the arms' union (NULL where
+            # the matched type lacks one — the _edge_df single-hop
+            # rule); a multi-type walk's rt tag is the struct's 'type'
+            # and also keys relationship-uniqueness below
+            prop_cols = list(rel.carry_prop_names)
+            tag = {"rt": None} if rel.alt_resolved else {}
+            base = self._oriented_rows(
+                rel, "src", "dst", {**tag, **{c: c for c in prop_cols}},
+                walk=True)
+            base = base.selectExpr(
+                "src", "dst", *tag,
+                "struct({}) AS rs".format(", ".join(
+                    ["src AS src", "dst AS dst"]
+                    + ["rt AS type" for _ in tag]
+                    + [as_sql(c, c) for c in prop_cols])))
         else:
             base = self._oriented_pairs(rel)
-        tagged = "rt" in base.columns  # multi-type: per-edge type tag
+        tagged = bool(rel.alt_resolved)  # multi-type: type tag 'rt'
         step_cols = (["src", "dst"] + (["rs"] if carry else [])
                      + (["rt"] if tagged else []))
         # relationship-uniqueness compares TYPE and endpoints — an A
@@ -2730,58 +2551,26 @@ class QueryCompiler:
 
         # r9: a variable-length rel that rides a PATH VARIABLE
         # carries per-hop rel structs, so relationships(p) /
-        # nodes(p) work downstream — always when its type declares
-        # properties, and for prop-less types too unless the rel is
-        # adjacency-indexed (the grouped-table fast path is worth
-        # more than introspection there: drop the path var or the
-        # index to introspect). Shortest segments materialize only
-        # the min distance — never carried; multi-type unions have
-        # no single property surface to walk.
+        # nodes(p) work downstream — always when its arms declare
+        # properties, and for prop-less types too unless the walk
+        # reads the adjacency tables (the grouped-table fast path is
+        # worth more than introspection there: drop the path var or
+        # the index to introspect; a write drops the tables while
+        # schema.adj_index stays True, and then the walk scans the
+        # edge list and carries). Shortest segments materialize only
+        # the min distance — never carried. A multi-type carry's
+        # struct leads with the matched arm's 'type'.
         path_rel_aliases = {
             ra for _, rels in pattern.path_vars.values() for ra in rels}
         for r in pattern.rels:
             if (_is_var(r) and not r.shortest
                     and r.alias in path_rel_aliases
                     and r.schema is not None):
-                if r.alt_resolved:
-                    # multi-type (r9): carry the UNION of arm property
-                    # surfaces (first-appearance order) plus a 'type'
-                    # struct field — never adjacency-backed
-                    props_l: list[str] = []
-                    for sch_a, _ in ([(r.schema, None)]
-                                     + list(r.alt_resolved)):
-                        raw_cols = self.load_table(
-                            sch_a.type_name).columns
-                        for c in (sch_a.column_names or raw_cols):
-                            if (c not in (sch_a.from_column,
-                                          sch_a.to_column)
-                                    and c in raw_cols
-                                    and c not in props_l):
-                                props_l.append(c)
-                    r.carry_props = True
-                    r.carry_prop_names = tuple(props_l)
-                    r.carry_has_type = True
-                    continue
-                raw_cols = self.load_table(r.schema.type_name).columns
-                props = tuple(
-                    c for c in (r.schema.column_names or raw_cols)
-                    if c not in (r.schema.from_column, r.schema.to_column)
-                    and c in raw_cols)
-                # "backed" means the grouped tables actually EXIST —
-                # a write invalidates them while schema.adj_index
-                # stays True, and then the walk uses the edge list
-                # anyway, so the structs are free to carry (r9
-                # review: introspection errored for no benefit there)
-                adj_backed = (
-                    self.load_adjacency is not None
-                    and r.schema.adj_index
-                    and self.load_adjacency(
-                        f"{r.schema.type_name}_outgoing") is not None
-                    and self.load_adjacency(
-                        f"{r.schema.type_name}_incoming") is not None)
-                if props or not adj_backed:
+                props = tuple(self._arm_props(r))
+                if props or self._adjacency(r) is None:
                     r.carry_props = True
                     r.carry_prop_names = props
+                    r.carry_has_type = bool(r.alt_resolved)
 
         score, _ = self._filter_score(pattern, part)
         anchor = self._select_anchor(pattern, part)

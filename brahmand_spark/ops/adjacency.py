@@ -76,29 +76,25 @@ def build_adjacency(
     return adj
 
 
-def _multiplicity_counts(adj: DataFrame):
-    """``counts`` column, or all-ones for tables written before the
-    multiplicity column existed (legacy set-semantics tables)."""
-    if "counts" in adj.columns:
-        return F.col("counts")
-    return F.array_repeat(F.lit(1).cast("bigint"), F.size("neighbors"))
-
-
-def expand_pairs(adj: DataFrame) -> DataFrame:
+def expand_pairs(
+    adj: DataFrame, src: str = "src", dst: str = "dst",
+) -> DataFrame:
     """Multiplicity-preserving ``(src, dst)`` pairs from a grouped-
-    adjacency table: each neighbor re-expands ``counts[i]`` times, so
-    the result is row-for-row equivalent to the original edge list's
-    id pairs (parallel edges included)."""
+    adjacency table, under the given column names: each neighbor
+    re-expands ``counts[i]`` times, so the result is row-for-row
+    equivalent to the original edge list's id pairs (parallel edges
+    included). A table without ``counts`` fails at analysis."""
+    key = F.col("src")  # an alias to its own name outlives a union
     return adj.select(
-        "src",
+        key if src == "src" else key.alias(src),
         F.explode(
             F.flatten(
                 F.zip_with(
-                    "neighbors", _multiplicity_counts(adj),
+                    "neighbors", "counts",
                     lambda n, c: F.array_repeat(n, c.cast("int")),
                 )
             )
-        ).alias("dst"),
+        ).alias(dst),
     )
 
 

@@ -264,6 +264,11 @@ def apply_call_in_transactions(
     for bi, bval in enumerate(batch_vals):
         batch_ids = ids.filter(F.col("_b") == bval).select("id")
         snapshot = dict(session.tables)
+        # SET and CREATE append new keys to the catalog's column lists
+        # on every attempt; a rollback puts them back with the tables
+        columns = [(sch, list(sch.column_names)) for sch in (
+            *session.schema.nodes.values(),
+            *session.schema.relationships.values())]
         # ON ERROR RETRY <n> (r12, openCypher 25): each attempt
         # rolls back fully before the next; attempt 1 + n retries
         stats = exc = None
@@ -288,6 +293,12 @@ def apply_call_in_transactions(
                     if n not in snapshot:
                         session.tables.pop(n, None)
                 _durable_rollback(session, snapshot, dirty)
+                grown = [(sch, c0) for sch, c0 in columns
+                         if list(sch.column_names) != c0]
+                for sch, c0 in grown:
+                    sch.column_names = c0
+                if grown:
+                    session._persist_catalog()
         if exc is not None:
             if cit.on_error == "fail":
                 raise exc

@@ -21,6 +21,15 @@ BUDGETS = {
     "next_cust": (
         "MATCH (a:Customer)-[:NEXT_CUST*1..3]->(b:Customer) "
         "WHERE a.c_custkey = $k RETURN b.c_custkey AS dst", 637),
+    # Multi-type hop and path-carrying walk: half the calls they took
+    # when each arm built one Column per selected field (245 and 449).
+    "hop_multi": (
+        "MATCH (a:Customer)-[r:NEXT_CUST|PREV_CUST]->(b:Customer) "
+        "WHERE a.c_custkey = $k "
+        "RETURN b.c_custkey AS dst, r.hop_w AS w, type(r) AS t", 122),
+    "var_carry_multi": (
+        "MATCH p = (a:Customer)-[:NEXT_CUST|PREV_CUST*1..2]->(b:Customer) "
+        "WHERE a.c_custkey = $k RETURN size(relationships(p)) AS n", 224),
 }
 
 

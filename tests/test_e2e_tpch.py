@@ -370,6 +370,10 @@ class TestQuantifiedPathPatterns:
             duck.sql("""SELECT o_custkey AS ck, o_orderkey AS ok
                         FROM orders WHERE o_custkey <= 50"""),
         )
+        # a schema-invalid walk has no zero-length path either: no node
+        # is both a Customer and an Order
+        assert q(tpch, """MATCH (a:Customer)-[:NEXT_CUST*0..1]->(b:Order)
+                          RETURN a.c_custkey AS ck""").count() == 0
         rows = q(tpch, """
             MATCH p = (a:Customer)-[:NEXT_CUST*0..1]->(b:Customer)
             WHERE a.c_custkey = 7

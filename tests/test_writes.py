@@ -892,6 +892,34 @@ class TestCallInTransactions:
         assert s.tables.keys() == snapshot.keys()
         assert all(s.tables[k] is v for k, v in snapshot.items())
 
+    def test_rollback_restores_catalog_columns(self, spark, tmp_path):
+        """A failing batch's SET of a new key appends it to the
+        catalog's column list; the rollback takes it back with the
+        table, so the catalog keeps describing the table and a read of
+        the key fails as it did before the batch (the planner's
+        unknown-property error), not on a column the catalog lists but
+        the table lacks. The persisted catalog is rewritten too."""
+        from brahmand_spark.catalog import GraphSchema
+
+        cat = str(tmp_path / "catalog.json")
+        s = GraphSession(spark, allow_writes=True, catalog_path=cat)
+        s.execute("CREATE NODE TABLE Person (id Int64, age Int64, "
+                  "PRIMARY KEY(id), NODE ID(id))")
+        for i in range(4):
+            s.execute(f"CREATE (p:Person {{id: {i}, age: {i}}})")
+        read = "MATCH (p:Person) RETURN p.extra AS e"
+        with pytest.raises(PlanError, match="unknown property 'extra'"):
+            s.execute(read)
+        out = s.execute(
+            "MATCH (p:Person) CALL { WITH p SET p.extra = 1 REMOVE p.id } "
+            "IN TRANSACTIONS OF 2 ROWS ON ERROR CONTINUE").collect()
+        assert [r["committed"] for r in out] == [False, False]
+        assert s.schema.node("Person").column_names == ["id", "age"]
+        assert GraphSchema.load(cat).node("Person").column_names == [
+            "id", "age"]
+        with pytest.raises(PlanError, match="unknown property 'extra'"):
+            s.execute(read)
+
 
 class TestConcurrentTransactions:
     """IN [n] CONCURRENT TRANSACTIONS (openCypher 25) parses and runs
