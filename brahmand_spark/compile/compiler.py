@@ -2089,12 +2089,17 @@ class QueryCompiler:
 
     def _rel_props(self, sch: RelationshipSchema) -> list[str]:
         """The declared property surface of a relationship type: its
-        ``column_names`` (every table column when none are declared)
-        minus the endpoint columns, restricted to columns its table
-        has — a node-table-backed relationship (FK fusion declaration)
-        must not leak every node column as a rel property."""
+        ``column_names`` minus the endpoint columns, restricted to
+        columns its table has. Empty ``column_names`` means every table
+        column, except on a node-table-backed relationship (FK fusion
+        declaration): there it declares no properties, so the node's
+        columns never leak as rel properties."""
         raw_cols = self.load_table(sch.type_name).columns
-        return [c for c in (sch.column_names or raw_cols)
+        node_backed = any(n.table_name == sch.table_name
+                          for n in self.catalog.nodes.values())
+        declared = (sch.column_names if sch.column_names or node_backed
+                    else raw_cols)
+        return [c for c in declared
                 if c not in (sch.from_column, sch.to_column)
                 and c in raw_cols]
 

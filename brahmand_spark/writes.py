@@ -6,10 +6,13 @@ as the default for parity and offer ``GraphSession(allow_writes=True)``
 as an upgrade. Writes are expressed as DataFrame transforms over the
 session's registered tables:
 
-- CREATE        -> per-match-row projection appended with unionByName
-- SET / REMOVE  -> left join on matched ids + conditional withColumn
-- DELETE        -> left_anti join on matched ids (DETACH also anti-joins
-                   every incident relationship table)
+- CREATE / MERGE -> per-match-row projection appended with unionByName
+- SET / REMOVE / DELETE -> ``_rewrite``, the one rewrite of existing
+  rows: the table left-joins the matched keys (a node's id, a
+  relationship's (from, to) pair), then a SET replaces the assigned
+  columns of matched rows and a DELETE keeps the unmatched ones.
+  Each clause rewrites a table once per target alias; DETACH DELETE
+  adds one rewrite per incident relationship table.
 
 Each mutated table is ``localCheckpoint``-ed eagerly: the write becomes
 a materialized snapshot, so later reads don't re-run the update plan and
@@ -18,27 +21,30 @@ each committed snapshot is also overwritten as parquet at
 ``<write_path>/<table>`` (``_durable_persist``), and a new session on
 the same path reloads it.
 
-A write costs its table rewrites and nothing else. A SET's counter
-rides its checkpoint job as an observed metric (the rows it rewrote),
-a CREATE without a MATCH counts its one row per pattern statically, and
-the statement's stats row is a driver-local relation (``io.local_frame``:
-no Spark job and no Python worker to collect it).
+A write costs its table rewrites and nothing else. A rewrite's counter
+rides its checkpoint job as an observed metric: ``properties_set`` is
+rows rewritten times assignments, ``nodes_deleted`` and
+``relationships_deleted`` are rows removed. A CREATE without a MATCH
+counts its one row per pattern statically, and the statement's stats
+row is a driver-local relation (``io.local_frame``: no Spark job and
+no Python worker to collect it).
 
 Divergences from Neo4j, documented: plain DELETE does not verify the
 node has no incident relationships (use DETACH DELETE); RETURN after a
-write is not supported; a SET value referencing OTHER bound variables
-(r12: ``SET p.age = toInteger(row.age)``, ``SET a.x = b.y``) reduces
-to ONE value per target id by max() — deterministic under any
-partitioning where Neo4j's per-row sequential last-write is
-row-order-defined; clauses execute in a FIXED order per statement
-(MERGE, CREATE, SET, REMOVE, DELETE, FOREACH) rather than textual
-order — split a write that needs a later clause to run first into two
-statements.
+write is not supported; every value of one clause compiles against the
+pre-clause state (``SET n.a = n.b, n.b = n.a`` swaps); a SET value
+referencing OTHER bound variables (r12: ``SET p.age =
+toInteger(row.age)``, ``SET a.x = b.y``) reduces to ONE value per
+target key by max() — deterministic under any partitioning where
+Neo4j's per-row sequential last-write is row-order-defined; clauses
+execute in a FIXED order per statement (MERGE, CREATE, SET, REMOVE,
+DELETE, FOREACH) rather than textual order — split a write that needs
+a later clause to run first into two statements.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .compile.expressions import ExprCompiler, collect_aliases
@@ -90,24 +96,13 @@ def apply_write(session, wq: ast.WriteQuery, params=None,
     if wq.create is not None:
         _apply_create(session, df, scope, wq.create, params, stats)
     if wq.set_clause is not None:
-        # batch per target alias: every value in one SET clause
-        # compiles against the PRE-clause state (openCypher semantics
-        # — `SET n.a = n.b, n.b = n.a` swaps; per-key sequential
-        # writes would see mid-statement values, r7 review), and a
-        # k-key SET rewrites its table once instead of k times
-        groups: dict[str, list] = {}
-        for target, value in wq.set_clause.assignments:
-            if not isinstance(target, ast.PropertyAccess):
-                raise UnsupportedError(
-                    "SET/REMOVE target must be alias.property")
-            groups.setdefault(target.alias, []).append(
-                (target, value, False))
-        for triples in groups.values():
-            _apply_set_group(session, df, scope, triples, params, stats)
+        _apply_sets(session, df, scope, [
+            (t, v, False) for t, v in wq.set_clause.assignments],
+            params, stats)
     if wq.remove is not None:
-        for target in wq.remove.targets:
-            _apply_set(session, df, scope, target, ast.Literal(None),
-                       params, stats, removing=True)
+        _apply_sets(session, df, scope, [
+            (t, ast.Literal(None), True) for t in wq.remove.targets],
+            params, stats)
     if wq.delete is not None:
         _apply_delete(session, df, scope, wq.delete, stats)
     for fc in wq.foreachs:
@@ -347,7 +342,7 @@ def apply_call_in_transactions(
     return out.select(*sel)
 
 
-def _store(session, table_name: str, df: DataFrame) -> DataFrame:
+def _store(session, table_name: str, df: DataFrame) -> None:
     """Snapshot the mutated table (see module docstring) and register.
 
     Invalidates any grouped-adjacency materialization of a mutated
@@ -364,7 +359,6 @@ def _store(session, table_name: str, df: DataFrame) -> DataFrame:
             session.tables.pop(f"{rel.type_name}_outgoing", None)
             session.tables.pop(f"{rel.type_name}_incoming", None)
             session._projections.pop(rel.type_name, None)
-    return out
 
 
 def _durable_persist(session, table_name: str, df: DataFrame) -> None:
@@ -423,9 +417,10 @@ def _apply_create(session, df, scope, create, params, stats) -> None:
                 "path variables / shortestPath in CREATE"
             )
         ec = ExprCompiler(scope, params)
-        # id expression per node position (bound alias -> its id column;
-        # new node -> its id property expression, evaluated per match row)
-        id_exprs: list = []
+        # (label, id expression) per node position: a bound alias reads
+        # its id column, a new node its id property expression,
+        # evaluated per match row
+        ends: list = []
         for np in path.nodes:
             b = scope.get(np.alias) if np.alias else None
             if isinstance(b, NodeBinding):
@@ -434,7 +429,7 @@ def _apply_create(session, df, scope, create, params, stats) -> None:
                         f"CREATE on bound alias '{np.alias}' cannot "
                         "restate label/properties"
                     )
-                id_exprs.append(F.col(b.id_pcol))
+                ends.append((b.label, F.col(b.id_pcol)))
                 continue
             if np.label is None:
                 raise PlanError("CREATE node needs a label")
@@ -450,44 +445,15 @@ def _apply_create(session, df, scope, create, params, stats) -> None:
             rows = base.select(*cols)
             table = session._load_for_label(np.label)
             new_cols = [c for c in rows.columns if c not in table.columns]
-            updated = _store(
-                session, sch.table_name, _align_append(table, rows))
+            _store(session, sch.table_name, _align_append(table, rows))
             if new_cols:
                 sch.column_names = list(sch.column_names) + new_cols
                 session._persist_catalog()
             stats["nodes_created"] += 1 if df is None else rows.count()
-            # Later rels in this path address the new node by its id
-            # expression (per match row).
-            id_exprs.append(ec.compile(np.properties[sch.node_id]))
-            _ = updated
+            ends.append((np.label, ec.compile(np.properties[sch.node_id])))
         for i, rp in enumerate(path.rels):
-            if rp.type_name is None:
-                raise PlanError("CREATE relationship needs a type")
-            if rp.direction not in ("out", "in"):
-                raise PlanError(
-                    "CREATE relationship needs a direction (-> or <-)"
-                )
-            if rp.max_hops != 1 or rp.alt_types:
-                raise UnsupportedError(
-                    "variable-length / multi-type in CREATE"
-                )
-            rsch = session.schema.relationship(rp.type_name)
-
-            def node_label(np):
-                b = scope.get(np.alias) if np.alias else None
-                return b.label if isinstance(b, NodeBinding) else np.label
-
-            src_e, dst_e = id_exprs[i], id_exprs[i + 1]
-            src_l, dst_l = node_label(path.nodes[i]), node_label(path.nodes[i + 1])
-            if rp.direction == "in":
-                src_e, dst_e = dst_e, src_e
-                src_l, dst_l = dst_l, src_l
-            if (src_l, dst_l) != (rsch.from_node, rsch.to_node):
-                raise PlanError(
-                    f"CREATE -[:{rp.type_name}]- connects "
-                    f"{rsch.from_node}->{rsch.to_node}, "
-                    f"got {src_l}->{dst_l}"
-                )
+            rsch, src_e, dst_e = _rel_endpoints(
+                session, rp, ends[i:i + 2], "CREATE")
             sel = [src_e.alias(rsch.from_column),
                    dst_e.alias(rsch.to_column)]
             sel += [ec.compile(v).alias(k)
@@ -499,7 +465,25 @@ def _apply_create(session, df, scope, create, params, stats) -> None:
                 1 if df is None else rows.count())
 
 
-# ----------------------------------------------------------------------
+def _rel_endpoints(session, rp, ends, verb: str):
+    """``(schema, from id, to id)`` of the relationship a CREATE or
+    MERGE writes: a single-type, single-hop, directed pattern whose
+    endpoints — ``ends``, (label, id expression) in path order,
+    swapped by ``<-`` — run from its type's from_node to its to_node."""
+    if rp.type_name is None or rp.direction not in ("out", "in"):
+        raise PlanError(
+            f"{verb} relationship needs a type and a direction "
+            "(-> or <-)")
+    if rp.max_hops != 1 or rp.alt_types:
+        raise UnsupportedError(f"variable-length / multi-type in {verb}")
+    rsch = session.schema.relationship(rp.type_name)
+    (src_l, src), (dst_l, dst) = (
+        ends if rp.direction == "out" else ends[::-1])
+    if (src_l, dst_l) != (rsch.from_node, rsch.to_node):
+        raise PlanError(
+            f"{verb} -[:{rp.type_name}]- connects "
+            f"{rsch.from_node}->{rsch.to_node}, got {src_l}->{dst_l}")
+    return rsch, src, dst
 
 
 # ----------------------------------------------------------------------
@@ -554,20 +538,22 @@ def _apply_merge(session, df, scope, mc, params, stats) -> None:
         stats["nodes_created"] += n_created
 
         def run_sets(assignments, ids_df):
+            a = np.alias or "__m"
             mini = Scope()
             mini.bind(NodeBinding(
-                alias=np.alias or "__m", label=np.label,
+                alias=a, label=np.label,
                 id_column=sch.node_id, columns=list(sch.column_names),
             ))
-            a = np.alias or "__m"
-            mdf = ids_df.select(F.col(sch.node_id).alias(pcol(a, sch.node_id)))
-            for target, value in assignments:
+            for target, _v in assignments:
                 if isinstance(target, ast.PropertyAccess) and \
                         target.alias != a:
                     raise PlanError(
                         f"ON SET target must be '{a}'"
                     )
-                _apply_set(session, mdf, mini, target, value, params, stats)
+            mdf = ids_df.select(F.col(sch.node_id).alias(pcol(a, sch.node_id)))
+            _apply_sets(session, mdf, mini,
+                        [(t, v, False) for t, v in assignments],
+                        params, stats)
 
         if mc.on_create and n_created:
             run_sets(mc.on_create, created.select(sch.node_id))
@@ -584,10 +570,6 @@ def _apply_merge(session, df, scope, mc, params, stats) -> None:
         raise UnsupportedError(
             "ON CREATE/ON MATCH SET on relationship MERGE"
         )
-    if rp.type_name is None or rp.direction not in ("out", "in"):
-        raise PlanError("MERGE relationship needs a type and direction")
-    if rp.max_hops != 1 or rp.alt_types:
-        raise UnsupportedError("variable-length / multi-type in MERGE")
     ends = []
     for np in path.nodes:
         b = scope.get(np.alias) if np.alias else None
@@ -599,20 +581,9 @@ def _apply_merge(session, df, scope, mc, params, stats) -> None:
             raise PlanError(
                 f"MERGE cannot restate properties on bound '{np.alias}'"
             )
-        ends.append(b)
-    rsch = session.schema.relationship(rp.type_name)
-    src_b, dst_b = ends
-    src_l, dst_l = src_b.label, dst_b.label
-    if rp.direction == "in":
-        src_b, dst_b = dst_b, src_b
-        src_l, dst_l = dst_l, src_l
-    if (src_l, dst_l) != (rsch.from_node, rsch.to_node):
-        raise PlanError(
-            f"MERGE -[:{rp.type_name}]- connects "
-            f"{rsch.from_node}->{rsch.to_node}, got {src_l}->{dst_l}"
-        )
-    sel = [F.col(src_b.id_pcol).alias(rsch.from_column),
-           F.col(dst_b.id_pcol).alias(rsch.to_column)]
+        ends.append((b.label, F.col(b.id_pcol)))
+    rsch, src, dst = _rel_endpoints(session, rp, ends, "MERGE")
+    sel = [src.alias(rsch.from_column), dst.alias(rsch.to_column)]
     sel += [ec.compile(v).alias(k) for k, v in rp.properties.items()]
     want = base.select(*sel).distinct()
     edges = session._load_for_label(rp.type_name)
@@ -629,252 +600,193 @@ def _apply_merge(session, df, scope, mc, params, stats) -> None:
 
 
 # ----------------------------------------------------------------------
-def _apply_set(session, df, scope, target, value, params, stats,
-               removing: bool = False) -> None:
-    """Single-assignment SET/REMOVE (MERGE ON-SET / FOREACH / REMOVE
-    callers) — one-element group of :func:`_apply_set_group`."""
-    if not isinstance(target, ast.PropertyAccess):
-        raise UnsupportedError(
-            "SET/REMOVE target must be alias.property")
-    _apply_set_group(session, df, scope, [(target, value, removing)],
-                     params, stats)
+def _keyed(session, b):
+    """How a bound target's matched rows key its table: ``(label, key
+    columns to select from the matched frame, join condition over the
+    table's columns prefixed by the binding's alias)``.
+
+    A node keys on its id. A relationship keys on its (from, to) pair
+    in storage orientation (``RelBinding.fwd_storage``; r7 review: a
+    rev-matched rel carries the storage TO value in src_pcol, so a
+    naive from==src join touched zero edges): a reversed match swaps
+    the pair, and a mixed or unknown one ('both' unions, multi-type
+    arms, FK-derived rels) matches either orientation through the
+    pair's (least, greatest), so each edge row meets at most one key.
+    Every parallel or reciprocal edge on a matched pair is touched —
+    the edge-list model has no edge identity (documented divergence)."""
+    def t(c):
+        return F.col(pcol(b.alias, c))
+
+    if isinstance(b, NodeBinding):
+        id_col = session.schema.node(b.label).node_id
+        return (b.label, [F.col(b.id_pcol).alias("__wid")],
+                t(id_col) == F.col("__wid"))
+    rsch = session.schema.relationship(b.type_name)
+    pair = [F.col(b.src_pcol), F.col(b.dst_pcol)]
+    ends = [t(rsch.from_column), t(rsch.to_column)]
+    if b.fwd_storage is False:
+        pair.reverse()
+    elif b.fwd_storage is None:
+        pair = [F.least(*pair), F.greatest(*pair)]
+        ends = [F.least(*ends), F.greatest(*ends)]
+    return (b.type_name,
+            [pair[0].alias("__wsrc"), pair[1].alias("__wdst")],
+            (ends[0] == F.col("__wsrc")) & (ends[1] == F.col("__wdst")))
 
 
-def _apply_set_group(session, df, scope, triples, params,
-                     stats) -> None:
-    """One batched pass of SET/REMOVE assignments sharing a target
-    alias: every value column compiles against the PRE-state joined
-    frame and the replaced columns land in ONE select — snapshot
-    semantics (`SET n.a = n.b, n.b = n.a` swaps) and one table
-    rewrite per clause instead of one per key."""
+def _rewrite(session, label, alias, joins, stats, sets=None,
+             params=None) -> None:
+    """The one rewrite of existing rows, behind every SET, REMOVE and
+    DELETE. ``label``'s table, its columns prefixed by ``alias``,
+    left-joins each ``(keys, on)`` of ``joins``; a row is matched when
+    the first column of a key frame it joined is non-null.
+
+    ``sets`` holds ``(key, value, removing)`` assignments, ``value`` an
+    expression over the target row or a Column of the key frame (a
+    value already reduced per key): matched rows take the new values
+    in one select, and keys new to the table join the catalog. Without
+    ``sets`` the unmatched rows are kept. One ``_store`` commits, and
+    the matched-row count rides its checkpoint job as an observed
+    metric: ``properties_set`` grows by rows times assignments, the
+    deleted counter by rows."""
+    is_node = label in session.schema.nodes
+    if is_node:
+        sch = session.schema.node(label)
+        for key, _v, _r in sets or ():
+            if key == sch.node_id:
+                raise PlanError(
+                    f"SET/REMOVE on the node id property '{key}' would "
+                    "re-key the node — CREATE a new node and DELETE "
+                    "the old one instead")
+    else:
+        sch = session.schema.relationship(label)
+        for key, _v, _r in sets or ():
+            if key in (sch.from_column, sch.to_column):
+                raise PlanError(
+                    f"SET/REMOVE on the endpoint column '{key}' would "
+                    "re-point the edge — DELETE it and CREATE the new "
+                    "edge instead")
+    table = session._load_for_label(label)
+    joined = table.select(
+        *[F.col(c).alias(pcol(alias, c)) for c in table.columns])
+    hits = []
+    for keys, on in joins:
+        joined = joined.join(keys, on, "left")
+        hits.append(F.col(keys.columns[0]))
+    hit = hits[0] if len(hits) == 1 else F.coalesce(*hits)
+    # observed on the join output, not on the broadcast key side: AQE
+    # drops that side's stage for a zero-row match, and its metric
+    # never arrives
+    obs = Observation()
+    joined = joined.observe(obs, F.count(hit).alias("n"))
+    old = {c: F.col(pcol(alias, c)) for c in table.columns}
+    if sets is None:
+        _store(session, sch.table_name, joined.filter(hit.isNull())
+               .select(*[v.alias(c) for c, v in old.items()]))
+        stats["nodes_deleted" if is_node else
+              "relationships_deleted"] += obs.get["n"]
+        return
+    sub = Scope()
+    if is_node:
+        sub.bind(NodeBinding(alias=alias, label=label,
+                             id_column=sch.node_id,
+                             columns=list(table.columns)))
+    else:
+        sub.bind(RelBinding(
+            alias=alias, type_name=label,
+            columns=[c for c in table.columns
+                     if c not in (sch.from_column, sch.to_column)],
+            src_pcol=pcol(alias, sch.from_column),
+            dst_pcol=pcol(alias, sch.to_column)))
+    ec = ExprCompiler(sub, params)
+    updates: dict[str, Column] = {}
+    new_keys: list[str] = []
+    for key, value, removing in sets:
+        if key not in old and key not in new_keys:
+            new_keys.append(key)
+            if not removing:
+                sch.column_names = list(sch.column_names) + [key]
+        new_val = value if isinstance(value, Column) else ec.compile(value)
+        updates[key] = F.when(hit.isNotNull(), new_val).otherwise(
+            old.get(key, F.lit(None)))
+    _store(session, sch.table_name, joined.select(*[
+        updates.get(c, old.get(c)).alias(c)
+        for c in [*table.columns, *new_keys]]))
+    if new_keys:
+        session._persist_catalog()
+    stats["properties_set"] += obs.get["n"] * len(sets)
+
+
+def _apply_sets(session, df, scope, triples, params, stats,
+                last=None) -> None:
+    """SET/REMOVE ``(target, value, removing)`` assignments: one
+    ``_rewrite`` per target alias, every value compiled against the
+    pre-clause state. Values that reference only their target compile
+    against its row. When one references other bound variables
+    (LOAD CSV's row, a joined node's property, FOREACH's loop
+    variable), all compute against the matched frame ``df`` and reduce
+    to one value per key: the max, or with ``last`` (FOREACH's list
+    position column) the value at the greatest position, ties to the
+    greatest value."""
     if df is None:
         raise PlanError("SET/REMOVE requires a MATCH")
-    a = triples[0][0].alias
-    external = False
-    for target, value, _removing in triples:
+    groups: dict[str, list] = {}
+    for t in triples:
+        if not isinstance(t[0], ast.PropertyAccess):
+            raise UnsupportedError(
+                "SET/REMOVE target must be alias.property")
+        groups.setdefault(t[0].alias, []).append(t)
+    for a, group in groups.items():
+        b = scope.get(a)
+        if not isinstance(b, (NodeBinding, RelBinding)):
+            raise UnsupportedError(
+                "SET/REMOVE targets a node or relationship property")
+        label, keys, on = _keyed(session, b)
         refs: set[str] = set()
-        collect_aliases(value, refs)
-        if refs - {a}:
-            # r12 (LOAD CSV / cross-alias SET): values referencing
-            # OTHER bound variables compute against the matched frame
-            # instead of the target table re-scan — see the external
-            # branch below
-            external = True
-    b = scope.get(a)
-    if isinstance(b, RelBinding):
-        _apply_set_rel_group(session, df, b, triples, params, stats,
-                             external=external, frame_scope=scope)
-        return
-    if not isinstance(b, NodeBinding):
-        raise UnsupportedError(
-            "SET/REMOVE targets a node or relationship property")
-    sch = session.schema.node(b.label)
-    for target, _v, _r in triples:
-        if target.key == sch.node_id:
-            raise PlanError(
-                f"SET/REMOVE on the node id property '{sch.node_id}' "
-                "would re-key the node — CREATE a new node and DELETE "
-                "the old one instead")
-    table = session._load_for_label(b.label)
-    matched = df.select(F.col(b.id_pcol).alias("__wid")).distinct()
-    prefixed = table.select(
-        *[F.col(c).alias(pcol(a, c)) for c in table.columns]
-    )
-    if external:
-        # r12: values reference other bound variables (LOAD CSV's
-        # row, a joined node's property) — compute them against the
-        # MATCHED FRAME (pre-state: df precedes any mutation of this
-        # statement), reduce to one value per target id (max() —
-        # deterministic under any partitioning; Neo4j's per-row
-        # sequential last-write is order-defined there and not here,
-        # the same documented divergence as FOREACH bound-alias SET),
-        # and join that in place of the table re-scan.
-        ec_df = ExprCompiler(scope, params)
-        val_cols = [ec_df.compile(v).alias(f"__wv{i}")
-                    for i, (_t, v, _r) in enumerate(triples)]
-        vals = (df.select(F.col(b.id_pcol).alias("__wid"), *val_cols)
-                .groupBy("__wid")
-                .agg(*[F.max(f"__wv{i}").alias(f"__wv{i}")
-                       for i in range(len(triples))]))
-        joined = prefixed.join(
-            vals, F.col(pcol(a, sch.node_id)) == F.col("__wid"),
-            "left")
-    else:
-        joined = prefixed.join(
-            matched, F.col(pcol(a, sch.node_id)) == F.col("__wid"),
-            "left",
-        )
-    # the rewritten-row count rides _store's checkpoint job as a metric
-    # observed on the join output; observed on `matched`, the broadcast
-    # side, it is lost when AQE drops that stage for a zero-row match
-    obs = Observation()
-    joined = joined.observe(obs, F.count("__wid").alias("n"))
-    sub = Scope()
-    sub.bind(NodeBinding(
-        alias=a, label=b.label, id_column=sch.node_id,
-        columns=list(table.columns),
-    ))
-    ec = ExprCompiler(sub, params)
-    updates: dict[str, "F.Column"] = {}
-    new_keys: list[str] = []
-    for i, (target, value, removing) in enumerate(triples):
-        is_new = (target.key not in table.columns
-                  and target.key not in new_keys)
-        if is_new:
-            new_keys.append(target.key)
-        old = (F.lit(None) if target.key not in table.columns
-               else F.col(pcol(a, target.key)))
-        new_val = (F.col(f"__wv{i}") if external
-                   else ec.compile(value))
-        updates[target.key] = F.when(
-            F.col("__wid").isNotNull(), new_val
-        ).otherwise(old)
-        if is_new and not removing:
-            sch.column_names = list(sch.column_names) + [target.key]
-    out_cols = list(table.columns) + new_keys
-    back = joined.select(*[
-        updates[c].alias(c) if c in updates
-        else F.col(pcol(a, c)).alias(c)
-        for c in out_cols
-    ])
-    _store(session, sch.table_name, back)
-    if new_keys:
-        session._persist_catalog()
-    stats["properties_set"] += obs.get["n"] * len(triples)
-
-
-def _rel_pair_cond(b, rsch, wsrc, wdst):
-    """Join condition matching a bound relationship's matched (src,
-    dst) pair against the edge TABLE's storage columns, keyed off the
-    binding's recorded storage orientation (r7 review: a rev-matched
-    rel carries the storage TO value in src_pcol, so the naive
-    from==src join silently touched zero edges). ``rsch`` is the
-    (from_col, to_col) Column pair of the TABLE side; ``wsrc``/
-    ``wdst`` the matched pair Columns. Unknown/mixed orientation
-    ('both' unions, multi-type arms, FK-derived rels) matches EITHER
-    orientation — when reciprocal edges both exist, both
-    update/delete (documented divergence, same family as the
-    parallel-edge one)."""
-    fwd = (rsch[0] == wsrc) & (rsch[1] == wdst)
-    rev = (rsch[0] == wdst) & (rsch[1] == wsrc)
-    if b.fwd_storage is True:
-        return fwd
-    if b.fwd_storage is False:
-        return rev
-    return fwd | rev
-
-
-def _apply_set_rel_group(session, df, b, triples, params,
-                         stats, external: bool = False,
-                         frame_scope=None) -> None:
-    """Batched SET/REMOVE on relationship properties (r7 — closed the
-    'not yet' gap): matched (src, dst) pairs join the edge table
-    ORIENTATION-AWARE (see :func:`_rel_pair_cond`) and every value
-    compiles against the pre-state frame (snapshot semantics, as the
-    node path). Updates EVERY parallel edge sharing a matched
-    endpoint pair — the edge-list model has no edge identity (same
-    documented divergence as relationship DELETE). Values may
-    reference the relationship's own properties, and — r12, same
-    machinery as the node path — other bound variables, reduced to
-    one value per endpoint pair (max)."""
-    rsch = session.schema.relationship(b.type_name)
-    for target, _v, _r in triples:
-        if target.key in (rsch.from_column, rsch.to_column):
-            raise PlanError(
-                f"SET/REMOVE on the endpoint column '{target.key}' "
-                "would re-point the edge — DELETE it and CREATE the "
-                "new edge instead")
-    a = triples[0][0].alias
-    pairs = df.select(
-        F.col(b.src_pcol).alias("__wsrc"),
-        F.col(b.dst_pcol).alias("__wdst"),
-    ).distinct()
-    n_matched = pairs.count()
-    edges = session._load_for_label(b.type_name)
-    prefixed = edges.select(
-        *[F.col(c).alias(pcol(a, c)) for c in edges.columns])
-    if external:
-        ec_df = ExprCompiler(frame_scope, params)
-        val_cols = [ec_df.compile(v).alias(f"__wv{i}")
-                    for i, (_t, v, _r) in enumerate(triples)]
-        pairs = (df.select(F.col(b.src_pcol).alias("__wsrc"),
-                           F.col(b.dst_pcol).alias("__wdst"),
-                           *val_cols)
-                 .groupBy("__wsrc", "__wdst")
-                 .agg(*[F.max(f"__wv{i}").alias(f"__wv{i}")
-                        for i in range(len(triples))]))
-    joined = prefixed.join(
-        pairs,
-        _rel_pair_cond(
-            b,
-            (F.col(pcol(a, rsch.from_column)),
-             F.col(pcol(a, rsch.to_column))),
-            F.col("__wsrc"), F.col("__wdst")),
-        "left",
-    )
-    prop_cols = [c for c in edges.columns
-                 if c not in (rsch.from_column, rsch.to_column)]
-    sub = Scope()
-    sub.bind(RelBinding(
-        alias=a, type_name=b.type_name, columns=prop_cols,
-        src_pcol=pcol(a, rsch.from_column),
-        dst_pcol=pcol(a, rsch.to_column),
-    ))
-    ec = ExprCompiler(sub, params)
-    updates: dict[str, "F.Column"] = {}
-    new_keys: list[str] = []
-    for i, (target, value, removing) in enumerate(triples):
-        is_new = (target.key not in edges.columns
-                  and target.key not in new_keys)
-        if is_new:
-            new_keys.append(target.key)
-        old = (F.lit(None) if target.key not in edges.columns
-               else F.col(pcol(a, target.key)))
-        new_val = (F.col(f"__wv{i}") if external
-                   else ec.compile(value))
-        updates[target.key] = F.when(
-            F.col("__wsrc").isNotNull(), new_val
-        ).otherwise(old)
-        if is_new and not removing:
-            rsch.column_names = list(rsch.column_names) + [target.key]
-    out_cols = list(edges.columns) + new_keys
-    back = joined.select(*[
-        updates[c].alias(c) if c in updates
-        else F.col(pcol(a, c)).alias(c)
-        for c in out_cols])
-    _store(session, rsch.table_name, back)
-    if new_keys:
-        session._persist_catalog()
-    stats["properties_set"] += n_matched * len(triples)
+        for _t, v, _r in group:
+            collect_aliases(v, refs)
+        if refs <= {a}:
+            _rewrite(session, label, a,
+                     [(df.select(*keys).distinct(), on)], stats,
+                     [(t.key, v, r) for t, v, r in group], params)
+            continue
+        ec = ExprCompiler(scope, params)
+        wv = [f"__wv{i}" for i in range(len(group))]
+        pos = [F.col(last).alias("__wp")] if last else []
+        vals = df.select(*keys, *pos, *[
+            ec.compile(v).alias(n) for n, (_t, v, _r) in zip(wv, group)])
+        vals = vals.groupBy(*vals.columns[:len(keys)]).agg(*[
+            (F.max(F.struct("__wp", n))[n] if last else F.max(n)).alias(n)
+            for n in wv])
+        _rewrite(session, label, a, [(vals, on)], stats,
+                 [(t.key, F.col(n), r) for n, (t, _v, r) in zip(wv, group)],
+                 params)
 
 
 # ----------------------------------------------------------------------
 def _apply_foreach(session, df, scope, fc, params, stats) -> None:
     """``FOREACH (x IN <list> | SET ... / DELETE x)`` (r7): the list
     explodes per match row (rows with empty/NULL lists skip the body,
-    Cypher semantics) and the body compiles onto the existing
-    SET/DELETE machinery — never a per-element loop:
+    Cypher semantics) and the body runs through the SET/DELETE
+    rewrites — never a per-element loop:
 
     - ``SET x.key = v`` (loop var is the node): the list must be
-      ``nodes(<path>)`` of a single-label path — exploded ids id-join
-      the label table, the value compiles against the target row
+      ``nodes(<path>)`` of a single-label path — exploded ids key the
+      label table, the value compiles against the target row
       (``x.cnt + 1`` works), exactly the MERGE ON-SET shape.
       Divergence: ids dedup before the join, so a node reached by
       several rows/elements updates ONCE (``x.cnt + 1`` increments by
       1, not by its occurrence count — Neo4j's per-row imperative
       loop would apply it repeatedly);
     - ``SET b.key = v`` (MATCH-bound target): the value may reference
-      the loop variable and any matched columns; per target id the
+      the loop variable and any matched columns; per target key the
       LAST list element wins (Cypher applies elements sequentially).
       Ties across duplicate match rows break by greatest value —
       deterministic under any partitioning (documented divergence
       from Neo4j's row-order last-write);
-    - ``DELETE x`` / ``DETACH DELETE x``: anti-join the label table
-      by the exploded ids."""
-    from pyspark.sql.window import Window
-
-    from .compile.scope import ScalarBinding
-    from .parser.ast import FnCall, Variable
+    - ``DELETE x`` / ``DETACH DELETE x``: the plain DELETE rewrite
+      keyed by the exploded ids."""
+    from .compile.scope import PathBinding
 
     if df is None:
         raise PlanError("FOREACH requires a preceding MATCH")
@@ -885,171 +797,80 @@ def _apply_foreach(session, df, scope, fc, params, stats) -> None:
     arr = ec.compile(fc.list_expr)
     base = df.select(
         "*", F.posexplode(arr).alias("__fpos", fc.var))
-    ex_scope = scope.copy()
-    ex_scope.bind(ScalarBinding(fc.var))
 
-    def loopvar_label() -> str:
+    def loop_node():
+        """The loop variable bound as a node: its id frame and scope."""
         e = fc.list_expr
         pvar = None
-        if (isinstance(e, FnCall) and e.name.lower() == "nodes"
+        if (isinstance(e, ast.FnCall) and e.name.lower() == "nodes"
                 and len(e.args) == 1
-                and isinstance(e.args[0], Variable)):
+                and isinstance(e.args[0], ast.Variable)):
             pvar = e.args[0].name
-        elif isinstance(e, Variable):
+        elif isinstance(e, ast.Variable):
             pvar = e.name
         pb = scope.get(pvar) if pvar else None
-        from .compile.scope import PathBinding
+        labels = {
+            scope.get(a).label for a in pb.node_aliases
+            if isinstance(scope.get(a), NodeBinding)
+        } if isinstance(pb, PathBinding) else set()
+        if len(labels) != 1:
+            raise UnsupportedError(
+                f"FOREACH over '{fc.var}' as a node needs the list to "
+                "be nodes(<path>) of a single-label path; for scalar "
+                "lists SET a MATCH-bound alias instead")
+        sch = session.schema.node(labels.pop())
+        mini = Scope()
+        mini.bind(NodeBinding(
+            alias=fc.var, label=sch.label, id_column=sch.node_id,
+            columns=list(sch.column_names)))
+        return base.select(
+            F.col(fc.var).alias(pcol(fc.var, sch.node_id))), mini
 
-        if isinstance(pb, PathBinding):
-            labels = {
-                scope.get(a).label for a in pb.node_aliases
-                if isinstance(scope.get(a), NodeBinding)
-            }
-            if len(labels) == 1:
-                return labels.pop()
-        raise UnsupportedError(
-            f"FOREACH over '{fc.var}' as a node needs the list to be "
-            "nodes(<path>) of a single-label path; for scalar lists "
-            "SET a MATCH-bound alias instead")
-
+    loop, bound = [], []
     for target, value in fc.sets:
-        if not isinstance(target, ast.PropertyAccess):
-            raise UnsupportedError(
-                "FOREACH SET target must be alias.property")
-        if target.alias == fc.var:
-            # loop var IS the node: ids -> the MERGE run_sets shape
-            label = loopvar_label()
-            sch = session.schema.node(label)
-            mini = Scope()
-            mini.bind(NodeBinding(
-                alias=fc.var, label=label, id_column=sch.node_id,
-                columns=list(sch.column_names)))
-            mdf = base.select(
-                F.col(fc.var).alias(pcol(fc.var, sch.node_id))
-            ).distinct()
-            _apply_set(session, mdf, mini, target, value, params,
-                       stats)
-            continue
-        b = scope.get(target.alias)
-        if not isinstance(b, NodeBinding):
-            raise UnsupportedError(
-                "FOREACH SET targets a MATCH-bound node alias or the "
-                "loop variable")
-        sch = session.schema.node(b.label)
-        val_col = ExprCompiler(ex_scope, params).compile(value)
-        vals = base.select(
-            F.col(b.id_pcol).alias("__wid"),
-            F.col("__fpos").alias("__fp"),
-            val_col.alias("__wval"),
-        )
-        w = Window.partitionBy("__wid").orderBy(
-            F.col("__fp").desc(), F.col("__wval").desc())
-        last = (vals.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .select("__wid", "__wval"))
-        n_matched = last.count()
-        table = session._load_for_label(b.label)
-        a = target.alias
-        prefixed = table.select(
-            *[F.col(c).alias(pcol(a, c)) for c in table.columns])
-        joined = prefixed.join(
-            last, F.col(pcol(a, sch.node_id)) == F.col("__wid"),
-            "left")
-        is_new = target.key not in table.columns
-        old = (F.lit(None) if is_new
-               else F.col(pcol(a, target.key)))
-        updated = joined.withColumn(
-            pcol(a, target.key),
-            F.when(F.col("__wid").isNotNull(),
-                   F.col("__wval")).otherwise(old))
-        out_cols = list(table.columns) + ([target.key] if is_new else [])
-        back = updated.select(
-            *[F.col(pcol(a, c)).alias(c) for c in out_cols])
-        _store(session, sch.table_name, back)
-        if is_new:
-            sch.column_names = list(sch.column_names) + [target.key]
-            session._persist_catalog()
-        stats["properties_set"] += n_matched
-
+        own = isinstance(target, ast.PropertyAccess) and \
+            target.alias == fc.var
+        (loop if own else bound).append((target, value, False))
+    if loop:
+        _apply_sets(session, *loop_node(), loop, params, stats)
+    if bound:
+        ex_scope = scope.copy()
+        ex_scope.bind(ScalarBinding(fc.var))
+        _apply_sets(session, base, ex_scope, bound, params, stats,
+                    last="__fpos")
     if fc.delete is not None:
-        for alias in fc.delete.aliases:
-            if alias != fc.var:
-                raise UnsupportedError(
-                    "FOREACH DELETE supports the loop variable (delete "
-                    "bound aliases with a plain DELETE clause)")
-            label = loopvar_label()
-            sch = session.schema.node(label)
-            mini_b = NodeBinding(
-                alias=fc.var, label=label, id_column=sch.node_id,
-                columns=list(sch.column_names))
-            ids_df = base.select(
-                F.col(fc.var).alias(pcol(fc.var, sch.node_id)))
-            _delete_nodes(session, ids_df, mini_b, fc.delete.detach,
-                          stats)
+        if set(fc.delete.aliases) != {fc.var}:
+            raise UnsupportedError(
+                "FOREACH DELETE supports the loop variable (delete "
+                "bound aliases with a plain DELETE clause)")
+        _apply_delete(session, *loop_node(), fc.delete, stats)
 
 
 # ----------------------------------------------------------------------
 def _apply_delete(session, df, scope, delete, stats) -> None:
+    """DELETE: one rewrite per alias, keeping its table's unmatched
+    rows. Plain DELETE leaves a node's incident edges in place (Neo4j
+    errors instead; documented divergence). DETACH DELETE also rewrites
+    each relationship table incident to the node's label once: a
+    self-relationship chains its from-side and to-side joins into that
+    one rewrite."""
     if df is None:
         raise PlanError("DELETE requires a MATCH")
     for alias in delete.aliases:
         b = scope.get(alias)
-        if isinstance(b, NodeBinding):
-            _delete_nodes(session, df, b, delete.detach, stats)
-        elif isinstance(b, RelBinding):
-            _delete_rels(session, df, b, stats)
-        else:
+        if not isinstance(b, (NodeBinding, RelBinding)):
             raise PlanError(f"cannot DELETE '{alias}'")
-
-
-def _delete_nodes(session, df, b: NodeBinding, detach: bool, stats) -> None:
-    sch = session.schema.node(b.label)
-    ids = df.select(F.col(b.id_pcol).alias("__wid")).distinct()
-    n = ids.count()
-    table = session._load_for_label(b.label)
-    kept = table.join(
-        ids, F.col(sch.node_id) == F.col("__wid"), "left_anti"
-    )
-    _store(session, sch.table_name, kept)
-    stats["nodes_deleted"] += n
-    if not detach:
-        # Divergence from Neo4j (which errors on attached nodes):
-        # incident edges are left in place unless DETACH is given.
-        return
-    for rsch in session.schema.relationships.values():
-        for endpoint, col in (
-            (rsch.from_node, rsch.from_column),
-            (rsch.to_node, rsch.to_column),
-        ):
-            if endpoint != b.label:
-                continue
-            edges = session._load_for_label(rsch.type_name)
-            before = edges.count()
-            kept_e = edges.join(
-                ids, F.col(col) == F.col("__wid"), "left_anti"
-            )
-            out = _store(session, rsch.table_name, kept_e)
-            stats["relationships_deleted"] += before - out.count()
-
-
-def _delete_rels(session, df, b: RelBinding, stats) -> None:
-    rsch = session.schema.relationship(b.type_name)
-    pairs = df.select(
-        F.col(b.src_pcol).alias("__wsrc"), F.col(b.dst_pcol).alias("__wdst")
-    ).distinct()
-    edges = session._load_for_label(b.type_name)
-    before = edges.count()
-    # Deletes every edge sharing a matched (from, to) pair — parallel
-    # edges between the same endpoints are indistinguishable here
-    # (edge-list model has no edge identity; documented divergence).
-    # Orientation-aware since r7: a rev-matched rel's pair columns
-    # carry (to, from), so the join keys off b.fwd_storage.
-    kept = edges.join(
-        pairs,
-        _rel_pair_cond(
-            b, (F.col(rsch.from_column), F.col(rsch.to_column)),
-            F.col("__wsrc"), F.col("__wdst")),
-        "left_anti",
-    )
-    out = _store(session, rsch.table_name, kept)
-    stats["relationships_deleted"] += before - out.count()
+        label, keys, on = _keyed(session, b)
+        ids = df.select(*keys).distinct()
+        _rewrite(session, label, alias, [(ids, on)], stats)
+        if not delete.detach or isinstance(b, RelBinding):
+            continue
+        for rsch in session.schema.relationships.values():
+            ends = [c for end, c in ((rsch.from_node, rsch.from_column),
+                                     (rsch.to_node, rsch.to_column))
+                    if end == b.label]
+            joins = [(ids.select(F.col("__wid").alias(f"__wid{j}")),
+                      F.col(pcol("__e", c)) == F.col(f"__wid{j}"))
+                     for j, c in enumerate(ends)]
+            if joins:
+                _rewrite(session, rsch.type_name, "__e", joins, stats)

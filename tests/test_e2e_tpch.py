@@ -52,6 +52,18 @@ class TestSingleHop:
                         FROM lineitem WHERE l_linenumber = 1 AND l_quantity > 45"""),
         )
 
+    def test_fk_backed_rel_declares_only_its_properties(self, tpch):
+        """A relationship backed by a node table (FK fusion) has only
+        its declared properties: PLACED declares none, so Order's
+        columns are not its properties; HAS_LINE keeps l_linenumber."""
+        with pytest.raises(PlanError, match="unknown property"):
+            tpch.execute("MATCH (c:Customer)-[r:PLACED]->(o:Order) "
+                         "WHERE c.c_custkey = 1 RETURN r.o_totalprice")
+        got = tpch.execute(
+            "MATCH (o:Order)-[r:HAS_LINE]->(l:Lineitem) "
+            "WHERE o.o_orderkey = 1 RETURN r.l_linenumber AS n").collect()
+        assert got and all(r["n"] is not None for r in got)
+
 
 class TestMultiHop:
     def test_two_hop(self, tpch, duck):

@@ -14,7 +14,11 @@ that is not listed with its reason.
   other request on the session; frames are passed as frames.
 - No threads but the server's. Concurrency on a session comes from its
   callers (the server's request threads), ordered by the session write
-  lock; the library starts no thread, pool or event of its own."""
+  lock; the library starts no thread, pool or event of its own.
+- Existing rows change in one place. ``writes._store`` commits a table
+  snapshot; SET, REMOVE and DELETE reach it only through
+  ``writes._rewrite``, so a second hand-built join-and-store copy (and
+  its own counter ``count()``) cannot grow back."""
 
 import ast
 import pathlib
@@ -41,6 +45,15 @@ THREAD_NAMES = ("ThreadPoolExecutor", "Thread", "Event",
 THREAD_ALLOWED = {
     "server.serve": "ThreadingHTTPServer: one thread per request, "
                     "whose writes the session write lock orders",
+}
+
+STORE_ALLOWED = {
+    "writes._rewrite": "the one rewrite of existing rows: SET, REMOVE "
+                       "and DELETE",
+    "writes._apply_create": "CREATE appends its new nodes and "
+                            "relationships",
+    "writes._apply_merge": "MERGE appends the rows its anti-join found "
+                           "missing",
 }
 
 
@@ -138,3 +151,12 @@ def test_no_threads_outside_the_server():
         f"threads started at {stray} — the library runs on its "
         "caller's thread; serialize writes with the session write lock")
     assert set(THREAD_ALLOWED) <= sites, set(THREAD_ALLOWED) - sites
+
+
+def test_table_commits_only_at_the_rewrite_and_appends():
+    sites = _sites(("_store",), _NameSites)
+    stray = sorted(sites - set(STORE_ALLOWED))
+    assert not stray, (
+        f"writes._store called from {stray} — change existing rows "
+        "through writes._rewrite")
+    assert set(STORE_ALLOWED) <= sites, set(STORE_ALLOWED) - sites

@@ -428,6 +428,32 @@ class TestRelPropertySet:
                    "RETURN p.age AS a, r.since AS s")
         assert got and all(a == s for a, s in got)
 
+    def test_undirected_set_rewrites_each_edge_once(self, wsession,
+                                                    spark):
+        """An undirected match keys each edge from both ends; the edge
+        row still meets one key, so the SET keeps it once (matching
+        either orientation of every key pair duplicated it)."""
+        self._graph(wsession, spark)
+        wsession.register_table("KNOWS", spark.createDataFrame(
+            [(1, 2), (2, 3)], "from_Person long, to_Person long"))
+        out = wsession.execute(
+            "MATCH (a:Person)-[r:KNOWS]-(b:Person) SET r.w = 7"
+        ).collect()[0]
+        assert out["properties_set"] == 2
+        assert sorted(tuple(r) for r in wsession.execute(
+            "MATCH (a:Person)-[r:KNOWS]->(b:Person) "
+            "RETURN a.id, b.id, r.w").collect()) == [(1, 2, 7), (2, 3, 7)]
+
+    def test_foreach_sets_rel_property(self, wsession, spark):
+        self._graph(wsession, spark)
+        wsession.execute(
+            "MATCH (p:Person {id: 1})-[r:LIVES_IN]->(c:City) "
+            "FOREACH (x IN [5, 6] | SET r.since = x)")
+        got = rows(wsession,
+                   "MATCH (p:Person)-[r:LIVES_IN]->(:City) "
+                   "RETURN p.id AS pid, r.since AS s")
+        assert got == {(1, 6), (2, 2020), (3, 2021)}
+
 
 class TestKeyColumnGuards:
     """SET/REMOVE must not silently re-key a node or re-point an edge
@@ -438,6 +464,18 @@ class TestKeyColumnGuards:
             [(1, "a", 30)], "id long, name string, age long"))
         with pytest.raises(PlanError, match="re-key"):
             wsession.execute("MATCH (p:Person {id: 1}) SET p.id = 99")
+
+    def test_foreach_node_id_set_rejected(self, wsession, spark):
+        """FOREACH's SET runs the key guard of a plain SET (it re-keyed
+        node 4 to 99 silently)."""
+        wsession.register_table("Person", spark.createDataFrame(
+            [(4, "d", 60)], "id long, name string, age long"))
+        with pytest.raises(PlanError, match="re-key"):
+            wsession.execute(
+                "MATCH (a:Person {id: 4}) "
+                "FOREACH (x IN [99] | SET a.id = x)")
+        assert rows(wsession, "MATCH (p:Person) RETURN p.id AS i") \
+            == {(4,)}
 
     def test_rel_endpoint_set_rejected(self, wsession, spark):
         wsession.register_table("Person", spark.createDataFrame(
@@ -1419,6 +1457,79 @@ class TestWriteCountersAndJobBudget:
         assert sorted(tuple(r) for r in wsession.execute(
             "MATCH (p:Person) RETURN p.id, p.age").collect()) \
             == [(1, 7), (1, 7), (2, 3)]
+
+    @staticmethod
+    def _edges(wsession, spark):
+        """Person 0 lives in city 100 twice (parallel edges), person 1
+        once; KNOWS is a self-relationship 0 -> 1 -> 2."""
+        wsession.register_table("City", spark.createDataFrame(
+            [(100, "x")], "id long, name string"))
+        wsession.register_table("LIVES_IN", spark.createDataFrame(
+            [(0, 100, 1), (0, 100, 2), (1, 100, 3)],
+            "from_Person long, to_City long, since long"))
+        wsession.register_table("KNOWS", spark.createDataFrame(
+            [(0, 1), (1, 2)], "from_Person long, to_Person long"))
+
+    @staticmethod
+    def _jobs(spark, monkeypatch, fn):
+        """``(fn(), commits, jobs run outside them)``: each
+        ``writes._store`` commit counts its jobs in a job group of its
+        own, so the statement's group keeps only the jobs that ran
+        outside every checkpoint."""
+        import brahmand_spark.writes as W
+
+        sc = spark.sparkContext
+        store, commits = W._store, [0]
+
+        def committing(*args, **kw):
+            outer = sc.getLocalProperty("spark.jobGroup.id")
+            commits[0] += 1
+            try:
+                return count_jobs(spark, lambda: store(*args, **kw))[0]
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", outer)
+
+        monkeypatch.setattr(W, "_store", committing)
+        out, outside = count_jobs(spark, fn)
+        return out, commits[0], outside
+
+    @pytest.mark.parametrize("cypher, rewrites", [
+        ("MATCH (p:Person {id: 0})-[r:LIVES_IN]->(:City) "
+         "SET r.since = 9", 1),
+        ("MATCH (p:Person {id: 1}) "
+         "FOREACH (x IN [5, 6] | SET p.age = x, p.name = 'f')", 1),
+        ("MATCH (p:Person {id: 0})-[r:LIVES_IN]->(:City) DELETE r", 1),
+        # Person, LIVES_IN and the self-relationship KNOWS, whose
+        # from-side and to-side joins share one rewrite
+        ("MATCH (p:Person {id: 1}) DETACH DELETE p", 3),
+    ], ids=["rel_set", "foreach_two_keys", "delete_rel",
+            "detach_delete"])
+    def test_statement_runs_only_its_rewrite_checkpoints(
+            self, wsession, spark, monkeypatch, cypher, rewrites):
+        """One rewrite per clause and alias (DETACH: plus one per
+        incident relationship table), and no job outside them: the
+        counters ride the checkpoints. Separate counter count()s and a
+        rewrite per FOREACH key made these 16, 14, 13 and 31 jobs."""
+        self._edges(wsession, spark)
+        out, commits, outside = self._jobs(
+            spark, monkeypatch,
+            lambda: wsession.execute(cypher).collect()[0])
+        assert (commits, outside) == (rewrites, 0)
+
+    def test_parallel_edges_count_rewritten_rows(self, wsession, spark):
+        """A relationship SET counts the edge rows it rewrote, as a node
+        SET does: both parallel edges (a matched-pair count said 1)."""
+        self._edges(wsession, spark)
+        out = wsession.execute(
+            "MATCH (p:Person {id: 0})-[r:LIVES_IN]->(:City) "
+            "SET r.since = 9").collect()[0]
+        assert out["properties_set"] == 2
+        assert rows(wsession, "MATCH (p:Person)-[r:LIVES_IN]->(:City) "
+                              "RETURN p.id, r.since") == {(0, 9), (1, 3)}
+        out = wsession.execute(
+            "MATCH (p:Person {id: 0})-[r:LIVES_IN]->(:City) DELETE r"
+        ).collect()[0]
+        assert out["relationships_deleted"] == 2
 
     def test_matchless_create_runs_one_job(self, wsession, spark):
         """Only the table's checkpoint: a MATCH-less CREATE is one row
