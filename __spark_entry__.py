@@ -807,12 +807,10 @@ def _q_graph_triangles(spark, sf_dir):
 
 def _q_graph_pagerank(spark, sf_dir):
     from brahmand_spark.ops.algos import pagerank
+    from brahmand_spark.procedures import _edges
 
-    s = _tpch(spark, sf_dir)
-    edges = s.tables["SUPP_IN"].select(
-        F.col("from_Supplier").alias("src"),
-        (F.col("to_Nation") + F.lit(1_000_000)).alias("dst"),
-    )
+    edges = _edges(_tpch(spark, sf_dir), "SUPP_IN").select(
+        "src", (F.col("dst") + F.lit(1_000_000)).alias("dst"))
     pr = pagerank(edges, iterations=5)
     return pr.select("id", F.round("rank", 6).alias("rank"))
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from typing import Optional
 
 from .errors import CatalogError
 
@@ -186,6 +187,32 @@ class GraphSchema:
             return self.relationships[type_name]
         except KeyError:
             raise CatalogError(f"unknown relationship type '{type_name}'") from None
+
+    def fk_side(self, rel: RelationshipSchema) -> Optional[str]:
+        """Whether ``rel`` is FK-backed: its table is a node label's
+        table and one endpoint column is that label's id, so each node
+        row holds at most one such edge, in its other endpoint column
+        (the foreign key). Returns the endpoint whose node rows hold
+        the edges, ``"to"`` (checked first) or ``"from"``; None for an
+        edge-list relationship."""
+        for side, label, col in (("to", rel.to_node, rel.to_column),
+                                 ("from", rel.from_node, rel.from_column)):
+            node = self.nodes.get(label)
+            if (node is not None and node.table_name == rel.table_name
+                    and node.node_id == col):
+                return side
+        return None
+
+    def edge_rows(self, rel: RelationshipSchema, df):
+        """The rows of ``df``, ``rel``'s table, that are edges: every
+        row of an edge list; of an FK-backed relationship's node table
+        only the rows whose foreign key is set (DELETE clears it, and a
+        NULL foreign key is no edge)."""
+        side = self.fk_side(rel)
+        if side is None:
+            return df
+        fk = rel.from_column if side == "to" else rel.to_column
+        return df.filter(df[fk].isNotNull())
 
     # -- persistence -------------------------------------------------------
     def to_json(self) -> dict:

@@ -1903,21 +1903,28 @@ class QueryCompiler:
         return expand_pairs(outgoing, src, dst).union(
             expand_pairs(incoming, src, dst)).distinct()
 
-    def _fk_endpoints(self, rel: RelEntity) -> Optional[tuple[str, str]]:
+    def _fk_endpoints(
+        self, rel: RelEntity,
+    ) -> Optional[tuple[str, str, str]]:
         """FK-edge fusion eligibility, shared by both flavors: the rel
-        must be a plain single-type, single-hop, directed hop whose
-        alias is never referenced as a bare variable (bare rel refs
-        expand all rel columns). Returns the pattern aliases on its
-        (from, to) sides under the hop's orientation, or None."""
+        must be FK-backed (``GraphSchema.fk_side``) and a plain
+        single-type, single-hop, directed hop whose alias is never
+        referenced as a bare variable (bare rel refs expand all rel
+        columns). Returns the side whose node rows hold the edges and
+        the pattern aliases on its (from, to) sides under the hop's
+        orientation, or None."""
         if (rel.alt_resolved or rel.alt_types or _is_var(rel)
                 or rel.shortest
                 or rel.orientation not in ("fwd", "rev")
                 or rel.alias in self._bare_refs
                 or "*" in self._bare_refs):
             return None
+        side = self.catalog.fk_side(rel.schema)
+        if side is None:
+            return None
         if rel.orientation == "fwd":
-            return rel.src, rel.dst
-        return rel.dst, rel.src
+            return side, rel.src, rel.dst
+        return side, rel.dst, rel.src
 
     def _fk_edge(
         self, rel: RelEntity, df: DataFrame, scope: Scope, backing: str,
@@ -1961,25 +1968,14 @@ class QueryCompiler:
         ends = self._fk_endpoints(rel)
         if ends is None:
             return None
-        from_alias, to_alias = ends
+        side, from_alias, to_alias = ends
         sch = rel.schema
-        to_node = self.catalog.node(sch.to_node)
-        from_node = self.catalog.node(sch.from_node)
-
-        def fresh(alias: str) -> bool:
-            node = pattern.nodes[alias]
-            return find_component(alias) is None and not node.prebound
-
-        # to-flavor: edge table == to-node table, to_column == its id
-        if (sch.table_name == to_node.table_name
-                and sch.to_column == to_node.node_id
-                and fresh(to_alias)):
-            return to_alias, sch.from_column
-        # from-flavor: edge table == from-node table, from_column == id
-        if (sch.table_name == from_node.table_name
-                and sch.from_column == from_node.node_id
-                and fresh(from_alias)):
-            return from_alias, sch.to_column
+        # to-flavor: the to-node's rows hold the FK from_column
+        alias, fk = ((to_alias, sch.from_column) if side == "to"
+                     else (from_alias, sch.to_column))
+        if find_component(alias) is None and \
+                not pattern.nodes[alias].prebound:
+            return alias, fk
         return None
 
     def _fused_edge_df(
@@ -1992,8 +1988,10 @@ class QueryCompiler:
         its own id, the other side the FK column. Rel-property access
         resolves to the node's own columns (they are the same physical
         columns)."""
-        df = self._scan_node(pattern.nodes[fused_alias], scope)
         fk = pcol(fused_alias, fk_col)
+        # a NULL foreign key is no edge (GraphSchema.edge_rows)
+        df = self._scan_node(pattern.nodes[fused_alias], scope) \
+            .filter(ref(fk).isNotNull())
         own_id = scope.get(fused_alias).id_pcol
         if fused_alias == rel.dst:
             return self._fk_edge(rel, df, scope, fused_alias, fk, own_id)
@@ -2011,28 +2009,19 @@ class QueryCompiler:
         ends = self._fk_endpoints(rel)
         if ends is None:
             return None
-        from_alias, to_alias = ends
+        side, from_alias, to_alias = ends
         sch = rel.schema
-        to_node = self.catalog.node(sch.to_node)
-        from_node = self.catalog.node(sch.from_node)
-
-        def bound_with(alias: str, label: str, fk: str) -> bool:
-            if find_component(alias) is None:
-                return False
-            b = scope.get(alias)
-            return (isinstance(b, NodeBinding) and b.label == label
-                    and fk in b.columns)
-
-        # from-flavor backing, from-endpoint bound -> FK to the to-side
-        if (sch.table_name == from_node.table_name
-                and sch.from_column == from_node.node_id
-                and bound_with(from_alias, sch.from_node, sch.to_column)):
-            return from_alias, to_alias, sch.to_column
-        # to-flavor backing, to-endpoint bound -> FK to the from-side
-        if (sch.table_name == to_node.table_name
-                and sch.to_column == to_node.node_id
-                and bound_with(to_alias, sch.to_node, sch.from_column)):
-            return to_alias, from_alias, sch.from_column
+        # the backing endpoint bound -> its FK column reaches the other
+        backing, other, label, fk = (
+            (to_alias, from_alias, sch.to_node, sch.from_column)
+            if side == "to"
+            else (from_alias, to_alias, sch.from_node, sch.to_column))
+        if find_component(backing) is None:
+            return None
+        b = scope.get(backing)
+        if (isinstance(b, NodeBinding) and b.label == label
+                and fk in b.columns):
+            return backing, other, fk
         return None
 
     def _apply_virtual_hop(
@@ -2044,6 +2033,7 @@ class QueryCompiler:
         ci = find_component(backing_alias)
         df, bound = components[ci]
         fk_col = pcol(backing_alias, fk)
+        df = df.filter(ref(fk_col).isNotNull())  # a NULL FK is no edge
         own_id = scope.get(backing_alias).id_pcol
         if backing_alias == rel.src:
             df = self._fk_edge(rel, df, scope, backing_alias, own_id, fk_col)
@@ -2162,7 +2152,7 @@ class QueryCompiler:
 
         arms: list[DataFrame] = []
         for sch, orient in self._arms(rel):
-            raw = self.load_table(sch.type_name)
+            raw = self.catalog.edge_rows(sch, self.load_table(sch.type_name))
             if walk and rel.properties:
                 if rel.alt_resolved and any(
                         k not in raw.columns for k in rel.properties):

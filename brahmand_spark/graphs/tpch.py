@@ -1,9 +1,11 @@
 """TPC-H-ish property graph over the driver-provided parquet tables.
 
-Implements FIXTURES.md §B: node labels map 1:1 to the parquet tables;
-relationship tables are *derived FK views* (select + rename) so no data is
-modified. The derived edge views use the reference's physical naming
-convention ``from_{FromLabel}`` / ``to_{ToLabel}`` (ddl_query.rs:259-261).
+Implements FIXTURES.md §B: node labels map 1:1 to the parquet tables.
+The TPC-H foreign keys are FK-backed relationships: each is declared
+over the node table that holds its FK column, so no edge data is
+derived. The two Customer chains are derived edge lists that use the
+reference's physical naming convention ``from_{FromLabel}`` /
+``to_{ToLabel}`` (ddl_query.rs:259-261).
 
 ``Lineitem`` gets a synthetic node id ``li_id = l_orderkey * 10 +
 l_linenumber`` (l_linenumber is 1..7 in TPC-H, so this is injective).
@@ -94,81 +96,43 @@ def build_session(spark: SparkSession, sf_dir: str) -> GraphSession:
             column_names=list(df.columns), primary_keys=[id_col],
         ))
 
-    li = dfs["Lineitem"]
-
-    def edge(name, from_label, to_label, df, backing=None):
-        """Declare a relationship. With ``backing=(node_label,
-        from_col, to_col)`` the schema points at the NODE table that
-        physically holds both endpoint columns (the FK) — the compiler
-        then fuses eligible hops into a single join instead of
-        edge-scan + node-scan + two joins. The derived (from_X, to_X)
-        DataFrame is still registered under the rel name for direct
-        ops/API use."""
-        if backing is not None:
-            node_label, from_col, to_col = backing
-            prop_cols = [
-                c for c in df.columns
-                if c not in (f"from_{from_label}", f"to_{to_label}")
-            ]
-            schema.add_relationship(RelationshipSchema(
-                type_name=name, table_name=node_label,
-                from_node=from_label, to_node=to_label,
-                from_column=from_col, to_column=to_col,
-                column_names=prop_cols,
-            ))
-            return name, df
-        from_col = f"from_{from_label}"
-        to_col = f"to_{to_label}"
-        prop_cols = [c for c in df.columns if c not in (from_col, to_col)]
+    def edge(name, from_label, to_label, table, from_col, to_col,
+             props=()):
         schema.add_relationship(RelationshipSchema(
-            type_name=name, table_name=name,
+            type_name=name, table_name=table,
             from_node=from_label, to_node=to_label,
             from_column=from_col, to_column=to_col,
-            column_names=prop_cols,
+            column_names=list(props),
         ))
-        return name, df
 
-    edges = dict([
-        # FK-backed rels declare their backing node table so the
-        # compiler fuses hops into single joins (the edge "table" is a
-        # projection of the node table itself).
-        edge("IN_REGION", "Nation", "Region", dfs["Nation"].select(
-            F.col("n_nationkey").cast("bigint").alias("from_Nation"),
-            F.col("n_regionkey").cast("bigint").alias("to_Region"),
-        ), backing=("Nation", "n_nationkey", "n_regionkey")),
-        edge("CUST_IN", "Customer", "Nation", dfs["Customer"].select(
-            F.col("c_custkey").alias("from_Customer"),
-            F.col("c_nationkey").cast("bigint").alias("to_Nation"),
-        ), backing=("Customer", "c_custkey", "c_nationkey")),
-        edge("SUPP_IN", "Supplier", "Nation", dfs["Supplier"].select(
-            F.col("s_suppkey").alias("from_Supplier"),
-            F.col("s_nationkey").cast("bigint").alias("to_Nation"),
-        ), backing=("Supplier", "s_suppkey", "s_nationkey")),
-        edge("PLACED", "Customer", "Order", dfs["Order"].select(
-            F.col("o_custkey").alias("from_Customer"),
-            F.col("o_orderkey").alias("to_Order"),
-        ), backing=("Order", "o_custkey", "o_orderkey")),
-        edge("HAS_LINE", "Order", "Lineitem", li.select(
-            F.col("l_orderkey").alias("from_Order"),
-            F.col("li_id").alias("to_Lineitem"),
-            F.col("l_linenumber"),
-        ), backing=("Lineitem", "l_orderkey", "li_id")),
-        edge("OF_PART", "Lineitem", "Part", li.select(
-            F.col("li_id").alias("from_Lineitem"),
-            F.col("l_partkey").alias("to_Part"),
-            F.col("l_quantity"), F.col("l_extendedprice"),
-        ), backing=("Lineitem", "li_id", "l_partkey")),
-        edge("SUPPLIED_BY", "Lineitem", "Supplier", li.select(
-            F.col("li_id").alias("from_Lineitem"),
-            F.col("l_suppkey").alias("to_Supplier"),
-        ), backing=("Lineitem", "li_id", "l_suppkey")),
+    # FK-backed rels point at the NODE table that physically holds
+    # both endpoint columns (the FK), so the compiler fuses eligible
+    # hops into a single join instead of edge-scan + node-scan + two
+    # joins, and writes treat the FK column as the edge. No edge frame
+    # is registered for them: every reader resolves them to the node
+    # table (procedures._edges projects its (src, dst) pairs).
+    edge("IN_REGION", "Nation", "Region", "Nation",
+         "n_nationkey", "n_regionkey")
+    edge("CUST_IN", "Customer", "Nation", "Customer",
+         "c_custkey", "c_nationkey")
+    edge("SUPP_IN", "Supplier", "Nation", "Supplier",
+         "s_suppkey", "s_nationkey")
+    edge("PLACED", "Customer", "Order", "Order", "o_custkey", "o_orderkey")
+    edge("HAS_LINE", "Order", "Lineitem", "Lineitem",
+         "l_orderkey", "li_id", ["l_linenumber"])
+    edge("OF_PART", "Lineitem", "Part", "Lineitem", "li_id", "l_partkey",
+         ["l_quantity", "l_extendedprice"])
+    edge("SUPPLIED_BY", "Lineitem", "Supplier", "Lineitem",
+         "li_id", "l_suppkey")
+
+    edges = {
         # Self-relationship (Customer -> next Customer by key) so
         # same-label features — either-direction UNION DISTINCT and
         # variable-length paths — have a real exercise surface.
         # hop_w: deterministic per-edge weight (from-key mod), so
         # weighted var-length paths ([x IN relationships(p) | x.hop_w])
         # have a real property surface (r9)
-        edge("NEXT_CUST", "Customer", "Customer", dfs["Customer"].select(
+        "NEXT_CUST": dfs["Customer"].select(
             F.col("c_custkey").alias("from_Customer"),
             (F.col("c_custkey") + F.lit(1)).alias("to_Customer"),
             (F.col("c_custkey") % F.lit(7) + F.lit(1))
@@ -177,21 +141,26 @@ def build_session(spark: SparkSession, sf_dir: str) -> GraphSession:
             dfs["Customer"].select(
                 F.col("c_custkey").alias("to_Customer")),
             "to_Customer", "leftsemi",
-        )),
+        ),
         # Reverse chain — gives multi-type patterns (-[:NEXT_CUST|
         # PREV_CUST]->) a same-endpoints exercise surface; kept
         # PROP-LESS deliberately: per-arm access NULL-fills hop_w on
         # this arm (r9), and a same-label prop-less rel keeps the
         # adjacency 'both'-orientation fast path exercisable
-        edge("PREV_CUST", "Customer", "Customer", dfs["Customer"].select(
+        "PREV_CUST": dfs["Customer"].select(
             F.col("c_custkey").alias("from_Customer"),
             (F.col("c_custkey") - F.lit(1)).alias("to_Customer"),
         ).join(
             dfs["Customer"].select(
                 F.col("c_custkey").alias("to_Customer")),
             "to_Customer", "leftsemi",
-        )),
-    ])
+        ),
+    }
+    for name, df in edges.items():
+        edge(name, "Customer", "Customer", name,
+             "from_Customer", "to_Customer",
+             [c for c in df.columns
+              if c not in ("from_Customer", "to_Customer")])
 
     # Every edge table above is a projection of the node tables
     # themselves (TPC-H FKs; NEXT_CUST/PREV_CUST leftsemi-filtered), so

@@ -104,7 +104,8 @@ def materialize_for_rel(
     """Write ``{rel}_outgoing`` / ``{rel}_incoming`` grouped-adjacency
     parquet tables (the reference's two direction tables,
     ddl_query.rs:290-296) and register them. Returns name->path."""
-    edges = session._load_for_label(rel.type_name)
+    edges = session.schema.edge_rows(
+        rel, session._load_for_label(rel.type_name))
     out: dict[str, str] = {}
     for direction, (s, d) in {
         "outgoing": (rel.from_column, rel.to_column),

@@ -46,6 +46,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..errors import PlanError
+
 
 def _reset_stats(df: DataFrame) -> DataFrame:
     """Rebuild a (checkpointed) frame from its JVM row RDD so its
@@ -528,7 +530,10 @@ def sssp_weighted(
     improved last round (the frontier) — identical results to full
     Bellman-Ford (round i holds exact shortest-paths over <= i edges)
     at O(touched edges) per round instead of O(E). Weights must be
-    non-negative (no negative-cycle detection). Integer weights sum
+    non-negative numbers; Inf is allowed. A round that relaxes an edge
+    of negative or NaN weight raises ``PlanError``: the check rides
+    the round's checkpoint job, so it adds no job, and only edges the
+    search reaches are checked. Integer weights sum
     exactly; the whole loop is shuffled on vertex ids and
     localCheckpoint-truncated per round like the other loops here.
 
@@ -555,15 +560,16 @@ def sssp_weighted(
             .select(
                 F.col("dst").alias("id"),
                 (F.col("dist") + F.col("w")).alias("cand"),
+                ((F.col("w") < 0) | F.isnan("w")).alias("bad"),
             )
             .groupBy("id")
-            .agg(F.min("cand").alias("cand"))
+            .agg(F.min("cand").alias("cand"), F.max("bad").alias("bad"))
         )
         better = F.coalesce(
             F.col("old").isNull() | (F.col("cand") < F.col("old")),
             F.lit(False),
         )
-        # improved-count rides the checkpoint job — no separate probe
+        # improved-count and bad-weight count ride the checkpoint job
         merged, m = _ckpt_obs(
             dist.withColumnRenamed("dist", "old")
             .join(cand, "id", "full_outer")
@@ -572,14 +578,21 @@ def sssp_weighted(
                 F.when(better, F.col("cand")).otherwise(F.col("old"))
                 .alias("dist"),
                 better.alias("imp"),
+                "bad",
             ),
             checkpoint,
             F.count(F.when(F.col("imp"), True)).alias("imp"),
+            F.count(F.when(F.col("bad"), True)).alias("bad"),
             reset_stats=(_round % _RESET_STATS_EVERY
                          == _RESET_STATS_EVERY - 1),
         )
-        dist = merged.drop("imp")
-        frontier = merged.filter("imp").drop("imp")
+        if m["bad"]:
+            raise PlanError(
+                f"sssp_weighted: {m['bad']} vertices were reached over a "
+                "negative or NaN edge weight; weights must be "
+                "non-negative numbers (Inf is allowed)")
+        dist = merged.drop("imp", "bad")
+        frontier = merged.filter("imp").drop("imp", "bad")
         if m["imp"] == 0:
             break
     return dist

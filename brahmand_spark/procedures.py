@@ -15,15 +15,19 @@ call, and the returned frame reads the last checkpoint when the caller
 acts.
 
 Projection reuse (``graph.pagerank``): the pagerank prologue (vertex
-set, degree-joined edges, dangling set) is kept on the session, one
-entry per relationship, and reused while the relationship's frame in
-``session.tables`` is the same object and its from/to columns are
-unchanged. Every commit installs a new frame object (``writes._store``,
-a rolled-back batch's snapshot restore, ``register_table``), so object
-identity is the table version; ``_store`` and ``register_table`` also
-drop the entry, so Spark's cleaner can free its checkpoint blocks. A
-relationship read from a path or view on each call is never cached,
-and a call that raises drops its entry.
+set, degree-joined edges, dangling set) is a projection of the held
+entry of the relationship's table (``resident.Held``), keyed by its
+from/to columns, and reused while that entry is current: while
+``session.tables`` still holds the frame the entry was built from.
+Every commit installs a new frame object (``writes._store``, a
+rolled-back batch's snapshot restore, ``register_table``), so object
+identity is the table version, and the entry that replaces the old
+one drops its projections, so Spark's cleaner can free their
+checkpoint blocks. A relationship read from a path or view on each
+call has no entry and is never cached, and a call that raises drops
+its projection. Every procedure reads a relationship's edges through
+``GraphSchema.edge_rows``, so an FK-backed relationship's rows with a
+NULL foreign key are no edges.
 
 Procedure args are positional literals (or ``$parameters``), mirroring
 each ops/algos signature's leading arguments.
@@ -53,8 +57,9 @@ def _rel(session, rel_type: str):
     return rel
 
 
-def _src_dst(df: DataFrame, rel) -> DataFrame:
-    return df.select(
+def _src_dst(session, df: DataFrame, rel) -> DataFrame:
+    """The (src, dst) edges of ``rel`` in ``df``, its table."""
+    return session.schema.edge_rows(rel, df).select(
         F.col(rel.from_column).alias("src"),
         F.col(rel.to_column).alias("dst"),
     )
@@ -62,7 +67,7 @@ def _src_dst(df: DataFrame, rel) -> DataFrame:
 
 def _edges(session, rel_type: str) -> DataFrame:
     rel = _rel(session, rel_type)
-    return _src_dst(session._load_for_label(rel_type), rel)
+    return _src_dst(session, session._load_for_label(rel_type), rel)
 
 
 def _sources(session, ids) -> DataFrame:
@@ -80,22 +85,22 @@ def _p_pagerank(session, rel, iterations=10, damping=0.85,
     from .ops.algos import pagerank_loop, pagerank_prologue
 
     r = _rel(session, rel)
-    df = session._load_for_label(rel)
-    cols = (r.from_column, r.to_column)
-    hit = session._projections.get(rel)
-    if hit is not None and hit[0] is df and hit[1] == cols:
-        prologue = hit[2]
+    held = session._entry(rel)
+    key = ("pagerank", r.from_column, r.to_column)
+    if held is None:
+        prologue = pagerank_prologue(_edges(session, rel))
     else:
-        prologue = pagerank_prologue(_src_dst(df, r))
-        if any(session.tables.get(k) is df for k in (r.table_name, rel)):
-            session._projections[rel] = (df, cols, prologue)
+        prologue = held.projection(
+            key, lambda df: pagerank_prologue(_src_dst(session, df, r)))
     try:
         return pagerank_loop(
             prologue, iterations=int(iterations), damping=float(damping),
             sources=None if sources is None else _sources(session, sources))
     except Exception:
-        # lost checkpoint blocks cost one failed call, not a dead cache
-        session._projections.pop(rel, None)
+        # lost checkpoint blocks cost one failed call, not a dead
+        # projection
+        if held is not None:
+            held.projections.pop(key, None)
         raise
 
 
@@ -154,7 +159,7 @@ def _p_sssp(session, rel, weight_prop, source, max_iterations=20):
         raise PlanError(
             f"relationship '{rel}' has no property '{weight_prop}' "
             f"(has: {r.column_names})")
-    df = session._load_for_label(rel)
+    df = session.schema.edge_rows(r, session._load_for_label(rel))
     edges = df.select(
         F.col(r.from_column).alias("src"),
         F.col(r.to_column).alias("dst"),

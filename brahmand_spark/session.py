@@ -25,6 +25,7 @@ from .errors import CatalogError, UnsupportedError
 from .io import local_frame
 from .parser import ast
 from .parser.parser import parse
+from .resident import Held, pin
 
 
 class GraphSession:
@@ -67,17 +68,20 @@ class GraphSession:
             self.schema = GraphSchema.load(catalog_path)
         else:
             self.schema = GraphSchema()
-        # name -> DataFrame registered directly (e.g. derived FK edge views)
+        # name -> DataFrame registered directly (e.g. derived edge lists)
         self.tables: dict[str, DataFrame] = {}
-        # rel type -> (frame, (from_column, to_column), pagerank
-        # prologue): served pagerank's reused inputs (procedures.py)
-        self._projections: dict[str, tuple] = {}
+        # name -> the resident form of tables[name] and its projections
+        # (resident.py); reads add entries, never change `tables`
+        self._held: dict[str, Held] = {}
         # One writer at a time: every statement or method that changes
         # `tables` or `schema` holds it, so two concurrent writes to one
         # table cannot each rewrite the same old frame and lose one.
         # Reentrant because build_adj_index calls register_table. Reads,
         # EXPLAIN and CALL procedures take no lock.
         self._write_lock = threading.RLock()
+        # Taken only to pin a table on its first read (_entry), so no
+        # write waits for a pin job.
+        self._pin_lock = threading.Lock()
         if write_path is not None and os.path.isdir(write_path):
             self._restore_durable()
 
@@ -123,9 +127,7 @@ class GraphSession:
             table = self._load_path_or_view(table)
         with self._write_lock:
             self.tables[name] = table
-            for rel in self.schema.relationships.values():
-                if name in (rel.type_name, rel.table_name):
-                    self._projections.pop(rel.type_name, None)
+            self._held.pop(name, None)
 
     def _load_path_or_view(self, name: str) -> DataFrame:
         from .io import read_source
@@ -157,7 +159,8 @@ class GraphSession:
             else:
                 from .ops.adjacency import build_adjacency
 
-                edges = self._load_for_label(type_name)
+                edges = self.schema.edge_rows(
+                    rel, self._load_for_label(type_name))
                 for direction, (s, d) in {
                     "outgoing": (rel.from_column, rel.to_column),
                     "incoming": (rel.to_column, rel.from_column),
@@ -186,19 +189,47 @@ class GraphSession:
                         pass  # parquet-backed tables have nothing cached
             rel.adj_index = False
 
+    def _table_name(self, label: str) -> str:
+        if label in self.schema.nodes:
+            return self.schema.nodes[label].table_name
+        if label in self.schema.relationships:
+            return self.schema.relationships[label].table_name
+        raise CatalogError(f"unknown label '{label}'")
+
+    def _entry(self, label: str) -> Optional[Held]:
+        """The held entry of the registered table a label or rel type
+        resolves to, pinned on its first read (resident.py); None when
+        it reads from a path or view. The fast path takes no lock. A
+        miss pins under the pin lock, so each table version is pinned
+        once, and installs the entry only while ``tables`` still holds
+        the frame it was built from (one a commit makes stale meanwhile
+        is replaced by the next read). A write, which holds the write
+        lock, reads a table it misses as it is: its commit replaces
+        that table and ``writes._store`` holds the commit."""
+        table_name = self._table_name(label)
+        name = table_name if table_name in self.tables else label
+        base = self.tables.get(name)
+        if base is None:
+            return None
+        held = self._held.get(name)
+        if held is not None and held.base is base:
+            return held
+        if self._write_lock._is_owned():
+            return Held(base, base)
+        with self._pin_lock:
+            held = self._held.get(name)
+            if held is None or held.base is not base:
+                held = Held(base, pin(base))
+                if self.tables.get(name) is base:
+                    self._held[name] = held
+            return held
+
     def _load_for_label(self, label: str) -> DataFrame:
         """Table loader handed to the compiler: label or rel type -> DF."""
-        if label in self.schema.nodes:
-            table_name = self.schema.nodes[label].table_name
-        elif label in self.schema.relationships:
-            table_name = self.schema.relationships[label].table_name
-        else:
-            raise CatalogError(f"unknown label '{label}'")
-        if table_name in self.tables:
-            return self.tables[table_name]
-        if label in self.tables:
-            return self.tables[label]
-        return self._load_path_or_view(table_name)
+        held = self._entry(label)
+        if held is not None:
+            return held.frame
+        return self._load_path_or_view(self._table_name(label))
 
     def _compiler(self, params: Optional[dict]) -> QueryCompiler:
         """The one compiler configuration of this session: reads, LOAD

@@ -12,12 +12,19 @@ session's registered tables:
   relationship's (from, to) pair), then a SET replaces the assigned
   columns of matched rows and a DELETE keeps the unmatched ones.
   Each clause rewrites a table once per target alias; DETACH DELETE
-  adds one rewrite per incident relationship table.
+  adds one rewrite per incident relationship table. An FK-backed
+  relationship (``GraphSchema.fk_side``) is a foreign key column of its
+  backing node's rows, so its DELETE sets that column to NULL through
+  the SET branch and keeps the rows; every read of the relationship
+  skips a row whose foreign key is NULL (``GraphSchema.edge_rows``).
 
 Each mutated table is ``localCheckpoint``-ed eagerly: the write becomes
 a materialized snapshot, so later reads don't re-run the update plan and
-repeated writes don't stack lineage. With a session ``write_path``
-each committed snapshot is also overwritten as parquet at
+repeated writes don't stack lineage. The snapshot is a new frame
+object, so identity is the table version: ``_store`` holds it as the
+table's resident entry (``resident.Held``), and reads use it without
+pinning it again; a write pins no table it reads. With a session
+``write_path`` each committed snapshot is also overwritten as parquet at
 ``<write_path>/<table>`` (``_durable_persist``), and a new session on
 the same path reloads it.
 
@@ -54,6 +61,7 @@ from .compile.scope import (
 from .errors import PlanError, UnsupportedError
 from .io import local_frame
 from .parser import ast
+from .resident import Held
 
 #: write counters, in output order — one source of truth for
 #: apply_write's stats row and the IN TRANSACTIONS status rows
@@ -349,16 +357,18 @@ def _store(session, table_name: str, df: DataFrame) -> None:
     relationship: the planner requires both direction tables to take
     the indexed path, so dropping them falls every hop back to the
     (fresh) edge list until the user re-runs ``build_adj_index`` (or
-    the streaming maintenance catches up). Drops the relationship's
-    served pagerank projection too (procedures.py)."""
+    the streaming maintenance catches up). The checkpoint is already
+    resident, so it is held as its own entry (resident.py) and the next
+    read does not pin it again; the entry it replaces, with the loop
+    projections built from the old frame, is dropped."""
     out = df.localCheckpoint(eager=True)
     _durable_persist(session, table_name, out)
+    session._held[table_name] = Held(out, out)
     session.tables[table_name] = out
     for rel in session.schema.relationships.values():
         if table_name in (rel.type_name, rel.table_name):
             session.tables.pop(f"{rel.type_name}_outgoing", None)
             session.tables.pop(f"{rel.type_name}_incoming", None)
-            session._projections.pop(rel.type_name, None)
 
 
 def _durable_persist(session, table_name: str, df: DataFrame) -> None:
@@ -853,24 +863,57 @@ def _apply_delete(session, df, scope, delete, stats) -> None:
     errors instead; documented divergence). DETACH DELETE also rewrites
     each relationship table incident to the node's label once: a
     self-relationship chains its from-side and to-side joins into that
-    one rewrite."""
+    one rewrite.
+
+    An FK-backed relationship (``GraphSchema.fk_side``) is a foreign
+    key in its backing node's rows, so deleting it clears that column
+    and keeps the rows (``_unlink``). DETACH DELETE clears the FK of
+    every row that references the node; an edge held in the deleted
+    node's own row goes with the row and is not counted."""
     if df is None:
         raise PlanError("DELETE requires a MATCH")
+    catalog = session.schema
     for alias in delete.aliases:
         b = scope.get(alias)
         if not isinstance(b, (NodeBinding, RelBinding)):
             raise PlanError(f"cannot DELETE '{alias}'")
         label, keys, on = _keyed(session, b)
         ids = df.select(*keys).distinct()
-        _rewrite(session, label, alias, [(ids, on)], stats)
+        if isinstance(b, RelBinding) and catalog.fk_side(
+                catalog.relationship(label)):
+            _unlink(session, catalog.relationship(label), alias,
+                    [(ids, on)], stats)
+        else:
+            _rewrite(session, label, alias, [(ids, on)], stats)
         if not delete.detach or isinstance(b, RelBinding):
             continue
-        for rsch in session.schema.relationships.values():
-            ends = [c for end, c in ((rsch.from_node, rsch.from_column),
-                                     (rsch.to_node, rsch.to_column))
-                    if end == b.label]
+        for rsch in catalog.relationships.values():
+            side = catalog.fk_side(rsch)
+            ends = ((rsch.from_node, rsch.from_column),
+                    (rsch.to_node, rsch.to_column))
+            if side is not None:
+                # only the FK column points at the node from other rows
+                ends = ends[:1] if side == "to" else ends[1:]
             joins = [(ids.select(F.col("__wid").alias(f"__wid{j}")),
                       F.col(pcol("__e", c)) == F.col(f"__wid{j}"))
-                     for j, c in enumerate(ends)]
-            if joins:
+                     for j, c in enumerate(
+                         [c for end, c in ends if end == b.label])]
+            if not joins:
+                continue
+            if side is None:
                 _rewrite(session, rsch.type_name, "__e", joins, stats)
+            else:
+                _unlink(session, rsch, "__e", joins, stats)
+
+
+def _unlink(session, rsch, alias, joins, stats) -> None:
+    """Delete the matched edges of an FK-backed relationship: one
+    ``_rewrite`` of its backing node table sets the FK column of the
+    matched rows to NULL, and counts each as a deleted relationship."""
+    side = session.schema.fk_side(rsch)
+    backing, fk = ((rsch.to_node, rsch.from_column) if side == "to"
+                   else (rsch.from_node, rsch.to_column))
+    cleared = {"properties_set": 0}
+    _rewrite(session, backing, alias, joins, cleared,
+             [(fk, ast.Literal(None), False)])
+    stats["relationships_deleted"] += cleared["properties_set"]

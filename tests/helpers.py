@@ -4,6 +4,7 @@ same way the driver does (column-name sort, row sort, normalized floats)."""
 from __future__ import annotations
 
 import math
+import re
 
 import pandas as pd
 
@@ -61,3 +62,53 @@ def count_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def initial_plan(df):
+    """The JVM physical plan before any AQE re-optimization."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return plan.initialPlan()
+    return plan
+
+
+def plan_nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from plan_nodes(kids.apply(i))
+
+
+def scan_columns(node) -> list[str] | None:
+    """The output columns of a table scan leaf of either kind: a
+    parquet file scan, or the RDD scan of a table held in Spark storage
+    (brahmand_spark/resident.py); None for any other node."""
+    if not node.nodeName().startswith("Scan ") or node.children().size():
+        return None
+    return re.findall(r"(\w+)#\d+", node.toString().split("]", 1)[0])
+
+
+def scan_filters(df) -> list[tuple[list[str], str]]:
+    """``(scan columns, condition)`` of each Filter that sits directly
+    over a table scan, below every join, in df's initial physical plan.
+    Expression ids are dropped from the condition."""
+    out = []
+    for node in plan_nodes(initial_plan(df)):
+        if node.nodeName() != "Filter":
+            continue
+        child = node.child()
+        while child.nodeName() in ("ColumnarToRow", "InputAdapter"):
+            child = child.child()
+        cols = scan_columns(child)
+        if cols is not None:
+            out.append((cols, re.sub(r"#\d+L?", "",
+                                     node.condition().toString())))
+    return out
+
+
+def filtered_at_scan(df, column: str, predicate: str) -> bool:
+    """Whether ``predicate`` (a plain comparison as Spark prints it,
+    e.g. ``(o_totalprice > 300000.0)``) filters the scan of the table
+    holding ``column`` directly, below every join."""
+    return any(column in cols and predicate in cond
+               for cols, cond in scan_filters(df))

@@ -2,6 +2,7 @@
 oracle for PageRank + DuckDB recursive-CTE oracle for BFS."""
 
 import numpy as np
+import pytest
 import pyspark.sql.functions as F
 
 from .helpers import canon
@@ -431,6 +432,44 @@ class TestSsspWeighted:
         sources = spark.createDataFrame([(1,)], "id long")
         got = dict(map(tuple, sssp_weighted(edges, sources).collect()))
         assert set(got) == {1, 2}
+
+    @pytest.mark.parametrize("iters", [5, 20])
+    def test_negative_cycle_raises(self, spark, iters):
+        """2->3 (-5), 3->2 (1) is a negative cycle: the answer used to
+        depend on the bound (dist(3) = -8 at 5 rounds, -40 at 20)."""
+        from brahmand_spark.errors import PlanError
+        from brahmand_spark.ops.algos import sssp_weighted
+
+        edges = spark.createDataFrame(
+            [(1, 2, 1), (2, 3, -5), (3, 2, 1), (3, 4, 1)],
+            "src long, dst long, weight long")
+        sources = spark.createDataFrame([(1,)], "id long")
+        with pytest.raises(PlanError, match="negative or NaN"):
+            sssp_weighted(edges, sources, max_iterations=iters)
+
+    def test_nan_weight_raises(self, spark):
+        """A NaN weight on 2->3 used to give vertex 3 a NaN distance."""
+        from brahmand_spark.errors import PlanError
+        from brahmand_spark.ops.algos import sssp_weighted
+
+        edges = spark.createDataFrame(
+            [(1, 2, 1.0), (2, 3, float("nan")), (3, 4, 1.0)],
+            "src long, dst long, weight double")
+        sources = spark.createDataFrame([(1,)], "id long")
+        with pytest.raises(PlanError, match="negative or NaN"):
+            sssp_weighted(edges, sources)
+
+    def test_inf_weight_and_unreached_negative_stay_legal(self, spark):
+        """Inf is a legal weight, and only edges the search reaches are
+        checked: a negative edge elsewhere in the graph is fine."""
+        from brahmand_spark.ops.algos import sssp_weighted
+
+        edges = spark.createDataFrame(
+            [(1, 2, float("inf")), (1, 3, 2.0), (7, 8, -1.0)],
+            "src long, dst long, weight double")
+        sources = spark.createDataFrame([(1,)], "id long")
+        got = dict(map(tuple, sssp_weighted(edges, sources).collect()))
+        assert got == {1: 0.0, 2: float("inf"), 3: 2.0}
 
     def test_gate_oracle_parity(self, spark, duck):
         """The driver's comparison at sf0.001: Spark frontier

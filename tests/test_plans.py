@@ -1,42 +1,55 @@
 """Plan-quality assertions: the compiled Cypher queries must produce
-physical plans with filters and projections pushed to the parquet scans,
-broadcast joins for small dimensions, and no Python (BatchEvalPython)
-stages in the Cypher path."""
+physical plans with filters and projections pushed down to the table
+scans, broadcast joins for small dimensions, and no Python
+(BatchEvalPython) stages in the Cypher path.
+
+A served read pins each table in Spark storage on its first read
+(brahmand_spark/resident.py), so a table's scan is either a parquet
+file scan or, once held, the RDD scan of its checkpoint; the
+assertions hold for both kinds."""
 
 import re
+
+from .helpers import filtered_at_scan, initial_plan, plan_nodes, scan_columns
+
+#: TPC-H column prefix -> table, naming a held table's RDD scan, whose
+#: leaf shows its columns rather than a file
+TPCH_PREFIX = {"r": "region", "n": "nation", "c": "customer",
+               "s": "supplier", "p": "part", "o": "orders",
+               "l": "lineitem"}
 
 
 def physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def initial_plan(df):
-    """The JVM physical plan before any AQE re-optimization."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        return plan.initialPlan()
-    return plan
+def scanned_table(leaf):
+    """The table a scan leaf reads: a parquet file's stem, or the
+    TPC-H table its first column names; None for any other node."""
+    cols = scan_columns(leaf)
+    if cols is None:
+        return None
+    m = re.search(r"/(\w+)\.parquet\]", leaf.toString())
+    if m:
+        return m.group(1)
+    return TPCH_PREFIX.get(cols[0].split("_")[0]) if cols else None
 
 
-def _plan_nodes(plan):
-    yield plan
-    kids = plan.children()
-    for i in range(kids.size()):
-        yield from _plan_nodes(kids.apply(i))
+def scanned_tables(df) -> list:
+    """Every table scan of df's initial physical plan, by table."""
+    return [t for t in map(scanned_table, plan_nodes(initial_plan(df)))
+            if t]
 
 
 def broadcast_built_tables(plan) -> set[str]:
-    """Parquet file stems scanned under a BroadcastHashJoin build side."""
+    """Tables scanned under a BroadcastHashJoin build side."""
     built = set()
-    for node in _plan_nodes(plan):
+    for node in plan_nodes(plan):
         if node.nodeName() != "BroadcastHashJoin":
             continue
         side = (node.right() if node.buildSide().toString() == "BuildRight"
                 else node.left())
-        for leaf in _plan_nodes(side):
-            m = re.search(r"/(\w+)\.parquet\]", leaf.toString())
-            if m and leaf.children().size() == 0:
-                built.add(m.group(1))
+        built |= {t for t in map(scanned_table, plan_nodes(side)) if t}
     return built
 
 
@@ -52,17 +65,28 @@ class TestPlanQuality:
             MATCH (c:Customer)-[:PLACED]->(o:Order)
             WHERE o.o_totalprice > 300000 AND c.c_acctbal > 0
             RETURN c.c_name AS name, count(*) AS n""")
-        plan = formatted(df)
-        assert "PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice,300000.0)" in plan
-        assert "GreaterThan(c_acctbal,0.0)" in plan
+        assert filtered_at_scan(df, "o_totalprice",
+                                "(o_totalprice > 300000.0)")
+        assert filtered_at_scan(df, "c_acctbal", "(c_acctbal > 0.0)")
 
-    def test_column_pruning(self, tpch):
-        df = tpch.execute(
-            "MATCH (c:Customer) RETURN c.c_name AS name"
-        )
-        plan = formatted(df)
-        # scan must read only the projected column
+    def test_column_pruning(self, spark, tpch):
+        from brahmand_spark.catalog import GraphSchema
+        from brahmand_spark.session import GraphSession
+
+        from .conftest import SF_SMOKE
+
+        q = "MATCH (c:Customer) RETURN c.c_name AS name"
+        # a table read from its file keeps a parquet scan, which must
+        # read only the projected column
+        schema = GraphSchema.from_json(tpch.schema.to_json())
+        schema.nodes["Customer"].table_name = f"{SF_SMOKE}/customer.parquet"
+        plan = formatted(GraphSession(spark, schema=schema).execute(q))
         assert "ReadSchema: struct<c_name:string>" in plan
+        # a held table's scan feeds a Project of that column alone
+        plan = tpch.execute(q)._jdf.queryExecution().optimizedPlan()
+        assert re.fullmatch(r"Project \[c_name#\d+ AS name#\d+\]\n"
+                            r"\+- LogicalRDD \[[^\n]*\n?",
+                            plan.toString()), plan.toString()
 
     def test_broadcast_small_dimension(self, tpch):
         """Spark's static size estimate alone puts the small dimension
@@ -271,25 +295,23 @@ class TestEndpointElision:
     def test_unreferenced_endpoints_drop_scans(self, tpch):
         df = tpch.execute(
             "MATCH (c:Customer)-[:PLACED]->(o:Order) RETURN count(*) AS n")
-        plan = physical_plan(df)
-        assert "customer.parquet" not in plan
-        assert plan.count("Join") == 0  # pure edge-table aggregate
+        assert "customer" not in scanned_tables(df)
+        assert physical_plan(df).count("Join") == 0  # pure edge-table aggregate
 
     def test_id_only_access_elides(self, tpch):
         df = tpch.execute("""
             MATCH (c:Customer)-[:PLACED]->(o:Order)
             WHERE c.c_custkey <= 100
             RETURN c.c_custkey AS src, count(*) AS n""")
-        plan = formatted(df)
-        assert "customer.parquet" not in plan
-        # the id filter pushes into the edge scan instead
-        assert "LessThanOrEqual(o_custkey,100)" in plan
+        assert "customer" not in scanned_tables(df)
+        # the id filter sits on the edge scan instead
+        assert filtered_at_scan(df, "o_custkey", "(o_custkey <= 100)")
 
     def test_any_other_property_keeps_scan(self, tpch):
         df = tpch.execute("""
             MATCH (c:Customer)-[:PLACED]->(o:Order)
             RETURN c.c_name AS name, count(*) AS n""")
-        assert "customer.parquet" in physical_plan(df)
+        assert "customer" in scanned_tables(df)
 
     def test_disabled_without_integrity_flag(self, spark, tpch):
         from brahmand_spark.session import GraphSession
@@ -298,7 +320,7 @@ class TestEndpointElision:
         s.tables = tpch.tables
         df = s.execute(
             "MATCH (c:Customer)-[:PLACED]->(o:Order) RETURN count(*) AS n")
-        assert "customer.parquet" in physical_plan(df)
+        assert "customer" in scanned_tables(df)
         # and results agree on clean data either way
         assert df.collect() == tpch.execute(
             "MATCH (c:Customer)-[:PLACED]->(o:Order) RETURN count(*) AS n"
@@ -338,7 +360,7 @@ def test_adjacency_plus_elision_is_scan_and_explode_only(spark):
     # NB: the persisted adjacency's InMemoryRelation lineage still
     # PRINTS its build recipe (orders scan) — what matters is that no
     # node table participates in execution: no joins, no customer scan.
-    assert "customer.parquet" not in plan
+    assert "customer" not in scanned_tables(df)
     assert df.count() > 0
 
 
@@ -367,7 +389,8 @@ class TestFkFusion:
         import re
 
         p = physical_plan(df)
-        return len(re.findall(r"FileScan parquet", p)), p.count("Join")
+        return (len(re.findall(r"FileScan parquet|Scan ExistingRDD", p)),
+                p.count("Join"))
 
     def test_three_hop_chain_is_relational_join_tree(self, tpch):
         df = tpch.execute("""

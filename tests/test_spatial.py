@@ -7,7 +7,7 @@ import math
 import pytest
 
 from brahmand_spark.errors import PlanError
-from tests.helpers import assert_same
+from tests.helpers import assert_same, filtered_at_scan
 
 
 class TestPointConstruction:
@@ -163,11 +163,12 @@ class TestWithinBBox:
 
     def test_bbox_filter_pushes_to_scan(self, tpch):
         """The bbox predicate over raw columns is plain comparisons —
-        it must reach the parquet scan as PushedFilters."""
+        it must filter the table's scan directly (on a parquet scan
+        it is then a pushed filter)."""
         df = tpch.execute(
             "MATCH (c:Customer) "
             "WHERE point.withinBBox(point({x: c.c_acctbal, y: 0.0}), "
             "point({x: 0.0, y: -1.0}), point({x: 100.0, y: 1.0})) "
             "RETURN c.c_custkey AS ck")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters" in plan and "c_acctbal" in plan
+        assert filtered_at_scan(df, "c_acctbal", "(c_acctbal >= 0.0)")
+        assert filtered_at_scan(df, "c_acctbal", "(c_acctbal <= 100.0)")

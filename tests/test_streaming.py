@@ -181,12 +181,13 @@ class TestStatefulOperator:
 class TestAdjacency:
     def test_build_and_expand(self, spark, tpch):
         from brahmand_spark.ops.adjacency import build_adjacency, expand_pairs
+        from brahmand_spark.procedures import _edges
 
-        edges = tpch.tables["PLACED"]
-        adj = build_adjacency(edges, "from_Customer", "to_Order")
+        edges = _edges(tpch, "PLACED")
+        adj = build_adjacency(edges, "src", "dst")
         pairs = expand_pairs(adj)
         assert pairs.count() == edges.count()
-        direct = {(r.from_Customer, r.to_Order) for r in edges.collect()}
+        direct = {(r.src, r.dst) for r in edges.collect()}
         via_adj = {(r.src, r.dst) for r in pairs.collect()}
         assert direct == via_adj
 

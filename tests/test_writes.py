@@ -1538,3 +1538,79 @@ class TestWriteCountersAndJobBudget:
             "CREATE (p:Person {id: 9, name: 'Z', age: 50})").collect()[0])
         assert n == 1
         assert out["nodes_created"] == 1
+
+
+class TestFkBackedDeletes:
+    """An FK-backed relationship (``GraphSchema.fk_side``: graphs/tpch's
+    PLACED is the ``o_custkey`` column of Order) is deleted by clearing
+    its FK column; the node rows that hold it stay. Both statements
+    used to delete customer 1's five orders (1,500 -> 1,495)."""
+
+    @pytest.fixture()
+    def fk(self, spark):
+        from brahmand_spark.graphs.tpch import build_session
+
+        from .conftest import SF_SMOKE
+
+        s = build_session(spark, SF_SMOKE)
+        s.allow_writes = True
+        return s
+
+    @staticmethod
+    def _orders(s):
+        return [tuple(r) for r in s.execute(
+            "MATCH (o:Order) RETURN o.o_orderkey, o.o_custkey").collect()]
+
+    def _check(self, s, before, out):
+        after = self._orders(s)
+        assert len(after) == len(before) == 1500
+        assert len({k for k, _ in after}) == 1500
+        mine = {k for k, c in before if c == 1}
+        assert len(mine) == 5
+        assert {k: c for k, c in after} == {
+            k: (None if k in mine else c) for k, c in before}
+        assert out["relationships_deleted"] >= 5
+        assert s.execute(
+            "MATCH (c:Customer)-[:PLACED]->(o:Order) "
+            "WHERE c.c_custkey = 1 RETURN count(*) AS n"
+        ).collect()[0]["n"] == 0
+        # a cleared FK is no edge on any read path: the fused
+        # Order-only aggregate, the edge-list hop a bare `r` takes, a
+        # variable-length walk, a grouped count and procedure edges
+        for q in ("MATCH (c:Customer)-[:PLACED]->(o:Order) "
+                  "RETURN count(*) AS n",
+                  "MATCH (c:Customer)-[r:PLACED]->(o:Order) "
+                  "RETURN count(*) AS n, count(r) AS m",
+                  "MATCH (c:Customer)-[:PLACED*1..1]->(o:Order) "
+                  "RETURN count(*) AS n"):
+            assert s.execute(q).collect()[0]["n"] == 1495, q
+        groups = s.execute(
+            "MATCH (c:Customer)-[:PLACED]->(o:Order) "
+            "RETURN c.c_custkey AS k, count(*) AS n").collect()
+        assert None not in {r["k"] for r in groups}
+        assert sum(r["n"] for r in groups) == 1495
+        from brahmand_spark.procedures import _edges
+
+        edges = _edges(s, "PLACED")
+        assert edges.count() == 1495
+        assert edges.filter("src IS NULL OR dst IS NULL").count() == 0
+
+    def test_delete_rel_clears_fk(self, fk):
+        before = self._orders(fk)
+        out = fk.execute(
+            "MATCH (c:Customer {c_custkey: 1})-[r:PLACED]->(o:Order) "
+            "DELETE r").collect()[0]
+        assert (out["relationships_deleted"], out["nodes_deleted"]) == (5, 0)
+        self._check(fk, before, out)
+        assert fk.execute("MATCH (c:Customer) RETURN count(*) AS n") \
+            .collect()[0]["n"] == 150
+
+    def test_detach_delete_clears_referencing_fks(self, fk):
+        before = self._orders(fk)
+        out = fk.execute(
+            "MATCH (c:Customer {c_custkey: 1}) DETACH DELETE c"
+        ).collect()[0]
+        assert out["nodes_deleted"] == 1
+        self._check(fk, before, out)
+        assert fk.execute("MATCH (c:Customer) RETURN count(*) AS n") \
+            .collect()[0]["n"] == 149
